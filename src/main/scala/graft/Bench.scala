@@ -3,10 +3,10 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = parseCpus(sys.env.get("SPARK_GRAFT_CPUS"))
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       // FAIR pools for the concurrent-serving leg (VERDICT r13 item 7):
@@ -636,23 +636,43 @@ object Bench {
     // suite at a lower core count for the scaling measurement, and that
     // run used to clobber the quiet 32-core reference — a run whose
     // (cpus, sf) differ from the existing reference's goes to
-    // BENCH_LAST_c<cpus>.json instead.
+    // BENCH_LAST_c<cpus>_<sf>.json instead ([[resultFile]]).
     if (only.isEmpty) try {
       val refPath = java.nio.file.Paths.get("BENCH_LAST.json")
-      val matchesRef = !java.nio.file.Files.exists(refPath) || {
-        val txt = new String(java.nio.file.Files.readAllBytes(refPath),
-          "UTF-8")
-        val refCpus = "\"cpus\":\\s*\"?([0-9]+)"
-          .r.findFirstMatchIn(txt).map(_.group(1))
-        val refSf = "\"sf\":\"([^\"]+)\"".r
-          .findFirstMatchIn(txt).map(_.group(1))
-        refCpus.forall(_ == cpus) && refSf.forall(_ == sfDir)
-      }
-      val out = if (matchesRef) "BENCH_LAST.json"
-        else s"BENCH_LAST_c$cpus.json"
+      val ref =
+        if (!java.nio.file.Files.exists(refPath)) None
+        else Some(new String(java.nio.file.Files.readAllBytes(refPath),
+          "UTF-8"))
+      val out = resultFile(ref, cpus, sfDir)
       val w = new java.io.PrintWriter(out)
       try w.println(fullJson) finally w.close()
     } catch { case _: Throwable => }
+  }
+
+  /** Session core count: `SPARK_GRAFT_CPUS` when it is a positive
+    * integer, else every available processor (what `local[*]` would
+    * use), so the `"cpus"` field of the bench JSON is always a number. */
+  def parseCpus(env: Option[String]): Int =
+    env.flatMap(_.trim.toIntOption).filter(_ > 0)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** File a full-suite run writes, given the existing reference's text:
+    * `BENCH_LAST.json` when there is no reference or its `cpus` and `sf`
+    * both equal this run's, else `BENCH_LAST_c<cpus>_<sf>.json` with
+    * `<sf>` the data dir's last path element. A reference lacking
+    * either field is a mismatch, so it is never overwritten blindly. */
+  def resultFile(reference: Option[String], cpus: Int, sfDir: String)
+      : String = {
+    val matches = reference.forall { txt =>
+      val refCpus = "\"cpus\":\\s*\"?([0-9]+)".r
+        .findFirstMatchIn(txt).map(_.group(1).toInt)
+      val refSf = "\"sf\":\"([^\"]+)\"".r
+        .findFirstMatchIn(txt).map(_.group(1))
+      refCpus.contains(cpus) && refSf.contains(sfDir)
+    }
+    if (matches) "BENCH_LAST.json"
+    else s"BENCH_LAST_c${cpus}_" +
+      s"${java.nio.file.Paths.get(sfDir).getFileName}.json"
   }
 
   /** noise_suspect verdict (VERDICT r10 item 3, tightened r11): after

@@ -560,16 +560,43 @@ object Dedup {
     minhashDuplicatePairs(Tables.documents(spark, dir), 0.2)
       .orderBy("d1", "d2")
 
-  /** Connected components over an undirected pair graph by min-label
-    * propagation with pointer jumping: each round every node takes the
-    * minimum of its own label and its neighbors' labels, then follows
-    * the fresh label one more hop (label-of-label), so the remaining
-    * distance to the component minimum roughly halves per round —
-    * O(log diameter) rounds, each a few hash-shuffles over the PAIR
-    * list (orders of magnitude smaller than the corpus at 100 TB).
-    * No driver-side union-find: convergence is observed through a
-    * LongAccumulator populated DURING each round's checkpoint
-    * materialization — no separate probe pass.
+  /** Connected components over an undirected pair graph: every node is
+    * labeled with the minimum id of its component.
+    *
+    * Two phases (local contraction, then global propagation — the
+    * scheme of Łącki, Mirrokni and Włodarczyk, "Connected Components
+    * at Scale via Local Contractions", 2018):
+    *
+    *  1. SEED. One `mapPartitions` over the materialized pair list runs
+    *     a union-find inside each partition (larger root always linked
+    *     under the smaller, so every root is its set's minimum id) and
+    *     emits (node, local minimum) for every node it saw; a
+    *     `groupBy(id).min(label)` merges nodes that appear in several
+    *     partitions. Memory per task is bounded by ONE pair partition's
+    *     distinct node set; nothing is brought back with collect().
+    *  2. PROPAGATE. Min-label propagation with hooking and pointer
+    *     jumping: each round every node takes the minimum of its own
+    *     label, its neighbors' labels (propagation), the labels
+    *     adjacent to any node pointing at it (hooking, so a whole group
+    *     lowers with its root) and the label of the node its label
+    *     names (jumping). Rounds grow ~logarithmically with the length
+    *     left after the seed: a chain with shuffled ids split over 4
+    *     pair partitions took 8 rounds at 64 nodes, 15 at 1,000 and 19
+    *     at 10,000. Each round is a few hash-shuffles over the PAIR
+    *     list (orders of magnitude smaller than the corpus at 100 TB).
+    *     The loop only has to close the links that cross pair
+    *     partitions.
+    *
+    * Every seed label is a node of the same component and is ≤ its id,
+    * which is all the loop's fixed-point argument needs (see the loop
+    * comments). When the pair list is one partition — AQE coalesces it
+    * to one at bench scale — the seed is already exact and the loop
+    * converges in its first round. Measured on the sf0.1 testdata
+    * (4-core host), rounds per call before → after the seed:
+    * sim_neardup_groups 9 → 1, gr_cc 7 → 1, dd_minhash_groups 2 → 1.
+    * Convergence and emptiness are observed through LongAccumulators
+    * populated DURING the seed's and each round's checkpoint
+    * materialization — no separate probe job.
     *
     * The loop body runs with AQE OFF (r16, guide §2.4/§1.2): the
     * round's plan shape is fully known — the edge table is
@@ -622,57 +649,88 @@ object Dedup {
     // a cloned session; the checkpointed pair list rebinds into it
     // (leaf plan — exact), and the converged labels rebind back out.
     graft.util.Par.loopScope(spark, loopParts) { scoped =>
+    // ids as long from here on: the seed and every round emit longs,
+    // so the edge keys match the label keys and the edges' hash(b)
+    // layout is reused by every round's join
     val pairsS = graft.util.Par.rebind(scoped, pairsCk.toDF())
+      .select(col("d1").cast("long").as("d1"),
+        col("d2").cast("long").as("d2"))
     val edges = pairsS.select(col("d1").as("a"), col("d2").as("b"))
       .union(pairsS.select(col("d2").as("a"), col("d1").as("b")))
       .repartition(loopParts, col("b"))
       .stageCheckpoint()
-    var labels = edges.select(col("a").as("id")).distinct()
-      .withColumn("label", col("id")).stageCheckpoint()
+    // seed pass (see scaladoc): one union-find per pair partition, then
+    // a min per node across partitions. The aggregate's hash(id) layout
+    // at loopParts is the one every round's output keeps. The
+    // accumulator counts seeded nodes during the checkpoint's own pass:
+    // zero means no pairs, so there is nothing to propagate.
+    val seeded = spark.sparkContext.longAccumulator("cc-seeded")
+    var labels = pairsS.as[(Long, Long)]
+      .mapPartitions { it =>
+        val uf = new MinUnionFind
+        it.foreach { case (a, b) => uf.union(a, b) }
+        seeded.add(uf.size.toLong)
+        uf.labels
+      }
+      .toDF("id", "label")
+      .groupBy("id").agg(min("label").as("label"))
+      .stageCheckpoint()
     var iter = 0
-    var converged = labels.isEmpty // no pairs → nothing to propagate
-    val debug = sys.env.contains("GRAFT_CC_DEBUG")
-    if (debug) System.err.println(
-      s"[cc] loopParts=$loopParts pairsParts=${pairsCk.rdd.getNumPartitions}")
-    // one hop as union + min-aggregate, not join + left-join: each
-    // node's new label is min(own, neighbors'), so emit one self row
-    // (id, label, old=label) plus one row (a, bl, old=null) per
-    // directed edge and fold with a single map-side-partial min —
-    // two exchanges (labels by b, union by id) where the former
-    // join/left-join shape paid five. `max(old)` recovers the
-    // previous label: exactly one self row per id carries non-null.
-    // Then pointer jump: follow the fresh label one more hop (the
-    // label of the node it points to). Composing the two mappings
-    // roughly halves the remaining distance to the component minimum
-    // each round — O(log diameter) rounds instead of O(diameter). The
-    // jump only ever lowers labels within the component, so the
-    // fixed-point argument is unchanged: a full no-op round means
+    var converged = seeded.value == 0L
+    // One round = ONE min-aggregate by id over four kinds of
+    // contribution, all read from the checkpointed labels l:
+    //  - self     (x, l(x)), which also carries the old label (`prev`;
+    //             `max(prev)` recovers it, nulls elsewhere);
+    //  - neighbor (a, l(b)) per directed edge: plain propagation;
+    //  - hook     (l(a), l(b)) per directed edge: the node a's label
+    //             names (its root) hears b's label too, so a whole
+    //             group sharing a root lowers together;
+    //  - jump     (x, l(l(x))): follow the label one more hop.
+    // Without the hook a group whose root no lower label reaches only
+    // lowers from its edge, one node per round: a 64-node chain with
+    // shuffled ids did not converge in 30 rounds (one label changed
+    // per round from round 16 on), and the seed's partition-local
+    // contraction builds exactly such groups.
+    // Every arm reads the checkpoint leaf, never another arm's
+    // un-materialized output: column pruning gives each reference to a
+    // shared aggregate its own exchange, so hooking or jumping on the
+    // round's fresh minimum re-ran that aggregate per reference (a
+    // 1.0-1.8 s round on dd_minhash_groups at sf0.1, against 0.3-0.5 s
+    // for this shape). Neighbor and hook rows come from ONE edges⋈l⋈l
+    // join, exploded.
+    // Fixed-point argument: the seed makes every label a node of the
+    // same component with label ≤ id, and every contribution is a
+    // label of the same component folded in by min, so both
+    // properties hold in every round. A full no-op round means
     // label(a) ≤ label(b) across every (doubled) edge, i.e. labels
-    // are constant per component. The probe side (jid = id) reuses
-    // the aggregate's hash partitioning; only the lmin side shuffles.
+    // are constant per component; the component minimum m has
+    // m ≤ label(m) (labels are component nodes) and label(m) ≤ m, so
+    // that constant is m.
     // SHUFFLE_HASH hints (build side = the hinted relation): with AQE
     // off the static planner sees unknown-stats checkpoint leaves and
     // would pick SortMergeJoin; the hint keeps every round sort-free.
-    // The probe sides keep their layouts: edges reuses its hash(b)
-    // checkpoint partitioning, and the self-join's j side reuses the
-    // aggregate's hash(id) partitioning.
+    // Every build side is l renamed, so it keeps its hash(id) layout;
+    // edges keep their hash(b) checkpoint layout. Exchanges per round:
+    // edge rows by a, l by label (jump), and the union by id.
     def step(l: DataFrame): DataFrame = {
       val self = l.select(col("id"), col("label").as("contrib"),
         col("label").as("prev"))
-      val nbr = edges
-        .join(l.select(col("id").as("b"), col("label").as("bl"))
-          .hint("SHUFFLE_HASH"), "b")
-        .select(col("a").as("id"), col("bl").as("contrib"),
-          lit(null).cast(self.schema("prev").dataType).as("prev"))
-      val stepped = self.union(nbr).groupBy("id")
-        .agg(min("contrib").as("lmin"), max("prev").as("old"))
-      stepped.alias("s")
-        .join(stepped.select(col("id").as("jid"), col("lmin").as("jl"))
-            .alias("j").hint("SHUFFLE_HASH"),
-          col("s.lmin") === col("j.jid"), "left")
-        .select(col("s.id").as("id"), col("s.old").as("old"),
-          least(col("s.lmin"), coalesce(col("j.jl"), col("s.lmin")))
-            .as("label"))
+      val noPrev = lit(null).cast("long")
+      def named(id: String, label: String) =
+        l.select(col("id").as(id), col("label").as(label))
+          .hint("SHUFFLE_HASH")
+      val viaEdges = edges
+        .join(named("b", "bl"), "b")
+        .join(named("a", "al"), "a")
+        .select(explode(array(
+          struct(col("a").as("id"), col("bl").as("contrib")),
+          struct(col("al").as("id"), col("bl").as("contrib")))).as("e"))
+        .select(col("e.id").as("id"), col("e.contrib").as("contrib"),
+          noPrev.as("prev"))
+      val jump = l.join(named("root", "rl"), col("label") === col("root"))
+        .select(col("id"), col("rl").as("contrib"), noPrev.as("prev"))
+      self.union(viaEdges).union(jump).groupBy("id")
+        .agg(max("prev").as("old"), min("contrib").as("label"))
     }
     // One step per checkpoint barrier — the THIRD and FOURTH
     // measured-and-rejected alternatives here (after round 8's extra
@@ -680,17 +738,16 @@ object Dedup {
     // batching TWO steps per localCheckpoint (halving barriers and
     // convergence probes), sf0.1 warm — (a) naive nesting LOST
     // (gr_cc 2.74→4.36 s, dd_minhash_groups 2.17→2.53 s,
-    // sim_neardup_groups 1.83→2.40 s: the jump's self-join references
-    // `stepped` twice, so the un-materialized step-1 subtree recomputes
-    // in both join arms — the checkpoint is precisely what makes the
-    // self-join read materialized data); (b) persist()ing step-1 inside
+    // sim_neardup_groups 1.83→2.40 s: step 2 reads its labels several
+    // times, so the un-materialized step-1 subtree recomputes in every
+    // arm — the checkpoint is precisely what makes each arm read
+    // materialized data); (b) persist()ing step-1 inside
     // the batch ALSO lost (gr_cc 3.6 s, sim_neardup_groups 2.45 s:
     // same materialization count as two checkpoints, plus cache
     // registration churn). The per-round barrier is load-bearing, not
-    // overhead; round cost is inherently ~2 small shuffles + 1
-    // materialization, and batching cannot remove any of the three.
+    // overhead; round cost is inherently a few small shuffles + 1
+    // materialization, and batching cannot remove any of them.
     while (!converged && iter < maxIters) {
-      val t0 = System.nanoTime()
       // convergence rides the materialization itself (r16): a
       // LongAccumulator counts label moves DURING the checkpoint's
       // one pass, replacing the former per-round isEmpty probe job.
@@ -699,8 +756,6 @@ object Dedup {
       // costs one provably-no-op extra round.
       val acc = spark.sparkContext.longAccumulator(s"cc-changed-$iter")
       val jumped = step(labels)
-        .select(col("id").cast("long"), col("old").cast("long"),
-          col("label").cast("long"))
         .as[(Long, Long, Long)]
         .mapPartitions { it =>
           it.map { case (id, old, label) =>
@@ -713,9 +768,6 @@ object Dedup {
       converged = acc.value == 0L
       labels = jumped
       iter += 1
-      if (debug) System.err.println(
-        f"[cc] round $iter%d ${(System.nanoTime() - t0) / 1e9}%.3f s" +
-          s" converged=$converged changed=${acc.value}")
     }
     // a component needing more than maxIters rounds (diameter beyond
     // ~2^maxIters with jumping) would return partially-propagated
@@ -727,14 +779,45 @@ object Dedup {
         s"connectedComponents did not converge in $maxIters rounds; " +
           "a component has diameter > maxIters — raise maxIters")
     // scale telemetry: the decade sweeps report this next to the wall
-    // slope (pointer jumping ⇒ rounds ~ log2(diameter), so the count
-    // should hold ~flat as data grows 10×)
+    // slope (pointer jumping ⇒ rounds ~ log2 of the diameter left after
+    // the seed's local contraction, so the count should hold ~flat as
+    // data grows 10×; 1 when the pair list is one partition)
     graft.util.Rounds.record("cc", iter)
     // back to the caller's session: labels is a checkpoint leaf, so
     // the rebind is exact and downstream consumers plan under the
     // parent conf (AQE back on)
     graft.util.Par.rebind(spark, labels.toDF())
     }
+  }
+
+  /** Union-find over one pair partition for the CC seed pass. Linking
+    * always hangs the larger root under the smaller, so a root is the
+    * minimum id of its set; `find` halves paths as it walks. One map
+    * entry per distinct node seen. */
+  private final class MinUnionFind {
+    private val parent = scala.collection.mutable.LongMap.empty[Long]
+
+    private def find(x: Long): Long = {
+      var r = x
+      while (parent(r) != r) {
+        val up = parent(parent(r))
+        parent(r) = up
+        r = up
+      }
+      r
+    }
+
+    def union(a: Long, b: Long): Unit = {
+      val ra = find(parent.getOrElseUpdate(a, a))
+      val rb = find(parent.getOrElseUpdate(b, b))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+
+    def size: Int = parent.size
+
+    /** (node, minimum id of its set) for every node seen. */
+    def labels: Iterator[(Long, Long)] =
+      parent.keys.toArray.iterator.map(n => (n, find(n)))
   }
 
   /** End-to-end MinHash dedup keeper selection: verified LSH pairs →

@@ -606,14 +606,16 @@ object Stats {
     * graph: parts that appear in the same order among high-quantity
     * lineitems (`l_quantity >= 48`) are connected; components are
     * labeled by their minimum part id. The first fully-ORACLED
-    * iterative graph operator in the suite: the engine side runs the
-    * distributed min-label-propagation + pointer-jumping loop
-    * ([[graft.functions.Dedup.connectedComponents]] — the same kernel
-    * the MinHash dedup clusters use, there only rows-only-checkable
-    * because its edges come from engine-internal hashes), while the
-    * DuckDB side recomputes the fixpoint with a recursive CTE — so a
-    * green hash row proves the O(log diameter) distributed loop equals
-    * the textbook transitive closure node for node.
+    * iterative graph operator in the suite: the engine side runs
+    * [[graft.functions.Dedup.connectedComponents]] — a union-find seed
+    * inside each partition of the pair list, then distributed
+    * min-label propagation with hooking and pointer jumping that closes
+    * the links crossing partitions (the same kernel the MinHash dedup
+    * clusters use, there only rows-only-checkable because its edges
+    * come from engine-internal hashes) — while the DuckDB side
+    * recomputes the fixpoint with a recursive CTE, so a green hash row
+    * proves the seeded distributed loop equals the textbook transitive
+    * closure node for node.
     *
     * Scale shape: filter-first (the quantity predicate lands on the
     * parquet scan and cuts ~96% of lineitem before anything widens),

@@ -51,23 +51,20 @@ object Caches {
     * neighbor) inflated the queries that follow up to 2.5× in the r14
     * sf10 sweep — a measurement artifact, not a plan property.
     *
-    * Order matters for the blocking guarantee (ADVICE r14):
-    * `clearCache()` removes SQL-cache blocks ASYNCHRONOUSLY and
-    * deregisters their RDDs from `sc.getPersistentRDDs`, so a blocking
-    * sweep that runs after it never sees them — the previous query's
-    * SQL-cached blocks could still be resident when the next one
-    * starts. Snapshot the registered RDDs FIRST and issue the blocking
-    * unpersist over the snapshot ∪ the post-clear survivors; unpersist
-    * is idempotent, and a blocking `removeRdd` on an RDD clearCache
-    * already queued waits for the block manager to report the blocks
-    * gone. */
+    * Order matters. Every registered RDD — SQL-cache entries included —
+    * is unpersisted FIRST, then `clearCache()` drops the SQL cache
+    * registry. The reverse order had two faults: `clearCache()`
+    * deregisters its RDDs from `sc.getPersistentRDDs`, so a sweep after
+    * it misses them, and it queues an ASYNC removal of those same RDDs
+    * that a blocking unpersist issued next overlapped. Two concurrent
+    * removals of one RDD race inside the block manager and
+    * intermittently fail with `Block rdd_N does not exist`. Unpersisting
+    * first means the removal clearCache later queues finds no blocks
+    * left. */
   def releaseAll(spark: SparkSession, blocking: Boolean = false): Unit = {
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.values.toSeq
-    spark.catalog.clearCache()
-    (before ++ sc.getPersistentRDDs.values)
-      .groupBy(_.id).values.map(_.head)
+    spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = blocking))
+    spark.catalog.clearCache()
     // localCheckpoint/broadcast cleanup is reference-triggered: blocks
     // free when ContextCleaner sees the driver-side object collected
     System.gc()

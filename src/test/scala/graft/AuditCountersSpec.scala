@@ -71,4 +71,18 @@ class AuditCountersSpec extends AnyFunSuite with SparkSpec {
       s"release: ${resident.mkString(",")}")
     local.unpersist()
   }
+
+  test("releaseAll(blocking) never races clearCache's async removal") {
+    // clearCache() queues an async removal of every SQL-cached RDD; a
+    // blocking unpersist of the same RDDs issued after it overlapped
+    // that removal and intermittently failed with `Block rdd_N does
+    // not exist`. Many-block frames widen the overlap window.
+    (1 to 60).foreach { i =>
+      val cached = spark.range(0, 20000, 1, 200).toDF("x").persist()
+      cached.count()
+      spark.range(0, 20000, 1, 200).toDF("y").localCheckpoint()
+      Caches.releaseAll(spark, blocking = true)
+      assert(spark.sparkContext.getPersistentRDDs.isEmpty, s"iteration $i")
+    }
+  }
 }

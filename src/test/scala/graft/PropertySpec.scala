@@ -465,4 +465,97 @@ class PropertySpec extends SparkSpec {
       }
     }
   }
+
+  // ── connected components vs a union-find reference ──────────────────
+  // Shapes over k node slots (edges as slot pairs): long chains need
+  // many propagation hops, stars one, cycles close on themselves.
+  private def chain(k: Int) = (1 until k).map(i => (i - 1, i))
+  private def star(k: Int) = (1 until k).map(i => (0, i))
+  private def cycle(k: Int) = (0 until k).map(i => (i, (i + 1) % k))
+
+  /** Disjoint pieces relabeled to shuffled, spaced ids, with each
+    * edge's orientation and the edge order shuffled too — so the
+    * component minimum sits anywhere in its piece. */
+  private def scatter(pieces: Seq[Seq[(Int, Int)]], seed: Long)
+      : Seq[(Long, Long)] = {
+    val rnd = new scala.util.Random(seed)
+    var next = 0
+    val slots = pieces.flatMap { p =>
+      val base = next
+      next += p.flatMap(e => Seq(e._1, e._2)).max + 1
+      p.map { case (a, b) => (base + a, base + b) }
+    }
+    val ids = rnd.shuffle((0 until next).map(_ * 7L + 3L))
+    rnd.shuffle(slots.map { case (a, b) =>
+      if (rnd.nextBoolean()) (ids(a), ids(b)) else (ids(b), ids(a))
+    })
+  }
+
+  /** node → minimum id of its component, by a plain union-find. */
+  private def componentMins(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(ra) = rb
+    }
+    parent.keys.toSeq.groupBy(find).values
+      .flatMap(ns => ns.map(_ -> ns.min)).toMap
+  }
+
+  /** Labels and recorded round count of one connectedComponents call
+    * over `edges` laid out in `parts` pair partitions. */
+  private def ccRun(edges: Seq[(Long, Long)], parts: Int)
+      : (Map[Long, Long], Int) = {
+    val sparkS = spark
+    import sparkS.implicits._
+    graft.util.Rounds.drain()
+    val labels = Dedup.connectedComponents(
+      edges.toDF("d1", "d2").repartition(parts))
+      .as[(Long, Long)].collect().toMap
+    (labels, graft.util.Rounds.drain()("cc"))
+  }
+
+  test("connected components: label = component minimum on random " +
+    "chains, stars, cycles and disjoint pieces, in 1 and 4 partitions") {
+    val piece = for {
+      shape <- Gen.chooseNum(0, 2)
+      k <- Gen.chooseNum(3, 40)
+    } yield shape match {
+      case 0 => chain(k)
+      case 1 => star(k)
+      case _ => cycle(k)
+    }
+    val graph = for {
+      n <- Gen.chooseNum(1, 6)
+      pieces <- Gen.listOfN(n, piece)
+      seed <- Gen.long
+    } yield scatter(pieces, seed)
+    samples(graph, 6).foreach { edges =>
+      val truth = componentMins(edges)
+      val (one, oneRounds) = ccRun(edges, 1)
+      assert(one === truth, "one pair partition")
+      // one partition: the seed's union-find is already exact, so the
+      // first round changes nothing and the loop stops there
+      assert(oneRounds === 1, "one pair partition converges in one round")
+      val (four, _) = ccRun(edges, 4)
+      assert(four === truth, "four pair partitions")
+    }
+  }
+
+  test("connected components: a one-partition chain takes one round; " +
+    "split over partitions the loop closes the cross links") {
+    val edges = scatter(Seq(chain(64)), seed = 11L)
+    val truth = componentMins(edges)
+    assert(truth.values.toSet.size === 1)
+    val (one, oneRounds) = ccRun(edges, 1)
+    assert(one === truth)
+    assert(oneRounds === 1, "cc rounds for a one-partition chain")
+    val (split, splitRounds) = ccRun(edges, 4)
+    assert(split === truth)
+    assert(splitRounds > 1, "the loop does real cross-partition work")
+  }
 }
