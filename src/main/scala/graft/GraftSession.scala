@@ -2,34 +2,46 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Canonical SparkSession factory for the engine.
+/** The engine's one SparkSession factory: every entry point (Bench,
+  * Verify, Profile, the CLI mains, the test suite) builds its session
+  * here, so their settings cannot drift apart.
   *
-  * Tuned for the sandbox (local[32], single JVM) but every setting is the
-  * one you'd want on a 1000-executor cluster too: AQE on (runtime skew/
-  * coalesce re-planning), UTC session time, shuffle partitions sized to
-  * the parallelism at hand rather than the 200 default.
+  * Every setting is the one you'd want on a 1000-executor cluster too:
+  * AQE on (runtime skew/coalesce re-planning), UTC session time,
+  * shuffle partitions sized to the parallelism at hand rather than the
+  * 200 default, FAIR scheduling for concurrent serving.
   */
 object GraftSession {
-  def builder(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      : SparkSession.Builder =
+  /** Session core count: `raw` when it is a positive integer, else
+    * every available processor (unset, `*`, empty or non-numeric). */
+  def parseCpus(raw: Option[String]): Int =
+    raw.flatMap(_.trim.toIntOption).filter(_ > 0)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** The core count `SPARK_GRAFT_CPUS` asks for ([[parseCpus]]). */
+  def envCpus: Int = parseCpus(sys.env.get("SPARK_GRAFT_CPUS"))
+
+  def builder(cpus: String = envCpus.toString): SparkSession.Builder = {
+    val n = parseCpus(Some(cpus)).toString
     SparkSession.builder()
-      .master(s"local[$cpus]")
+      .master(s"local[$n]")
       .appName("graft")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", n)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       // ceiling for AQE's per-stage partition sizing: stages whose
       // shuffle volume outgrows cpu-count partitioning (10×+ bench
       // scale) split by BYTES instead of spilling multi-GB sorts, and
       // AQE coalesces small stages back toward the cpu-count target.
-      // This builder-time value (SPARK_GRAFT_PART_CEILING × cpus,
-      // default 1) is only the dirless default — entry points that
-      // know their input dir call [[tuneForData]], which DERIVES the
-      // ceiling from the data's on-disk bytes (VERDICT r13 item 6).
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        (cpus.toInt * sys.env.getOrElse("SPARK_GRAFT_PART_CEILING", "1")
-          .toInt).toString)
+      // This builder-time value is only the dirless default — entry
+      // points that know their input dir call [[tuneForData]], which
+      // DERIVES the ceiling from the data's on-disk bytes.
+      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", n)
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
+      // FAIR pools for concurrent serving: each serving thread runs in
+      // its own pool so one long scan cannot starve the other sessions'
+      // short queries. For serial jobs (one at a time) FAIR == FIFO.
+      .config("spark.scheduler.mode", "FAIR")
       .config("spark.sql.session.timeZone", "UTC")
       // events.parquet carries TIMESTAMP(NANOS) which the Spark parquet
       // reader rejects; read as Long and convert in Tables.events.
@@ -38,15 +50,17 @@ object GraftSession {
       // transformWithState (StateKernel — every keyed stateful op)
       // requires the RocksDB provider, and it's the right provider at
       // scale regardless: state lives on executor disk with changelog
-      // checkpointing, not as full snapshots of an in-JVM map
+      // checkpointing, not as full snapshots of an in-JVM map. Without
+      // changelog checkpointing every micro-batch commit uploads a FULL
+      // RocksDB snapshot.
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
         "true")
       .config("spark.ui.enabled", "false")
+  }
 
-  def get(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      : SparkSession = {
+  def get(cpus: String = envCpus.toString): SparkSession = {
     val s = builder(cpus).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     quietKnownNoise()
@@ -55,8 +69,7 @@ object GraftSession {
     s
   }
 
-  /** Deployment env hooks, shared by every entry point that owns its
-    * session ([[get]], Bench, Verify):
+  /** Deployment env hooks, applied by [[get]]:
     *
     *  - `SPARK_GRAFT_INDEX_DIR` — point a cold session at a persisted
     *    gram-index artifact (graft.functions.GramIndex.saveIndex
@@ -71,7 +84,7 @@ object GraftSession {
     *    unrecognized FAILS FAST (ADVICE r14): a durability knob that
     *    silently ignores `TRUE` would leave an operator believing
     *    they are executor-loss safe when they are not. */
-  def applyEnvHooks(s: SparkSession): Unit = {
+  private def applyEnvHooks(s: SparkSession): Unit = {
     sys.env.get("SPARK_GRAFT_INDEX_DIR").foreach(
       s.conf.set(functions.GramIndex.IndexDirConf, _))
     sys.env.get("SPARK_GRAFT_RELIABLE").foreach { raw =>
@@ -130,16 +143,12 @@ object GraftSession {
   }
 
   /** Apply the scale-derived ceiling to a live session for queries over
-    * `dir`. `SPARK_GRAFT_PART_CEILING` (× cpus) stays as the explicit
-    * operator override; without it the ceiling follows the data. The
-    * conf is runtime-mutable, so Bench/Verify call this once per run
-    * after the session exists. Returns the ceiling applied. */
+    * `dir`: the ceiling follows the data. The conf is runtime-mutable,
+    * so Bench/Verify call this once per run after the session exists.
+    * Returns the ceiling applied. */
   def tuneForData(spark: SparkSession, dir: String): Int = {
-    val cpus = spark.sparkContext.defaultParallelism
-    val ceiling = sys.env.get("SPARK_GRAFT_PART_CEILING") match {
-      case Some(k) => cpus * k.toInt
-      case None => derivePartCeiling(dirBytes(dir), cpus)
-    }
+    val ceiling = derivePartCeiling(dirBytes(dir),
+      spark.sparkContext.defaultParallelism)
     spark.conf.set(
       "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
       ceiling.toString)
@@ -155,7 +164,7 @@ object GraftSession {
     * the exact logger (an earlier level-based mute silenced every WARN
     * that logger class could emit, not just this one); any other
     * warning from MapPartitionsRDD still surfaces. */
-  def quietKnownNoise(): Unit = {
+  private def quietKnownNoise(): Unit = {
     import org.apache.logging.log4j.LogManager
     import org.apache.logging.log4j.core.{Filter, LoggerContext}
     import org.apache.logging.log4j.core.config.LoggerConfig

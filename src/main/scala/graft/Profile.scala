@@ -1,45 +1,35 @@
 package graft
 
+import graft.util.HostSteal
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.sql.catalyst.plans.QueryPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+  QueryStageExec}
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
-/** Optimization-round measurement tool (guide §1): per-query cost
-  * attribution the bench's single wall number can't give — how many
-  * JOBS (actions), STAGES (shuffle boundaries × retries) and TASKS a
-  * query costs, and how the wall splits between DataFrame CONSTRUCTION
-  * (where the iterative kernels run their loops) and the final count
-  * action. Methodology matches Bench: cold + warm per query, same
-  * session config, same groupBy().count().collect() action.
+/** Per-query profiling tool: cost attribution the bench's single wall
+  * number can't give — how many JOBS (actions), STAGES (shuffle
+  * boundaries × retries) and TASKS a query costs, and how the wall
+  * splits between DataFrame CONSTRUCTION (where the iterative kernels
+  * run their loops; its jobs are `buildJobs`), optimization, physical
+  * planning and the final count action, with the size of each plan
+  * tree. Methodology matches Bench: warm-up, then cold + warm runs per
+  * query on the shared [[GraftSession]], same groupBy().count() action.
   *
   *   sbt "runMain graft.Profile SFDIR q1,q2,... [reps]"
   *
   * Output (stderr): one line per query per run:
-  *   [prof] <name> run=<n> total=… build=… act=… jobs=… stages=… tasks=…
+  *   [prof] <name> run=<n> total=… build=… optimize=… plan=… act=…
+  *     jobs=… buildJobs=… stages=… tasks=… taskSec=… steal=…
+  *     nodes=<analyzed>/<optimized>/<physical> rows=…
   */
 object Profile {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val names = args(1).split(",").map(_.trim).filter(_.nonEmpty)
     val reps = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.quietKnownNoise()
-    GraftCatalog.installOptimizations(spark)
-    GraftSession.applyEnvHooks(spark)
+    val spark = GraftSession.get()
     GraftSession.tuneForData(spark, dir)
     val jobs = new AtomicInteger
     val stages = new AtomicInteger
@@ -59,14 +49,17 @@ object Profile {
       spark.read.parquet(s"$dir/lineitem.parquet").count()
       spark.read.parquet(s"$dir/documents.parquet").count()
     } catch { case _: Throwable => }
-    def steal(): Long = try {
-      val src = scala.io.Source.fromFile("/proc/stat")
-      try {
-        val f = src.getLines().find(_.startsWith("cpu "))
-          .getOrElse("").trim.split("\\s+")
-        if (f.length > 8) f(8).toLong else 0L
-      } finally src.close()
-    } catch { case _: Throwable => 0L }
+    // plan nodes plus the expression nodes they carry; an adaptive
+    // plan counts its final plan, query stages included
+    def size(p: QueryPlan[_]): Long = p match {
+      case a: AdaptiveSparkPlanExec => size(a.executedPlan)
+      case q: QueryStageExec => size(q.plan)
+      case _ =>
+        var n = 1L
+        p.expressions.foreach(_.foreach(_ => n += 1))
+        n + p.children.map(c => size(c.asInstanceOf[QueryPlan[_]])).sum
+    }
+    def sec(t0: Long, t1: Long) = (t1 - t0) / 1e9
     names.foreach { n =>
       SparkEntry.queries.get(n) match {
         case None => System.err.println(s"[prof] unknown query: $n")
@@ -75,20 +68,33 @@ object Profile {
             // settle listener events from the previous run
             Thread.sleep(150)
             jobs.set(0); stages.set(0); tasks.set(0); taskMs.set(0)
-            val st0 = steal()
+            val st0 = HostSteal.jiffies()
             val t0 = System.nanoTime()
             val df = fn(spark, dir)
             val t1 = System.nanoTime()
-            val cnt = df.groupBy().count().collect()(0).getLong(0)
+            Thread.sleep(150) // untimed: settle the construction's jobs
+            val buildJobs = jobs.get
+            val counted = df.groupBy().count()
+            val qe = counted.queryExecution
             val t2 = System.nanoTime()
+            val opt = qe.optimizedPlan
+            val t3 = System.nanoTime()
+            val phys = qe.executedPlan
+            val t4 = System.nanoTime()
+            val cnt = counted.collect()(0).getLong(0)
+            val t5 = System.nanoTime()
             Thread.sleep(150)
-            val sSec = (steal() - st0) / 100.0
+            val total = sec(t0, t1) + sec(t2, t5)
             System.err.println(
-              f"[prof] $n run=$rep total=${(t2 - t0) / 1e9}%.3f " +
-                f"build=${(t1 - t0) / 1e9}%.3f act=${(t2 - t1) / 1e9}%.3f " +
-                s"jobs=${jobs.get} stages=${stages.get} " +
-                s"tasks=${tasks.get} taskSec=${taskMs.get / 1000.0} " +
-                f"steal=$sSec%.2f rows=$cnt")
+              f"[prof] $n run=$rep total=$total%.3f " +
+                f"build=${sec(t0, t1)}%.3f optimize=${sec(t2, t3)}%.3f " +
+                f"plan=${sec(t3, t4)}%.3f act=${sec(t4, t5)}%.3f " +
+                s"jobs=${jobs.get} buildJobs=$buildJobs " +
+                s"stages=${stages.get} tasks=${tasks.get} " +
+                s"taskSec=${taskMs.get / 1000.0} " +
+                f"steal=${HostSteal.secondsSince(st0)}%.2f " +
+                s"nodes=${size(qe.analyzed)}/${size(opt)}/${size(phys)} " +
+                s"rows=$cnt")
             try graft.util.Caches.releaseAll(spark, blocking = true)
             catch { case _: Throwable => }
           }

@@ -2,60 +2,60 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** One query: its DataFrame builder over a data directory and the
+  * DuckDB-equivalent SQL it is checked against. Column names are
+  * aliased identically on both sides (the oracle comparison sorts
+  * columns by name before hashing). */
+final case class QuerySpec(name: String,
+    build: (SparkSession, String) => DataFrame, oracle: String)
+
+/** A module that declares queries; [[SparkEntry.modules]] lists each
+  * one once. */
+trait QueryModule {
+  def specs: Seq[QuerySpec]
+}
+
+/** The query registry (SURVEY.md §7).
   *
-  * `queries` maps one entry per implemented operator (SURVEY.md §2 plus
-  * the LLM-data-pipeline extensions) to a DataFrame builder; `oracleSql`
-  * carries the DuckDB-equivalent SQL for every SQL-expressible entry.
-  * Column names are aliased identically on both sides (the driver's
-  * comparator sorts columns by name before hashing).
+  * One registry: every implemented operator (SURVEY.md §2 plus the
+  * LLM-data-pipeline extensions) is one [[QuerySpec]] declared by its
+  * module, so a query cannot exist without an oracle. `queries` and
+  * `oracleSql` are projections of that list.
   */
 object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     operators.Relational.q1PricingSummary(spark, "/root/testdata/sf0.001")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    operators.Relational.queries ++ operators.RelationalExt.queries ++
-      operators.RelationalSql.queries ++ operators.RelationalMore.queries ++
-      operators.RelationalThird.queries ++
-      operators.RelationalFourth.queries ++
-      operators.RelationalFifth.queries ++
-      operators.CdcOps.queries ++
-      operators.TxOps.queries ++ functions.Envelope.queries ++
-      functions.SpecificEnvelope.queries ++
-      functions.TextAnalysis.queries ++ functions.Dedup.queries ++
-      functions.Similarity.queries ++ functions.Multimodal.queries ++
-      streaming.WindowedAgg.queries ++ functions.Ivf.queries ++
-      operators.Sketches.queries ++ operators.AsOfJoin.queries ++
-      functions.TrainPrep.queries ++ operators.CdcAnalytics.queries ++
-      operators.Layout.queries ++ functions.Pq.queries ++
-      operators.Stats.queries ++ functions.LangModel.queries ++
-      operators.RuntimeFilter.queries ++ operators.ScaleOps.queries ++
-      functions.Pca.queries ++ functions.CorpusOps.queries ++
-      functions.SearchIndex.queries ++ functions.Dsir.queries ++
-      functions.FuzzyMatch.queries ++
-      functions.QualityClassifier.queries ++ functions.DatasetBuild.queries
+  lazy val modules: Seq[QueryModule] = Seq(
+    operators.Relational, operators.RelationalExt, operators.RelationalSql,
+    operators.RelationalMore, operators.RelationalThird,
+    operators.RelationalFourth, operators.RelationalFifth, operators.CdcOps,
+    operators.TxOps, operators.Sketches, operators.AsOfJoin,
+    operators.CdcAnalytics, operators.Layout, operators.Stats,
+    operators.RuntimeFilter, operators.ScaleOps, functions.Envelope,
+    functions.SpecificEnvelope, functions.TextAnalysis, functions.Dedup,
+    functions.Similarity, functions.Multimodal, functions.Ivf,
+    functions.TrainPrep, functions.Pq, functions.LangModel, functions.Pca,
+    functions.CorpusOps, functions.SearchIndex, functions.Dsir,
+    functions.FuzzyMatch, functions.QualityClassifier,
+    functions.DatasetBuild, streaming.WindowedAgg)
 
-  def oracleSql: Map[String, String] =
-    operators.Relational.oracles ++ operators.RelationalExt.oracles ++
-      operators.RelationalSql.oracles ++ operators.RelationalMore.oracles ++
-      operators.RelationalThird.oracles ++
-      operators.RelationalFourth.oracles ++
-      operators.RelationalFifth.oracles ++
-      operators.CdcOps.oracles ++
-      operators.TxOps.oracles ++ functions.Envelope.oracles ++
-      functions.SpecificEnvelope.oracles ++
-      functions.TextAnalysis.oracles ++ functions.Dedup.oracles ++
-      functions.Similarity.oracles ++ functions.Multimodal.oracles ++
-      streaming.WindowedAgg.oracles ++ operators.AsOfJoin.oracles ++
-      functions.TrainPrep.oracles ++ operators.CdcAnalytics.oracles ++
-      operators.Layout.oracles ++ functions.Pq.oracles ++
-      operators.Stats.oracles ++ functions.LangModel.oracles ++
-      operators.RuntimeFilter.oracles ++ operators.ScaleOps.oracles ++
-      functions.CorpusOps.oracles ++ functions.SearchIndex.oracles ++
-      functions.Dsir.oracles ++ operators.Sketches.oracles ++
-      functions.Pca.oracles ++ functions.Ivf.oracles ++
-      functions.FuzzyMatch.oracles ++
-      functions.QualityClassifier.oracles ++ functions.DatasetBuild.oracles
+  /** `specs` after checking that no name is declared twice. */
+  def registry(specs: Seq[QuerySpec]): Seq[QuerySpec] = {
+    val twice = specs.groupBy(_.name).collect {
+      case (n, s) if s.size > 1 => n
+    }
+    require(twice.isEmpty,
+      s"query names declared twice: ${twice.mkString(", ")}")
+    specs
+  }
+
+  lazy val specs: Seq[QuerySpec] = registry(modules.flatMap(_.specs))
+
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    specs.map(s => s.name -> s.build).toMap
+
+  lazy val oracleSql: Map[String, String] =
+    specs.map(s => s.name -> s.oracle).toMap
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,23 +8,7 @@ object Verify {
     // optional extra args: run only these queries (fast targeted checks
     // while iterating; the driver always calls with exactly two args)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // StateKernel (transformWithState) queries need the RocksDB
-      // state store provider, in batch mode too
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.quietKnownNoise()
-    GraftCatalog.installOptimizations(spark)
-    GraftSession.applyEnvHooks(spark)
+    val spark = GraftSession.get()
     // AQE partition ceiling follows the data scale (see GraftSession):
     // the sf1 value-exact certification runs through here too
     GraftSession.tuneForData(spark, sfDir)

@@ -1,6 +1,6 @@
 package graft.functions
 
-import graft.Tables
+import graft.{QueryModule, QuerySpec, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
   * All four stay in aggregate/join space the size of the corpus or its
   * shingle vocabulary — none forms a doc×doc pair set.
   */
-object CorpusOps {
+object CorpusOps extends QueryModule {
 
   // ── C4-style boilerplate tile pruning ───────────────────────────────
 
@@ -356,17 +356,11 @@ object CorpusOps {
       |FROM v1 FULL OUTER JOIN v2 ON v1.doc_id = v2.doc_id
       |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "tp_boilerplate_prune" -> (tpBoilerplatePrune _),
-    "ts_priority_sample" -> (tsPrioritySample _),
-    "dd_corpus_overlap" -> (ddCorpusOverlap _),
-    "tc_surprisal" -> (tcSurprisal _),
-    "tp_version_diff" -> (tpVersionDiff _))
-
-  def oracles: Map[String, String] = Map(
-    "tp_boilerplate_prune" -> tpBoilerplatePruneSql(),
-    "ts_priority_sample" -> tsPrioritySampleSql(),
-    "dd_corpus_overlap" -> ddCorpusOverlapSql,
-    "tc_surprisal" -> tcSurprisalSql,
-    "tp_version_diff" -> tpVersionDiffSql)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("tp_boilerplate_prune", tpBoilerplatePrune,
+      tpBoilerplatePruneSql()),
+    QuerySpec("ts_priority_sample", tsPrioritySample, tsPrioritySampleSql()),
+    QuerySpec("dd_corpus_overlap", ddCorpusOverlap, ddCorpusOverlapSql),
+    QuerySpec("tc_surprisal", tcSurprisal, tcSurprisalSql),
+    QuerySpec("tp_version_diff", tpVersionDiff, tpVersionDiffSql))
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import graft.Tables
+import graft.{QueryModule, QuerySpec, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.util.Checkpoints.StageOps
@@ -43,7 +43,7 @@ import graft.util.Checkpoints.StageOps
   * Reference scope: the reference engine (mypipe) has no
   * corpus-curation surface; this composes the LLM-pipeline operators
   * the brief mandates as first-class. */
-object DatasetBuild {
+object DatasetBuild extends QueryModule {
 
   /** Default per-bin token capacity shared by every pack surface
     * (here, [[TrainPrep.tpPackGreedy]], and [[IterOracles]]'s final
@@ -544,13 +544,9 @@ object DatasetBuild {
        |    CAST(SUM(n_tok) AS BIGINT) FROM pfold)
        |ORDER BY stage_idx""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "tp_dataset_build" ->
-      ((s: SparkSession, d: String) => tpDatasetBuild(s, d)),
-    "tp_dataset_build_report" ->
-      ((s: SparkSession, d: String) => tpDatasetBuildReport(s, d)))
-
-  val oracles: Map[String, String] = Map(
-    "tp_dataset_build" -> tpDatasetBuildSql(),
-    "tp_dataset_build_report" -> tpDatasetBuildReportSql())
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("tp_dataset_build", (s, d) => tpDatasetBuild(s, d),
+      tpDatasetBuildSql()),
+    QuerySpec("tp_dataset_build_report", (s, d) => tpDatasetBuildReport(s, d),
+      tpDatasetBuildReportSql()))
 }

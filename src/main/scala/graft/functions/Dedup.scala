@@ -1,6 +1,6 @@
 package graft.functions
 
-import graft.Tables
+import graft.{QueryModule, QuerySpec, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -22,7 +22,7 @@ import graft.util.Checkpoints.StageOps
   *    per-row array algebra (zero shuffles), near-dups = small hamming
   *    distance within blocking buckets.
   */
-object Dedup {
+object Dedup extends QueryModule {
 
   // ── exact dedup ─────────────────────────────────────────────────────
   /** Exact duplicate groups: group by text, keep the smallest doc_id.
@@ -1553,32 +1553,20 @@ object Dedup {
        |  jaccard AS best_jaccard, n_matches = 0 AS keep
        |FROM ranked WHERE rk = 1 ORDER BY batch_id""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dd_exact" -> (ddExact _),
-    "dd_survivorship" -> (ddSurvivorship _),
-    "dd_ngram_jaccard" -> (ddNgramJaccard _),
-    "dd_prefix_jaccard" -> (ddPrefixJaccard _),
-    "dd_minhash_lsh" -> (ddMinhashLsh _),
-    "dd_minhash_groups" -> (ddMinhashGroups _),
-    "dd_minhash_recall" -> (ddMinhashRecall _),
-    "dd_incremental_minhash" -> (ddIncrementalMinhash _),
-    "dd_simhash" -> (ddSimhash _),
-    "dd_span_dedup" -> ((s: SparkSession, d: String) => ddSpanDedup(s, d)),
-    "dd_span_excise" -> ((s: SparkSession, d: String) => ddSpanExcise(s, d)),
-    "dd_span_excise_spans" ->
-      ((s: SparkSession, d: String) => ddSpanExciseSpans(s, d)))
-
-  def oracles: Map[String, String] = Map(
-    "dd_exact" -> ddExactSql,
-    "dd_survivorship" -> ddSurvivorshipSql,
-    "dd_ngram_jaccard" -> ddNgramJaccardSql,
-    "dd_prefix_jaccard" -> ddPrefixJaccardSql,
-    "dd_minhash_lsh" -> ddMinhashLshSql(),
-    "dd_minhash_groups" -> ddMinhashGroupsSql(),
-    "dd_incremental_minhash" -> ddIncrementalMinhashSql(),
-    "dd_minhash_recall" -> ddMinhashRecallSql,
-    "dd_simhash" -> ddSimhashSql,
-    "dd_span_dedup" -> ddSpanDedupSql(),
-    "dd_span_excise" -> ddSpanExciseSql(),
-    "dd_span_excise_spans" -> ddSpanExciseSpansSql())
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("dd_exact", ddExact, ddExactSql),
+    QuerySpec("dd_survivorship", ddSurvivorship, ddSurvivorshipSql),
+    QuerySpec("dd_ngram_jaccard", ddNgramJaccard, ddNgramJaccardSql),
+    QuerySpec("dd_prefix_jaccard", ddPrefixJaccard, ddPrefixJaccardSql),
+    QuerySpec("dd_minhash_lsh", ddMinhashLsh, ddMinhashLshSql()),
+    QuerySpec("dd_minhash_groups", ddMinhashGroups, ddMinhashGroupsSql()),
+    QuerySpec("dd_minhash_recall", ddMinhashRecall, ddMinhashRecallSql),
+    QuerySpec("dd_incremental_minhash", ddIncrementalMinhash,
+      ddIncrementalMinhashSql()),
+    QuerySpec("dd_simhash", ddSimhash, ddSimhashSql),
+    QuerySpec("dd_span_dedup", (s, d) => ddSpanDedup(s, d), ddSpanDedupSql()),
+    QuerySpec("dd_span_excise", (s, d) => ddSpanExcise(s, d),
+      ddSpanExciseSql()),
+    QuerySpec("dd_span_excise_spans", (s, d) => ddSpanExciseSpans(s, d),
+      ddSpanExciseSpansSql()))
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import graft.Tables
+import graft.{QueryModule, QuerySpec, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -45,7 +45,7 @@ import org.apache.spark.sql.functions._
   * surface; this extends the training-data-pipeline tier the brief
   * asks for, alongside [[TrainPrep]]'s mixture/temperature samplers.
   */
-object Dsir {
+object Dsir extends QueryModule {
 
   /** Per-word token stream: (doc_id, source, lang, w). */
   private def tok(docs: DataFrame): DataFrame =
@@ -152,11 +152,7 @@ object Dsir {
   def tsDsirResample(spark: SparkSession, dir: String): DataFrame =
     dsirResample(Tables.documents(spark, dir))
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ts_dsir_weights" -> (tsDsirWeights _),
-    "ts_dsir_resample" -> (tsDsirResample _))
-
-  def oracles: Map[String, String] = Map(
-    "ts_dsir_weights" -> dsirWeightsSql,
-    "ts_dsir_resample" -> dsirResampleSql)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("ts_dsir_weights", tsDsirWeights, dsirWeightsSql),
+    QuerySpec("ts_dsir_resample", tsDsirResample, dsirResampleSql))
 }

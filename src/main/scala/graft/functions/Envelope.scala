@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.{QueryModule, QuerySpec}
 import graft.avro.{AvroSubjects, SchemaRegistry}
 import graft.sources.ChangeFeed
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -14,7 +15,7 @@ import org.apache.spark.sql.types._
   * substring / conv — all codegen'd); the Avro payload uses the custom
   * expressions in [[AvroCodec]].
   */
-object Envelope {
+object Envelope extends QueryModule {
 
   val Magic: Int = 0
 
@@ -245,9 +246,6 @@ object Envelope {
        |  concat_ws('_', database, tbl, 'generic') AS topic
        |FROM feed ORDER BY event_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "p5_envelope_roundtrip" -> (p5EnvelopeRoundtrip _))
-
-  val oracles: Map[String, String] = Map(
-    "p5_envelope_roundtrip" -> p5Sql)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("p5_envelope_roundtrip", p5EnvelopeRoundtrip, p5Sql))
 }

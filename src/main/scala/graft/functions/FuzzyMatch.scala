@@ -1,6 +1,6 @@
 package graft.functions
 
-import graft.Tables
+import graft.{QueryModule, QuerySpec, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -223,7 +223,7 @@ object FuzzyFunctions {
   * part table under first-token blocking — the fj1 shape, upgraded to
   * the transposition-aware and ranked-similarity kernels.
   */
-object FuzzyMatch {
+object FuzzyMatch extends QueryModule {
   import FuzzyFunctions._
 
   // Candidate-generation levers, measured at sf1 on part names —
@@ -426,13 +426,8 @@ object FuzzyMatch {
       |WHERE levenshtein(q, name) <= 2
       |ORDER BY probe_id, match_key""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "fj2_damerau_join" -> (fj2DamerauJoin _),
-    "fj3_jw_join" -> (fj3JaroWinklerJoin _),
-    "fj4_auto_blocked" -> (fj4AutoBlocked _))
-
-  val oracles: Map[String, String] = Map(
-    "fj2_damerau_join" -> fj2Sql,
-    "fj3_jw_join" -> fj3Sql,
-    "fj4_auto_blocked" -> fj4Sql)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("fj2_damerau_join", fj2DamerauJoin, fj2Sql),
+    QuerySpec("fj3_jw_join", fj3JaroWinklerJoin, fj3Sql),
+    QuerySpec("fj4_auto_blocked", fj4AutoBlocked, fj4Sql))
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import graft.Tables
+import graft.{QueryModule, QuerySpec, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   * nprobe/k of the data — this sandbox build computes assignments on
   * the fly but keeps exactly that join shape.
   */
-object Ivf {
+object Ivf extends QueryModule {
 
   /** Squared L2 distance between two float/double array columns —
     * native codegen ([[SqL2Distance]]). */
@@ -804,19 +804,11 @@ object Ivf {
        |GROUP BY r.cid, r.n_vecs, r.weight, r.target_docs, r.rate
        |ORDER BY cid""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sim_ivf_ann" -> (simIvf _),
-    "sim_ivf_recall" -> (simIvfRecallGate _),
-    "sim_ivf_top1" -> (simIvfTop1Gate _),
-    "sim_ivf_drift" -> (simIvfDrift _),
-    "sim_semdedup" -> (simSemDedupGate _),
-    "ts_cluster_balance" -> (tsClusterBalance _))
-
-  val oracles: Map[String, String] = Map(
-    "sim_ivf_ann" -> simIvfSql(),
-    "sim_ivf_recall" -> simIvfRecallGateSql,
-    "sim_ivf_top1" -> simIvfTop1GateSql,
-    "sim_ivf_drift" -> simIvfDriftSql,
-    "sim_semdedup" -> simSemDedupGateSql,
-    "ts_cluster_balance" -> clusterBalanceSql())
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("sim_ivf_ann", simIvf, simIvfSql()),
+    QuerySpec("sim_ivf_recall", simIvfRecallGate, simIvfRecallGateSql),
+    QuerySpec("sim_ivf_top1", simIvfTop1Gate, simIvfTop1GateSql),
+    QuerySpec("sim_ivf_drift", simIvfDrift, simIvfDriftSql),
+    QuerySpec("sim_semdedup", simSemDedupGate, simSemDedupGateSql),
+    QuerySpec("ts_cluster_balance", tsClusterBalance, clusterBalanceSql()))
 }

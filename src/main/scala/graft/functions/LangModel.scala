@@ -1,6 +1,6 @@
 package graft.functions
 
-import graft.Tables
+import graft.{QueryModule, QuerySpec, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions._
   * document length. No driver-side model, no UDFs: the fold is a
   * codegen'd `aggregate` over a position-sorted array.
   */
-object LangModel {
+object LangModel extends QueryModule {
 
   /** Corpus bigram counts: one row per distinct (w1, w2) with count. */
   def bigramCounts(docs: DataFrame): DataFrame =
@@ -193,11 +193,7 @@ object LangModel {
       |  (bucket <= 2) AS keep
       |FROM tiled ORDER BY doc_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "tc_bigram_lm" -> (tcBigramLm _),
-    "ql_lm_buckets" -> (qlLmBuckets _))
-
-  val oracles: Map[String, String] = Map(
-    "tc_bigram_lm" -> tcBigramLmSql,
-    "ql_lm_buckets" -> qlLmBucketsSql)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("tc_bigram_lm", tcBigramLm, tcBigramLmSql),
+    QuerySpec("ql_lm_buckets", qlLmBuckets, qlLmBucketsSql))
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import graft.Tables
+import graft.{QueryModule, QuerySpec, Tables}
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * per-partition pass; metadata transforms are pure column algebra; the
   * binary column stays pruned away unless a transform asks for it.
   */
-object Multimodal {
+object Multimodal extends QueryModule {
 
   case class MediaMeta(width: Int, height: Int, sampleRate: Int,
       nFrames: Int, mime: String)
@@ -300,17 +300,10 @@ object Multimodal {
       |  greatest(width, height) < 224 AS upscaled
       |FROM m WHERE kind <> 'audio' ORDER BY media_id""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "mm_resize_plan" -> (mmResizePlan _),
-    "mm_meta_extract" -> (mmMetaExtract _),
-    "mm_clip_segments" -> (mmClipSegments _),
-    "mm_content_dedup" -> (mmContentDedup _),
-    "mm_decode_features" -> (mmDecodeFeatures _))
-
-  def oracles: Map[String, String] = Map(
-    "mm_resize_plan" -> mmResizePlanSql,
-    "mm_meta_extract" -> mmMetaExtractSql,
-    "mm_clip_segments" -> mmClipSegmentsSql,
-    "mm_content_dedup" -> mmContentDedupSql,
-    "mm_decode_features" -> mmDecodeFeaturesSql)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("mm_resize_plan", mmResizePlan, mmResizePlanSql),
+    QuerySpec("mm_meta_extract", mmMetaExtract, mmMetaExtractSql),
+    QuerySpec("mm_clip_segments", mmClipSegments, mmClipSegmentsSql),
+    QuerySpec("mm_content_dedup", mmContentDedup, mmContentDedupSql),
+    QuerySpec("mm_decode_features", mmDecodeFeatures, mmDecodeFeaturesSql))
 }

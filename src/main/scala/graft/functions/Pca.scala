@@ -1,6 +1,6 @@
 package graft.functions
 
-import graft.Tables
+import graft.{QueryModule, QuerySpec, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -37,7 +37,7 @@ import org.apache.spark.sql.functions._
   * EQUIVALENCE with a driver-side reference at equal t, not agreement
   * with an (equally unconverged) long run.
   */
-object Pca {
+object Pca extends QueryModule {
 
   private val Scale = 1048576.0d // 2^20: |x|≤O(10), n≤10^9 stays in int64
 
@@ -353,13 +353,8 @@ object Pca {
       |  TRUE AS rayleigh_ok, TRUE AS unit_norm_ok
       |FROM embeddings GROUP BY label ORDER BY label""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "emb_pca_power" -> (embPcaPowerGate _),
-    "emb_jl_distortion" -> (embJlDistortion _),
-    "emb_jl_recall" -> ((s: SparkSession, d: String) => embJlRecall(s, d)))
-
-  val oracles: Map[String, String] = Map(
-    "emb_pca_power" -> embPcaPowerGateSql,
-    "emb_jl_distortion" -> embJlDistortionSql,
-    "emb_jl_recall" -> embJlRecallSql())
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("emb_pca_power", embPcaPowerGate, embPcaPowerGateSql),
+    QuerySpec("emb_jl_distortion", embJlDistortion, embJlDistortionSql),
+    QuerySpec("emb_jl_recall", (s, d) => embJlRecall(s, d), embJlRecallSql()))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{QueryModule, QuerySpec, Tables}
 import graft.util.Checkpoints.StageOps
 
 /** Product quantization — the second classic ANN index next to IVF
@@ -28,7 +28,7 @@ import graft.util.Checkpoints.StageOps
   *    never touches the raw embedding until exact re-rank of the tiny
   *    shortlist).
   */
-object Pq {
+object Pq extends QueryModule {
 
   /** m × k × (d/m) codebooks, trained per subspace — JOINTLY: every
     * Lloyd iteration is ONE corpus pass that assigns all m subspace
@@ -562,15 +562,9 @@ object Pq {
        |  FROM short) t WHERE rk <= $topK ORDER BY q_id, rank""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sim_pq_ann" -> (simPq _),
-    "sim_pq_recall" -> (simPqRecallGate _),
-    "sim_pq_top1" -> (simPqTop1Gate _),
-    "sim_pq_drift" -> (simPqDrift _))
-
-  val oracles: Map[String, String] = Map(
-    "sim_pq_ann" -> simPqSql(),
-    "sim_pq_recall" -> simPqRecallGateSql,
-    "sim_pq_top1" -> simPqTop1GateSql,
-    "sim_pq_drift" -> simPqDriftSql)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("sim_pq_ann", simPq, simPqSql()),
+    QuerySpec("sim_pq_recall", simPqRecallGate, simPqRecallGateSql),
+    QuerySpec("sim_pq_top1", simPqTop1Gate, simPqTop1GateSql),
+    QuerySpec("sim_pq_drift", simPqDrift, simPqDriftSql))
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import graft.Tables
+import graft.{QueryModule, QuerySpec, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -37,7 +37,7 @@ import org.apache.spark.sql.functions._
   * `ql_train_report`, `ql_classifier`) — a trained-model family with
   * end-to-end SQL oracles.
   */
-object QualityClassifier {
+object QualityClassifier extends QueryModule {
 
   val Dims = 6
   val Lambda = 0.000001d // ridge: positive-definite Gram, degenerate-safe
@@ -323,13 +323,8 @@ object QualityClassifier {
        |  (score > 0) = is_good AS correct
        |FROM scored ORDER BY doc_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ql_weights" -> (qlWeights _),
-    "ql_train_report" -> (qlTrainReport _),
-    "ql_classifier" -> (qlClassifier _))
-
-  val oracles: Map[String, String] = Map(
-    "ql_weights" -> qlWeightsSql,
-    "ql_train_report" -> qlTrainReportSql,
-    "ql_classifier" -> qlClassifierSql)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("ql_weights", qlWeights, qlWeightsSql),
+    QuerySpec("ql_train_report", qlTrainReport, qlTrainReportSql),
+    QuerySpec("ql_classifier", qlClassifier, qlClassifierSql))
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import graft.Tables
+import graft.{QueryModule, QuerySpec, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.util.Checkpoints.StageOps
@@ -29,7 +29,7 @@ import graft.util.Checkpoints.StageOps
   * (doc, term) occurrence space: the wide ops are word-count-shaped
   * aggregations and a broadcast of the resolved query.
   */
-object SearchIndex {
+object SearchIndex extends QueryModule {
 
   /** Per-(doc, bigram) occurrence counts — the map phase every index
     * build shares. Bigrams are built per-row with the same
@@ -629,19 +629,11 @@ object SearchIndex {
       |  TRUE AS mean_recall_ok, TRUE AS min_recall_ok
       |FROM embeddings WHERE vec_id % 100 = 0""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ix_postings" -> (ixPostings _),
-    "ix_conj_search" -> (ixConjSearch _),
-    "ix_rank_search" -> (ixRankSearch _),
-    "ix_phrase_search" -> (ixPhraseSearch _),
-    "hy_hybrid_rrf" -> (hyHybridRrf _),
-    "hy_vec_recall" -> (hyVecRecall _))
-
-  def oracles: Map[String, String] = Map(
-    "ix_postings" -> ixPostingsSql(),
-    "ix_conj_search" -> ixConjSearchSql(),
-    "ix_rank_search" -> ixRankSearchSql(),
-    "ix_phrase_search" -> ixPhraseSearchSql(),
-    "hy_hybrid_rrf" -> hyHybridRrfSql,
-    "hy_vec_recall" -> hyVecRecallSql)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("ix_postings", ixPostings, ixPostingsSql()),
+    QuerySpec("ix_conj_search", ixConjSearch, ixConjSearchSql()),
+    QuerySpec("ix_rank_search", ixRankSearch, ixRankSearchSql()),
+    QuerySpec("ix_phrase_search", ixPhraseSearch, ixPhraseSearchSql()),
+    QuerySpec("hy_hybrid_rrf", hyHybridRrf, hyHybridRrfSql),
+    QuerySpec("hy_vec_recall", hyVecRecall, hyVecRecallSql))
 }

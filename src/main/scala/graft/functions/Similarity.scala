@@ -1,6 +1,6 @@
 package graft.functions
 
-import graft.Tables
+import graft.{QueryModule, QuerySpec, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -21,7 +21,7 @@ import graft.util.Checkpoints.StageOps
   * comparisons. An IVF variant is the same join with k-means centroid
   * ids as bucket keys.
   */
-object Similarity {
+object Similarity extends QueryModule {
 
   /** dot(a, b) with double accumulation in index order — a native
     * codegen expression ([[DotProduct]]; the HOF formulation it
@@ -1571,49 +1571,29 @@ object Similarity {
        |ORDER BY panel.dim, panel.q_id""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sim_matryoshka_recall" -> (simMatryoshkaRecall _),
-    "sim_hamming_ann" -> (simHammingAnn _),
-    "sim_hamming_recall" -> (simHammingRecall _),
-    "dc3_semantic_decontamination" -> (dc3SemanticDecontamination _),
-    "sim_mmr" -> ((s: SparkSession, d: String) => simMmr(s, d)),
-    "sim_mmr_gate" -> ((s: SparkSession, d: String) => simMmrGate(s, d)),
-    "sim_lsh_recall" -> (simLshRecall _),
-    "sim_lsh_buckets" -> ((s: SparkSession, d: String) => simLshBuckets(s, d)),
-    "sim_threshold_sweep" -> (simThresholdSweep _),
-    "gr_triangles" -> (grTriangles _),
-    "sim_knn_graph" -> (simKnnGraph _),
-    "sim_hard_negatives" -> (simHardNegatives _),
-    "sim_topk_bruteforce" -> (simTopK _),
-    "sim_lsh_ann" -> (simLsh _),
-    "sim_quantized_dedup" -> (simQuantized _),
-    "sim_int8_quantize" -> (simInt8Quantize _),
-    "sim_neardup_cosine" -> (simNearDup _),
-    "sim_neardup_groups" -> (simNearDupGroups _),
-    "sim_auto_bits" -> (simAutoBits _),
-    "sim_rrf_fusion" -> (simRrfFusion _),
-    "sim_rank_metrics" -> (simRankMetrics _))
-
-  def oracles: Map[String, String] = Map(
-    "sim_matryoshka_recall" -> simMatryoshkaRecallSql,
-    "sim_hamming_ann" -> simHammingAnnSql,
-    "sim_hamming_recall" -> simHammingRecallSql,
-    "dc3_semantic_decontamination" -> dc3Sql,
-    "sim_mmr" -> simMmrSql(),
-    "sim_mmr_gate" -> simMmrGateSql,
-    "sim_lsh_recall" -> simLshRecallSql,
-    "sim_lsh_buckets" -> simLshBucketsSql,
-    "sim_threshold_sweep" -> simThresholdSweepSql,
-    "gr_triangles" -> grTrianglesSql,
-    "sim_knn_graph" -> simKnnGraphSql,
-    "sim_hard_negatives" -> simHardNegativesSql,
-    "sim_quantized_dedup" -> simQuantizedSql,
-    "sim_int8_quantize" -> simInt8QuantizeSql,
-    "sim_topk_bruteforce" -> simTopKSql,
-    "sim_lsh_ann" -> simLshSql,
-    "sim_neardup_cosine" -> simNearDupSql,
-    "sim_neardup_groups" -> simNearDupGroupsSql,
-    "sim_auto_bits" -> simAutoBitsSql,
-    "sim_rrf_fusion" -> simRrfFusionSql,
-    "sim_rank_metrics" -> simRankMetricsSql)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("sim_matryoshka_recall", simMatryoshkaRecall,
+      simMatryoshkaRecallSql),
+    QuerySpec("sim_hamming_ann", simHammingAnn, simHammingAnnSql),
+    QuerySpec("sim_hamming_recall", simHammingRecall, simHammingRecallSql),
+    QuerySpec("dc3_semantic_decontamination", dc3SemanticDecontamination,
+      dc3Sql),
+    QuerySpec("sim_mmr", (s, d) => simMmr(s, d), simMmrSql()),
+    QuerySpec("sim_mmr_gate", (s, d) => simMmrGate(s, d), simMmrGateSql),
+    QuerySpec("sim_lsh_recall", simLshRecall, simLshRecallSql),
+    QuerySpec("sim_lsh_buckets", (s, d) => simLshBuckets(s, d),
+      simLshBucketsSql),
+    QuerySpec("sim_threshold_sweep", simThresholdSweep, simThresholdSweepSql),
+    QuerySpec("gr_triangles", grTriangles, grTrianglesSql),
+    QuerySpec("sim_knn_graph", simKnnGraph, simKnnGraphSql),
+    QuerySpec("sim_hard_negatives", simHardNegatives, simHardNegativesSql),
+    QuerySpec("sim_topk_bruteforce", simTopK, simTopKSql),
+    QuerySpec("sim_lsh_ann", simLsh, simLshSql),
+    QuerySpec("sim_quantized_dedup", simQuantized, simQuantizedSql),
+    QuerySpec("sim_int8_quantize", simInt8Quantize, simInt8QuantizeSql),
+    QuerySpec("sim_neardup_cosine", simNearDup, simNearDupSql),
+    QuerySpec("sim_neardup_groups", simNearDupGroups, simNearDupGroupsSql),
+    QuerySpec("sim_auto_bits", simAutoBits, simAutoBitsSql),
+    QuerySpec("sim_rrf_fusion", simRrfFusion, simRrfFusionSql),
+    QuerySpec("sim_rank_metrics", simRankMetrics, simRankMetricsSql))
 }

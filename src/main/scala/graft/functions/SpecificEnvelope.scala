@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.{QueryModule, QuerySpec}
 import graft.avro.{AvroSubjects, SchemaRegistry}
 import graft.sources.ChangeFeed
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -20,7 +21,7 @@ import org.apache.spark.sql.types._
   * `<db>_<table>_<op>` subject (T7: an ALTER re-derives and registers a
   * new version; F4 compatibility gates serialization).
   */
-object SpecificEnvelope {
+object SpecificEnvelope extends QueryModule {
 
   /** Spark type → Avro schema fragment (nullable via union-with-null).
     * Covers the full binlog type table (SURVEY §1.2,
@@ -345,15 +346,9 @@ object SpecificEnvelope {
       case None => false
     }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "p4_specific_roundtrip" -> (p4SpecificRoundtrip _),
-    "ct_typed_envelope" -> (ctTypedEnvelope _),
-    "ct_typed_envelope2" -> (ctTypedEnvelope2 _),
-    "ct_typed_envelope3" -> (ctTypedEnvelope3 _))
-
-  val oracles: Map[String, String] = Map(
-    "p4_specific_roundtrip" -> p4Sql,
-    "ct_typed_envelope" -> ctSql,
-    "ct_typed_envelope2" -> ct2Sql,
-    "ct_typed_envelope3" -> ct3Sql)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("p4_specific_roundtrip", p4SpecificRoundtrip, p4Sql),
+    QuerySpec("ct_typed_envelope", ctTypedEnvelope, ctSql),
+    QuerySpec("ct_typed_envelope2", ctTypedEnvelope2, ct2Sql),
+    QuerySpec("ct_typed_envelope3", ctTypedEnvelope3, ct3Sql))
 }

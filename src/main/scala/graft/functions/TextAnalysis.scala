@@ -1,6 +1,6 @@
 package graft.functions
 
-import graft.Tables
+import graft.{QueryModule, QuerySpec, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * single double division of exact integers, which is IEEE-deterministic
   * and therefore oracle-comparable (same idiom as QueryUtil.cents).
   */
-object TextAnalysis {
+object TextAnalysis extends QueryModule {
 
   // ── token counting ──────────────────────────────────────────────────
   /** Whitespace tokens. */
@@ -1118,42 +1118,25 @@ object TextAnalysis {
       |  (folded = text) AS restored
       |FROM f ORDER BY doc_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ta_normalize" -> (taNormalize _),
-    "ta_accent_fold" -> (taAccentFold _),
-    "tc_fertility" -> (tcFertility _),
-    "ta_gopher_filters" -> ((s: SparkSession, d: String) =>
-      taGopherFilters(s, d, stopFloor = 1)),
-    "ta_tfidf" -> ((s: SparkSession, d: String) => taTfidf(s, d)),
-    "ta_char_gini" -> (taCharGini _),
-    "tc_oov_rate" -> ((s: SparkSession, d: String) => tcOovRate(s, d)),
-    "ta_token_count" -> (taTokenCount _),
-    "ta_quality_score" -> (taQualityScore _),
-    "ta_lang_id" -> (taLangId _),
-    "ta_redact" -> (taRedact _),
-    "ta_vocab" -> ((s: SparkSession, d: String) => taVocab(s, d)),
-    "ta_repetition" -> (taRepetition _),
-    "ta_gopher_repetition" -> (taGopherRepetition _),
-    "ta_bm25" -> (taBm25 _),
-    "ta_rare_bigrams" -> (taRareBigrams _),
-    "ta_fingerprint" -> (taFingerprint _))
-
-  val oracles: Map[String, String] = Map(
-    "tc_fertility" -> tcFertilitySql,
-    "ta_normalize" -> taNormalizeSql,
-    "ta_accent_fold" -> taAccentFoldSql,
-    "ta_gopher_filters" -> taGopherSql(stopFloor = 1),
-    "ta_tfidf" -> taTfidfSql(),
-    "ta_char_gini" -> taCharGiniSql,
-    "tc_oov_rate" -> tcOovRateSql(),
-    "ta_token_count" -> taTokenCountSql,
-    "ta_quality_score" -> taQualitySql,
-    "ta_lang_id" -> taLangIdSql,
-    "ta_redact" -> taRedactSql,
-    "ta_vocab" -> taVocabSql(),
-    "ta_repetition" -> taRepetitionSql,
-    "ta_gopher_repetition" -> taGopherRepetitionSql,
-    "ta_bm25" -> taBm25Sql,
-    "ta_rare_bigrams" -> taRareBigramsSql,
-    "ta_fingerprint" -> taFingerprintSql)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("ta_normalize", taNormalize, taNormalizeSql),
+    QuerySpec("ta_accent_fold", taAccentFold, taAccentFoldSql),
+    QuerySpec("tc_fertility", tcFertility, tcFertilitySql),
+    QuerySpec("ta_gopher_filters",
+      (s, d) => taGopherFilters(s, d, stopFloor = 1),
+      taGopherSql(stopFloor = 1)),
+    QuerySpec("ta_tfidf", (s, d) => taTfidf(s, d), taTfidfSql()),
+    QuerySpec("ta_char_gini", taCharGini, taCharGiniSql),
+    QuerySpec("tc_oov_rate", (s, d) => tcOovRate(s, d), tcOovRateSql()),
+    QuerySpec("ta_token_count", taTokenCount, taTokenCountSql),
+    QuerySpec("ta_quality_score", taQualityScore, taQualitySql),
+    QuerySpec("ta_lang_id", taLangId, taLangIdSql),
+    QuerySpec("ta_redact", taRedact, taRedactSql),
+    QuerySpec("ta_vocab", (s, d) => taVocab(s, d), taVocabSql()),
+    QuerySpec("ta_repetition", taRepetition, taRepetitionSql),
+    QuerySpec("ta_gopher_repetition", taGopherRepetition,
+      taGopherRepetitionSql),
+    QuerySpec("ta_bm25", taBm25, taBm25Sql),
+    QuerySpec("ta_rare_bigrams", taRareBigrams, taRareBigramsSql),
+    QuerySpec("ta_fingerprint", taFingerprint, taFingerprintSql))
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import graft.Tables
+import graft.{QueryModule, QuerySpec, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -12,7 +12,7 @@ import graft.util.Checkpoints.StageOps
   * RNG state, no shuffle, reproducible across runs and engines, which
   * is what makes dataset builds auditable at 100 TB.
   */
-object TrainPrep {
+object TrainPrep extends QueryModule {
 
   /** Overlapping token-window chunks: windows of `size` tokens every
     * `stride` tokens (last window truncated). The number of chunks for
@@ -1834,82 +1834,49 @@ object TrainPrep {
        |  (s.split <> 'train' OR leak.doc_id IS NULL) AS kept
        |FROM s LEFT JOIN leak USING (doc_id) ORDER BY doc_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "tp_source_quota" ->
-      ((s: SparkSession, d: String) => tpSourceQuota(s, d)),
-    "tc_bpe_merges" ->
-      ((s: SparkSession, d: String) => tcBpeMerges(s, d)),
-    "tc_bpe_encode" ->
-      ((s: SparkSession, d: String) => tcBpeEncode(s, d)),
-    "tc_bpe_gate" ->
-      ((s: SparkSession, d: String) => tcBpeGate(s, d)),
-    "tc_length_buckets" ->
-      ((s: SparkSession, d: String) => tcLengthBuckets(s, d)),
-    "tc_padding_sweep" ->
-      ((s: SparkSession, d: String) => tcPaddingSweep(s, d)),
-    "ts_reservoir_topk" ->
-      ((s: SparkSession, d: String) => tsReservoirTopk(s, d)),
-    "tp_packing" -> ((s: SparkSession, d: String) => tpPacking(s, d)),
-    "tp_pack_greedy" ->
-      ((s: SparkSession, d: String) => tpPackGreedy(s, d)),
-    "ts_curriculum" -> (tsCurriculum _),
-    "tp_quality_percentile" ->
-      ((s: SparkSession, d: String) => tpQualityPercentile(s, d)),
-    "tc_chunking" -> ((s: SparkSession, d: String) => tcChunking(s, d)),
-    "ts_hash_split" -> (tsHashSplit _),
-    "ts_stratified_sample" ->
-      ((s: SparkSession, d: String) => tsStratifiedSample(s, d)),
-    "ts_mixture" -> (tsMixture _),
-    "ts_temperature" -> (tsTemperature _),
-    "ts_budget_alloc" -> (tsBudgetAlloc _),
-    "tp_epoch_plan" -> (tpEpochPlan _),
-    "ts_shuffle_shards" ->
-      ((s: SparkSession, d: String) => tsShuffleShards(s, d)),
-    "tp_corpus_stats" -> (tpCorpusStats _),
-    "tp_curation" -> (tpCuration _),
-    "tp_quality_calibration" -> (tpQualityCalibration _),
-    "dc_decontamination" ->
-      ((s: SparkSession, d: String) => dcDecontamination(s, d)),
-    "dc4_bloom_decontamination" ->
-      ((s: SparkSession, d: String) => dc4BloomDecontamination(s, d)),
-    "dc2_fuzzy_decontamination" -> (dc2FuzzyDecontamination _),
-    "dc5_overlap_fraction" ->
-      ((s: SparkSession, d: String) => dc5OverlapFraction(s, d)),
-    "dc6_span_ladder" ->
-      ((s: SparkSession, d: String) => dc6SpanLadder(s, d)),
-    "tp_filter_funnel" ->
-      ((s: SparkSession, d: String) => tpFilterFunnel(s, d)),
-    "ts_split_decontaminated" ->
-      ((s: SparkSession, d: String) => tsSplitDecontaminated(s, d)))
-
-  val oracles: Map[String, String] = Map(
-    "tp_source_quota" -> tpSourceQuotaSql(),
-    "tc_bpe_merges" -> tcBpeMergesSql(),
-    "tc_bpe_encode" -> tcBpeEncodeSql(),
-    "tc_bpe_gate" -> tcBpeGateSql,
-    "tc_length_buckets" -> tcLengthBucketsSql(),
-    "tc_padding_sweep" -> tcPaddingSweepSql(),
-    "ts_reservoir_topk" -> tsReservoirTopkSql(),
-    "tp_packing" -> tpPackingSql(),
-    "tp_pack_greedy" -> tpPackGreedySql(),
-    "ts_curriculum" -> tsCurriculumSql,
-    "tp_quality_percentile" -> tpQualityPercentileSql(),
-    "tc_chunking" -> tcChunkingSql(),
-    "ts_hash_split" -> tsHashSplitSql,
-    "ts_stratified_sample" -> tsStratifiedSampleSql,
-    "ts_mixture" -> tsMixtureSql,
-    "ts_temperature" -> tsTemperatureSql,
-    "ts_budget_alloc" -> tsBudgetAllocSql(),
-    "tp_epoch_plan" -> tpEpochPlanSql(maxEpochs = 2),
-    "ts_shuffle_shards" -> tsShuffleSql(),
-    "tp_corpus_stats" -> tpCorpusStatsSql,
-    "tp_curation" -> tpCurationSql,
-    "tp_quality_calibration" -> tpQualityCalibrationSql,
-    "dc_decontamination" -> dcDecontaminationSql(),
-    "dc4_bloom_decontamination" -> dcDecontaminationSql(),
-    "dc2_fuzzy_decontamination" -> dc2Sql,
-    "dc5_overlap_fraction" -> dc5OverlapFractionSql(),
-    "dc6_span_ladder" -> dc6SpanLadderSql,
-    "tp_filter_funnel" -> tpFilterFunnelSql(),
-    "ts_split_decontaminated" -> tsSplitDecontaminatedSql())
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("tp_source_quota", (s, d) => tpSourceQuota(s, d),
+      tpSourceQuotaSql()),
+    QuerySpec("tc_bpe_merges", (s, d) => tcBpeMerges(s, d), tcBpeMergesSql()),
+    QuerySpec("tc_bpe_encode", (s, d) => tcBpeEncode(s, d), tcBpeEncodeSql()),
+    QuerySpec("tc_bpe_gate", (s, d) => tcBpeGate(s, d), tcBpeGateSql),
+    QuerySpec("tc_length_buckets", (s, d) => tcLengthBuckets(s, d),
+      tcLengthBucketsSql()),
+    QuerySpec("tc_padding_sweep", (s, d) => tcPaddingSweep(s, d),
+      tcPaddingSweepSql()),
+    QuerySpec("ts_reservoir_topk", (s, d) => tsReservoirTopk(s, d),
+      tsReservoirTopkSql()),
+    QuerySpec("tp_packing", (s, d) => tpPacking(s, d), tpPackingSql()),
+    QuerySpec("tp_pack_greedy", (s, d) => tpPackGreedy(s, d),
+      tpPackGreedySql()),
+    QuerySpec("ts_curriculum", tsCurriculum, tsCurriculumSql),
+    QuerySpec("tp_quality_percentile", (s, d) => tpQualityPercentile(s, d),
+      tpQualityPercentileSql()),
+    QuerySpec("tc_chunking", (s, d) => tcChunking(s, d), tcChunkingSql()),
+    QuerySpec("ts_hash_split", tsHashSplit, tsHashSplitSql),
+    QuerySpec("ts_stratified_sample", (s, d) => tsStratifiedSample(s, d),
+      tsStratifiedSampleSql),
+    QuerySpec("ts_mixture", tsMixture, tsMixtureSql),
+    QuerySpec("ts_temperature", tsTemperature, tsTemperatureSql),
+    QuerySpec("ts_budget_alloc", tsBudgetAlloc, tsBudgetAllocSql()),
+    QuerySpec("tp_epoch_plan", tpEpochPlan, tpEpochPlanSql(maxEpochs = 2)),
+    QuerySpec("ts_shuffle_shards", (s, d) => tsShuffleShards(s, d),
+      tsShuffleSql()),
+    QuerySpec("tp_corpus_stats", tpCorpusStats, tpCorpusStatsSql),
+    QuerySpec("tp_curation", tpCuration, tpCurationSql),
+    QuerySpec("tp_quality_calibration", tpQualityCalibration,
+      tpQualityCalibrationSql),
+    QuerySpec("dc_decontamination", (s, d) => dcDecontamination(s, d),
+      dcDecontaminationSql()),
+    QuerySpec("dc4_bloom_decontamination",
+      (s, d) => dc4BloomDecontamination(s, d), dcDecontaminationSql()),
+    QuerySpec("dc2_fuzzy_decontamination", dc2FuzzyDecontamination, dc2Sql),
+    QuerySpec("dc5_overlap_fraction", (s, d) => dc5OverlapFraction(s, d),
+      dc5OverlapFractionSql()),
+    QuerySpec("dc6_span_ladder", (s, d) => dc6SpanLadder(s, d),
+      dc6SpanLadderSql),
+    QuerySpec("tp_filter_funnel", (s, d) => tpFilterFunnel(s, d),
+      tpFilterFunnelSql()),
+    QuerySpec("ts_split_decontaminated", (s, d) => tsSplitDecontaminated(s, d),
+      tsSplitDecontaminatedSql()))
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.{QueryModule, QuerySpec}
 import graft.sources.ChangeFeed
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -14,7 +15,7 @@ import org.apache.spark.sql.functions._
   * cost is sort-within-partition, the same shape DuckDB's native ASOF
   * uses. A custom `SparkStrategy` is unnecessary.
   */
-object AsOfJoin {
+object AsOfJoin extends QueryModule {
 
   /** Left as-of join. `rightCols` are the right-side columns to carry;
     * they surface with an `asof_` prefix (null where no right row
@@ -303,15 +304,9 @@ object AsOfJoin {
        |FROM s1 LEFT JOIN s2 ON s2.event_id = s1.event_id
        |GROUP BY cohort ORDER BY cohort""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "aj_asof_join" -> (ajAsofJoin _),
-    "aj2_asof_forward" -> (aj2AsofForward _),
-    "ev8_attribution" -> (ev8Attribution _),
-    "ev9_bounded_funnel" -> (ev9BoundedFunnel _))
-
-  val oracles: Map[String, String] = Map(
-    "aj_asof_join" -> ajSql,
-    "aj2_asof_forward" -> aj2Sql,
-    "ev8_attribution" -> ev8Sql,
-    "ev9_bounded_funnel" -> ev9Sql)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("aj_asof_join", ajAsofJoin, ajSql),
+    QuerySpec("aj2_asof_forward", aj2AsofForward, aj2Sql),
+    QuerySpec("ev8_attribution", ev8Attribution, ev8Sql),
+    QuerySpec("ev9_bounded_funnel", ev9BoundedFunnel, ev9Sql))
 }

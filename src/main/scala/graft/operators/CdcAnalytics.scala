@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.{QueryModule, QuerySpec}
 import graft.sources.ChangeFeed
 import graft.util.Checkpoints.StageOps
 
@@ -25,7 +26,7 @@ import graft.util.Checkpoints.StageOps
   * map-side into the (much smaller) group key — at 100 TB the delta
   * stream is the only input, never the accumulated base.
   */
-object CdcAnalytics {
+object CdcAnalytics extends QueryModule {
 
   /** Per-entity history order: the binlog total order restricted to
     * one primary key (commit ts, then file position). */
@@ -476,25 +477,14 @@ object CdcAnalytics {
        |FROM rows_ r JOIN stats USING (event_type)
        |ORDER BY event_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "fe1_lag_features" -> (fe1LagFeatures _),
-    "fe2_target_encoding" -> (fe2TargetEncoding _),
-    "cd_order_audit" -> (disorderStats _),
-    "cd_ivm_join" -> (ivmJoin _),
-    "cd_scd2_history" -> (scd2History _),
-    "cd_ivm_delta_agg" -> (ivmDeltaAgg _),
-    "cd_merge_apply" -> (mergeApply _),
-    "cd_asof_state" -> ((s: SparkSession, d: String) => asofState(s, d)),
-    "cd_table_stats" -> (tableStats _))
-
-  val oracles: Map[String, String] = Map(
-    "fe1_lag_features" -> fe1Sql,
-    "fe2_target_encoding" -> fe2Sql,
-    "cd_order_audit" -> disorderSql,
-    "cd_ivm_join" -> ivmJoinSql,
-    "cd_scd2_history" -> scd2Sql,
-    "cd_ivm_delta_agg" -> ivmSql,
-    "cd_merge_apply" -> mergeSql,
-    "cd_asof_state" -> asofSql,
-    "cd_table_stats" -> tableStatsSql)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("fe1_lag_features", fe1LagFeatures, fe1Sql),
+    QuerySpec("fe2_target_encoding", fe2TargetEncoding, fe2Sql),
+    QuerySpec("cd_order_audit", disorderStats, disorderSql),
+    QuerySpec("cd_ivm_join", ivmJoin, ivmJoinSql),
+    QuerySpec("cd_scd2_history", scd2History, scd2Sql),
+    QuerySpec("cd_ivm_delta_agg", ivmDeltaAgg, ivmSql),
+    QuerySpec("cd_merge_apply", mergeApply, mergeSql),
+    QuerySpec("cd_asof_state", (s, d) => asofState(s, d), asofSql),
+    QuerySpec("cd_table_stats", tableStats, tableStatsSql))
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{QueryModule, QuerySpec, Tables}
 import graft.sources.{ChangeFeed, Snapshot}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * P3 (partitioned by user_id — the per-key ordering domain, SURVEY
   * §7.5, so it scales horizontally with key cardinality).
   */
-object CdcOps {
+object CdcOps extends QueryModule {
 
   // ── S2: event decode / demux ────────────────────────────────────────
   /** Raw feed → typed mutation envelope (reference
@@ -322,39 +322,21 @@ object CdcOps {
       |  UPPER(event_type) AS type_str
       |FROM events ORDER BY event_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "s2_event_decode" -> (s2EventDecode _),
-    "s3_prefix_classify" -> (s3PrefixClassify _),
-    "s4_alter_extract" -> (s4AlterExtract _),
-    "s9_snapshot_scan" -> (s9SnapshotScan _),
-    "s10_bounding_values" -> (s10BoundingValues _),
-    "s11_range_split" -> (s11RangeSplit _),
-    "s12_snapshot_union" -> (s12SnapshotUnion _),
-    "f1_include_filter" -> (f1IncludeFilter _),
-    "f3_null_omission" -> (f3NullOmission _),
-    "p3_update_images" -> (p3UpdateImages _),
-    "p6_row_fanout" -> (p6RowFanout _),
-    "p7_topic_routing" -> (p7TopicRouting _),
-    "p8_mutation_tagging" -> (p8MutationTagging _),
-    "p9_pk_string" -> (p9PkString _),
-    "p10_sql_render" -> (p10SqlRender _),
-    "p11_stringify" -> (p11Stringify _))
-
-  val oracles: Map[String, String] = Map(
-    "s2_event_decode" -> s2Sql,
-    "s3_prefix_classify" -> s3Sql,
-    "s4_alter_extract" -> s4Sql,
-    "s9_snapshot_scan" -> s9Sql,
-    "s10_bounding_values" -> s10Sql,
-    "s11_range_split" -> s11Sql,
-    "s12_snapshot_union" -> s12Sql,
-    "f1_include_filter" -> f1Sql,
-    "f3_null_omission" -> f3Sql,
-    "p3_update_images" -> p3Sql,
-    "p6_row_fanout" -> p6Sql,
-    "p7_topic_routing" -> p7Sql,
-    "p8_mutation_tagging" -> p8Sql,
-    "p9_pk_string" -> p9Sql,
-    "p10_sql_render" -> p10Sql,
-    "p11_stringify" -> p11Sql)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("s2_event_decode", s2EventDecode, s2Sql),
+    QuerySpec("s3_prefix_classify", s3PrefixClassify, s3Sql),
+    QuerySpec("s4_alter_extract", s4AlterExtract, s4Sql),
+    QuerySpec("s9_snapshot_scan", s9SnapshotScan, s9Sql),
+    QuerySpec("s10_bounding_values", s10BoundingValues, s10Sql),
+    QuerySpec("s11_range_split", s11RangeSplit, s11Sql),
+    QuerySpec("s12_snapshot_union", s12SnapshotUnion, s12Sql),
+    QuerySpec("f1_include_filter", f1IncludeFilter, f1Sql),
+    QuerySpec("f3_null_omission", f3NullOmission, f3Sql),
+    QuerySpec("p3_update_images", p3UpdateImages, p3Sql),
+    QuerySpec("p6_row_fanout", p6RowFanout, p6Sql),
+    QuerySpec("p7_topic_routing", p7TopicRouting, p7Sql),
+    QuerySpec("p8_mutation_tagging", p8MutationTagging, p8Sql),
+    QuerySpec("p9_pk_string", p9PkString, p9Sql),
+    QuerySpec("p10_sql_render", p10SqlRender, p10Sql),
+    QuerySpec("p11_stringify", p11Stringify, p11Sql))
 }

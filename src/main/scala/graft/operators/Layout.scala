@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{QueryModule, QuerySpec, Tables}
 
 /** Data-layout operators — the piece of a 100 TB deployment that
   * decides how much of the corpus a query touches before a single
@@ -24,7 +24,7 @@ import graft.Tables
   *  - [[writeDatePartitioned]]: hive-style partitioned parquet writer
   *    whose read side partition-prunes (asserted in LayoutSpec).
   */
-object Layout {
+object Layout extends QueryModule {
 
   private val mask = Seq(
     0x00FF00FFL -> 8, 0x0F0F0F0FL -> 4, 0x33333333L -> 2, 0x55555555L -> 1)
@@ -236,13 +236,8 @@ object Layout {
       .drop("zkey")
       .write.mode("overwrite").partitionBy("o_year").parquet(path)
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "lay_zorder" -> (layZorder _),
-    "lay_zcells" -> (layZcells _),
-    "lay_file_skip" -> (layFileSkip _))
-
-  val oracles: Map[String, String] = Map(
-    "lay_zorder" -> layZorderSql,
-    "lay_zcells" -> layZcellsSql,
-    "lay_file_skip" -> layFileSkipSql)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("lay_zorder", layZorder, layZorderSql),
+    QuerySpec("lay_zcells", layZcells, layZcellsSql),
+    QuerySpec("lay_file_skip", layFileSkip, layFileSkipSql))
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{QueryModule, QuerySpec, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -21,7 +21,7 @@ import QueryUtil._
   *  - top-k is orderBy+limit → Spark's TakeOrderedAndProject (no global
   *    sort materialization).
   */
-object Relational {
+object Relational extends QueryModule {
 
   /** Pricing summary (TPC-H Q1 flavor): one scan, one shuffle on a
     * 6-group key. At 100 TB the partial aggregation collapses each map
@@ -161,16 +161,10 @@ object Relational {
       |  AND l_discount >= 0.03 AND l_discount <= 0.07
       |  AND l_quantity < 24.0""".stripMargin
 
-  /** All relational queries + oracles, consumed by SparkEntry. */
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q1_pricing_summary" -> (q1PricingSummary _),
-    "q3_shipping_priority" -> (q3ShippingPriority _),
-    "q5_local_supplier" -> (q5LocalSupplier _),
-    "q6_forecast_revenue" -> (q6ForecastRevenue _))
-
-  val oracles: Map[String, String] = Map(
-    "q1_pricing_summary" -> q1Sql,
-    "q3_shipping_priority" -> q3Sql,
-    "q5_local_supplier" -> q5Sql,
-    "q6_forecast_revenue" -> q6Sql)
+  /** The relational queries with their oracles, listed by SparkEntry. */
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q1_pricing_summary", q1PricingSummary, q1Sql),
+    QuerySpec("q3_shipping_priority", q3ShippingPriority, q3Sql),
+    QuerySpec("q5_local_supplier", q5LocalSupplier, q5Sql),
+    QuerySpec("q6_forecast_revenue", q6ForecastRevenue, q6Sql))
 }

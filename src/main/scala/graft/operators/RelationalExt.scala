@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{QueryModule, QuerySpec, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -16,7 +16,7 @@ import QueryUtil._
   * cents; ties broken by unique keys; ratios as single double
   * divisions.
   */
-object RelationalExt {
+object RelationalExt extends QueryModule {
 
   // ── window functions ────────────────────────────────────────────────
   /** Running per-customer order total (cumulative window). One shuffle
@@ -437,39 +437,21 @@ object RelationalExt {
       |  CAST(instr(c_name, '1') AS INT) AS first_one
       |FROM customer ORDER BY c_custkey""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "w1_running_total" -> (w1RunningTotal _),
-    "w2_top_orders" -> (w2TopOrders _),
-    "w3_range_window" -> (w3RangeWindow _),
-    "g1_rollup" -> (g1Rollup _),
-    "g2_distinct_count" -> (g2DistinctCount _),
-    "g3_cube" -> (g3Cube _),
-    "p14_pivot" -> (p14Pivot _),
-    "p15_unpivot" -> (p15Unpivot _),
-    "set1_intersect_except" -> (set1Ops _),
-    "j1_semi_anti" -> (j1SemiAnti _),
-    "f2_json_extract" -> (f2JsonExtract _),
-    "d1_date_buckets" -> (d1DateBuckets _),
-    "ev1_funnel" -> (ev1Funnel _),
-    "m1_int_math" -> (m1IntMath _),
-    "r1_range_join" -> (r1RangeJoin _),
-    "str1_functions" -> (str1Functions _))
-
-  val oracles: Map[String, String] = Map(
-    "w1_running_total" -> w1Sql,
-    "w2_top_orders" -> w2Sql,
-    "w3_range_window" -> w3Sql,
-    "g1_rollup" -> g1Sql,
-    "g2_distinct_count" -> g2Sql,
-    "g3_cube" -> g3Sql,
-    "p14_pivot" -> p14Sql,
-    "p15_unpivot" -> p15Sql,
-    "set1_intersect_except" -> set1Sql,
-    "j1_semi_anti" -> j1Sql,
-    "f2_json_extract" -> f2Sql,
-    "d1_date_buckets" -> d1Sql,
-    "ev1_funnel" -> ev1Sql,
-    "m1_int_math" -> m1Sql,
-    "r1_range_join" -> r1Sql,
-    "str1_functions" -> str1Sql)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("w1_running_total", w1RunningTotal, w1Sql),
+    QuerySpec("w2_top_orders", w2TopOrders, w2Sql),
+    QuerySpec("w3_range_window", w3RangeWindow, w3Sql),
+    QuerySpec("g1_rollup", g1Rollup, g1Sql),
+    QuerySpec("g2_distinct_count", g2DistinctCount, g2Sql),
+    QuerySpec("g3_cube", g3Cube, g3Sql),
+    QuerySpec("p14_pivot", p14Pivot, p14Sql),
+    QuerySpec("p15_unpivot", p15Unpivot, p15Sql),
+    QuerySpec("set1_intersect_except", set1Ops, set1Sql),
+    QuerySpec("j1_semi_anti", j1SemiAnti, j1Sql),
+    QuerySpec("f2_json_extract", f2JsonExtract, f2Sql),
+    QuerySpec("d1_date_buckets", d1DateBuckets, d1Sql),
+    QuerySpec("ev1_funnel", ev1Funnel, ev1Sql),
+    QuerySpec("m1_int_math", m1IntMath, m1Sql),
+    QuerySpec("r1_range_join", r1RangeJoin, r1Sql),
+    QuerySpec("str1_functions", str1Functions, str1Sql))
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{QueryModule, QuerySpec, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   * date arithmetic are codegen'd expressions, not UDFs), and the array
   * query's only shuffle is the groupBy on the order key.
   */
-object RelationalFifth {
+object RelationalFifth extends QueryModule {
   import QueryUtil.cents
 
   // ── higher-order array functions ────────────────────────────────────
@@ -215,17 +215,10 @@ object RelationalFifth {
       |      FROM customer)
       |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "a1_array_hof" -> (a1ArrayHof _),
-    "m2_date_functions" -> (m2DateFunctions _),
-    "j2_full_outer" -> (j2FullOuter _),
-    "fj1_fuzzy_join" -> (fj1FuzzyJoin _),
-    "g5_exact_median" -> (g5ExactMedian _))
-
-  val oracles: Map[String, String] = Map(
-    "a1_array_hof" -> a1Sql,
-    "m2_date_functions" -> m2Sql,
-    "j2_full_outer" -> j2Sql,
-    "fj1_fuzzy_join" -> fj1Sql,
-    "g5_exact_median" -> g5Sql)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("a1_array_hof", a1ArrayHof, a1Sql),
+    QuerySpec("m2_date_functions", m2DateFunctions, m2Sql),
+    QuerySpec("j2_full_outer", j2FullOuter, j2Sql),
+    QuerySpec("fj1_fuzzy_join", fj1FuzzyJoin, fj1Sql),
+    QuerySpec("g5_exact_median", g5ExactMedian, g5Sql))
 }

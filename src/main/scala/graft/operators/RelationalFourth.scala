@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{QueryModule, QuerySpec, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -25,7 +25,7 @@ import QueryUtil._
   * cost" / "dominant share" cuts run as windows over the already-tiny
   * grouped supply relation, not over the fact table.
   */
-object RelationalFourth {
+object RelationalFourth extends QueryModule {
 
   // ── Q2 flavor: minimum-cost supplier ────────────────────────────────
   /** For each small STANDARD part, the European supplier(s) offering
@@ -554,30 +554,16 @@ object RelationalFourth {
       |SELECT event_type, day, n, g AS cusum, g > k * 5.0 AS is_shift
       |FROM walk ORDER BY event_type, day""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ev6_ewma" -> (ev6Ewma _),
-    "ev7_cusum" -> (ev7Cusum _),
-    "q2_min_cost_supplier" -> (q2MinCostSupplier _),
-    "q11_important_stock" -> (q11ImportantStock _),
-    "q16_parts_suppliers" -> (q16PartsSuppliers _),
-    "q20_potential_promotion" -> (q20PotentialPromotion _),
-    "w4_order_navigation" -> (w4OrderNavigation _),
-    "g4_grouping_sets" -> (g4GroupingSets _),
-    "ev4_transitions" -> (ev4Transitions _),
-    "ev10_top_paths" ->
-      ((s: SparkSession, d: String) => ev10TopPaths(s, d)),
-    "ev5_anomaly" -> ((s: SparkSession, d: String) => ev5Anomaly(s, d)))
-
-  val oracles: Map[String, String] = Map(
-    "ev6_ewma" -> ev6Sql,
-    "ev7_cusum" -> ev7Sql,
-    "q2_min_cost_supplier" -> q2Sql,
-    "q11_important_stock" -> q11Sql,
-    "q16_parts_suppliers" -> q16Sql,
-    "q20_potential_promotion" -> q20Sql,
-    "w4_order_navigation" -> w4Sql,
-    "g4_grouping_sets" -> g4Sql,
-    "ev4_transitions" -> ev4Sql,
-    "ev10_top_paths" -> ev10Sql(),
-    "ev5_anomaly" -> ev5Sql())
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("ev6_ewma", ev6Ewma, ev6Sql),
+    QuerySpec("ev7_cusum", ev7Cusum, ev7Sql),
+    QuerySpec("q2_min_cost_supplier", q2MinCostSupplier, q2Sql),
+    QuerySpec("q11_important_stock", q11ImportantStock, q11Sql),
+    QuerySpec("q16_parts_suppliers", q16PartsSuppliers, q16Sql),
+    QuerySpec("q20_potential_promotion", q20PotentialPromotion, q20Sql),
+    QuerySpec("w4_order_navigation", w4OrderNavigation, w4Sql),
+    QuerySpec("g4_grouping_sets", g4GroupingSets, g4Sql),
+    QuerySpec("ev4_transitions", ev4Transitions, ev4Sql),
+    QuerySpec("ev10_top_paths", (s, d) => ev10TopPaths(s, d), ev10Sql()),
+    QuerySpec("ev5_anomaly", (s, d) => ev5Anomaly(s, d), ev5Sql()))
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{QueryModule, QuerySpec, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -13,7 +13,7 @@ import QueryUtil._
   * dimensions broadcast, facts shuffle once on their join key, money
   * through integer cents, every query ends in a total order.
   */
-object RelationalMore {
+object RelationalMore extends QueryModule {
 
   // ── Q7 flavor: volume shipping between two nations ──────────────────
   /** Bilateral trade volume: lineitem⋈supplier⋈orders⋈customer with
@@ -281,21 +281,12 @@ object RelationalMore {
       |ORDER BY price_cents DESC, o_orderkey
       |LIMIT 100""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q12_shipping_delay" -> (q12ShippingDelay _),
-    "q18_large_orders" -> (q18LargeOrders _),
-    "q7_volume_shipping" -> (q7VolumeShipping _),
-    "q9_product_profit" -> (q9ProductProfit _),
-    "q10_returned_items" -> (q10ReturnedItems _),
-    "q13_customer_distribution" -> (q13CustomerDistribution _),
-    "q14_promo_effect" -> (q14PromoEffect _))
-
-  val oracles: Map[String, String] = Map(
-    "q12_shipping_delay" -> q12Sql,
-    "q18_large_orders" -> q18Sql,
-    "q7_volume_shipping" -> q7Sql,
-    "q9_product_profit" -> q9Sql,
-    "q10_returned_items" -> q10Sql,
-    "q13_customer_distribution" -> q13Sql,
-    "q14_promo_effect" -> q14Sql)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q12_shipping_delay", q12ShippingDelay, q12Sql),
+    QuerySpec("q18_large_orders", q18LargeOrders, q18Sql),
+    QuerySpec("q7_volume_shipping", q7VolumeShipping, q7Sql),
+    QuerySpec("q9_product_profit", q9ProductProfit, q9Sql),
+    QuerySpec("q10_returned_items", q10ReturnedItems, q10Sql),
+    QuerySpec("q13_customer_distribution", q13CustomerDistribution, q13Sql),
+    QuerySpec("q14_promo_effect", q14PromoEffect, q14Sql))
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{QueryModule, QuerySpec, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The SQL entry point of the engine: queries authored as SQL text and
@@ -9,7 +9,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the DataFrame-built queries don't touch. The same SQL (modulo
   * dialect) is the oracle, so parser-level semantics are verified too.
   */
-object RelationalSql {
+object RelationalSql extends QueryModule {
 
   private def withViews(spark: SparkSession, dir: String): Unit =
     Tables.names.foreach { t =>
@@ -67,11 +67,7 @@ object RelationalSql {
       |GROUP BY l_partkey
       |ORDER BY l_partkey""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q15_correlated_max" -> (q15CorrelatedMax _),
-    "q17_small_quantity" -> (q17SmallQuantity _))
-
-  val oracles: Map[String, String] = Map(
-    "q15_correlated_max" -> q15Sql,
-    "q17_small_quantity" -> q17Sql)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q15_correlated_max", q15CorrelatedMax, q15Sql),
+    QuerySpec("q17_small_quantity", q17SmallQuantity, q17Sql))
 }

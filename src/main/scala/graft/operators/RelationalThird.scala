@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{QueryModule, QuerySpec, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -27,7 +27,7 @@ import QueryUtil._
   *  - cohort retention over the events stream (ev2) — the standard
   *    product-analytics companion to [[RelationalExt.ev1Funnel]]
   */
-object RelationalThird {
+object RelationalThird extends QueryModule {
 
   private val Late = "INTERVAL 60 DAYS" // ship > order-date + 60d
 
@@ -318,21 +318,12 @@ object RelationalThird {
       |  ON days.user_id = daily.user_id AND days.d = daily.d
       |ORDER BY days.user_id, days.d""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q4_order_priority" -> (q4OrderPriority _),
-    "q8_market_share" -> (q8MarketShare _),
-    "q19_discounted_revenue" -> (q19DiscountedRevenue _),
-    "q21_waiting_suppliers" -> (q21WaitingSuppliers _),
-    "q22_global_sales" -> (q22GlobalSales _),
-    "ev2_retention" -> (ev2Retention _),
-    "ev3_gapfill" -> (ev3Gapfill _))
-
-  val oracles: Map[String, String] = Map(
-    "q4_order_priority" -> q4Sql,
-    "q8_market_share" -> q8Sql,
-    "q19_discounted_revenue" -> q19Sql,
-    "q21_waiting_suppliers" -> q21Sql,
-    "q22_global_sales" -> q22Sql,
-    "ev2_retention" -> ev2Sql,
-    "ev3_gapfill" -> ev3Sql)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q4_order_priority", q4OrderPriority, q4Sql),
+    QuerySpec("q8_market_share", q8MarketShare, q8Sql),
+    QuerySpec("q19_discounted_revenue", q19DiscountedRevenue, q19Sql),
+    QuerySpec("q21_waiting_suppliers", q21WaitingSuppliers, q21Sql),
+    QuerySpec("q22_global_sales", q22GlobalSales, q22Sql),
+    QuerySpec("ev2_retention", ev2Retention, ev2Sql),
+    QuerySpec("ev3_gapfill", ev3Gapfill, ev3Sql))
 }

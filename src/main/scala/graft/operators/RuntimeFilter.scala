@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{QueryModule, QuerySpec, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -34,7 +34,7 @@ import QueryUtil._
   *    sides, the Bloom pre-filter is what shrinks the probe exchange
   *    by the filter's selectivity.
   */
-object RuntimeFilter {
+object RuntimeFilter extends QueryModule {
 
   /** Bits budgeted per build key. With k=2 probes the false-positive
     * rate is (1 − e^(−k·n/m))^k; at m = 32·n that is
@@ -186,9 +186,6 @@ object RuntimeFilter {
       |    AND o.o_orderpriority = '1-URGENT')
       |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "j3_bloom_semi" -> (j3BloomSemi _))
-
-  val oracles: Map[String, String] = Map(
-    "j3_bloom_semi" -> j3Sql)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("j3_bloom_semi", j3BloomSemi, j3Sql))
 }

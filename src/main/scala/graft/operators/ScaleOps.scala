@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{QueryModule, QuerySpec, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -12,7 +12,7 @@ import QueryUtil._
   * 100 TB. Correctness is locked by result-equivalence tests; plan
   * shape by `ScaleOpsSpec`.
   */
-object ScaleOps {
+object ScaleOps extends QueryModule {
 
   /** Skew-busting salted join: a hot key on the big side lands on one
     * reducer in a plain hash join. Salting splits each big-side key
@@ -111,11 +111,7 @@ object ScaleOps {
       |  FROM orders)
       |WHERE rk <= 3 ORDER BY o_custkey, rk""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "j4_salted_skew" -> (j4SaltedSkew _),
-    "w9_native_topk" -> (w9NativeTopk _))
-
-  val oracles: Map[String, String] = Map(
-    "j4_salted_skew" -> j4Sql,
-    "w9_native_topk" -> w9Sql)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("j4_salted_skew", j4SaltedSkew, j4Sql),
+    QuerySpec("w9_native_topk", w9NativeTopk, w9Sql))
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{QueryModule, QuerySpec, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * No DuckDB oracle (sketch internals are engine-specific); error
   * bounds vs the exact answers are asserted in `SketchesSpec`.
   */
-object Sketches {
+object Sketches extends QueryModule {
 
   /** HLL++ distinct counts per return flag at 2% target error, checked
     * against the exact counts IN the query: the output carries the
@@ -318,18 +318,12 @@ object Sketches {
        |FROM ex CROSS JOIN est""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sk_approx_distinct" -> (skApproxDistinct _),
-    "sk_approx_percentiles" -> (skApproxPercentiles _),
-    "sk_hll_union" -> (skHllUnionGate _),
-    "sk_join_size" -> (skJoinSize _),
-    "sk_heavy_hitters" ->
-      ((s: SparkSession, d: String) => skHeavyHitters(s, d)))
-
-  val oracles: Map[String, String] = Map(
-    "sk_join_size" -> skJoinSizeSql,
-    "sk_hll_union" -> skHllUnionGateSql,
-    "sk_approx_distinct" -> skApproxDistinctSql,
-    "sk_approx_percentiles" -> skApproxPercentilesSql,
-    "sk_heavy_hitters" -> skHeavyHittersSql)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("sk_approx_distinct", skApproxDistinct, skApproxDistinctSql),
+    QuerySpec("sk_approx_percentiles", skApproxPercentiles,
+      skApproxPercentilesSql),
+    QuerySpec("sk_hll_union", skHllUnionGate, skHllUnionGateSql),
+    QuerySpec("sk_join_size", skJoinSize, skJoinSizeSql),
+    QuerySpec("sk_heavy_hitters", (s, d) => skHeavyHitters(s, d),
+      skHeavyHittersSql))
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{QueryModule, QuerySpec, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -16,7 +16,7 @@ import graft.util.Checkpoints.StageOps
   * operation written identically in the Spark code and the DuckDB
   * oracle — so even regression slopes and correlations hash-match.
   */
-object Stats {
+object Stats extends QueryModule {
 
   // ── exact OLS / correlation per group ───────────────────────────────
   /** Per-returnflag linear regression of discount (basis points) on
@@ -669,29 +669,16 @@ object Stats {
       |  CAST(COUNT(*) OVER (PARTITION BY comp_id) AS BIGINT) AS comp_size
       |FROM comp ORDER BY part_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "gr_cc" -> (grCc _),
-    "st1_linreg" -> (st1Linreg _),
-    "st2_moments" -> (st2Moments _),
-    "st3_robust" -> (st3Robust _),
-    "g6_mode" -> (g6Mode _),
-    "w5_rank_stats" -> (w5RankStats _),
-    "w6_rolling_median" -> (w6RollingMedian _),
-    "w7_rolling_actives" -> (w7RollingActives _),
-    "w7b_rolling_actives_sketch" -> (w7bRollingActivesSketch _),
-    "w8_pareto" -> (w8Pareto _),
-    "gr_pagerank" -> (grPagerank _))
-
-  val oracles: Map[String, String] = Map(
-    "gr_cc" -> grCcSql,
-    "st1_linreg" -> st1Sql,
-    "st2_moments" -> st2Sql,
-    "st3_robust" -> st3Sql,
-    "g6_mode" -> g6Sql,
-    "w5_rank_stats" -> w5Sql,
-    "w6_rolling_median" -> w6Sql,
-    "w7_rolling_actives" -> w7Sql,
-    "w7b_rolling_actives_sketch" -> w7bSql,
-    "w8_pareto" -> w8Sql,
-    "gr_pagerank" -> grSql)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("gr_cc", grCc, grCcSql),
+    QuerySpec("st1_linreg", st1Linreg, st1Sql),
+    QuerySpec("st2_moments", st2Moments, st2Sql),
+    QuerySpec("st3_robust", st3Robust, st3Sql),
+    QuerySpec("g6_mode", g6Mode, g6Sql),
+    QuerySpec("w5_rank_stats", w5RankStats, w5Sql),
+    QuerySpec("w6_rolling_median", w6RollingMedian, w6Sql),
+    QuerySpec("w7_rolling_actives", w7RollingActives, w7Sql),
+    QuerySpec("w7b_rolling_actives_sketch", w7bRollingActivesSketch, w7bSql),
+    QuerySpec("w8_pareto", w8Pareto, w8Sql),
+    QuerySpec("gr_pagerank", grPagerank, grSql))
 }

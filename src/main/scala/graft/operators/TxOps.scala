@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.{QueryModule, QuerySpec}
 import graft.sources.ChangeFeed
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -23,7 +24,7 @@ import org.apache.spark.sql.functions._
   * this parallelizes to any cluster width; a single global-order window
   * would not (SURVEY §7.5).
   */
-object TxOps {
+object TxOps extends QueryModule {
 
   /** Tx-session gap: events ≤ 1 h apart on one connection share a tx. */
   val GapUs: Long = 3600L * 1000000L
@@ -217,21 +218,12 @@ object TxOps {
        |    / CAST(COUNT(*) AS DOUBLE) AS mean_span_us
        |FROM per_tx GROUP BY sz ORDER BY sz""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "t15_tx_size_stats" -> (t15TxSizeStats _),
-    "t1_tx_grouping" -> (t1TxGrouping _),
-    "t2_commit_ts" -> (t2CommitTs _),
-    "t3_txid_assign" -> (t3TxidAssign _),
-    "t4_rollback_discard" -> (t4RollbackDiscard _),
-    "t12_tx_batch" -> (t12TxBatch _),
-    "t9_latest_image" -> (t9LatestImage _))
-
-  val oracles: Map[String, String] = Map(
-    "t15_tx_size_stats" -> t15Sql,
-    "t1_tx_grouping" -> t1Sql,
-    "t2_commit_ts" -> t2Sql,
-    "t3_txid_assign" -> t3Sql,
-    "t4_rollback_discard" -> t4Sql,
-    "t12_tx_batch" -> t12Sql,
-    "t9_latest_image" -> t9Sql)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("t15_tx_size_stats", t15TxSizeStats, t15Sql),
+    QuerySpec("t1_tx_grouping", t1TxGrouping, t1Sql),
+    QuerySpec("t2_commit_ts", t2CommitTs, t2Sql),
+    QuerySpec("t3_txid_assign", t3TxidAssign, t3Sql),
+    QuerySpec("t4_rollback_discard", t4RollbackDiscard, t4Sql),
+    QuerySpec("t12_tx_batch", t12TxBatch, t12Sql),
+    QuerySpec("t9_latest_image", t9LatestImage, t9Sql))
 }

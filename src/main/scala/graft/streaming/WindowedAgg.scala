@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.{QueryModule, QuerySpec}
 import graft.sources.ChangeFeed
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -11,7 +12,7 @@ import org.apache.spark.sql.functions._
   * so tumbling/sliding windows and late-data policy come straight from
   * Structured Streaming.
   */
-object WindowedAgg {
+object WindowedAgg extends QueryModule {
 
   /** Streaming tumbling-window counts per event type; events later than
     * `watermark` behind the max seen event time are dropped and their
@@ -206,19 +207,11 @@ object WindowedAgg {
       |  FROM events)
       |WHERE rk <= 3 ORDER BY event_type, rk""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "t17_stream_topk" -> (t17StreamTopk _),
-    "t16_stream_dedup" -> (t16StreamDedup _),
-    "t14_stream_join" -> (t14StreamJoin _),
-    "t10_tumbling_window" -> (t10TumblingWindow _),
-    "t11_session_window" -> (t11SessionWindow _),
-    "t13_sliding_window" -> (t13SlidingWindow _))
-
-  val oracles: Map[String, String] = Map(
-    "t17_stream_topk" -> t17Sql,
-    "t16_stream_dedup" -> t16Sql,
-    "t14_stream_join" -> t14Sql,
-    "t10_tumbling_window" -> t10Sql,
-    "t11_session_window" -> t11Sql,
-    "t13_sliding_window" -> t13Sql)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("t17_stream_topk", t17StreamTopk, t17Sql),
+    QuerySpec("t16_stream_dedup", t16StreamDedup, t16Sql),
+    QuerySpec("t14_stream_join", t14StreamJoin, t14Sql),
+    QuerySpec("t10_tumbling_window", t10TumblingWindow, t10Sql),
+    QuerySpec("t11_session_window", t11SessionWindow, t11Sql),
+    QuerySpec("t13_sliding_window", t13SlidingWindow, t13Sql))
 }

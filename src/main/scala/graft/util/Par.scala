@@ -57,11 +57,6 @@ object Par {
   private def widenImpl(df: DataFrame, gauge: DataFrame,
       chunked: Boolean): DataFrame = {
     if (df.isStreaming) return df // micro-batches size themselves
-    // measurement kill-switch (r17): GRAFT_WIDEN=off disables every
-    // widen call site at once, so a single binary can A/B the lever
-    // under matched host noise (the per-site keep/revert decisions in
-    // OPTIMIZATION_r17.md came from this). Never set in production.
-    if (sys.env.get("GRAFT_WIDEN").contains("off")) return df
     // idempotence: operators compose (the dataset-build feeds a widened
     // survivor frame into spanExcision, which widens its own input) —
     // a second round-robin exchange on top of an existing repartition
@@ -127,8 +122,10 @@ object Par {
   // SessionState per loopScope call measured +0.3-0.5 s per query
   // (gr_pagerank 1.78 → 2.32 s, tc_bpe_merges 1.36 → 1.68 s, quiet
   // samples). Per-thread keying keeps concurrent loops isolated; the
-  // conf is re-pinned from the parent on EVERY call, so reuse changes
-  // no semantics. Entries are dropped when their context stops.
+  // conf is re-synced with the parent on EVERY call, so reuse changes
+  // no semantics. A clone whose context has stopped is rebuilt on its
+  // thread's next call; the map itself is never pruned (one entry per
+  // parent session).
   private val scopedSessions = new java.util.concurrent.ConcurrentHashMap[
     org.apache.spark.sql.SparkSession,
     ThreadLocal[org.apache.spark.sql.SparkSession]]()
@@ -147,9 +144,14 @@ object Par {
     // carry the parent's RUNTIME conf (tuneForData ceilings, checkpoint
     // durability mode, …) fresh on every call: newSession starts from
     // builder-time options only, and the parent may have been retuned
-    // since the clone was cached. Static/immutable entries throw —
-    // skip them.
-    spark.conf.getAll.foreach { case (k, v) =>
+    // since the clone was cached — including keys it has since unset,
+    // which must not stay live in the clone. Static/immutable entries
+    // throw — skip them.
+    val parent = spark.conf.getAll
+    scoped.conf.getAll.keys.filterNot(parent.contains).foreach { k =>
+      try scoped.conf.unset(k) catch { case _: Throwable => }
+    }
+    parent.foreach { case (k, v) =>
       try scoped.conf.set(k, v) catch { case _: Throwable => }
     }
     scoped.conf.set("spark.sql.adaptive.enabled", "false")

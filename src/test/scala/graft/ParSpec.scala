@@ -76,4 +76,14 @@ class ParSpec extends SparkSpec {
     assert(Par.widen(df) eq df)
     assert(Par.widenChunked(df) eq df)
   }
+
+  test("loopScope: a key the parent unsets does not stay live in the " +
+    "reused clone") {
+    val key = "spark.graft.widen.chunkBytes"
+    def scoped() = Par.loopScope(spark, 1)(_.conf.getOption(key))
+    spark.conf.set(key, "16")
+    try assert(scoped() === Some("16"))
+    finally spark.conf.unset(key)
+    assert(scoped() === None, "the clone kept a key the parent unset")
+  }
 }

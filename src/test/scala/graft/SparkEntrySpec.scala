@@ -28,4 +28,23 @@ class SparkEntrySpec extends AnyFunSuite {
     val bad = SparkEntry.oracleSql.filter(_._2.contains(";"))
     assert(bad.isEmpty, s"semicolon in oracle SQL: ${bad.keySet}")
   }
+
+  test("a registry with a repeated name fails to build") {
+    val q = SparkEntry.specs.head
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.registry(SparkEntry.specs :+ q.copy(oracle = "SELECT 1")))
+    assert(e.getMessage.contains(q.name))
+  }
+
+  test("each module is listed once and its builders live in its package " +
+    "(the layer a trace attributes a query's construction to)") {
+    assert(SparkEntry.modules.distinct.size === SparkEntry.modules.size)
+    assert(SparkEntry.queries.size === SparkEntry.specs.size)
+    for (m <- SparkEntry.modules; s <- m.specs) {
+      val pkg = m.getClass.getPackageName + "."
+      val cls = SparkEntry.queries(s.name).getClass.getName
+      assert(pkg.startsWith("graft.") && cls.startsWith(pkg),
+        s"${s.name}: $cls is not in $pkg")
+    }
+  }
 }
