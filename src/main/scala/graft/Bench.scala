@@ -73,10 +73,10 @@ object Bench {
     // superlinearly in wall because the ANSWER grows superlinearly on
     // decade-stacked near-duplicate corpora — rows make that visible)
     val rows = scala.collection.mutable.Map.empty[String, Long]
-    // iterative-kernel round counts per query (graft.util.Rounds): the
-    // scale sweeps report these next to the wall slopes — a CC closure
-    // whose round count grows with the decade is a different scale
-    // story than one whose rounds hold flat
+    // iterative-kernel round counts per query (the `rounds.*` keys of
+    // graft.util.Counters): the scale sweeps report these next to the
+    // wall slopes — a CC closure whose round count grows with the
+    // decade is a different scale story than one whose rounds hold flat
     val rounds = scala.collection.mutable.Map.empty[String, Int]
     // audit counters (candidate-pair volumes): populated only when the
     // session runs with SPARK_GRAFT_AUDIT=true — a sweep's attribution
@@ -86,8 +86,7 @@ object Bench {
     val candsScaled = scala.collection.mutable.Map.empty[String, Long]
     // audit-mode stage-timing breakdowns (stage_<name>_ms counters)
     val stages = scala.collection.mutable.Map.empty[String, Map[String, Long]]
-    graft.util.Rounds.drain() // clear anything the warm-up recorded
-    graft.util.Counters.drain()
+    graft.util.Counters.drain() // clear anything the warm-up recorded
     val results = selected.toSeq.sortBy(_._1).map {
       case (name, fn) =>
         def once(): Double = {
@@ -162,9 +161,9 @@ object Bench {
             System.err.println(s"[bench] cache release after $name " +
               s"failed: ${e.getMessage}")
         }
-        val rds = graft.util.Rounds.drain()
-        if (rds.nonEmpty) rounds(name) = rds.values.max
         val ctrs = graft.util.Counters.drain()
+        val rds = ctrs.collect { case (k, v) if k.startsWith("rounds.") => v }
+        if (rds.nonEmpty) rounds(name) = rds.max.toInt
         ctrs.get("candidates").foreach(cands(name) = _)
         ctrs.get("candidates_scaled_bits")
           .foreach(candsScaled(name) = _)
@@ -364,7 +363,7 @@ object Bench {
           val wall = (System.nanoTime() - t0) / 1e9
           val cSteal = HostSteal.secondsSince(cSteal0)
           graft.util.Caches.releaseAll(spark, blocking = true)
-          graft.util.Rounds.drain()
+          graft.util.Counters.drain()
           val memo1 = graft.util.Caches.memoStats
           import scala.jdk.CollectionConverters._
           val all = times.asScala.toMap

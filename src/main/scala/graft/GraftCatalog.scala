@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions._
 import org.apache.spark.sql.SparkSession
 
 /** Engine catalog installer: registers every lake table as a view and
@@ -29,35 +28,9 @@ object GraftCatalog {
     Tables.names.foreach { t =>
       Tables.load(spark, dir, t).createOrReplaceTempView(t)
     }
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("rolling_hash",
-      exprs => RollingHash(exprs.head, HashFunctions.DefaultBase),
-      "scala_udf")
-    reg.createOrReplaceTempFunction("simhash64",
-      exprs => SimHash64(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction("bigram_shingle_hashes",
-      exprs => BigramShingleHashes(exprs.head, HashFunctions.DefaultBase),
-      "scala_udf")
-    reg.createOrReplaceTempFunction("dot_product",
-      exprs => DotProduct(exprs(0), exprs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("sq_l2",
-      exprs => SqL2Distance(exprs(0), exprs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("ngram_hashes",
-      exprs => NgramHashes(exprs.head,
-        HashFunctions.constInt(exprs(1), "ngram_hashes", "n"),
-        HashFunctions.DefaultBase), "scala_udf")
-    reg.createOrReplaceTempFunction("sorted_intersect_count",
-      exprs => SortedIntersectCount(exprs(0), exprs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("minhash_signature",
-      exprs => MinHashSignature(exprs.head, Dedup.MinHashAs,
-        Dedup.MinHashBs, Dedup.MinHashPrime), "scala_udf")
-    reg.createOrReplaceTempFunction("accent_fold",
-      exprs => AccentFold(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction("nfc_normalize",
-      exprs => NfcNormalize(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction("damerau_levenshtein",
-      exprs => DamerauLevenshtein(exprs(0), exprs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("jaro_winkler",
-      exprs => JaroWinkler(exprs(0), exprs(1)), "scala_udf")
+    GraftExtensions.functions.foreach { case (name, _, build) =>
+      spark.sessionState.functionRegistry
+        .createOrReplaceTempFunction(name, build, "scala_udf")
+    }
   }
 }

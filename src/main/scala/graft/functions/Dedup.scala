@@ -782,7 +782,7 @@ object Dedup extends QueryModule {
     // slope (pointer jumping ⇒ rounds ~ log2 of the diameter left after
     // the seed's local contraction, so the count should hold ~flat as
     // data grows 10×; 1 when the pair list is one partition)
-    graft.util.Rounds.record("cc", iter)
+    graft.util.Counters.record("rounds.cc", iter)
     // back to the caller's session: labels is a checkpoint leaf, so
     // the rebind is exact and downstream consumers plan under the
     // parent conf (AQE back on)

@@ -206,4 +206,70 @@ object IndexMeta {
         }
     }
   }
+
+  /** Write the train-time staleness baseline of index `table`: row
+    * count `n` and summed per-row quantization error `sum_d`, grouped
+    * by `by` (IVF: per cell; PQ: one row). */
+  def writeBaseline(spark: SparkSession, dir: String, table: String,
+      by: String*): Unit =
+    spark.read.parquet(s"$dir/$table").groupBy(by.map(col): _*)
+      .agg(count(lit(1)).as("n"), sum(col("q_err")).as("sum_d"))
+      .write.mode("overwrite").parquet(s"$dir/stats")
+
+  /** Staleness of a (possibly appended-to) persisted index: the mean
+    * per-row quantization error `q_err` now in `table` against the
+    * [[writeBaseline]] rows, read as sum(n) and sum(sum_d)/sum(n). A
+    * same-distribution append keeps the ratio ≈ 1; a shift (new domain,
+    * new embedding model) inflates it past `threshold`. One column
+    * aggregate plus a stats read: cheap after every append. */
+  def staleness(spark: SparkSession, dir: String, table: String,
+      threshold: Double = 1.5): DataFrame = {
+    val cur = spark.read.parquet(s"$dir/$table")
+      .agg(count(lit(1)).as("n_indexed"),
+        (sum(col("q_err")) / count(lit(1))).as("cur_mean_d"))
+    val base = spark.read.parquet(s"$dir/stats")
+      .agg(sum(col("n")).as("n_trained"),
+        (sum(col("sum_d")) / sum(col("n"))).as("train_mean_d"))
+    cur.crossJoin(broadcast(base))
+      .select(col("n_indexed"), col("n_trained"),
+        col("train_mean_d"), col("cur_mean_d"),
+        (col("cur_mean_d") / col("train_mean_d")).as("drift_ratio"),
+        (col("cur_mean_d") / col("train_mean_d") > threshold)
+          .as("retrain_suggested"))
+  }
+
+  /** Drift-gate index directories per (corpus plan, family): build and
+    * append once per session, probe per call. */
+  private val driftDirs =
+    new graft.util.Caches.PlanMemo[String, String](maxEntries = 8)
+
+  /** Incremental-maintenance gate (`sim_ivf_drift`, `sim_pq_drift`):
+    * `build` indexes the 90% base split into a fresh directory and
+    * appends the held-out 10% through the family's no-retrain path;
+    * the row is the [[staleness]] of index `table`. Counts are
+    * oracle-exact ([[DriftGateSql]]); `drift_ok` (ratio in [0.5, 2]) and
+    * `no_retrain_ok` flip only if assignment, the baseline or the
+    * append path breaks. */
+  def driftGate(emb: DataFrame, family: String, table: String)(
+      build: (DataFrame, DataFrame, String) => Unit): DataFrame = {
+    val dir = driftDirs.get(emb, family) {
+      val held = pmod(col("vec_id"), lit(10L))
+      val t = java.nio.file.Files.createTempDirectory(s"${family}_inc")
+        .toString
+      build(emb.filter(held =!= 9L), emb.filter(held === 9L), t)
+      t
+    }
+    staleness(emb.sparkSession, dir, table)
+      .select(col("n_indexed"), col("n_trained"),
+        (col("drift_ratio") >= 0.5 && col("drift_ratio") <= 2.0)
+          .as("drift_ok"),
+        (!col("retrain_suggested")).as("no_retrain_ok"))
+  }
+
+  val DriftGateSql: String =
+    """SELECT CAST(COUNT(*) AS BIGINT) AS n_indexed,
+      |  CAST(SUM(CASE WHEN vec_id % 10 <> 9 THEN 1 ELSE 0 END)
+      |    AS BIGINT) AS n_trained,
+      |  TRUE AS drift_ok, TRUE AS no_retrain_ok
+      |FROM embeddings""".stripMargin
 }

@@ -271,13 +271,9 @@ object Ivf extends QueryModule {
       .withColumnRenamed("__d", "q_err")
       .repartition(col("cid"))
       .write.mode("overwrite").partitionBy("cid").parquet(s"$dir/cells")
-    // training-distribution baseline for incremental maintenance: the
-    // per-cell count and summed quantization error AT TRAIN TIME — the
-    // reference [[indexStaleness]] measures appended data against.
-    corpus.sparkSession.read.parquet(s"$dir/cells")
-      .groupBy("cid")
-      .agg(count(lit(1)).as("n"), sum(col("q_err")).as("sum_d"))
-      .write.mode("overwrite").parquet(s"$dir/stats")
+    // training-distribution baseline, per cell: the reference
+    // [[indexStaleness]] measures appended data against
+    IndexMeta.writeBaseline(corpus.sparkSession, dir, "cells", "cid")
   }
 
   // ── incremental maintenance: append without retrain ─────────────────
@@ -297,71 +293,18 @@ object Ivf extends QueryModule {
       .repartition(col("cid"))
       .write.mode("append").partitionBy("cid").parquet(s"$dir/cells")
 
-  /** Staleness of a (possibly appended-to) persisted index: the mean
-    * per-row quantization error of everything NOW in the index versus
-    * the training-time baseline written by [[saveIndex]]. Appends drawn
-    * from the training distribution keep the ratio ≈ 1; a distribution
-    * shift (new domain, new embedding model) inflates assignment
-    * distances and trips `retrain_suggested` at `threshold`. Because
-    * every write path stores the per-row error (`q_err`), this is a
-    * single-column aggregate over the cells plus a k-row stats read —
-    * cheap enough to run after every append (no re-assignment). */
+  /** [[IndexMeta.staleness]] of a persisted IVF index's `cells`. */
   def indexStaleness(spark: SparkSession, dir: String,
-      threshold: Double = 1.5): DataFrame = {
-    val cur = spark.read.parquet(s"$dir/cells")
-      .agg(count(lit(1)).as("n_indexed"),
-        (sum(col("q_err")) / count(lit(1))).as("cur_mean_d"))
-    val base = spark.read.parquet(s"$dir/stats")
-      .agg(sum(col("n")).as("n_trained"),
-        (sum(col("sum_d")) / sum(col("n"))).as("train_mean_d"))
-    cur.crossJoin(broadcast(base))
-      .select(col("n_indexed"), col("n_trained"),
-        col("train_mean_d"), col("cur_mean_d"),
-        (col("cur_mean_d") / col("train_mean_d")).as("drift_ratio"),
-        (col("cur_mean_d") / col("train_mean_d") > threshold)
-          .as("retrain_suggested"))
-  }
+      threshold: Double = 1.5): DataFrame =
+    IndexMeta.staleness(spark, dir, "cells", threshold)
 
-  /** Driver-visible gate for incremental maintenance (`sim_ivf_drift`):
-    * build an index on 90% of the corpus, append the held-out 10%
-    * through [[appendToIndex]], and report the staleness row. Counts
-    * are oracle-exact (the split is a pure vec_id rule); the drift
-    * flags are bounds rows — a same-distribution append must stay near
-    * ratio 1, so `drift_ok` (ratio within [0.5, 2]) and
-    * `no_retrain_ok` flip only if assignment, the stats baseline, or
-    * the append path breaks. */
-  /** The built+appended index DIRECTORY is session-memoized like the
-    * trained models: building and appending are write-path events a
-    * deployment pays once, while the staleness PROBE is the per-call
-    * operation — so repeated gate evaluations re-read the artifact
-    * instead of re-writing it (the build-once-probe-many shape). */
-  private val driftIndexMemo =
-    new graft.util.Caches.PlanMemo[(Int, Int), String](maxEntries = 4)
-
-  def simIvfDrift(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-    val tmp = driftIndexMemo.get(emb, (8, 2)) {
-      val base = emb.filter(pmod(col("vec_id"), lit(10L)) =!= 9L)
-      val batch = emb.filter(pmod(col("vec_id"), lit(10L)) === 9L)
-      val centroids = trainCentroids(base, k = 8, iters = 2)
-      val t = java.nio.file.Files.createTempDirectory("ivf_inc").toString
-      saveIndex(base, centroids, t)
-      appendToIndex(batch, spark, t)
-      t
+  /** [[IndexMeta.driftGate]] of an 8-cell IVF index. */
+  def simIvfDrift(spark: SparkSession, dir: String): DataFrame =
+    IndexMeta.driftGate(Tables.embeddings(spark, dir), "ivf", "cells") {
+      (base, batch, t) =>
+        saveIndex(base, trainCentroids(base, k = 8, iters = 2), t)
+        appendToIndex(batch, spark, t)
     }
-    indexStaleness(spark, tmp)
-      .select(col("n_indexed"), col("n_trained"),
-        (col("drift_ratio") >= 0.5 && col("drift_ratio") <= 2.0)
-          .as("drift_ok"),
-        (!col("retrain_suggested")).as("no_retrain_ok"))
-  }
-
-  val simIvfDriftSql: String =
-    """SELECT CAST(COUNT(*) AS BIGINT) AS n_indexed,
-      |  CAST(SUM(CASE WHEN vec_id % 10 <> 9 THEN 1 ELSE 0 END)
-      |    AS BIGINT) AS n_trained,
-      |  TRUE AS drift_ok, TRUE AS no_retrain_ok
-      |FROM embeddings""".stripMargin
 
   /** Nightly maintenance against the corpus's CURRENT state — the
     * [[GramIndex.updateIndex]] contract on the IVF artifact, shared
@@ -441,7 +384,7 @@ object Ivf extends QueryModule {
     s"list_reduce(list_transform(range(1, len($a) + 1), " +
       s"i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)), " +
       "(a, b) -> a + b)"
-  private def cosSql(a: String, b: String): String =
+  private[functions] def cosSql(a: String, b: String): String =
     s"(${dotSql(a, b)} / (sqrt(${dotSql(a, a)}) * sqrt(${dotSql(b, b)})))"
 
   /** The shared WITH-body that repeats [[trainCentroids]] +
@@ -512,83 +455,24 @@ object Ivf extends QueryModule {
        |      ORDER BY cos DESC, c_id ASC) AS rk
        |  FROM scored) t WHERE rk <= $topK ORDER BY q_id, rank""".stripMargin
 
-  /** Recall@k of the IVF index vs the exact ranking — the same
-    * index-quality gate as [[Similarity.simLshRecall]], for the
-    * coarse-quantizer path: how much does nprobe=2 of 8 cells give
+  /** Recall@k of the IVF index vs the exact ranking
+    * ([[Similarity.recallAtK]]): how much does nprobe=2 of 8 cells give
     * up? Kept as a bounds gate (the full set is oracled by
     * [[simIvfSql]]); IvfSpec pins the recall to the exact/approx set
     * intersection. */
-  def simIvfRecall(spark: SparkSession, dir: String): DataFrame = {
-    val exact = Similarity.simTopK(spark, dir)
-      .select(col("q_id"), col("c_id"))
-    val approx = simIvf(spark, dir)
-      .select(col("q_id"), col("c_id"), col("c_id").as("hit_id"))
-    exact.join(approx, Seq("q_id", "c_id"), "left")
-      .groupBy("q_id")
-      .agg(count(col("hit_id")).as("n_hit"), count(lit(1)).as("k"))
-      .select(col("q_id"), col("n_hit"),
-        (col("n_hit").cast("double") / col("k").cast("double"))
-          .as("recall_at_k"))
+  def simIvfRecall(spark: SparkSession, dir: String): DataFrame =
+    Similarity.recallAtK(Similarity.simTopK(spark, dir), simIvf(spark, dir))
       .orderBy("q_id")
-  }
 
-  /** Bounds-checked driver row for the IVF recall gate (the
-    * `sk_heavy_hitters` pattern): the k-means cells themselves aren't
-    * SQL-expressible, but the index's QUALITY GUARANTEE can still be a
-    * hash-verified oracle row — aggregate the per-query recalls to
-    * booleans whose oracle side is constant TRUE, so a recall collapse
-    * (bad centroids, broken cell routing, argmin drift) flips a flag
-    * and fails the driver hash instead of hiding in a rows-only count.
-    * `n_queries` comes from the exact side (oracled independently via
-    * `sim_topk_bruteforce`). Thresholds carry the same regeneration
-    * margin argument as the CMS 3·eps bound: observed mean recall at
-    * sf0.01 is 0.74 and every query hits ≥2 of its exact top-5, so
-    * mean ≥ 0.5 / hit-fraction ≥ 0.9 trips only on a real collapse
-    * (IvfSpec keeps the tight per-query assertions for the fixed test
-    * corpus). */
+  /** [[Similarity.recallGate]] for IVF: observed mean 0.74 at sf0.01,
+    * every query hitting ≥2 of its exact top-5. */
   def simIvfRecallGate(spark: SparkSession, dir: String): DataFrame =
-    simIvfRecall(spark, dir).agg(
-      count(lit(1)).as("n_queries"),
-      (avg(col("recall_at_k")) >= 0.5).as("mean_recall_ok"),
-      (avg((col("n_hit") >= 1).cast("double")) >= 0.9).as("hit_frac_ok"))
+    Similarity.recallGate(simIvfRecall(spark, dir), meanFloor = 0.5,
+      hitFracFloor = 0.9)
 
-  val simIvfRecallGateSql: String =
-    """SELECT CAST(COUNT(*) AS BIGINT) AS n_queries,
-      |  TRUE AS mean_recall_ok, TRUE AS hit_frac_ok
-      |FROM embeddings WHERE vec_id < 10""".stripMargin
-
-  /** PER-QUERY gate rows for the IVF ANN set (one step past the
-    * aggregate [[simIvfRecallGate]]): the ranked set itself is k-means-
-    * dependent, but three row-level invariants are engine-independent
-    * and hash-verifiable per query — (a) the result set is full
-    * (n_returned = k), (b) rank 1 is the query itself (the standard
-    * index self-retrieval sanity check, deliberate here per IvfSpec:
-    * it fails exactly when cell routing stops probing the query's own
-    * cell), and (c) the best NON-self hit's cosine is dominated by the
-    * exact top-1 cosine (probed cells ⊆ corpus and both paths share
-    * the bit-stable cosine fold, so a flipped flag means cosine drift
-    * between the ANN and exact paths, not data). Any single query's
-    * collapse flips its own row — the aggregate gate only catches
-    * population-level drops. */
-  def simIvfTop1Gate(spark: SparkSession, dir: String): DataFrame = {
-    val exact1 = Similarity.simTopK(spark, dir)
-      .filter(col("rank") === 1)
-      .select(col("q_id"), col("cos").as("__exact_cos"))
-    simIvf(spark, dir).groupBy("q_id")
-      .agg(count(lit(1)).as("n_returned"),
-        max(when(col("rank") === 1, col("c_id"))).as("__top1"),
-        max(when(col("rank") === 2, col("cos"))).as("__cos2"))
-      .join(broadcast(exact1), "q_id")
-      .select(col("q_id"), col("n_returned"),
-        (col("__top1") === col("q_id")).as("self_top1_ok"),
-        (col("__cos2") <= col("__exact_cos")).as("dominance_ok"))
-      .orderBy("q_id")
-  }
-
-  val simIvfTop1GateSql: String =
-    """SELECT vec_id AS q_id, CAST(5 AS BIGINT) AS n_returned,
-      |  TRUE AS self_top1_ok, TRUE AS dominance_ok
-      |FROM embeddings WHERE vec_id < 10 ORDER BY q_id""".stripMargin
+  /** [[Similarity.top1Gate]] for the IVF ANN set. */
+  def simIvfTop1Gate(spark: SparkSession, dir: String): DataFrame =
+    Similarity.top1Gate(Similarity.simTopK(spark, dir), simIvf(spark, dir))
 
   // ── SemDeDup: semantic dedup inside k-means cells ───────────────────
   /** SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning
@@ -664,9 +548,10 @@ object Ivf extends QueryModule {
   def simSemDedup(spark: SparkSession, dir: String): DataFrame =
     semDedup(Tables.embeddings(spark, dir))
 
-  /** Bounds-checked driver row for SemDeDup — same pattern as
-    * [[simIvfRecallGate]]. The cell assignment is k-means-internal, but
-    * the operator's invariants are hash-verifiable: the per-cell
+  /** Bounds-checked driver row for SemDeDup — the
+    * [[Similarity.recallGate]] pattern. The cell assignment is
+    * k-means-internal, but the operator's invariants are
+    * hash-verifiable: the per-cell
     * occupancies must charge back to the exact corpus count (oracled
     * side), every cell must keep at least one canonical representative
     * (the kill rule spares each group's lowest id, so an empty cell
@@ -806,9 +691,10 @@ object Ivf extends QueryModule {
 
   val specs: Seq[QuerySpec] = Seq(
     QuerySpec("sim_ivf_ann", simIvf, simIvfSql()),
-    QuerySpec("sim_ivf_recall", simIvfRecallGate, simIvfRecallGateSql),
-    QuerySpec("sim_ivf_top1", simIvfTop1Gate, simIvfTop1GateSql),
-    QuerySpec("sim_ivf_drift", simIvfDrift, simIvfDriftSql),
+    QuerySpec("sim_ivf_recall", simIvfRecallGate,
+      Similarity.RecallGateSql),
+    QuerySpec("sim_ivf_top1", simIvfTop1Gate, Similarity.Top1GateSql),
+    QuerySpec("sim_ivf_drift", simIvfDrift, IndexMeta.DriftGateSql),
     QuerySpec("sim_semdedup", simSemDedupGate, simSemDedupGateSql),
     QuerySpec("ts_cluster_balance", tsClusterBalance, clusterBalanceSql()))
 }

@@ -237,10 +237,10 @@ object Pca extends QueryModule {
     * recalled only ~0.12 of the exact top-10 and even shortlist+rerank
     * only 0.36 — which is why d'=32 ships; there the pipeline clears
     * the PcaSpec majority-recall gate at `short`/N of full-rank cost).
-    * Same shape as the recall trio (`sim_lsh_recall`/`sim_ivf_recall`/
-    * `sim_pq_recall`): broadcast-query window rankings, the
-    * intersection joins two O(|Q|·k) sides, one exact integer
-    * division. */
+    * The intersection is [[Similarity.recallAtK]]'s, written inline on
+    * purpose: all three rankings read one persisted scored table, the
+    * pipeline's top-k joins as a broadcast (never an SMJ), and the
+    * division is by k, as in the oracle. */
   def embJlRecall(spark: SparkSession, dir: String, k: Int = 10,
       short: Int = 50): DataFrame = {
     val proj = array(jlSigns.map(row =>
@@ -318,8 +318,8 @@ object Pca extends QueryModule {
        |GROUP BY r.q_id ORDER BY r.q_id""".stripMargin
   }
 
-  /** Bounds-checked driver row for the power-iteration PCA — same
-    * pattern as [[graft.functions.Ivf.simIvfRecallGate]]. The
+  /** Bounds-checked driver row for the power-iteration PCA — the
+    * [[Similarity.recallGate]] pattern. The
     * eigenvector is iterative (non-SQL), but convergence is
     * hash-verifiable: the component must be unit-norm, each label's
     * projection moments must satisfy Jensen (E[p²] ≥ E[p]², modulo the

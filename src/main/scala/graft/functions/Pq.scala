@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{QueryModule, QuerySpec, Tables}
@@ -167,26 +166,27 @@ object Pq extends QueryModule {
 
   private def litVec(v: Array[Double]): Column = array(v.map(lit).toSeq: _*)
 
-  /** Attach `codes` (array of m codebook indices): per subspace, the
-    * argmin over the k literal codewords as `array_min` of
-    * (distance, code) structs — each distance is evaluated exactly
-    * once and struct ordering breaks ties to the lowest code. (A
-    * when-chain argmin à la [[Ivf.assign]] re-inlines every distance
-    * per branch; at m×k = 64 codewords that blew generated code past
-    * janino's method limit and fell back to interpreted.) */
-  def encode(corpus: DataFrame, books: Array[Array[Array[Double]]])
-      : DataFrame = {
-    val m = books.length
+  /** Subspace `j`'s nearest codeword as a (d, c) struct: the argmin
+    * over the k literal codewords as `array_min` of (distance, code)
+    * structs — each distance is evaluated exactly once and struct
+    * ordering breaks ties to the lowest code. (A when-chain argmin à la
+    * [[Ivf.assign]] re-inlines every distance per branch; at m×k = 64
+    * codewords that blew generated code past janino's method limit and
+    * fell back to interpreted.) */
+  private def nearest(books: Array[Array[Array[Double]]], j: Int): Column = {
     val sub = books(0)(0).length
-    val codeCols = (0 until m).map { j =>
-      val entries = books(j).zipWithIndex.map { case (cw, c) =>
-        struct(VectorFunctions.sq_l2(subCol(j, sub), litVec(cw)).as("d"),
-          lit(c).as("c"))
-      }
-      array_min(array(entries.toSeq: _*)).getField("c")
-    }
-    corpus.withColumn("codes", array(codeCols: _*))
+    array_min(array(books(j).zipWithIndex.map { case (cw, c) =>
+      struct(VectorFunctions.sq_l2(subCol(j, sub), litVec(cw)).as("d"),
+        lit(c).as("c"))
+    }.toSeq: _*))
   }
+
+  /** Attach `codes` (array of m codebook indices, [[nearest]] per
+    * subspace). */
+  def encode(corpus: DataFrame, books: Array[Array[Array[Double]]])
+      : DataFrame =
+    corpus.withColumn("codes",
+      array(books.indices.map(nearest(books, _).getField("c")): _*))
 
   /** ADC top-k with exact re-rank: queries carry literal-codebook
     * distance tables, the broadcast-joined corpus pays `m` lookups per
@@ -241,18 +241,9 @@ object Pq extends QueryModule {
     * sum of each subspace's winning squared distance, the PQ analog of
     * [[Ivf.assignWithDist]]'s staleness signal. */
   def encodeWithDist(corpus: DataFrame,
-      books: Array[Array[Array[Double]]]): DataFrame = {
-    val m = books.length
-    val sub = books(0)(0).length
-    val distCols = (0 until m).map { j =>
-      val entries = books(j).zipWithIndex.map { case (cw, c) =>
-        struct(VectorFunctions.sq_l2(subCol(j, sub), litVec(cw)).as("d"),
-          lit(c).as("c"))
-      }
-      array_min(array(entries.toSeq: _*)).getField("d")
-    }
-    encode(corpus, books).withColumn("__d", distCols.reduce(_ + _))
-  }
+      books: Array[Array[Array[Double]]]): DataFrame =
+    encode(corpus, books).withColumn("__d",
+      books.indices.map(nearest(books, _).getField("d")).reduce(_ + _))
 
   def saveIndex(corpus: DataFrame, books: Array[Array[Array[Double]]],
       dir: String): Unit = {
@@ -264,15 +255,13 @@ object Pq extends QueryModule {
       .write.mode("overwrite").parquet(s"$dir/codebooks")
     // ONE encode pass: the codes table stores the per-row
     // reconstruction error (`q_err`), so staleness probes are a column
-    // aggregate and the train-time baseline is a read-back of the
-    // just-written table, not a second encode.
+    // aggregate and the train-time baseline (one row) is a read-back
+    // of the just-written table, not a second encode.
     encodeWithDist(corpus, books)
       .select(col("vec_id"), col("codes"), col("embedding"),
         col("__d").as("q_err"))
       .write.mode("overwrite").parquet(s"$dir/codes")
-    sp.read.parquet(s"$dir/codes")
-      .agg(count(lit(1)).as("n"), sum(col("q_err")).as("sum_d"))
-      .write.mode("overwrite").parquet(s"$dir/stats")
+    IndexMeta.writeBaseline(sp, dir, "codes")
   }
 
   // ── incremental maintenance: append without retrain ─────────────────
@@ -307,60 +296,19 @@ object Pq extends QueryModule {
       () => saveIndex(corpus, trainCodebooks(corpus, m, k, iters), dir))
   }
 
-  /** Staleness of a (possibly appended-to) persisted PQ index: mean
-    * reconstruction error of everything NOW in the codes table versus
-    * the train-time baseline — the signal that the codebooks no longer
-    * quantize the corpus well (domain shift, new embedding model) and
-    * a retrain is due. */
+  /** [[IndexMeta.staleness]] of a persisted PQ index's `codes`: the
+    * signal that the codebooks no longer quantize the corpus well. */
   def indexStaleness(spark: SparkSession, dir: String,
-      threshold: Double = 1.5): DataFrame = {
-    val cur = spark.read.parquet(s"$dir/codes")
-      .agg(count(lit(1)).as("n_indexed"),
-        (sum(col("q_err")) / count(lit(1))).as("cur_mean_d"))
-    val base = spark.read.parquet(s"$dir/stats")
-      .select(col("n").as("n_trained"),
-        (col("sum_d") / col("n").cast("double")).as("train_mean_d"))
-    cur.crossJoin(broadcast(base))
-      .select(col("n_indexed"), col("n_trained"),
-        col("train_mean_d"), col("cur_mean_d"),
-        (col("cur_mean_d") / col("train_mean_d")).as("drift_ratio"),
-        (col("cur_mean_d") / col("train_mean_d") > threshold)
-          .as("retrain_suggested"))
-  }
+      threshold: Double = 1.5): DataFrame =
+    IndexMeta.staleness(spark, dir, "codes", threshold)
 
-  /** Driver-visible gate for PQ incremental maintenance
-    * (`sim_pq_drift`) — the [[Ivf.simIvfDrift]] contract on the PQ
-    * artifact: index 90% of the corpus, append the held-out 10%,
-    * report counts (oracle-exact) and drift bounds flags. */
-  /** Built+appended index directory, session-memoized like
-    * [[Ivf.simIvfDrift]]'s — write once, probe per call. */
-  private val driftIndexMemo =
-    new graft.util.Caches.PlanMemo[(Int, Int, Int), String](maxEntries = 4)
-
-  def simPqDrift(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-    val tmp = driftIndexMemo.get(emb, (4, 16, 2)) {
-      val base = emb.filter(pmod(col("vec_id"), lit(10L)) =!= 9L)
-      val batch = emb.filter(pmod(col("vec_id"), lit(10L)) === 9L)
-      val books = trainCodebooks(base, m = 4, k = 16, iters = 2)
-      val t = java.nio.file.Files.createTempDirectory("pq_inc").toString
-      saveIndex(base, books, t)
-      appendToIndex(batch, spark, t)
-      t
+  /** [[IndexMeta.driftGate]] of a PQ(m=4, k=16) index. */
+  def simPqDrift(spark: SparkSession, dir: String): DataFrame =
+    IndexMeta.driftGate(Tables.embeddings(spark, dir), "pq", "codes") {
+      (base, batch, t) =>
+        saveIndex(base, trainCodebooks(base, m = 4, k = 16, iters = 2), t)
+        appendToIndex(batch, spark, t)
     }
-    indexStaleness(spark, tmp)
-      .select(col("n_indexed"), col("n_trained"),
-        (col("drift_ratio") >= 0.5 && col("drift_ratio") <= 2.0)
-          .as("drift_ok"),
-        (!col("retrain_suggested")).as("no_retrain_ok"))
-  }
-
-  val simPqDriftSql: String =
-    """SELECT CAST(COUNT(*) AS BIGINT) AS n_indexed,
-      |  CAST(SUM(CASE WHEN vec_id % 10 <> 9 THEN 1 ELSE 0 END)
-      |    AS BIGINT) AS n_trained,
-      |  TRUE AS drift_ok, TRUE AS no_retrain_ok
-      |FROM embeddings""".stripMargin
 
   /** Reload the codebook tensor exactly as trained (ordered by
     * (subspace, code) — the layout [[encode]]/[[adcTopK]] index by). */
@@ -402,70 +350,25 @@ object Pq extends QueryModule {
       .orderBy("q_id", "rank")
   }
 
-  /** Recall@k of the PQ/ADC path vs the exact ranking — closes the
-    * recall-eval trio ([[Similarity.simLshRecall]], [[Ivf.simIvfRecall]]):
-    * how much does 32×-compressed ADC scanning with a 32-deep exact
-    * re-rank give up? A bounds gate (the full set is oracled by
-    * [[simPqSql]]); PqSpec pins the intersection arithmetic. */
-  def simPqRecall(spark: SparkSession, dir: String): DataFrame = {
-    val exact = Similarity.simTopK(spark, dir)
-      .select(col("q_id"), col("c_id"))
-    val approx = simPq(spark, dir)
-      .select(col("q_id"), col("c_id"), col("c_id").as("hit_id"))
-    exact.join(approx, Seq("q_id", "c_id"), "left")
-      .groupBy("q_id")
-      .agg(count(col("hit_id")).as("n_hit"), count(lit(1)).as("k"))
-      .select(col("q_id"), col("n_hit"),
-        (col("n_hit").cast("double") / col("k").cast("double"))
-          .as("recall_at_k"))
+  /** Recall@k of the PQ/ADC path vs the exact ranking
+    * ([[Similarity.recallAtK]]): how much does 32×-compressed ADC
+    * scanning with a 32-deep exact re-rank give up? A bounds gate (the
+    * full set is oracled by [[simPqSql]]); PqSpec pins the intersection
+    * arithmetic. */
+  def simPqRecall(spark: SparkSession, dir: String): DataFrame =
+    Similarity.recallAtK(Similarity.simTopK(spark, dir), simPq(spark, dir))
       .orderBy("q_id")
-  }
 
-  /** Bounds-checked driver row for the PQ recall gate — same pattern
-    * and rationale as [[Ivf.simIvfRecallGate]], with looser floors
-    * because 32× compression legitimately costs more recall: observed
-    * mean 0.54 at sf0.01 with every query hitting ≥1 of its exact
-    * top-5, so mean ≥ 0.3 / hit-fraction ≥ 0.7 trips only on a real
-    * collapse (codebook divergence, ADC table corruption, shortlist
-    * starvation). PqSpec keeps the tight assertions for the fixed test
-    * corpus. */
+  /** [[Similarity.recallGate]] for PQ, with looser floors than IVF's
+    * (32× compression costs recall): observed mean 0.54 at sf0.01,
+    * every query hitting ≥1 of its exact top-5. */
   def simPqRecallGate(spark: SparkSession, dir: String): DataFrame =
-    simPqRecall(spark, dir).agg(
-      count(lit(1)).as("n_queries"),
-      (avg(col("recall_at_k")) >= 0.3).as("mean_recall_ok"),
-      (avg((col("n_hit") >= 1).cast("double")) >= 0.7).as("hit_frac_ok"))
+    Similarity.recallGate(simPqRecall(spark, dir), meanFloor = 0.3,
+      hitFracFloor = 0.7)
 
-  val simPqRecallGateSql: String =
-    """SELECT CAST(COUNT(*) AS BIGINT) AS n_queries,
-      |  TRUE AS mean_recall_ok, TRUE AS hit_frac_ok
-      |FROM embeddings WHERE vec_id < 10""".stripMargin
-
-  /** PER-QUERY gate rows for the PQ/ADC ANN set — same invariants and
-    * rationale as [[Ivf.simIvfTop1Gate]]: full result set, rank 1 is
-    * the query itself (the self-ADC code is the minimum of every
-    * lookup table, so self always survives the shortlist and wins the
-    * exact re-rank — PqSpec pins it), and the best non-self hit is
-    * cosine-dominated by the exact top-1 (shortlist ⊆ corpus, shared
-    * bit-stable cosine). */
-  def simPqTop1Gate(spark: SparkSession, dir: String): DataFrame = {
-    val exact1 = graft.functions.Similarity.simTopK(spark, dir)
-      .filter(col("rank") === 1)
-      .select(col("q_id"), col("cos").as("__exact_cos"))
-    simPq(spark, dir).groupBy("q_id")
-      .agg(count(lit(1)).as("n_returned"),
-        max(when(col("rank") === 1, col("c_id"))).as("__top1"),
-        max(when(col("rank") === 2, col("cos"))).as("__cos2"))
-      .join(broadcast(exact1), "q_id")
-      .select(col("q_id"), col("n_returned"),
-        (col("__top1") === col("q_id")).as("self_top1_ok"),
-        (col("__cos2") <= col("__exact_cos")).as("dominance_ok"))
-      .orderBy("q_id")
-  }
-
-  val simPqTop1GateSql: String =
-    """SELECT vec_id AS q_id, CAST(5 AS BIGINT) AS n_returned,
-      |  TRUE AS self_top1_ok, TRUE AS dominance_ok
-      |FROM embeddings WHERE vec_id < 10 ORDER BY q_id""".stripMargin
+  /** [[Similarity.top1Gate]] for the PQ/ADC ANN set. */
+  def simPqTop1Gate(spark: SparkSession, dir: String): DataFrame =
+    Similarity.top1Gate(Similarity.simTopK(spark, dir), simPq(spark, dir))
 
   // ── full SQL oracle: per-subspace Lloyd + ADC unrolled in DuckDB ────
   /** DuckDB oracle reproducing [[simPq]] END TO END — subspace k-means
@@ -488,12 +391,6 @@ object Pq extends QueryModule {
          |      i -> (CAST($tbl.embedding[b.j * (len($tbl.embedding) // $m) + i] AS DOUBLE) - $cw[i])
          |         * (CAST($tbl.embedding[b.j * (len($tbl.embedding) // $m) + i] AS DOUBLE) - $cw[i])),
          |      (x, y) -> x + y)""".stripMargin
-    def dotS(a: String, b: String): String =
-      s"list_reduce(list_transform(range(1, len($a) + 1), " +
-        s"i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)), " +
-        "(a, b) -> a + b)"
-    def cosS(a: String, b: String): String =
-      s"(${dotS(a, b)} / (sqrt(${dotS(a, a)}) * sqrt(${dotS(b, b)})))"
     val scale = "4294967296.0"
     def lloyd(r: Int): String =
       s"""asg$r AS (
@@ -550,7 +447,7 @@ object Pq extends QueryModule {
        |  JOIN bk$iters b ON b.j = cd.j AND b.c = cd.c
        |  GROUP BY q.vec_id, q.embedding, cd.vec_id, cd.embedding),
        |short AS (
-       |  SELECT q_id, c_id, ${cosS("q_vec", "c_vec")} AS cos FROM (
+       |  SELECT q_id, c_id, ${Ivf.cosSql("q_vec", "c_vec")} AS cos FROM (
        |    SELECT q_id, q_vec, c_id, c_vec,
        |      ROW_NUMBER() OVER (PARTITION BY q_id
        |        ORDER BY adc_d ASC, c_id ASC) AS sr
@@ -564,7 +461,7 @@ object Pq extends QueryModule {
 
   val specs: Seq[QuerySpec] = Seq(
     QuerySpec("sim_pq_ann", simPq, simPqSql()),
-    QuerySpec("sim_pq_recall", simPqRecallGate, simPqRecallGateSql),
-    QuerySpec("sim_pq_top1", simPqTop1Gate, simPqTop1GateSql),
-    QuerySpec("sim_pq_drift", simPqDrift, simPqDriftSql))
+    QuerySpec("sim_pq_recall", simPqRecallGate, Similarity.RecallGateSql),
+    QuerySpec("sim_pq_top1", simPqTop1Gate, Similarity.Top1GateSql),
+    QuerySpec("sim_pq_drift", simPqDrift, IndexMeta.DriftGateSql))
 }

@@ -377,9 +377,6 @@ object SearchIndex extends QueryModule {
   private val HyCellOccupancy = 2048L
   private val HyNprobe = 3 // 3 of >=8 cells; at sf10's 128 cells ~2.3%
 
-  private val hyCountMemo =
-    new graft.util.Caches.PlanMemo[String, Long](maxEntries = 8)
-
   /** Smallest power-of-two cell count in [8, 1024] holding mean cell
     * occupancy ≤ [[HyCellOccupancy]] — the [[Similarity.deriveBits]]
     * integer rule applied to the coarse quantizer. */
@@ -393,8 +390,9 @@ object SearchIndex extends QueryModule {
       forceIvf: Option[Boolean] = None): DataFrame = {
     val panel = emb.filter(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
+    // the corpus count the auto-sized LSH bits read too (one memo)
+    lazy val n = Similarity.corpusCount(emb)
     val useIvf = forceIvf.getOrElse {
-      val n = hyCountMemo.get(emb, "n")(emb.count())
       // panel is every 100th id → |panel| ≈ n/100 + 1 (integer math,
       // overflow-safe for any real corpus: n ≤ 3e9 keeps the product
       // in range; past that the branch is trivially true)
@@ -410,7 +408,6 @@ object SearchIndex extends QueryModule {
           rankName = "rank_v")
         .select("q_id", "c_id", "rank_v")
     else {
-      val n = hyCountMemo.get(emb, "n")(emb.count())
       // train-once (centroid memo) coarse quantizer; assignment is the
       // zero-shuffle literal argmin, probing reads nprobe cells/query
       val centroids = Ivf.trainCentroids(emb, hyCells(n), iters = 2)
@@ -599,29 +596,18 @@ object SearchIndex extends QueryModule {
 
   /** Recall gate for the ADAPTIVE (IVF-probed) vector-channel shape,
     * run with the IVF path FORCED ON at gate scale so the shape the
-    * big-corpus branch serves is certified by the same sf0.01 oracle
-    * run as everything else (the [[Ivf.simIvfRecallGate]] pattern:
-    * booleans whose oracle side is constant TRUE — a recall collapse
-    * from bad centroids or broken cell routing flips a flag and fails
-    * the driver hash). Per panel query: |IVF top-C ∩ exact top-C| / C.
-    * Thresholds carry regeneration margin (observed sf0.01: mean ≈
-    * 0.75+, every query ≥ 25% overlap; gates at ≥ 0.5 / ≥ 0.2 trip
-    * only on a real collapse — HybridSpec pins tighter values for the
-    * fixed corpus). */
+    * big-corpus branch serves is certified by the sf0.01 oracle run
+    * (the [[Similarity.recallGate]] pattern, with a per-query minimum
+    * in place of the hit fraction): [[Similarity.recallAtK]] of the IVF
+    * top-C against the exact top-C per panel query. Observed sf0.01:
+    * mean ≈ 0.75+, every query ≥ 25%; HybridSpec pins tighter values. */
   def hyVecRecall(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
-    val exact = hyVecChannel(emb, forceIvf = Some(false))
-      .select(col("q_id"), col("c_id"))
-    val approx = hyVecChannel(emb, forceIvf = Some(true))
-      .select(col("q_id"), col("c_id"), col("c_id").as("hit_id"))
-    exact.join(approx, Seq("q_id", "c_id"), "left")
-      .groupBy("q_id")
-      .agg(count(col("hit_id")).as("n_hit"), count(lit(1)).as("k"))
+    Similarity.recallAtK(hyVecChannel(emb, forceIvf = Some(false)),
+        hyVecChannel(emb, forceIvf = Some(true)))
       .agg(count(lit(1)).as("n_queries"),
-        (avg(col("n_hit").cast("double") / col("k").cast("double"))
-          >= 0.5).as("mean_recall_ok"),
-        (min(col("n_hit").cast("double") / col("k").cast("double"))
-          >= 0.2).as("min_recall_ok"))
+        (avg(col("recall_at_k")) >= 0.5).as("mean_recall_ok"),
+        (min(col("recall_at_k")) >= 0.2).as("min_recall_ok"))
   }
 
   def hyVecRecallSql: String =

@@ -116,26 +116,77 @@ object Similarity extends QueryModule {
       .orderBy("q_id", "rank")
   }
 
-  // ── ANN recall evaluation ───────────────────────────────────────────
-  /** Recall@k of the LSH index against the exact ranking — the quality
-    * gate every ANN deployment runs before trusting an index (and after
-    * every re-index). Per query: |LSH top-k ∩ exact top-k| / k, the
-    * ratio as one exact-integer division. Both rankings reuse the
-    * already-oracled [[simTopK]]/[[simLsh]] definitions, so the recall
-    * numbers are hash-exact too; the join that intersects them keys on
-    * (q_id, c_id) — at 100 TB both sides are O(|Q|·k), model-sized. */
-  def simLshRecall(spark: SparkSession, dir: String): DataFrame = {
-    val exact = simTopK(spark, dir).select(col("q_id"), col("c_id"))
-    val approx = simLsh(spark, dir)
-      .select(col("q_id"), col("c_id"), col("c_id").as("hit_id"))
-    exact.join(approx, Seq("q_id", "c_id"), "left")
+  // ── ANN quality checks, shared by every vector index ───────────────
+  /** Recall@k of an approximate `(q_id, c_id)` set against the exact
+    * one, the check every index family (LSH, IVF, PQ, the Hamming
+    * prefilter, the hybrid vector channel) reports through: one row per
+    * EXACT query with `n_hit` = |approx ∩ exact| and `recall_at_k` =
+    * n_hit / |exact|. A left join from the exact side keeps a query
+    * with zero hits (n_hit = 0). Both sides are O(|Q|·k). */
+  def recallAtK(exact: DataFrame, approx: DataFrame): DataFrame =
+    exact.select(col("q_id"), col("c_id"))
+      .join(approx.select(col("q_id"), col("c_id"), col("c_id").as("hit_id")),
+        Seq("q_id", "c_id"), "left")
       .groupBy("q_id")
       .agg(count(col("hit_id")).as("n_hit"), count(lit(1)).as("k"))
       .select(col("q_id"), col("n_hit"),
         (col("n_hit").cast("double") / col("k").cast("double"))
           .as("recall_at_k"))
+
+  /** Bounds-checked driver row over [[recallAtK]]'s rows: index cells
+    * and codes are not SQL-expressible, but the quality guarantee is —
+    * booleans whose oracle side is constant TRUE ([[RecallGateSql]]),
+    * so a recall collapse (bad centroids, broken cell routing, codebook
+    * divergence) flips a flag and fails the driver hash. Each family
+    * sets its floors with margin below its observed recall; its spec
+    * keeps the tight per-query assertions. */
+  def recallGate(recall: DataFrame, meanFloor: Double,
+      hitFracFloor: Double): DataFrame =
+    recall.agg(
+      count(lit(1)).as("n_queries"),
+      (avg(col("recall_at_k")) >= meanFloor).as("mean_recall_ok"),
+      (avg((col("n_hit") >= 1).cast("double")) >= hitFracFloor)
+        .as("hit_frac_ok"))
+
+  /** Oracle of [[recallGate]] over the [[simTopK]] query set. */
+  val RecallGateSql: String =
+    """SELECT CAST(COUNT(*) AS BIGINT) AS n_queries,
+      |  TRUE AS mean_recall_ok, TRUE AS hit_frac_ok
+      |FROM embeddings WHERE vec_id < 10""".stripMargin
+
+  /** PER-QUERY gate rows for a ranked ANN set `(q_id, c_id, cos,
+    * rank)` against the exact ranking, three engine-independent
+    * invariants per query: the result set is full (n_returned = k);
+    * rank 1 is the query itself (self-retrieval: IVF fails it when cell
+    * routing stops probing the query's own cell, PQ when self drops out
+    * of the ADC shortlist); and the best non-self cosine is dominated
+    * by the exact top-1 (the candidates ⊆ corpus under the same
+    * bit-stable cosine fold, so a flip means cosine drift, not data). */
+  def top1Gate(exact: DataFrame, ann: DataFrame): DataFrame = {
+    val exact1 = exact.filter(col("rank") === 1)
+      .select(col("q_id"), col("cos").as("__exact_cos"))
+    ann.groupBy("q_id")
+      .agg(count(lit(1)).as("n_returned"),
+        max(when(col("rank") === 1, col("c_id"))).as("__top1"),
+        max(when(col("rank") === 2, col("cos"))).as("__cos2"))
+      .join(broadcast(exact1), "q_id")
+      .select(col("q_id"), col("n_returned"),
+        (col("__top1") === col("q_id")).as("self_top1_ok"),
+        (col("__cos2") <= col("__exact_cos")).as("dominance_ok"))
       .orderBy("q_id")
   }
+
+  /** Oracle of [[top1Gate]] over the [[simTopK]] query set (k = 5). */
+  val Top1GateSql: String =
+    """SELECT vec_id AS q_id, CAST(5 AS BIGINT) AS n_returned,
+      |  TRUE AS self_top1_ok, TRUE AS dominance_ok
+      |FROM embeddings WHERE vec_id < 10 ORDER BY q_id""".stripMargin
+
+  /** Recall@k of the LSH index ([[recallAtK]]). Both rankings reuse the
+    * already-oracled [[simTopK]]/[[simLsh]] definitions, so the recall
+    * numbers are hash-exact too. */
+  def simLshRecall(spark: SparkSession, dir: String): DataFrame =
+    recallAtK(simTopK(spark, dir), simLsh(spark, dir)).orderBy("q_id")
 
   // ── LSH bucket health ───────────────────────────────────────────────
   /** Bucket-size histogram of the LSH index — the operational health
@@ -246,22 +297,28 @@ object Similarity extends QueryModule {
     * hyperplane stream is row-major: the first b planes of
     * [[hyperplanes]](MaxAutoBits) ARE [[hyperplanes]](b), so a b-bit
     * key equals the MaxAutoBits key masked to its low b bits — which is
-    * how the SQL oracles express it ([[maskedLshKeySql]]). Memoized per
-    * corpus plan+fingerprint (one count per corpus per session). */
+    * how the SQL oracles express it ([[maskedLshKeySql]]). The count is
+    * [[corpusCount]]'s (one count per corpus per session). */
   val AutoOccupancy = 128L
   val MinAutoBits = 4
   val MaxAutoBits = 16
 
-  private val bitsMemo =
-    new graft.util.Caches.PlanMemo[String, Int](maxEntries = 64)
+  private val countMemo =
+    new graft.util.Caches.PlanMemo[String, Long](maxEntries = 64)
+
+  /** Row count of `corpus`, memoized per plan + data fingerprint: the
+    * auto-sized bits below and the hybrid vector channel's exact-scan
+    * budget ([[SearchIndex.hyVecChannel]]) both read it, so a corpus is
+    * counted once per session. */
+  private[functions] def corpusCount(corpus: DataFrame): Long =
+    countMemo.get(corpus, "n")(corpus.count())
 
   /** Smallest b in [MinAutoBits, MaxAutoBits] with 2^b·AutoOccupancy ≥ n. */
   def deriveBits(n: Long): Int =
     (MinAutoBits to MaxAutoBits)
       .find(b => (1L << b) * AutoOccupancy >= n).getOrElse(MaxAutoBits)
 
-  def autoBits(corpus: DataFrame): Int =
-    bitsMemo.get(corpus, "auto_bits")(deriveBits(corpus.count()))
+  def autoBits(corpus: DataFrame): Int = deriveBits(corpusCount(corpus))
 
   /** Bucket-occupancy summary AT THE DERIVED WIDTH, with the width as a
     * column — the oracled query that pins the auto derivation itself:
@@ -1401,26 +1458,19 @@ object Similarity extends QueryModule {
        |FROM ham ORDER BY q_id, rank""".stripMargin
 
   /** Recall@10 of the Hamming-prefilter pipeline against the exact
-    * cosine ranking — same quality-gate shape as [[simLshRecall]]. The
-    * floor flag (recall ≥ 0.3) is computed identically on both sides,
-    * so the driver row stays hash-exact while recording index quality;
-    * observed: 9-10/10 at sf0.01, 6-9/10 at sf0.1 (the 1-bit code is
-    * the cheap mid-scale tool — IVF/PQ are the high-recall paths). */
+    * cosine ranking ([[recallAtK]]). The floor flag (recall ≥ 0.3) is
+    * computed identically on both sides, so the driver row stays
+    * hash-exact while recording index quality; observed: 9-10/10 at
+    * sf0.01, 6-9/10 at sf0.1 (the 1-bit code is the cheap mid-scale
+    * tool — IVF/PQ are the high-recall paths). */
   def simHammingRecall(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
-    val exact = topKBruteForce(
-      emb.filter(col("vec_id") < 10), emb, k = HammingK)
-      .select(col("q_id"), col("c_id"))
-    val ham = simHammingAnn(spark, dir).select(col("q_id"), col("c_id"))
-    val overlap = exact.join(ham, Seq("q_id", "c_id"))
-      .groupBy("q_id").agg(count(lit(1)).as("hits"))
-    emb.filter(col("vec_id") < 10).select(col("vec_id").as("q_id"))
-      .join(overlap, Seq("q_id"), "left")
-      .select(col("q_id"),
-        coalesce(col("hits"), lit(0L)).cast("int").as("n_overlap"),
-        (coalesce(col("hits"), lit(0L)).cast("double") /
-          lit(HammingK.toDouble)).as("recall_at_10"),
-        (coalesce(col("hits"), lit(0L)) >= 3).as("ok_floor"))
+    recallAtK(topKBruteForce(emb.filter(col("vec_id") < 10), emb,
+        k = HammingK), simHammingAnn(spark, dir))
+      .select(col("q_id"), col("n_hit").cast("int").as("n_overlap"),
+        (col("n_hit").cast("double") / lit(HammingK.toDouble))
+          .as("recall_at_10"),
+        (col("n_hit") >= 3).as("ok_floor"))
       .orderBy("q_id")
   }
 

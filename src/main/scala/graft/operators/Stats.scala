@@ -529,7 +529,7 @@ object Stats extends QueryModule {
     // fixed 3 power iterations, pinned by the oracle's r1/r2/r3 CTE
     // ladder — recorded so the scale sweeps show the round count flat
     // across decades mechanically (like gr_cc), not by code-reading
-    graft.util.Rounds.record("pagerank_iters", 3)
+    graft.util.Counters.record("rounds.pagerank_iters", 3)
     for (_ <- 1 to 3) {
       val contrib = wedges
         .join(broadcast(rank.select(col("node").as("src"), col("r"))), "src")

@@ -2,10 +2,14 @@ package graft.util
 
 import org.apache.spark.sql.DataFrame
 
-/** Driver-side long-valued telemetry, the [[Rounds]] idiom generalized:
-  * kernels `record` named counts, the bench drains after each query and
-  * attributes them to that query. First user: CANDIDATE-PAIR counts of
-  * the similarity-join kernels (VERDICT r14 item 3 — the sf10 slopes of
+/** Driver-side long-valued telemetry: kernels `record` named counts,
+  * the bench drains after each query and attributes them to that query.
+  * Iterative kernels record their round count under `rounds.<kernel>`
+  * (CC label propagation, PageRank iterations): a wall-clock slope
+  * across a data decade is only interpretable next to the number of
+  * rounds it took, so the sf10 sweep reads them into SCALE.json. The
+  * CANDIDATE-PAIR counts of the similarity-join kernels (VERDICT r14
+  * item 3 — the sf10 slopes of
   * `sim_neardup_groups` (9.49) and `dd_ngram_jaccard` (8.34) ride the
   * top of the linear band, and whether that is superlinear CANDIDATE
   * growth (fix the blocking) or a densifying corpus answering more

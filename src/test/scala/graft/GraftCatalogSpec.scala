@@ -72,6 +72,12 @@ class GraftCatalogSpec extends SparkSpec {
     assert(s2.catalog.functionExists("jaro_winkler"))
     assert(s2.sql("SELECT accent_fold('café') AS f").head.getString(0)
       === "cafe")
+    // both registration paths serve the same function table
+    GraftCatalog.install(spark, sf)
+    val names = GraftExtensions.functions.map(_._1)
+    assert(names.distinct.size === 12 &&
+      names.filter(s2.catalog.functionExists) === names &&
+      names.filter(spark.catalog.functionExists) === names)
     // the custom top-k strategy is injected too: the plan node appears
     import org.apache.spark.sql.functions.col
     val topkPlan = graft.plans.TopKPerKey.topKPerKey(

@@ -512,11 +512,11 @@ class PropertySpec extends SparkSpec {
       : (Map[Long, Long], Int) = {
     val sparkS = spark
     import sparkS.implicits._
-    graft.util.Rounds.drain()
+    graft.util.Counters.drain()
     val labels = Dedup.connectedComponents(
       edges.toDF("d1", "d2").repartition(parts))
       .as[(Long, Long)].collect().toMap
-    (labels, graft.util.Rounds.drain()("cc"))
+    (labels, graft.util.Counters.drain()("rounds.cc").toInt)
   }
 
   test("connected components: label = component minimum on random " +

@@ -167,6 +167,29 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
+  test("recallAtK: one row per exact query, zero-hit queries kept, " +
+    "values equal the hand-computed intersection") {
+    val sparkS = spark
+    import sparkS.implicits._
+    val exact = Seq(1L -> 10L, 1L -> 11L, 1L -> 12L, 1L -> 13L,
+      2L -> 20L, 2L -> 21L, 3L -> 30L)
+    // q2 misses everything; q4 exists only on the approximate side
+    val approx = Seq(1L -> 10L, 1L -> 12L, 1L -> 99L, 2L -> 98L,
+      3L -> 30L, 4L -> 40L)
+    val got = Similarity.recallAtK(exact.toDF("q_id", "c_id"),
+        approx.toDF("q_id", "c_id")).collect()
+      .map(r => r.getAs[Long]("q_id") ->
+        (r.getAs[Long]("n_hit"), r.getAs[Double]("recall_at_k"))).toMap
+    val hand = exact.groupBy(_._1).map { case (q, rows) =>
+      val hits = rows.count(approx.contains).toLong
+      q -> (hits, hits.toDouble / rows.size)
+    }
+    assert(got === hand)
+    assert(got(2L) === ((0L, 0.0)))
+    assert(got === Map(1L -> ((2L, 0.5)), 2L -> ((0L, 0.0)),
+      3L -> ((1L, 1.0))))
+  }
+
   test("threshold sweep: counts are monotone and bounded by candidates") {
     val r = Similarity.simThresholdSweep(spark, sf).collect().head
     val ladder = Seq("ge_2", "ge_3", "ge_4", "ge_5", "ge_6", "ge_7",
