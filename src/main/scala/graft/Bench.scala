@@ -186,36 +186,37 @@ object Bench {
     // evicted every per-query entry from the stdout JSON)
     val (streamReplay: String, streamReplayStdout: String) = {
       val skip = only.isDefined // dev allow-list → query iteration only
+      val work = "/tmp/graft_bench_replay"
+      val workPath = new org.apache.hadoop.fs.Path(work)
+      val fs = workPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      // fresh dir per run: a leftover log from a previous run at a
+      // different SF would fail the (append-only) generator, and a
+      // reused checkpoint would see the log committed and no-op
       if (skip) ("", "") else try {
-        val replayDir = "/tmp/graft_bench_replay"
-        // micro-batch latency probe FIRST, in its own dir, BEFORE the
-        // 10× backlog drain (VERDICT r14 item 2 tail): it measures
-        // per-batch trigger latency on a 1× log under capped admission
-        // — the steady-state tailing shape — and running it AFTER the
-        // big drain let that leg's 32 still-loaded RocksDB stores (and
-        // their background maintenance snapshots) pollute the probe's
-        // batches (r14: p50 763 ms vs r13's 303 at IDENTICAL batch
-        // count/size, commit_p50 flat — interference, not state cost).
-        // Its own try: a probe failure must not discard the throughput
-        // numbers measured below. The regime field says what the
-        // distribution describes.
+        fs.delete(workPath, true)
+        // micro-batch latency probe FIRST, BEFORE the 10× backlog drain
+        // (VERDICT r14 item 2 tail): it measures per-batch trigger
+        // latency on a 1× log under capped admission — the steady-state
+        // tailing shape — and running it AFTER the big drain let that
+        // leg's 32 still-loaded RocksDB stores (and their background
+        // maintenance snapshots) pollute the probe's batches (r14: p50
+        // 763 ms vs r13's 303 at IDENTICAL batch count/size, commit_p50
+        // flat — interference, not state cost). A tail-follow consumer
+        // sizes its state to per-trigger volume: every micro-batch pays
+        // load + commit per state partition, so the probe runs 4-way
+        // state (FRONTIER.json has the grid). Its own try: a probe
+        // failure must not discard the throughput numbers measured
+        // below. The regime field says what the distribution describes.
         val latency = try {
-          val probeDir = "/tmp/graft_bench_replay_probe"
-          // fresh dir per run: a leftover log1x from a previous run at
-          // a different SF would fail the (append-only) generator, and
-          // a reused checkpoint would see the log committed and no-op
-          val p = new org.apache.hadoop.fs.Path(probeDir)
-          p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            .delete(p, true)
-          streaming.ReplayBench.generateLog(
-            spark, sfDir, s"$probeDir/log1x")
-          val l = streaming.ReplayBench.latencyProbe(
-            spark, s"$probeDir/log1x", s"$probeDir/latency")
-          s""","batches":${l.batches},"batch_latency_ms":{"regime":"capped_admission_1x_backlog","p50":${
-            "%.0f".format(l.p50)},"p95":${"%.0f".format(l.p95)},"max":${
-            "%.0f".format(l.max)},"commit_p50":${
-            "%.0f".format(l.commitP50)},"commit_p95":${
-            "%.0f".format(l.commitP95)}}"""
+          streaming.ReplayBench.generateLog(spark, sfDir, s"$work/log1x")
+          val l = streaming.ReplayBench.drain(spark, s"$work/log1x",
+            s"$work/latency", cap = 4096, statePartitions = Some(4))
+          s""","batches":${l.batches.size},"batch_latency_ms":{"regime":"capped_admission_1x_backlog","p50":${
+            "%.0f".format(l.trigger(0.5))},"p95":${
+            "%.0f".format(l.trigger(0.95))},"max":${
+            "%.0f".format(l.trigger(1))},"commit_p50":${
+            "%.0f".format(l.commit(0.5))},"commit_p95":${
+            "%.0f".format(l.commit(0.95))}}"""
         } catch {
           case e: Throwable =>
             System.err.println(s"[bench] latency probe failed: ${e.getMessage}")
@@ -234,16 +235,20 @@ object Bench {
         // per-commit costs amortize to a few percent
         val backlogCopies = 10
         val rSteal0 = HostSteal.jiffies()
-        val (lines, attempts, med) = streaming.ReplayBench.runMedianOf(
-          spark, sfDir, replayDir, copies = backlogCopies)
+        val lines = streaming.ReplayBench.generateLog(
+          spark, sfDir, s"$work/log", copies = backlogCopies)
+        val attempts = (0 until 3).map(i =>
+          streaming.ReplayBench.drain(spark, s"$work/log", s"$work/sink$i"))
+        val med = attempts.sortBy(_.sec)(Ordering.Double.TotalOrdering)
+          .apply((attempts.size - 1) / 2)
         val rSteal = HostSteal.secondsSince(rSteal0)
         if (rSteal > 0) steals("stream_replay") = rSteal
         val attemptsJson = attempts.map(a =>
           s"""{"sec":${"%.3f".format(a.sec)},"steal_sec":${
             "%.2f".format(a.stealSec)},"state_commit_ms":${
-            a.stateCommitMs}}""").mkString("[", ",", "]")
+            a.commitMs}}""").mkString("[", ",", "]")
         // RocksDB commit/load-path totals of the MEDIAN attempt (ms;
-        // rocksdbSstFileSize = state-on-disk bytes at last batch)
+        // rocksdbSstFileSize = state-on-disk bytes summed over batches)
         val rocksJson =
           if (med.rocksdb.isEmpty) ""
           else s""","rocksdb":${med.rocksdb.toSeq.sortBy(_._1)
@@ -254,16 +259,16 @@ object Bench {
         // the source-side drain rate); mutations_per_sec = sink rows/s,
         // the marker-fraction-independent number to regress on
         val full =
-          s""","stream_replay":{"events":$lines,"backlog_copies":$backlogCopies,"mutations_out":${med.out},"sec":${"%.3f".format(med.sec)},"events_per_sec":${"%.0f".format(lines / med.sec)},"mutations_per_sec":${"%.0f".format(med.out / med.sec)},"state_commit_ms":${med.stateCommitMs},"attempts":$attemptsJson$rocksJson$latency}"""
+          s""","stream_replay":{"events":$lines,"backlog_copies":$backlogCopies,"mutations_out":${med.out},"sec":${"%.3f".format(med.sec)},"events_per_sec":${"%.0f".format(lines / med.sec)},"mutations_per_sec":${"%.0f".format(med.out / med.sec)},"state_commit_ms":${med.commitMs},"attempts":$attemptsJson$rocksJson$latency}"""
         val compact =
-          s""","stream_replay":{"events":$lines,"sec":${"%.3f".format(med.sec)},"events_per_sec":${"%.0f".format(lines / med.sec)},"mutations_per_sec":${"%.0f".format(med.out / med.sec)},"state_commit_ms":${med.stateCommitMs},"attempts_n":${attempts.size}}"""
+          s""","stream_replay":{"events":$lines,"sec":${"%.3f".format(med.sec)},"events_per_sec":${"%.0f".format(lines / med.sec)},"mutations_per_sec":${"%.0f".format(med.out / med.sec)},"state_commit_ms":${med.commitMs},"attempts_n":${attempts.size}}"""
         (full, compact)
       } catch {
         case e: Throwable =>
           System.err.println(s"[bench] stream_replay failed: ${e.getMessage}")
           val f = ""","stream_replay":{"events_per_sec":-1}"""
           (f, f)
-      }
+      } finally fs.delete(workPath, true)
     }
     // concurrent-serving leg (VERDICT r13 item 7, reworked r15 per
     // VERDICT r14 item 2): a shared 100 TB engine serves many sessions
@@ -371,13 +376,10 @@ object Bench {
             val infl = all.toSeq.collect {
               case ((_, l, n), t) if l == lap && ref.contains(n) =>
                 t / ref(n)
-            }.sorted
-            def pct(p: Double): Double =
-              if (infl.isEmpty) -1
-              else infl(math.max(0, math.min(infl.size - 1,
-                math.ceil(p * infl.size).toInt - 1)))
-            Lap(pct(0.50), pct(0.95),
-              if (infl.isEmpty) -1 else infl.last)
+            }
+            if (infl.isEmpty) Lap(-1, -1, -1)
+            else Lap(streaming.ReplayBench.percentile(infl, 0.50),
+              streaming.ReplayBench.percentile(infl, 0.95), infl.max)
           }
           // per-query decomposition: min across threads per lap — the
           // steal-robust estimator; first − steady is that query's

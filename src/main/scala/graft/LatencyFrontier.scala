@@ -10,8 +10,8 @@ import org.apache.hadoop.fs.Path
   * per-batch state cost model (store load + changelog commit per
   * partition per trigger); this main re-runs the
   * (state partitions × admission cap) grid through
-  * [[streaming.ReplayBench.latencyProbe]] — each cell a fresh
-  * capped-admission drain of the same generated log — and writes
+  * [[streaming.ReplayBench.drain]] — each cell a fresh capped-admission
+  * drain of the same generated log at that state width — and writes
   * FRONTIER.json with per-cell p50/p95/max trigger latency AND the
   * RocksDB commit share (`commit_p50_ms`), so the profile's knobs are
   * re-derived from measurements of the operator actually deployed.
@@ -26,25 +26,27 @@ object LatencyFrontier {
     val work = "/tmp/graft_frontier"
     val fs = new Path(work).getFileSystem(new Configuration())
     fs.delete(new Path(work), true)
-    streaming.ReplayBench.generateLog(spark, sfDir, s"$work/log")
-    val cells = for {
-      parts <- Seq(8, 4, 2, 1)
-      cap <- Seq(2048L, 4096L, 8192L)
-    } yield {
-      val steal0 = util.HostSteal.jiffies()
-      val l = streaming.ReplayBench.latencyProbe(spark, s"$work/log",
-        s"$work/cell_p${parts}_c$cap", cap, parts)
-      val stealSec = util.HostSteal.secondsSince(steal0)
-      System.err.println(f"[frontier] parts=$parts cap=$cap " +
-        f"p50=${l.p50}%.0f p95=${l.p95}%.0f commit_p50=${l.commitP50}%.0f " +
-        f"batches=${l.batches} steal=$stealSec%.1fs")
-      s"""{"state_partitions":$parts,"cap":$cap,"batches":${l.batches},""" +
-        s""""p50_ms":${"%.0f".format(l.p50)},"p95_ms":${
-          "%.0f".format(l.p95)},"max_ms":${"%.0f".format(l.max)},""" +
-        s""""commit_p50_ms":${"%.0f".format(l.commitP50)},""" +
-        s""""commit_p95_ms":${"%.0f".format(l.commitP95)},""" +
-        s""""steal_sec":${"%.2f".format(stealSec)}}"""
-    }
+    val cells = try {
+      streaming.ReplayBench.generateLog(spark, sfDir, s"$work/log")
+      for {
+        parts <- Seq(8, 4, 2, 1)
+        cap <- Seq(2048L, 4096L, 8192L)
+      } yield {
+        val d = streaming.ReplayBench.drain(spark, s"$work/log",
+          s"$work/cell_p${parts}_c$cap", cap, Some(parts))
+        val (p50, p95, max) = (d.trigger(0.5), d.trigger(0.95), d.trigger(1))
+        System.err.println(f"[frontier] parts=$parts cap=$cap " +
+          f"p50=$p50%.0f p95=$p95%.0f commit_p50=${d.commit(0.5)}%.0f " +
+          f"batches=${d.batches.size} steal=${d.stealSec}%.1fs")
+        s"""{"state_partitions":$parts,"cap":$cap,""" +
+          s""""batches":${d.batches.size},""" +
+          s""""p50_ms":${"%.0f".format(p50)},"p95_ms":${
+            "%.0f".format(p95)},"max_ms":${"%.0f".format(max)},""" +
+          s""""commit_p50_ms":${"%.0f".format(d.commit(0.5))},""" +
+          s""""commit_p95_ms":${"%.0f".format(d.commit(0.95))},""" +
+          s""""steal_sec":${"%.2f".format(d.stealSec)}}"""
+      }
+    } finally fs.delete(new Path(work), true)
     val json =
       s"""{"metric":"latency_frontier","sf":"$sfDir","provider":"rocksdb","cells":[${cells.mkString(",")}]}"""
     println()

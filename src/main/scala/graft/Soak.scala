@@ -2,11 +2,13 @@ package graft
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import streaming.ReplayBench.percentile
 
 /** Streaming soak harness (VERDICT r12 item 8): one CONTINUOUS
-  * capped-admission drain of a multi-copy backlog through the full
-  * CDC pipe — ChangeLogSource → transformWithState tx grouping on the
-  * RocksDB provider → checkpointed parquet sink — long enough
+  * capped-admission [[streaming.ReplayBench.drain]] of a multi-copy
+  * backlog through the full CDC pipe — ChangeLogSource →
+  * transformWithState tx grouping on the RocksDB provider →
+  * checkpointed parquet sink — long enough
   * (≥ 100 micro-batches; minutes of wall clock) that state-store
   * compaction and changelog-checkpoint behavior, which never shows in
   * a 35-batch run, is exercised. One streaming query: state lives
@@ -36,57 +38,36 @@ object Soak {
     val work = "/tmp/graft_soak"
     val fs = new Path(work).getFileSystem(new Configuration())
     fs.delete(new Path(work), true)
-    val lines = streaming.ReplayBench.generateLog(
-      spark, sfDir, s"$work/log", copies = copies)
-    val expected = lines / math.max(1L, cap) + 64
-    spark.conf.set("spark.sql.streaming.numRecentProgressUpdates",
-      math.max(1024L, 2L * expected).toString)
-    // steady-tailing partitioning (the low-latency profile's derivation:
-    // every micro-batch pays load+commit per state partition)
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    val steal0 = util.HostSteal.jiffies()
-    val t0 = System.nanoTime()
-    val q = streaming.PipeAssembly.start(spark, Map(
-      "source.path" -> s"$work/log",
-      "source.maxLinesPerTrigger" -> cap.toString,
-      "sink.path" -> s"$work/sink/data",
-      "sink.checkpoint" -> s"$work/sink/ckpt"), availableNow = true)
-    q.awaitTermination()
-    val sec = (System.nanoTime() - t0) / 1e9
-    val stealSec = util.HostSteal.secondsSince(steal0)
-    val progress = q.recentProgress.toSeq
-    require(progress.map(_.batchId).min == 0L,
-      "progress ring overflowed — soak percentiles would be tail-only")
-    val batches = progress.filter(_.numInputRows > 0)
-    val trig = batches.map(
-      _.durationMs.getOrDefault("triggerExecution", 0L).toLong)
-    val commits = batches.map(_.stateOperators.toSeq.map(_.commitTimeMs).sum)
-    val sst = batches.map(_.stateOperators.toSeq.map { so =>
-      val v = so.customMetrics.get("rocksdbSstFileSize")
-      if (v == null) 0L else v.longValue()
-    }.sum)
-    def p50(xs: Seq[Long]): Double =
-      if (xs.isEmpty) 0.0
-      else xs.sorted.apply((xs.length - 1) / 2).toDouble
+    val (lines, d) = try {
+      val lines = streaming.ReplayBench.generateLog(
+        spark, sfDir, s"$work/log", copies = copies)
+      // steady-tailing state width (the low-latency profile's
+      // derivation: every micro-batch pays load+commit per state
+      // partition)
+      (lines, streaming.ReplayBench.drain(spark, s"$work/log",
+        s"$work/sink", cap, statePartitions = Some(4)))
+    } finally fs.delete(new Path(work), true)
+    val trig = d.batches.map(_.triggerMs)
+    val sst = d.batches.map(_.custom.getOrElse("rocksdbSstFileSize", 0L))
     val n = trig.length
     val (h1, h2) = trig.splitAt(n / 2)
     val quarters = (0 until 4).map(i =>
-      p50(trig.slice(i * n / 4, (i + 1) * n / 4)))
-    val sstH1Med = p50(sst.take(n / 2))
+      percentile(trig.slice(i * n / 4, (i + 1) * n / 4), 0.5))
+    val sstH1Med = percentile(sst.take(n / 2), 0.5)
     val sstLast = if (sst.isEmpty) 0L else sst.last
-    val flatOk = p50(h2) <= 1.3 * p50(h1)
+    val (h1P50, h2P50) = (percentile(h1, 0.5), percentile(h2, 0.5))
+    val flatOk = h2P50 <= 1.3 * h1P50
     val sstOk = sstLast <= math.max(4.0 * sstH1Med, 8e6)
     val json =
       s"""{"metric":"soak","sf":"$sfDir","copies":$copies,"cap":$cap,""" +
-        s""""lines":$lines,"batches":$n,"sec":${"%.1f".format(sec)},""" +
-        s""""steal_sec":${"%.2f".format(stealSec)},""" +
-        s""""p50_ms_first_half":${"%.0f".format(p50(h1))},""" +
-        s""""p50_ms_second_half":${"%.0f".format(p50(h2))},""" +
+        s""""lines":$lines,"batches":$n,"sec":${"%.1f".format(d.sec)},""" +
+        s""""steal_sec":${"%.2f".format(d.stealSec)},""" +
+        s""""p50_ms_first_half":${"%.0f".format(h1P50)},""" +
+        s""""p50_ms_second_half":${"%.0f".format(h2P50)},""" +
         s""""p50_ms_quarters":[${quarters.map("%.0f".format(_))
           .mkString(",")}],""" +
-        s""""p95_ms":${"%.0f".format(trig.sorted.apply(
-          math.max(0, (0.95 * n).ceil.toInt - 1)).toDouble)},""" +
-        s""""commit_p50_ms":${"%.0f".format(p50(commits))},""" +
+        s""""p95_ms":${"%.0f".format(d.trigger(0.95))},""" +
+        s""""commit_p50_ms":${"%.0f".format(d.commit(0.5))},""" +
         s""""sst_bytes":{"first_half_median":${"%.0f".format(sstH1Med)},""" +
         s""""max":${if (sst.isEmpty) 0L else sst.max},"last":$sstLast},""" +
         s""""flat_p50_ok":$flatOk,"sst_bounded_ok":$sstOk}"""

@@ -239,9 +239,13 @@ object IndexMeta {
   }
 
   /** Drift-gate index directories per (corpus plan, family): build and
-    * append once per session, probe per call. */
-  private val driftDirs =
-    new graft.util.Caches.PlanMemo[String, String](maxEntries = 8)
+    * append once per session, probe per call. Each holds a full copy
+    * of the corpus's embeddings, so eviction deletes the directory and
+    * JVM exit evicts them all. */
+  private val driftDirs = new graft.util.Caches.PlanMemo[String, String](
+    maxEntries = 8, onEvict = dir =>
+      org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(dir)))
+  sys.addShutdownHook(driftDirs.invalidate())
 
   /** Incremental-maintenance gate (`sim_ivf_drift`, `sim_pq_drift`):
     * `build` indexes the 90% base split into a fresh directory and

@@ -43,8 +43,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *   profile                   named knob bundle; `low-latency` applies
   *                             [[PipeAssembly.LowLatencyProfile]]
   *                             (explicit keys still win)
-  *   session.shufflePartitions shuffle/state partition count set on the
-  *                             session at [[PipeAssembly.start]]
+  *   session.shufflePartitions shuffle/state partition count of this
+  *                             pipe's query only (the shared session
+  *                             keeps its own value)
   *   sink.kafkaAsyncProgress   `true` → asyncProgressTrackingEnabled on
   *                             the kafka writer (non-exactly-once)
   */
@@ -181,12 +182,26 @@ object PipeAssembly {
       registry: graft.avro.SchemaRepo = new graft.avro.SchemaRegistry)
       : StreamingQuery = {
     val conf = effectiveConfig(config)
-    // profile-driven state sizing must land BEFORE the query starts:
-    // the stateful operator's partition count pins at the first batch
-    // and lives in the checkpoint from then on (a later conf change
-    // does not re-shard existing state)
-    conf.get("session.shufflePartitions")
-      .foreach(p => spark.conf.set("spark.sql.shuffle.partitions", p))
+    // state sizing must land BEFORE the query starts: the stateful
+    // operator's partition count pins at the first batch and lives in
+    // the checkpoint from then on. A streaming query runs on a clone
+    // of the session taken when it is constructed
+    // (`StreamExecution.sparkSessionForStream`), so the value is set
+    // only around construction and the shared session gets its
+    // previous value back: later queries, and sibling pipes without
+    // the key, keep the session default.
+    val partsKey = "spark.sql.shuffle.partitions"
+    val prevParts = spark.conf.getAll.get(partsKey)
+    val parts = conf.get("session.shufflePartitions")
+    parts.foreach(spark.conf.set(partsKey, _))
+    try startWith(spark, conf, config, availableNow, registry)
+    finally if (parts.isDefined)
+      prevParts.fold(spark.conf.unset(partsKey))(spark.conf.set(partsKey, _))
+  }
+
+  private def startWith(spark: SparkSession, conf: Map[String, String],
+      config: Map[String, String], availableNow: Boolean,
+      registry: graft.avro.SchemaRepo): StreamingQuery = {
     val ms = mutations(spark, config)
     val trg = trigger(conf, availableNow)
     conf("sink.format") match {
@@ -253,9 +268,11 @@ object PipeAssembly {
     * remaining pipes still start — matching the reference's
     * quit-on-error=false default.
     *
-    * `session.shufflePartitions` is applied per pipe BEFORE its query
-    * starts (stateful partitioning pins at first batch per checkpoint,
-    * so two pipes can run different state widths in one session). */
+    * `session.shufflePartitions` sets the state width of its own
+    * pipe's query only (stateful partitioning pins at first batch per
+    * checkpoint), so two pipes can run different state widths in one
+    * session and a pipe without the key runs with the session
+    * default. */
   def startAll(spark: SparkSession,
       flat: Map[String, String],
       availableNow: Boolean = false,

@@ -7,16 +7,19 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryListener
 
-/** Backlog-replay throughput for the CDC half of the engine (round-5
-  * VERDICT item 7): the streaming path had correctness specs but no
-  * perf signal. This drives the REAL pipe — [[ChangeLogSource]] DSv2
-  * scan (rotated segments, sparse index) → [[TxPipeline]] tx grouping
-  * (BEGIN/COMMIT buffering, commit-ts rewrite, state store) →
-  * checkpointed parquet sink — over a multi-segment log generated from
-  * the events table, with `Trigger.AvailableNow` (the catch-up-then-
-  * stop shape of a consumer draining a binlog backlog). The reported
-  * number is end-to-end events/second through the whole pipe.
+/** The one CDC drain every measurement tool runs (`Bench`'s
+  * `stream_replay` leg, [[graft.Soak]], [[graft.LatencyFrontier]]):
+  * the REAL pipe — [[ChangeLogSource]] DSv2 scan (rotated segments,
+  * sparse index) → [[TxPipeline]] tx grouping (BEGIN/COMMIT buffering,
+  * commit-ts rewrite, state store) → checkpointed parquet sink — over
+  * a multi-segment log generated from the events table, with
+  * `Trigger.AvailableNow` (the catch-up-then-stop shape of a consumer
+  * draining a binlog backlog). [[drain]] returns wall seconds, sink
+  * rows, host steal and one [[Batch]] per non-empty micro-batch; each
+  * tool digests those batches (events/s, trigger-latency and
+  * state-commit percentiles, state growth) with [[percentile]].
   *
   * The log generator wraps each run of `txSize` consecutive events per
   * connection in BEGIN/COMMIT markers, so the replay exercises the
@@ -99,17 +102,6 @@ object ReplayBench {
     spark.read.text(logDir).count()
   }
 
-  /** One drain's telemetry, distilled from the query's progress ring
-    * (VERDICT r12 item 1: the driver-measured replay rate moved 2.3×
-    * across rounds and nothing in the artifact could separate
-    * state-store commit cost from host steal — now every drain carries
-    * both): wall seconds, sink rows, non-empty batches, its window's
-    * hypervisor-steal seconds, the summed per-batch state-store commit
-    * time (the standard `stateOperators.commitTimeMs`), and the
-    * RocksDB commit/load-path custom-metric totals. */
-  case class DrainStats(sec: Double, out: Long, batches: Int,
-      stealSec: Double, stateCommitMs: Long, rocksdb: Map[String, Long])
-
   /** The RocksDB provider's commit-path + load timing metrics (ms).
     * `rocksdbSstFileSize` rides along as the state-on-disk size the
     * soak bounds. */
@@ -119,187 +111,113 @@ object ReplayBench {
     "rocksdbChangeLogWriterCommitLatencyMs", "rocksdbLoadLatencyMs",
     "rocksdbWriterStallLatencyMs", "rocksdbSstFileSize")
 
-  private def rocksdbTotals(
-      progress: Seq[org.apache.spark.sql.streaming.StreamingQueryProgress])
-      : Map[String, Long] = {
-    val ops = progress.flatMap(_.stateOperators.toSeq)
-    RocksdbKeys.map { k =>
-      k -> ops.map { so =>
-        val v = so.customMetrics.get(k)
-        if (v == null) 0L else v.longValue()
-      }.sum
-    }.filter(_._2 != 0L).toMap
+  /** One non-empty micro-batch: its `triggerExecution` duration
+    * (trigger begin through sink commit, incl. offset WAL + state
+    * store commit — the micro-batch analog of the reference's
+    * insert→consumer latency, `mypipe` LatencySpec.scala:169-172), and
+    * its state-store commit time and [[RocksdbKeys]] metrics, each
+    * summed over the batch's state operators. */
+  case class Batch(triggerMs: Long, commitMs: Long,
+      custom: Map[String, Long])
+
+  /** One drain: wall seconds, sink rows, the window's hypervisor-steal
+    * seconds (a steal spike and a state-store regression look alike
+    * unless the drain carries both), and its non-empty batches in
+    * order. */
+  case class Drain(sec: Double, out: Long, stealSec: Double,
+      batches: Seq[Batch]) {
+    def commitMs: Long = batches.map(_.commitMs).sum
+    /** Nearest-rank percentile of the per-batch trigger latency. */
+    def trigger(p: Double): Double =
+      percentile(batches.map(_.triggerMs), p)
+    /** Nearest-rank percentile of the per-batch state commit. */
+    def commit(p: Double): Double =
+      percentile(batches.map(_.commitMs), p)
+    /** [[RocksdbKeys]] totals over the drain (non-zero keys only). */
+    def rocksdb: Map[String, Long] = RocksdbKeys
+      .map(k => k -> batches.map(_.custom.getOrElse(k, 0L)).sum)
+      .filter(_._2 != 0L).toMap
   }
 
-  /** Drain the backlog through the full pipe; returns
-    * (output mutations, elapsed seconds). */
-  def replay(spark: SparkSession, logDir: String, outDir: String)
-      : (Long, Double) = {
-    val s = replayStats(spark, logDir, outDir)
-    (s.out, s.sec)
-  }
+  /** Nearest-rank percentile (`p` in (0, 1]); 0 for no samples. */
+  def percentile[T](xs: Seq[T], p: Double)(implicit num: Numeric[T])
+      : Double =
+    if (xs.isEmpty) 0.0
+    else {
+      val s = xs.sorted
+      num.toDouble(s(math.max(0,
+        math.min(s.length - 1, math.ceil(p * s.length).toInt - 1))))
+    }
 
-  /** [[replay]] keeping the per-drain telemetry. */
-  def replayStats(spark: SparkSession, logDir: String, outDir: String)
-      : DrainStats = {
-    val dataDir = s"$outDir/data"
-    val steal0 = graft.util.HostSteal.jiffies()
-    val t0 = System.nanoTime()
-    val q = PipeAssembly.start(spark, Map(
-      "source.path" -> logDir,
-      "sink.path" -> dataDir,
-      "sink.checkpoint" -> s"$outDir/ckpt"), availableNow = true)
-    q.awaitTermination()
-    val sec = (System.nanoTime() - t0) / 1e9
-    val progress = q.recentProgress.toSeq
-    DrainStats(sec, spark.read.parquet(dataDir).count(),
-      progress.count(_.numInputRows > 0),
-      graft.util.HostSteal.secondsSince(steal0),
-      progress.flatMap(_.stateOperators.toSeq).map(_.commitTimeMs).sum,
-      rocksdbTotals(progress))
-  }
+  /** How long [[drain]] waits for the query's terminated event after
+    * `awaitTermination` returns. */
+  private val ListenerWaitMs = 60000L
 
-  /** Micro-batch latency distribution (round-6 VERDICT item 5). The
-    * reference's only published perf number is its <10 ms
-    * insert→consumer latency bound (`mypipe` LatencySpec.scala:169-172,
-    * test.conf:14-15); in the micro-batch model the analog is
-    * trigger-start→sink-commit per batch. Re-drains the already
-    * generated log with a `maxLinesPerTrigger` admission cap so the
-    * catch-up becomes many small batches — the steady-state tailing
-    * shape, not one giant backlog batch — and reads each batch's
-    * `triggerExecution` duration (trigger begin through sink commit,
-    * incl. offset WAL + state store commit) from the query's progress
-    * ring after termination, which is synchronous with the stream
-    * execution thread (a listener would race awaitTermination).
+  /** Drain the log at `logDir` through the full pipe into
+    * `outDir/data` (checkpoint `outDir/ckpt`; a reused checkpoint
+    * would see the log committed and no-op). `cap` admits at most that
+    * many lines per micro-batch (the steady-state tailing shape: many
+    * small batches instead of one backlog batch); `statePartitions`
+    * sets the state width for this query only (every micro-batch pays
+    * load + commit per state partition, so a small-trigger drain wants
+    * few). Both go in as pipe keys, so the session conf is untouched.
     *
-    * Returns per-batch `triggerExecution` percentiles over non-empty
-    * batches, plus the per-batch state-store commit percentiles
-    * (`stateOperators.commitTimeMs` summed per batch) — the number
-    * that says how much of a latency shift is the RocksDB commit
-    * itself. */
-  def latencyProbe(spark: SparkSession, logDir: String, outDir: String,
-      linesPerTrigger: Long = 4096, shufflePartitions: Int = 4)
-      : LatencyStats = {
-    // A tail-follow consumer sizes its state/shuffle partitioning to
-    // per-trigger volume, not to the batch-analytics default: every
-    // micro-batch pays (load + commit) per state partition, so 32-way
-    // state for a ~4k-row trigger is pure fixed cost. Measured at
-    // sf0.1: p50 756 ms at 32 partitions → ~450 at 8 → ~410 at 4,
-    // flat below that. The remaining floor is the batch JOB itself
-    // (addBatch ≈ 270-300 ms: task launch + state commit + parquet
-    // commit); the durable-sink commit is ~100 ms of it (console
-    // delivery measures p50 ≈ 357), and async progress tracking
-    // trims the p95 tail (~650-830 → ~460-550) by taking offset/
-    // commit WAL writes off the critical path at the cost of
-    // exactly-once offsets — the frontier is recorded in SURVEY §16.
-    // Restored after the probe; the throughput drain above keeps the
-    // session default — its single catch-up batch wants the
-    // parallelism.
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-      shufflePartitions.toString)
-    try latencyProbeWith(spark, logDir, outDir, linesPerTrigger)
-    finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-  }
-
-  /** Per-batch latency distribution of one capped-admission drain. */
-  case class LatencyStats(batches: Int, p50: Double, p95: Double,
-      max: Double, commitP50: Double, commitP95: Double)
-
-  private def latencyProbeWith(spark: SparkSession, logDir: String,
-      outDir: String, linesPerTrigger: Long): LatencyStats = {
-    // recentProgress is a ring capped by numRecentProgressUpdates —
-    // size it HERE from the drain we are about to run (batches ≈
-    // lines/cap, +headroom for segment-boundary splits), not in some
-    // caller: a silently overflowed ring would report tail-only,
-    // biased-low percentiles
-    val lines = spark.read.text(logDir).count()
-    val expected = (lines / math.max(1L, linesPerTrigger)) + 64
-    spark.conf.set("spark.sql.streaming.numRecentProgressUpdates",
-      math.max(512L, 2L * expected).toString)
-    val q = PipeAssembly.start(spark, Map(
-      "source.path" -> logDir,
-      "source.maxLinesPerTrigger" -> linesPerTrigger.toString,
-      "sink.path" -> s"$outDir/data",
-      "sink.checkpoint" -> s"$outDir/ckpt"), availableNow = true)
-    q.awaitTermination()
-    val progress = q.recentProgress.toSeq
-    val nonEmpty = progress.filter(_.numInputRows > 0)
-    val ds = nonEmpty
-      .map(_.durationMs.getOrDefault("triggerExecution", -1L).toLong)
-      .filter(_ >= 0)
-      .sorted
-    require(ds.nonEmpty, "latency probe saw no non-empty micro-batches")
-    // loud, not biased: if the ring still overflowed (batchIds start
-    // past 0), the percentiles would describe only the tail
-    require(progress.map(_.batchId).min == 0L,
-      s"progress ring overflowed: ${progress.size} retained, " +
-        s"first batchId ${progress.map(_.batchId).min}")
-    val commits = nonEmpty
-      .map(_.stateOperators.toSeq.map(_.commitTimeMs).sum)
-      .sorted
-    def pct(xs: Seq[Long], p: Double): Double =
-      xs(math.max(0, math.min(xs.length - 1,
-        math.ceil(p * xs.length).toInt - 1))).toDouble
-    LatencyStats(ds.length, pct(ds, 0.50), pct(ds, 0.95),
-      ds.last.toDouble, pct(commits, 0.50), pct(commits, 0.95))
-  }
-
-  /** Generate (untimed) + replay (timed); returns
-    * (log lines, output mutations, seconds, events/sec). */
-  def run(spark: SparkSession, sfDir: String, workDir: String)
-      : (Long, Long, Double, Double) = {
-    val fs = new Path(workDir).getFileSystem(new Configuration())
-    fs.delete(new Path(workDir), true)
-    val lines = generateLog(spark, sfDir, s"$workDir/log")
-    val (out, sec) = replay(spark, s"$workDir/log", s"$workDir/sink")
-    (lines, out, sec, lines / sec)
-  }
-
-  /** [[run]] with the drain repeated `attempts` times over the SAME
-    * generated log, keeping the fastest — replay throughput on a shared
-    * host swings >2× run-to-run under CPU steal (rounds 8-9 re-diagnosed
-    * identical code at 16k-50k events/s), so a single drain is not a
-    * regressable number. Each attempt gets a fresh sink + checkpoint dir
-    * (a reused checkpoint would see the log already committed and
-    * no-op). */
-  def runBestOf(spark: SparkSession, sfDir: String, workDir: String,
-      attempts: Int = 2): (Long, Long, Double, Double) = {
-    val (lines, all) = runAttempts(spark, sfDir, workDir, attempts)
-    val best = all.minBy(_.sec)
-    (lines, best.out, best.sec, lines / best.sec)
-  }
-
-  /** [[run]] with `attempts` drains over one generated log, reporting
-    * the MEDIAN-by-wall attempt (VERDICT r12 item 1: best-of hid how
-    * noisy the distribution was; the median plus the full per-attempt
-    * (sec, steal, state-commit) list makes a steal-inflated driver
-    * round self-describing). Returns (log lines, per-attempt stats,
-    * the median attempt).
-    *
-    * `copies` stacks the corpus Soak-style into a deeper backlog
-    * (VERDICT r13 item 3): a ~2 s drain measured the RocksDB commit
-    * FILE-SYNC variance, not the pipe — the driver's r13 run saw
-    * 16.7 s of rocksdbCommitFileSyncLatencyMs against 0.3 s in the
-    * quiet window, a 1.5× throughput "gap" on identical code. At 10×
-    * the backlog those fixed per-commit costs are a few percent of the
-    * drain and the events/s number regresses on the pipe itself. */
-  def runMedianOf(spark: SparkSession, sfDir: String, workDir: String,
-      attempts: Int = 3, copies: Int = 1)
-      : (Long, Seq[DrainStats], DrainStats) = {
-    val (lines, all) = runAttempts(spark, sfDir, workDir, attempts, copies)
-    val med = all.sortBy(_.sec)(Ordering.Double.TotalOrdering)
-      .apply((all.size - 1) / 2)
-    (lines, all, med)
-  }
-
-  private def runAttempts(spark: SparkSession, sfDir: String,
-      workDir: String, attempts: Int, copies: Int = 1)
-      : (Long, Seq[DrainStats]) = {
-    val fs = new Path(workDir).getFileSystem(new Configuration())
-    fs.delete(new Path(workDir), true)
-    val lines = generateLog(spark, sfDir, s"$workDir/log", copies = copies)
-    (lines, (0 until attempts).map(i =>
-      replayStats(spark, s"$workDir/log", s"$workDir/sink$i")))
+    * Each batch's progress comes from a listener filtered on the
+    * query's run id. Spark posts the terminated event after all of a
+    * query's progress events on the same listener-bus queue, so once
+    * that event arrives every batch has been seen: no progress ring
+    * to size or overflow. */
+  def drain(spark: SparkSession, logDir: String, outDir: String,
+      cap: Long = Long.MaxValue, statePartitions: Option[Int] = None)
+      : Drain = {
+    val progress = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.sql.streaming.StreamingQueryProgress]()
+    val ended = scala.collection.mutable.Set.empty[java.util.UUID]
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(
+          e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryProgress(
+          e: StreamingQueryListener.QueryProgressEvent): Unit =
+        progress.add(e.progress)
+      override def onQueryTerminated(
+          e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+        ended.synchronized { ended += e.runId; ended.notifyAll() }
+    }
+    spark.streams.addListener(listener)
+    try {
+      val dataDir = s"$outDir/data"
+      val steal0 = graft.util.HostSteal.jiffies()
+      val t0 = System.nanoTime()
+      val q = PipeAssembly.start(spark, Map(
+        "source.path" -> logDir,
+        "source.maxLinesPerTrigger" -> cap.toString,
+        "sink.path" -> dataDir,
+        "sink.checkpoint" -> s"$outDir/ckpt") ++
+        statePartitions.map(p => "session.shufflePartitions" -> p.toString),
+        availableNow = true)
+      q.awaitTermination()
+      val sec = (System.nanoTime() - t0) / 1e9
+      val stealSec = graft.util.HostSteal.secondsSince(steal0)
+      val deadline = System.currentTimeMillis() + ListenerWaitMs
+      ended.synchronized {
+        while (!ended(q.runId) && System.currentTimeMillis() < deadline)
+          ended.wait(math.max(1L, deadline - System.currentTimeMillis()))
+        require(ended(q.runId),
+          s"no terminated event for run ${q.runId} in $ListenerWaitMs ms")
+      }
+      import scala.jdk.CollectionConverters._
+      val batches = progress.asScala.toSeq
+        .filter(p => p.runId == q.runId && p.numInputRows > 0)
+        .map { p =>
+          val ops = p.stateOperators.toSeq
+          Batch(p.durationMs.getOrDefault("triggerExecution", 0L).toLong,
+            ops.map(_.commitTimeMs).sum,
+            RocksdbKeys.map(k => k -> ops.map { so =>
+              val v = so.customMetrics.get(k)
+              if (v == null) 0L else v.longValue()
+            }.sum).toMap)
+        }
+      Drain(sec, spark.read.parquet(dataDir).count(), stealSec, batches)
+    } finally spark.streams.removeListener(listener)
   }
 }

@@ -291,4 +291,19 @@ class IvfSpec extends SparkSpec {
     assert(out.map(_.toSeq.toList).toList === re.map(_.toSeq.toList).toList,
       "cluster balance must be layout-stable")
   }
+
+  test("drift gate: evicting the memo deletes its index directory") {
+    // each drift-gate build writes a full copy of the embeddings
+    // under java.io.tmpdir; memo eviction must remove it
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def incDirs(): Int = tmp.listFiles()
+      .count(f => f.isDirectory && f.getName.startsWith("ivf_inc"))
+    util.Caches.invalidateAllMemos()
+    val before = incDirs()
+    val row = SparkEntry.queries("sim_ivf_drift")(spark, sf).collect()
+    assert(row.length === 1 && row.head.getAs[Boolean]("drift_ok"))
+    assert(incDirs() === before + 1, "the gate builds its index once")
+    util.Caches.invalidateAllMemos()
+    assert(incDirs() === before, "eviction deletes the index directory")
+  }
 }

@@ -172,8 +172,8 @@ class PipeAssemblySpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       PipeAssembly.effectiveConfig(Map("profile" -> "turbo"))
     }
-    // the profiled pipe actually drains, and start() applied the state
-    // sizing to the session before the first batch
+    // the profiled pipe actually drains with the profile's 2-way state,
+    // and the shared session keeps its own partition count
     val log = Files.createTempFile("pipelat", ".tsv")
     Files.write(log, Seq(
       ChangeLogSource.renderLine(1, 1, "begin", "", "", 0, ""),
@@ -181,20 +181,61 @@ class PipeAssemblySpec extends SparkSpec {
       ChangeLogSource.renderLine(1, 3, "commit", "", "", 77, ""))
       .mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
     val out = Files.createTempDirectory("pipelatout").toString
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
+    withSessionParts {
       val q = PipeAssembly.start(spark, Map(
         "profile" -> "low-latency",
         "source.path" -> log.toString,
         "sink.path" -> s"$out/data",
         "sink.checkpoint" -> s"$out/chk"), availableNow = true)
-      assert(spark.conf.get("spark.sql.shuffle.partitions") === "2",
-        "profile must size the session state before the query starts")
+      assert(spark.conf.get("spark.sql.shuffle.partitions") === "8",
+        "the pipe's state width must not leak into the shared session")
       q.awaitTermination(60000); q.stop()
-      val pks = spark.read.parquet(s"$out/data")
-        .select("pk").collect().map(_.getString(0)).toSeq
-      assert(pks === Seq("a"))
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+      assert(q.lastProgress.stateOperators.head.numShufflePartitions === 2,
+        "profile must size the query's state before its first batch")
+    }
+    val pks = spark.read.parquet(s"$out/data")
+      .select("pk").collect().map(_.getString(0)).toSeq
+    assert(pks === Seq("a"))
+  }
+
+  /** Runs `body` with the session's shuffle partitions at the suite
+    * default of 8, so a width leaked by an earlier test cannot hide a
+    * leak here. */
+  private def withSessionParts[T](body: => T): T = {
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "8")
+    try body finally spark.conf.set(key, prev)
+  }
+
+  test("multi-pipe runner: a pipe's state width stays in its own query") {
+    val log = Files.createTempFile("multipipewidth", ".tsv")
+    Files.write(log, Seq(
+      ChangeLogSource.renderLine(1, 1, "begin", "", "", 0, ""),
+      ChangeLogSource.renderLine(1, 2, "mutation", "insert", "a", 5, "x"),
+      ChangeLogSource.renderLine(1, 3, "commit", "", "", 77, ""))
+      .mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
+    val out = Files.createTempDirectory("multipipewidth").toString
+    withSessionParts {
+      // pipe a sorts first, so b starts after a has set its width
+      val qs = PipeAssembly.startAll(spark, Map(
+        "source.path" -> log.toString,
+        "pipes.a.session.shufflePartitions" -> "2",
+        "pipes.a.sink.path" -> s"$out/a/data",
+        "pipes.a.sink.checkpoint" -> s"$out/a/chk",
+        "pipes.b.sink.path" -> s"$out/b/data",
+        "pipes.b.sink.checkpoint" -> s"$out/b/chk"), availableNow = true)
+      val width = qs.map {
+        case (name, Right(q)) =>
+          q.awaitTermination(60000); q.stop()
+          name -> q.lastProgress.stateOperators.head.numShufflePartitions
+        case (_, Left(e)) => fail(e)
+      }
+      assert(width("a") === 2)
+      assert(width("b") === 8,
+        "a pipe without the key runs with the session default")
+      assert(spark.conf.get("spark.sql.shuffle.partitions") === "8")
+    }
   }
 
   test("multi-pipe runner: N pipes from one config, one source, " +

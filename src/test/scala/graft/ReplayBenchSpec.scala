@@ -1,23 +1,26 @@
 package graft
 
+import graft.sources.ChangeLogSource
 import graft.streaming.ReplayBench
 import org.apache.spark.sql.functions._
 
-/** The backlog-replay bench harness must be a REAL pipe run: every
-  * generated mutation reaches the sink tx-stamped, and the throughput
-  * math is consistent. */
+/** The one drain every CDC measurement tool runs must be a REAL pipe
+  * run: every generated mutation reaches the sink tx-stamped, and every
+  * non-empty batch shows up in its digest. */
 class ReplayBenchSpec extends SparkSpec {
 
   test("generated backlog drains completely through the tx pipe") {
     val work = java.nio.file.Files
       .createTempDirectory("replay_bench").toString
-    val (lines, out, sec, eps) = ReplayBench.run(spark, sf, work)
+    val lines = ReplayBench.generateLog(spark, sf, s"$work/log")
+    val d = ReplayBench.drain(spark, s"$work/log", s"$work/sink")
     val nEvents = Tables.events(spark, sf).count()
     // every event row became exactly one committed mutation; markers
     // (begin/commit) add tx structure but emit no rows
-    assert(out === nEvents, s"sink rows $out != events $nEvents")
+    assert(d.out === nEvents, s"sink rows ${d.out} != events $nEvents")
     assert(lines > nEvents, "log carries begin/commit markers")
-    assert(sec > 0 && eps > 0)
+    assert(d.sec > 0 && lines / d.sec > 0)
+    assert(d.batches.nonEmpty)
     // spot-check tx semantics on the sink: txids group <=5 mutations,
     // and each tx's mutations share one commit timestamp
     val sink = spark.read.parquet(s"$work/sink/data")
@@ -32,16 +35,18 @@ class ReplayBenchSpec extends SparkSpec {
   test("latency probe yields ordered percentiles over many capped batches") {
     val work = java.nio.file.Files
       .createTempDirectory("replay_latency").toString
-    spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "512")
     val lines = ReplayBench.generateLog(spark, sf, s"$work/log")
     val cap = 1024L
-    val l = ReplayBench.latencyProbe(spark, s"$work/log", s"$work/lat", cap)
+    val d = ReplayBench.drain(spark, s"$work/log", s"$work/lat", cap,
+      statePartitions = Some(4))
+    val (p50, p95, max) = (d.trigger(0.5), d.trigger(0.95), d.trigger(1))
+    val (commitP50, commitP95) = (d.commit(0.5), d.commit(0.95))
     // capped admission must split the drain into many batches: at
     // least ceil(lines/cap) (rotated-segment boundaries can add more)
-    assert(l.batches >= (lines + cap - 1) / cap,
-      s"${l.batches} batches for $lines lines at cap $cap")
-    assert(l.p50 > 0 && l.p50 <= l.p95 && l.p95 <= l.max,
-      s"percentiles out of order: p50=${l.p50} p95=${l.p95} max=${l.max}")
+    assert(d.batches.size >= (lines + cap - 1) / cap,
+      s"${d.batches.size} batches for $lines lines at cap $cap")
+    assert(p50 > 0 && p50 <= p95 && p95 <= max,
+      s"percentiles out of order: p50=$p50 p95=$p95 max=$max")
     // the RocksDB path must surface a real per-batch commit cost.
     // StateOperatorProgress.commitTimeMs is SUMMED across the state
     // partitions, which commit in parallel — so a batch's commit sum is
@@ -49,13 +54,45 @@ class ReplayBenchSpec extends SparkSpec {
     // itself (the tighter bound tripped under full-suite host
     // contention: 4 × ~2.3 s parallel commits summed to 9.2 s against
     // a 5.2 s trigger wall).
-    assert(l.commitP50 >= 0 && l.commitP50 <= l.commitP95)
-    assert(l.commitP95 <= 4 * l.max,
-      s"commit p95 ${l.commitP95} exceeds partitions x max trigger " +
-        s"${4 * l.max}")
+    assert(commitP50 >= 0 && commitP50 <= commitP95)
+    assert(commitP95 <= 4 * max,
+      s"commit p95 $commitP95 exceeds partitions x max trigger ${4 * max}")
     // every mutation still lands exactly once under capped triggers
-    val out = spark.read.parquet(s"$work/lat/data").count()
-    assert(out === Tables.events(spark, sf).count())
+    assert(d.out === Tables.events(spark, sf).count())
+    assert(spark.read.parquet(s"$work/lat/data").count() === d.out)
+  }
+
+  test("drain sees every batch past the progress ring and writes no conf") {
+    // 8 transactions of 5 lines, drained 4 lines per batch: 10 batches,
+    // 5x more than the session keeps in its progress ring
+    val work = java.nio.file.Files.createTempDirectory("replay_ring")
+    val log = work.resolve("log")
+    java.nio.file.Files.createDirectories(log)
+    val txs = (0 until 8).flatMap { t =>
+      val s = t * 10L
+      Seq(ChangeLogSource.renderLine(1, s + 1, "begin", "", "", 0, "")) ++
+        (2 to 4).map(i => ChangeLogSource.renderLine(1, s + i,
+          "mutation", "insert", s"pk$t-$i", s + i, "v")) :+
+        ChangeLogSource.renderLine(1, s + 5, "commit", "", "", s + 5, "")
+    }
+    java.nio.file.Files.write(log.resolve("part-00000"),
+      txs.mkString("", "\n", "\n").getBytes("UTF-8"))
+    val ringKey = "spark.sql.streaming.numRecentProgressUpdates"
+    val prevRing = spark.conf.getAll.get(ringKey)
+    spark.conf.set(ringKey, "2")
+    try {
+      val before = spark.conf.getAll
+      val d = ReplayBench.drain(spark, log.toString,
+        work.resolve("out").toString, cap = 4, statePartitions = Some(2))
+      assert(d.batches.size === 10)
+      assert(d.out === 24)
+      val after = spark.conf.getAll
+      val changed = (before.keySet ++ after.keySet)
+        .filter(k => before.get(k) != after.get(k))
+      assert(changed.isEmpty,
+        s"drain changed session conf keys $changed")
+    } finally prevRing.fold(spark.conf.unset(ringKey))(
+      spark.conf.set(ringKey, _))
   }
 
   test("per-event state-machine cost clears the reference's 10 ms latency bound") {
