@@ -1,10 +1,14 @@
 package graft
 
+import functions.{GramIndex, IndexMeta, Ivf, Pq, Similarity}
+import org.apache.spark.sql.SparkSession
+
 /** Deployment tool: materialize or maintain the persisted index
   * artifacts — `sbt "runMain graft.BuildIndex <sfDir> <outDir> [n]
   * [--update] [--family gram|ivf|pq|hamming|all]"`.
   *
-  * Families (default `gram`, which keeps `<outDir>` itself as the
+  * Every family is one [[IndexMeta.Family]] run by the one device,
+  * [[IndexMeta]] (default `gram`, which keeps `<outDir>` itself as the
   * gram-artifact root for back-compat; ANN families land in
   * `<outDir>/<family>`):
   *  - `gram`    — [[functions.GramIndex]] shingle/signature tables
@@ -16,16 +20,24 @@ package graft
   *  - `pq`      — [[functions.Pq]] codebooks + codes.
   *  - `hamming` — [[functions.Similarity]] signature store.
   *
-  * Without `--update` the artifact is (re)built from scratch — still
-  * through the fail-safe metadata path, so every build leaves the
-  * members/fingerprint tables `--update` diffs against. With
-  * `--update` each family runs its incremental-maintenance contract:
-  * an unchanged corpus is a no-op, an append-only delta PATCHES the
-  * artifact at delta cost against the STORED model (no retrain), and
-  * a mutated corpus falls back to the full rebuild. The action taken
-  * is printed per family. */
+  * Without `--update` the artifact is (re)built from scratch through
+  * [[IndexMeta.rebuild]], so every build leaves the members and
+  * fingerprint tables `--update` diffs against. With `--update`,
+  * [[IndexMeta.updateWithDelete]] runs: an unchanged corpus is a
+  * no-op, an append-only delta PATCHES the artifact at delta cost
+  * (against the STORED model for ANN: no retrain), removed members are
+  * anti-joined out, and past half the membership removed it rebuilds.
+  * The action taken is printed per family. */
 object BuildIndex {
   def main(args: Array[String]): Unit = {
+    val spark = GraftSession.get()
+    run(spark, args.toSeq)
+    spark.stop()
+  }
+
+  /** Build or update the families `args` names; returns the action
+    * taken per family, in order. */
+  def run(spark: SparkSession, args: Seq[String]): Seq[String] = {
     val update = args.contains("--update")
     val buf = args.filterNot(_ == "--update").toBuffer
     val fi = buf.indexOf("--family")
@@ -34,47 +46,28 @@ object BuildIndex {
     } else "gram"
     val (sfDir, outDir) = (buf(0), buf(1))
     val n = if (buf.length > 2) buf(2).toInt else 4
-    val spark = GraftSession.get()
     val families =
       if (family == "all") Seq("gram", "ivf", "pq", "hamming")
       else Seq(family)
-    families.foreach { f =>
+    families.map { f =>
       val t0 = System.nanoTime()
       def emb = Tables.embeddings(spark, sfDir)
-      val action = f match {
+      val (corpus, dir, fam) = f match {
         case "gram" =>
-          if (update) functions.GramIndex.updateIndex(
-            Tables.documents(spark, sfDir), n, outDir)
-          else {
-            functions.GramIndex.saveIndex(
-              Tables.documents(spark, sfDir), n, outDir)
-            "rebuild"
-          }
-        case "ivf" =>
-          val d = s"$outDir/ivf"
-          if (update) functions.Ivf.updateIndex(emb, d)
-          else functions.IndexMeta.rebuild(emb, d)(() =>
-            functions.Ivf.saveIndex(emb,
-              functions.Ivf.trainCentroids(emb, k = 8, iters = 2), d))
-        case "pq" =>
-          val d = s"$outDir/pq"
-          if (update) functions.Pq.updateIndex(emb, d)
-          else functions.IndexMeta.rebuild(emb, d)(() =>
-            functions.Pq.saveIndex(emb,
-              functions.Pq.trainCodebooks(emb, m = 4, k = 16, iters = 2),
-              d))
-        case "hamming" =>
-          val d = s"$outDir/hamming"
-          if (update) functions.Similarity.updateSignatureIndex(emb, d)
-          else functions.IndexMeta.rebuild(emb, d)(() =>
-            functions.Similarity.saveSignatureIndex(emb, d))
+          (Tables.documents(spark, sfDir), outDir, GramIndex.family(n))
+        case "ivf" => (emb, s"$outDir/ivf", Ivf.family())
+        case "pq" => (emb, s"$outDir/pq", Pq.family())
+        case "hamming" => (emb, s"$outDir/hamming", Similarity.signatureFamily)
         case other =>
           sys.error(s"unknown --family $other " +
             "(gram|ivf|pq|hamming|all)")
       }
-      println(f"[build-index] $f: $action $outDir in " +
+      val action =
+        if (update) IndexMeta.updateWithDelete(corpus, dir, fam)
+        else IndexMeta.rebuild(corpus, dir, fam)
+      println(f"[build-index] $f: $action $dir in " +
         f"${(System.nanoTime() - t0) / 1e9}%.1f s")
+      action
     }
-    spark.stop()
   }
 }

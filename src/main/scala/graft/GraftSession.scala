@@ -72,10 +72,11 @@ object GraftSession {
   /** Deployment env hooks, applied by [[get]]:
     *
     *  - `SPARK_GRAFT_INDEX_DIR` — point a cold session at a persisted
-    *    gram-index artifact (graft.functions.GramIndex.saveIndex
+    *    gram-index artifact (the gram family of the one index device,
+    *    graft.functions.IndexMeta; `graft.BuildIndex --family gram`
     *    output) so the dedup/decontamination family loads it instead
-    *    of re-tokenizing the corpus (fingerprint-validated; drift →
-    *    silent rebuild).
+    *    of re-tokenizing the corpus (fingerprint-validated against
+    *    (doc_id, byte length); drift → silent rebuild).
     *  - `SPARK_GRAFT_RELIABLE` — route every iterative stage boundary
     *    through reliable `Dataset.checkpoint()` instead of
     *    localCheckpoint (graft.util.Checkpoints — executor-loss

@@ -1,7 +1,7 @@
 package graft.functions
 
 import graft.util.Caches
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Session-shared shingle/signature index tables for the dedup and
@@ -19,7 +19,8 @@ import org.apache.spark.sql.functions._
   * the first caller builds and persists; later callers (same session,
   * same source plan) reuse the cached blocks. A COLD session repays
   * the build unless `spark.graft.index.dir` (env
-  * `SPARK_GRAFT_INDEX_DIR`) points at a [[saveIndex]] artifact: then
+  * `SPARK_GRAFT_INDEX_DIR`) points at a [[saveIndex]] artifact — the
+  * gram family of the one persisted-index device, [[IndexMeta]]: then
   * the first use fingerprint-validates and LOADS — measured at sf0.1,
   * first access across the four shapes drops 8.2 s → 2.8 s, the
   * remainder being the one-time fingerprint probe + parquet footers.
@@ -135,8 +136,51 @@ object GramIndex {
     }
 
   // ── persisted index artifacts ───────────────────────────────────────
-  /** Persist the family's index tables as deployment artifacts (the
-    * [[Ivf.saveIndex]] device for the text-similarity family). At
+  /** Session conf key: when set to a [[saveIndex]] directory, the
+    * session-memo paths above transparently LOAD matching artifacts on
+    * first use instead of rebuilding. */
+  val IndexDirConf = "spark.graft.index.dir"
+
+  /** The gram member hash: xxhash64(doc_id, byte length). Deliberately
+    * COLUMN-PRUNED (never tokenization): the whole point of the
+    * artifact is skipping the tokenize+hash pass, so the freshness
+    * probe must be an order of magnitude cheaper than the build. Any
+    * membership or byte-length change flips the fingerprint; a
+    * same-length in-place byte edit does not — the trade every
+    * mtime/size build cache makes, and the ingest feeding this engine
+    * is append-shaped (CDC streams). */
+  private def lengthHash(docs: DataFrame): Column =
+    xxhash64(col("doc_id").cast("long"),
+      if (docs.columns.contains("n_chars")) col("n_chars").cast("long")
+      else length(col("text")).cast("long"))
+
+  /** The gram family for the [[IndexMeta]] device. Every shape is keyed
+    * per doc — (doc, term) tf rows, per-doc gram sets, per-doc
+    * signatures — with no cross-doc state, so an append-only delta's
+    * exact merge IS the append (tokenize+hash over delta docs only)
+    * and a deletion is an anti-join rewrite of the INDEX tables, never
+    * a corpus re-tokenize. The manifest lists the shapes, so an
+    * `--update` with a gram size the artifact never built rebuilds
+    * instead of appending into a fresh, delta-only `ngram_sets_<n>`. */
+  def family(n: Int): IndexMeta.Family = {
+    val shapes = Seq[(String, DataFrame => DataFrame)](
+      ("occ_bigram_tf", occurrenceCounts _),
+      (s"ngram_sets_$n", ngramSets(_, n)),
+      ("bigram_source_sets", bigramSourceSets _),
+      ("minhash_signatures", minhashSignatures _))
+    def write(mode: String)(docs: DataFrame, dir: String): Unit =
+      shapes.foreach { case (name, build) =>
+        build(docs).write.mode(mode).parquet(s"$dir/$name")
+      }
+    IndexMeta.Family("doc_id", lengthHash, shapes.map(_._1),
+      build = write("overwrite"), append = write("append"),
+      delete = (removed, dir) => shapes.foreach { case (name, _) =>
+        IndexMeta.rewriteExcluding(removed.sparkSession, s"$dir/$name",
+          removed, "doc_id")
+      })
+  }
+
+  /** Persist the family's index tables as a deployment artifact. At
     * 100 TB "materialize once per (corpus, shape), amortize across
     * runs" means a TABLE, not session cache: the tokenize+hash scan of
     * the whole corpus — the expensive part every dedup /
@@ -148,165 +192,14 @@ object GramIndex {
     * which re-routes joins that a fresh columnar read of the same
     * table plans well — measured 3-6× on the jaccard family when these
     * entries were pinned across the bench's independent jobs.) */
-  def saveIndex(docs: DataFrame, n: Int, dir: String): Unit = {
-    val spark = docs.sparkSession
-    // fail-safe ordering (ADVICE r12): sentinel the fingerprint BEFORE
-    // the first shape write and write the real one LAST — a crash
-    // anywhere between leaves an artifact that never validates
-    // (loadIfFresh → None, updateIndex → rebuild) instead of a
-    // half-written one that does
-    writeSentinel(spark, dir)
-    occurrenceCounts(docs).write.mode("overwrite")
-      .parquet(s"$dir/occ_bigram_tf")
-    ngramSets(docs, n).write.mode("overwrite")
-      .parquet(s"$dir/ngram_sets_$n")
-    bigramSourceSets(docs).write.mode("overwrite")
-      .parquet(s"$dir/bigram_source_sets")
-    minhashSignatures(docs).write.mode("overwrite")
-      .parquet(s"$dir/minhash_signatures")
-    memberDf(docs).write.mode("overwrite").parquet(s"$dir/members")
-    val (nd, idSum, hashSum) = corpusFingerprint(docs)
-    writeFingerprint(spark, dir, nd, idSum, hashSum, shapeNames(n))
-  }
+  def saveIndex(docs: DataFrame, n: Int, dir: String): String =
+    IndexMeta.rebuild(docs, dir, family(n))
 
-  /** The shape tables a [[saveIndex]] with gram size `n` builds — the
-    * manifest persisted in the fingerprint so [[updateIndex]] and
-    * [[loadIfFresh]] know what the artifact actually contains (ADVICE
-    * r12: an --update with a different n once appended delta docs into
-    * a FRESH ngram_sets_<n> dir that then fingerprint-validated). */
-  private def shapeNames(n: Int): Seq[String] = Seq(
-    "occ_bigram_tf", s"ngram_sets_$n", "bigram_source_sets",
-    "minhash_signatures", "members")
-
-  /** Incrementally maintain a [[saveIndex]] artifact against the
-    * corpus's CURRENT state. The ingest pipelines feeding this engine
-    * are append-shaped (CDC streams), and every shape in the artifact
-    * is keyed per doc — (doc, term) tf rows, per-doc gram sets, per-doc
-    * signatures — so for an append-only delta the exact merge IS the
-    * append: counts add, sets union and signatures elementwise-min
-    * trivially because no key overlaps between old and new docs, and
-    * no shape holds cross-doc state. Cost therefore scales with the
-    * delta: the tokenize+hash passes (the expensive part) run over
-    * delta docs only, and delta detection is an id/length-pruned
-    * anti-join against the artifact's id-sized `members` table — the
-    * same cost class as the [[loadIfFresh]] freshness probe. The
-    * fingerprint folds incrementally (disjoint union ⇒ counts add,
-    * XORs combine), so the updated artifact validates exactly like a
-    * fresh build.
-    *
-    * A MUTATED corpus (any saved doc's id/length pair missing from the
-    * current corpus — edit or delete) is patched by the DELETE cost
-    * class (VERDICT r15 item 5): every shape is keyed per doc, so a
-    * deletion is an anti-join rewrite of the INDEX tables (never a
-    * corpus re-tokenize), and an edited doc is its old rows' delete
-    * plus its new rows' append through the ordinary delta path. At
-    * 100 TB this is what makes a right-to-be-forgotten pass routine:
-    * index-sized I/O instead of a corpus-scale rebuild. Only past
-    * [[IndexMeta.DeleteRebuildFraction]] of membership removed does it
-    * fall back to the full [[saveIndex]] (which also compacts).
-    *
-    * Returns the action taken — "noop" | "append" | "delete" |
-    * "rebuild" ("delete" covers delete-only and edit = delete+append)
-    * — so callers (and GramIndexSpec) can assert the cost class, not
-    * just the result. */
+  /** [[IndexMeta.updateWithDelete]] on a [[saveIndex]] artifact:
+    * returns "noop" | "append" | "delete" | "rebuild", so callers (and
+    * GramIndexSpec) can assert the cost class, not just the result. */
   def updateIndex(docs: DataFrame, n: Int, dir: String): String = {
-    val spark = docs.sparkSession
-    val saved = readFingerprint(spark, dir).flatMap {
-      case (fp, shapes) =>
-        try Some((fp, shapes, spark.read.parquet(s"$dir/members")))
-        catch { case _: org.apache.spark.sql.AnalysisException => None }
-    }
-    val action = saved match {
-      case None =>
-        // missing, sentinel (crashed prior write), or pre-manifest
-        // artifact: nothing trustworthy to patch
-        saveIndex(docs, n, dir); "rebuild"
-      case Some((_, shapes, _)) if !shapes.contains(s"ngram_sets_$n") =>
-        // the requested gram size was never built: an append would
-        // create a fresh, delta-only ngram_sets_$n that nevertheless
-        // fingerprint-validates (ADVICE r12) — rebuild instead
-        saveIndex(docs, n, dir); "rebuild"
-      case Some((savedFp, shapes, members)) =>
-        if (corpusFingerprint(docs) == savedFp) "noop"
-        else {
-          // saved rows whose (id, length-hash) vanished: deleted docs
-          // plus the OLD image of edited ones. Materialized EAGERLY
-          // (truncated lineage): the rewrites below swap the very
-          // members parquet this plan reads
-          val removed = members
-            .join(memberDf(docs), Seq("doc_id", "h"), "left_anti")
-            .localCheckpoint(true)
-          val rAgg = removed
-            .agg(count(lit(1)), expr("bit_xor(doc_id)"), expr("bit_xor(h)"))
-            .collect()(0)
-          val rn = rAgg.getLong(0)
-          val (rId, rHash) = (
-            if (rAgg.isNullAt(1)) 0L else rAgg.getLong(1),
-            if (rAgg.isNullAt(2)) 0L else rAgg.getLong(2))
-          if (rn > (IndexMeta.DeleteRebuildFraction * savedFp._1).toLong) {
-            removed.unpersist(false)
-            saveIndex(docs, n, dir); "rebuild"
-          } else if (rn > 0) {
-            // DELETE: anti-join rewrite of every manifest shape
-            // (members included — it is in the manifest), then the
-            // surviving delta (edited docs' new rows + genuine
-            // appends) flows through the ordinary append writes
-            val removedIds = removed.select("doc_id")
-            writeSentinel(spark, dir)
-            shapes.foreach(sh => IndexMeta.rewriteExcluding(spark,
-              s"$dir/$sh", removedIds, "doc_id"))
-            val delta = docs.join(
-              spark.read.parquet(s"$dir/members").select("doc_id"),
-              Seq("doc_id"), "left_anti")
-            val (dn, dId, dHash) = corpusFingerprint(delta)
-            if (dn > 0) {
-              occurrenceCounts(delta).write.mode("append")
-                .parquet(s"$dir/occ_bigram_tf")
-              ngramSets(delta, n).write.mode("append")
-                .parquet(s"$dir/ngram_sets_$n")
-              bigramSourceSets(delta).write.mode("append")
-                .parquet(s"$dir/bigram_source_sets")
-              minhashSignatures(delta).write.mode("append")
-                .parquet(s"$dir/minhash_signatures")
-              memberDf(delta).write.mode("append")
-                .parquet(s"$dir/members")
-            }
-            writeFingerprint(spark, dir, savedFp._1 - rn + dn,
-              savedFp._2 ^ rId ^ dId, savedFp._3 ^ rHash ^ dHash, shapes)
-            removed.unpersist(false)
-            "delete"
-          } else {
-            // `delta` is a LAZY anti-join against the members parquet:
-            // every delta-dependent read must run before the members
-            // append below, or the re-evaluated anti-join sees the
-            // already-patched table and the delta collapses to empty
-            val delta = docs.join(members.select("doc_id"),
-              Seq("doc_id"), "left_anti")
-            val (dn, dId, dHash) = corpusFingerprint(delta)
-            // crash-fail-safe (ADVICE r12): sentinel BEFORE the first
-            // shape append. The old ordering appended shapes, then
-            // members, then the fingerprint — a crash between the two
-            // appends left members without the delta, so a re-run
-            // recomputed the same delta and appended the shape rows
-            // TWICE while the final fingerprint (membership-only)
-            // still validated. With the sentinel, any partial update
-            // is an invalid artifact that rebuilds on next touch.
-            writeSentinel(spark, dir)
-            occurrenceCounts(delta).write.mode("append")
-              .parquet(s"$dir/occ_bigram_tf")
-            ngramSets(delta, n).write.mode("append")
-              .parquet(s"$dir/ngram_sets_$n")
-            bigramSourceSets(delta).write.mode("append")
-              .parquet(s"$dir/bigram_source_sets")
-            minhashSignatures(delta).write.mode("append")
-              .parquet(s"$dir/minhash_signatures")
-            memberDf(delta).write.mode("append").parquet(s"$dir/members")
-            writeFingerprint(spark, dir, savedFp._1 + dn,
-              savedFp._2 ^ dId, savedFp._3 ^ dHash, shapes)
-            "append"
-          }
-        }
-    }
+    val action = IndexMeta.updateWithDelete(docs, dir, family(n))
     // any pre-update load decision or fingerprint memo is now stale;
     // drop them so the next use re-probes the updated artifact
     if (action != "noop") { artifactMemo.invalidate()
@@ -314,93 +207,17 @@ object GramIndex {
     action
   }
 
-  // ── fingerprint-validated artifact loading ──────────────────────────
-  /** Session conf key: when set to a [[saveIndex]] directory, the
-    * session-memo paths above transparently LOAD matching artifacts on
-    * first use instead of rebuilding (the [[Ivf.saveIndex]]
-    * write-once/serve-forever device applied to the text family). */
-  val IndexDirConf = "spark.graft.index.dir"
-
-  /** Deterministic corpus fingerprint — the invalidation key a
-    * persisted index is valid against. Deliberately a COLUMN-PRUNED
-    * scan (doc_id + byte length only, never tokenization): the whole
-    * point of the artifact is skipping the tokenize+hash pass, so the
-    * freshness probe must be an order of magnitude cheaper than the
-    * build. Any corpus edit that changes membership or any document's
-    * byte length flips it; a same-length in-place byte edit does not —
-    * the same trade every mtime/size-based build cache makes, and the
-    * ingest pipelines feeding this engine are append-shaped (CDC
-    * streams), where membership/length capture every change. */
-  def corpusFingerprint(docs: DataFrame): (Long, Long, Long) = {
-    // XOR folds: order-independent, overflow-free under ANSI mode, and
-    // any single membership/length change flips the digest
-    val r = memberDf(docs)
-      .agg(count(lit(1)), expr("bit_xor(doc_id)"), expr("bit_xor(h)"))
-      .collect()(0)
-    (r.getLong(0),
-      if (r.isNullAt(1)) 0L else r.getLong(1),
-      if (r.isNullAt(2)) 0L else r.getLong(2))
-  }
-
-  /** Per-doc (doc_id, h) membership row — h = xxhash64(id, byte
-    * length), the same column-pruned signal [[corpusFingerprint]]
-    * folds. Persisted as the artifact's `members` table so
-    * [[updateIndex]] can diff corpus membership at id-scan cost. */
-  private def memberDf(docs: DataFrame): DataFrame = {
-    val lenCol =
-      if (docs.columns.contains("n_chars")) col("n_chars").cast("long")
-      else length(col("text")).cast("long")
-    docs.select(col("doc_id").cast("long").as("doc_id"),
-      xxhash64(col("doc_id").cast("long"), lenCol).as("h"))
-  }
-
-  /** Sentinel fingerprint: n_docs = -1 can never equal a real corpus
-    * count, so an artifact carrying it NEVER validates. Written before
-    * any shape write/append and replaced by the real fingerprint only
-    * after every shape landed — the crash-window invariant. */
-  private def writeSentinel(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Unit =
-    writeFingerprint(spark, dir, -1L, 0L, 0L, Seq.empty)
-
-  private def writeFingerprint(spark: org.apache.spark.sql.SparkSession,
-      dir: String, nDocs: Long, idSum: Long, hashSum: Long,
-      shapes: Seq[String]): Unit = {
-    import spark.implicits._
-    Seq((nDocs, idSum, hashSum, shapes.mkString(",")))
-      .toDF("n_docs", "id_sum", "hash_sum", "shapes")
-      .write.mode("overwrite").parquet(s"$dir/fingerprint")
-  }
-
-  /** ((n_docs, id_sum, hash_sum), shape manifest) of a valid artifact;
-    * None on missing fingerprint, sentinel (crashed prior write), or a
-    * pre-manifest fingerprint lacking the `shapes` column. */
-  private def readFingerprint(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Option[((Long, Long, Long), Seq[String])] =
-    try {
-      val row = spark.read.parquet(s"$dir/fingerprint").collect()
-        .headOption
-      row.filter(r => r.schema.fieldNames.contains("shapes") &&
-          r.getAs[Long]("n_docs") >= 0L)
-        .map(r => ((r.getAs[Long]("n_docs"), r.getAs[Long]("id_sum"),
-          r.getAs[Long]("hash_sum")),
-          r.getAs[String]("shapes").split(",")
-            .filter(_.nonEmpty).toSeq))
-    } catch {
-      case _: org.apache.spark.sql.AnalysisException => None
-    }
-
-  /** Load `shape` from a [[saveIndex]] artifact iff its stored
-    * fingerprint matches the CURRENT corpus AND the shape is in the
-    * artifact's manifest; None (→ rebuild) on missing artifact,
-    * missing/unbuilt shape, sentinel, or fingerprint drift. */
+  /** Load `shape` from a [[saveIndex]] artifact iff the artifact is
+    * valid, lists `shape` in its manifest, and its fingerprint matches
+    * the CURRENT corpus; None (→ rebuild) otherwise. */
   private[graft] def loadIfFresh(docs: DataFrame, shape: String,
       root: String): Option[DataFrame] = {
     val spark = docs.sparkSession
-    readFingerprint(spark, root).flatMap { case (saved, shapes) =>
-      val current = fingerprintMemo.get(docs, "fp")(corpusFingerprint(docs))
-      if (saved == current && shapes.contains(shape))
-        Some(spark.read.parquet(s"$root/$shape"))
-      else None
+    IndexMeta.stored(spark, root).collect {
+      case (saved, shapes) if shapes.contains(shape) &&
+          saved == fingerprintMemo.get(docs, "fp")(
+            IndexMeta.fingerprint(docs, "doc_id", lengthHash)) =>
+        spark.read.parquet(s"$root/$shape")
     }
   }
 

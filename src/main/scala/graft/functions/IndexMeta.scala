@@ -1,80 +1,119 @@
 package graft.functions
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Shared membership/fingerprint bookkeeping for the persisted ANN
-  * artifacts (IVF cell store, PQ codes, Hamming signature store) —
-  * the [[GramIndex]] maintenance device factored out for vector
-  * corpora, so every persisted index family exposes the same
-  * noop/append/rebuild contract under one nightly CLI
-  * ([[graft.BuildIndex]]).
+/** The one maintenance device for every persisted index artifact: the
+  * gram shingle/signature tables ([[GramIndex]]), the IVF cell store,
+  * PQ codes and the Hamming signature store. Each family hands in a
+  * [[Family]] (its id column, its per-row member hash, its shape
+  * manifest and its build/append/delete bodies); this object owns the
+  * rest, so every family exposes the same noop/append/delete/rebuild
+  * contract under one nightly CLI ([[graft.BuildIndex]]).
   *
-  * Membership rows are (vec_id, h = xxhash64(vec_id, embedding)):
-  * any membership change or in-place vector edit flips the XOR-folded
-  * corpus fingerprint, so delta detection is an id-sized anti-join
-  * and freshness is a three-scalar compare. Appends run the
-  * family's cheap no-retrain path (assign/encode/sign against the
-  * STORED model); anything mutated falls back to the family's full
-  * rebuild — tombstone bookkeeping the read path would pay for
-  * forever is the alternative, and ingest here is append-shaped
-  * (CDC streams).
+  * Membership rows are (id, h = the family's member hash): any
+  * membership change or member edit flips the XOR-folded corpus
+  * fingerprint, so delta detection is an id-sized anti-join and
+  * freshness is a three-scalar compare. Appends run the family's cheap
+  * path (the gram tables' per-doc append; assign/encode/sign against
+  * the STORED model for ANN); removed members are anti-joined out of
+  * the family's tables; past [[DeleteRebuildFraction]] of membership
+  * removed the family's full build runs instead.
   *
-  * Writes are crash-fail-safe in the [[GramIndex]] way: a sentinel
-  * fingerprint (n_vecs = -1, which can never validate) lands BEFORE
-  * the first data write and the real fingerprint LAST, so a crash
-  * anywhere between leaves an artifact that never validates and
-  * rebuilds on the next touch — never one that silently serves or
-  * double-appends. */
+  * Writes are crash-fail-safe: a sentinel fingerprint (n_vecs = -1,
+  * which can never validate) lands BEFORE the first data write and the
+  * real fingerprint LAST, so a crash anywhere between leaves an
+  * artifact that never validates and rebuilds on the next touch —
+  * never one that silently serves or double-appends. */
 object IndexMeta {
 
-  /** (vec_id, h) membership row; h covers the full embedding so an
-    * in-place vector edit is detected, not just membership churn. */
-  def memberDf(vecs: DataFrame): DataFrame =
-    vecs.select(col("vec_id").cast("long").as("vec_id"),
-      xxhash64(col("vec_id").cast("long"), col("embedding")).as("h"))
+  /** One persisted index family, as the device runs it. `id` names the
+    * corpus id column and `hash` its per-row member hash (given the
+    * corpus, since a family may pick among its columns); a change the
+    * hash does not see is a change the artifact does not see.
+    * `shapes` is the manifest a valid artifact must list. `build`,
+    * `append` and `delete` write only the family's own tables under
+    * the artifact dir: `build` from the whole corpus, `append` from
+    * the delta rows, `delete` dropping the removed ids (one `id`
+    * column) via [[rewriteExcluding]]. `members` and `fingerprint`
+    * are the device's. */
+  final case class Family(id: String, hash: DataFrame => Column,
+      shapes: Seq[String],
+      build: (DataFrame, String) => Unit,
+      append: (DataFrame, String) => Unit,
+      delete: (DataFrame, String) => Unit)
 
-  /** Order-independent corpus digest: (count, XOR ids, XOR hashes). */
-  def fingerprint(vecs: DataFrame): (Long, Long, Long) = {
-    val r = memberDf(vecs)
-      .agg(count(lit(1)), expr("bit_xor(vec_id)"), expr("bit_xor(h)"))
+  /** The ANN families' member hash: the full embedding, so an in-place
+    * vector edit is detected, not just membership churn. */
+  val EmbeddingHash: DataFrame => Column =
+    _ => xxhash64(col("vec_id").cast("long"), col("embedding"))
+
+  /** (id, h) membership rows of `corpus`. */
+  private def memberDf(corpus: DataFrame, id: String,
+      hash: DataFrame => Column): DataFrame =
+    corpus.select(col(id).cast("long").as(id), hash(corpus).as("h"))
+
+  /** Order-independent corpus digest: (count, XOR ids, XOR hashes).
+    * XOR folds are overflow-free under ANSI mode and any single
+    * membership or member-hash change flips them. */
+  def fingerprint(corpus: DataFrame, id: String = "vec_id",
+      hash: DataFrame => Column = EmbeddingHash): (Long, Long, Long) =
+    fold(memberDf(corpus, id, hash), id)
+
+  private def fold(members: DataFrame, id: String): (Long, Long, Long) = {
+    val r = members
+      .agg(count(lit(1)), bit_xor(col(id)), bit_xor(col("h")))
       .collect()(0)
     (r.getLong(0),
       if (r.isNullAt(1)) 0L else r.getLong(1),
       if (r.isNullAt(2)) 0L else r.getLong(2))
   }
 
-  private def writeFp(spark: SparkSession, dir: String, nVecs: Long,
-      idXor: Long, hXor: Long): Unit = {
+  private def writeFp(spark: SparkSession, dir: String,
+      fp: (Long, Long, Long), shapes: Seq[String]): Unit = {
     import spark.implicits._
-    Seq((nVecs, idXor, hXor)).toDF("n_vecs", "id_xor", "h_xor")
+    Seq((fp._1, fp._2, fp._3, shapes.mkString(",")))
+      .toDF("n_vecs", "id_xor", "h_xor", "shapes")
       .write.mode("overwrite").parquet(s"$dir/fingerprint")
   }
 
   private def writeSentinel(spark: SparkSession, dir: String): Unit =
-    writeFp(spark, dir, -1L, 0L, 0L)
+    writeFp(spark, dir, (-1L, 0L, 0L), Nil)
 
-  private def readFp(spark: SparkSession, dir: String)
-      : Option[(Long, Long, Long)] =
+  /** (fingerprint, shape manifest) of a valid artifact; None on a
+    * missing fingerprint, the sentinel, or a row in any other format.
+    * A row without `shapes` (written before the manifest existed)
+    * reads as an empty manifest, which only a family with no shapes
+    * accepts. */
+  private[graft] def stored(spark: SparkSession, dir: String)
+      : Option[((Long, Long, Long), Seq[String])] =
     try {
       spark.read.parquet(s"$dir/fingerprint").collect().headOption
-        .filter(_.getAs[Long]("n_vecs") >= 0L)
-        .map(r => (r.getAs[Long]("n_vecs"), r.getAs[Long]("id_xor"),
-          r.getAs[Long]("h_xor")))
+        .filter(r => r.schema.fieldNames.contains("n_vecs") &&
+          r.getAs[Long]("n_vecs") >= 0L)
+        .map { r =>
+          val shapes =
+            if (!r.schema.fieldNames.contains("shapes")) Nil
+            else r.getAs[String]("shapes").split(",").filter(_.nonEmpty)
+              .toSeq
+          ((r.getAs[Long]("n_vecs"), r.getAs[Long]("id_xor"),
+            r.getAs[Long]("h_xor")), shapes)
+        }
     } catch {
       case _: org.apache.spark.sql.AnalysisException => None
     }
 
-  /** Full rebuild with fail-safe ordering: sentinel → family body →
-    * members → real fingerprint. The CLI's plain-build path and
-    * [[update]]'s fallback both route here so metadata always exists. */
-  def rebuild(vecs: DataFrame, dir: String)(body: () => Unit): String = {
-    val spark = vecs.sparkSession
+  /** Full build with fail-safe ordering: sentinel → family build →
+    * members → real fingerprint. [[graft.BuildIndex]]'s plain build
+    * and [[updateWithDelete]]'s fallback both route here, so metadata
+    * always exists. */
+  def rebuild(corpus: DataFrame, dir: String, f: Family): String = {
+    val spark = corpus.sparkSession
     writeSentinel(spark, dir)
-    body()
-    memberDf(vecs).write.mode("overwrite").parquet(s"$dir/members")
-    val (n, i, h) = fingerprint(vecs)
-    writeFp(spark, dir, n, i, h)
+    f.build(corpus, dir)
+    memberDf(corpus, f.id, f.hash).write.mode("overwrite")
+      .parquet(s"$dir/members")
+    writeFp(spark, dir, fingerprint(corpus, f.id, f.hash), f.shapes)
     "rebuild"
   }
 
@@ -89,9 +128,9 @@ object IndexMeta {
     * discipline a crash mid-swap leaves an artifact that never
     * validates and rebuilds on next touch. At 100 TB the swap is an
     * object-store rename and the rewrite touches INDEX rows (ids,
-    * codes, signatures — never corpus text), which is the point of the
-    * delete cost class: a right-to-be-forgotten pass costs index I/O,
-    * not a corpus-scale retrain. */
+    * gram sets, codes, signatures — never corpus text), which is the
+    * point of the delete cost class: a right-to-be-forgotten pass
+    * costs index I/O, not a corpus-scale rebuild. */
   def rewriteExcluding(spark: SparkSession, path: String,
       removedIds: DataFrame, keyCol: String,
       partitionCols: Seq[String] = Nil): Unit = {
@@ -109,101 +148,69 @@ object IndexMeta {
       sys.error(s"rename $tmp -> $path failed")
   }
 
-  /** Classify the current corpus against the stored membership and run
-    * the family callbacks: `append` receives the DELTA vectors (the
-    * family assigns/encodes/signs them against its stored model —
-    * never retraining); `rebuildBody` re-trains and rewrites the whole
-    * artifact. Returns "noop" | "append" | "rebuild". */
-  def update(vecs: DataFrame, dir: String)(append: DataFrame => Unit)(
-      rebuildBody: () => Unit): String =
-    updateWithDelete(vecs, dir)(append)(None)(rebuildBody)
-
-  /** [[update]] plus the `delete` cost class (VERDICT r15 item 5):
-    * every artifact shape is keyed per vector, so a deletion is an
-    * anti-join removal and a doc MUTATION is its old row's delete plus
-    * its new row's append — no tombstones, no corpus-scale retrain.
-    * `deleteFn` (when given) receives the removed vec_ids and must
-    * drop them from the family's data tables (via
-    * [[rewriteExcluding]]); membership and the XOR fingerprint fold
-    * incrementally, so the patched artifact validates exactly like a
-    * fresh build. Falls back to the full rebuild when no `deleteFn`
-    * exists, or past [[DeleteRebuildFraction]] of membership removed.
-    * Returns "noop" | "append" | "delete" | "rebuild" ("delete" covers
-    * delete-only and mutation = delete + append). */
-  def updateWithDelete(vecs: DataFrame, dir: String)(
-      append: DataFrame => Unit)(deleteFn: Option[DataFrame => Unit])(
-      rebuildBody: () => Unit): String = {
-    val spark = vecs.sparkSession
-    def full(): String = rebuild(vecs, dir)(rebuildBody)
-    readFp(spark, dir) match {
-      case None => full() // missing, sentinel, or crashed prior write
-      case Some(fp) =>
-        if (fingerprint(vecs) == fp) "noop"
-        else {
-          val members =
-            try spark.read.parquet(s"$dir/members")
-            catch {
-              case _: org.apache.spark.sql.AnalysisException => null
-            }
-          if (members == null) full()
+  /** Maintain the artifact at `dir` against the corpus's CURRENT state:
+    * "noop" when the stored fingerprint matches; "append" when members
+    * were only added (`f.append` gets the delta rows); "delete" when
+    * some were removed or edited (`f.delete` gets the removed ids, an
+    * edited member's new row then re-enters with the appends); and
+    * "rebuild" — `f.build` over the whole corpus — when the artifact
+    * is missing, crashed, from another format, lacks a shape of
+    * `f.shapes`, or lost more than [[DeleteRebuildFraction]] of its
+    * members. Every shape is keyed per member, so no tombstones and no
+    * corpus-scale work on the patch paths; membership and the XOR
+    * fingerprint fold incrementally, so a patched artifact validates
+    * exactly like a fresh build. */
+  def updateWithDelete(corpus: DataFrame, dir: String, f: Family): String = {
+    val spark = corpus.sparkSession
+    val id = f.id
+    def members = spark.read.parquet(s"$dir/members")
+    def hasMembers = try { members; true } catch {
+      case _: org.apache.spark.sql.AnalysisException => false
+    }
+    stored(spark, dir).filter { case (_, shapes) =>
+      f.shapes.forall(shapes.contains) && hasMembers
+    } match {
+      case None => rebuild(corpus, dir, f)
+      case Some((fp, _)) if fingerprint(corpus, id, f.hash) == fp => "noop"
+      case Some((fp, _)) =>
+        // saved rows whose (id, h) vanished: removed members plus the
+        // OLD image of edited ones. Must materialize EAGERLY
+        // (localCheckpoint, truncated lineage): the rewrites below swap
+        // the very parquet dirs this plan reads, so a lazy
+        // re-evaluation would see patched state
+        val removed = members
+          .join(memberDf(corpus, id, f.hash), Seq(id, "h"), "left_anti")
+          .localCheckpoint(true)
+        val (rn, ri, rh) = fold(removed, id)
+        val action =
+          if (rn > (DeleteRebuildFraction * fp._1).toLong)
+            rebuild(corpus, dir, f)
           else {
-            // saved rows whose (vec_id, h) vanished: deleted vectors
-            // plus the OLD image of in-place-mutated ones. Must
-            // materialize EAGERLY (localCheckpoint, truncated lineage):
-            // the rewrites below swap the very parquet dirs this plan
-            // reads, so a lazy re-evaluation would see patched state
-            val removed = members
-              .join(memberDf(vecs), Seq("vec_id", "h"), "left_anti")
-              .localCheckpoint(true)
-            val rAgg = removed
-              .agg(count(lit(1)), expr("bit_xor(vec_id)"),
-                expr("bit_xor(h)")).collect()(0)
-            val rn = rAgg.getLong(0)
-            val (ri, rh) = (
-              if (rAgg.isNullAt(1)) 0L else rAgg.getLong(1),
-              if (rAgg.isNullAt(2)) 0L else rAgg.getLong(2))
-            val patchable = deleteFn.isDefined && rn > 0 &&
-              rn <= (DeleteRebuildFraction * fp._1).toLong
-            if (rn > 0 && !patchable) full()
-            else if (rn > 0) {
-              val removedIds = removed.select("vec_id")
-              writeSentinel(spark, dir)
-              deleteFn.get(removedIds)
-              rewriteExcluding(spark, s"$dir/members", removedIds,
-                "vec_id")
-              // delta vs the PATCHED members: a mutated vector's id is
-              // no longer a member, so it re-enters through the same
-              // append path as a genuinely new vector
-              val delta = vecs.join(
-                spark.read.parquet(s"$dir/members").select("vec_id"),
-                Seq("vec_id"), "left_anti")
-              val (dn, di, dh) = fingerprint(delta)
-              if (dn > 0) {
-                append(delta)
-                memberDf(delta).write.mode("append")
-                  .parquet(s"$dir/members")
-              }
-              writeFp(spark, dir, fp._1 - rn + dn,
-                fp._2 ^ ri ^ di, fp._3 ^ rh ^ dh)
-              removed.unpersist(false)
-              "delete"
-            } else {
-              // LAZY anti-join against the members parquet: all
-              // delta-dependent work (fingerprint fold, the family
-              // append) must run before the members append below
-              val delta = vecs.join(members.select("vec_id"),
-                Seq("vec_id"), "left_anti")
-              val (dn, di, dh) = fingerprint(delta)
-              writeSentinel(spark, dir)
-              append(delta)
-              memberDf(delta).write.mode("append")
-                .parquet(s"$dir/members")
-              writeFp(spark, dir, fp._1 + dn, fp._2 ^ di, fp._3 ^ dh)
-              removed.unpersist(false)
-              "append"
+            writeSentinel(spark, dir)
+            if (rn > 0) {
+              val removedIds = removed.select(id)
+              f.delete(removedIds, dir)
+              rewriteExcluding(spark, s"$dir/members", removedIds, id)
             }
+            // LAZY anti-join against the (patched) members parquet: an
+            // edited member's id is no longer a member, so it re-enters
+            // here like a new one; every delta-dependent read (the
+            // fold, the family append) must run before the members
+            // append below, or the re-evaluated anti-join collapses
+            val delta = corpus.join(members.select(id), Seq(id),
+              "left_anti")
+            val (dn, di, dh) = fingerprint(delta, id, f.hash)
+            if (dn > 0) {
+              f.append(delta, dir)
+              memberDf(delta, id, f.hash).write.mode("append")
+                .parquet(s"$dir/members")
+            }
+            writeFp(spark, dir, (fp._1 - rn + dn, fp._2 ^ ri ^ di,
+              fp._3 ^ rh ^ dh), f.shapes)
+            if (rn > 0) "delete" else "append"
           }
-        }
+        removed.unpersist(false)
+        action
     }
   }
 

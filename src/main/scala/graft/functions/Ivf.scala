@@ -306,31 +306,30 @@ object Ivf extends QueryModule {
         appendToIndex(batch, spark, t)
     }
 
-  /** Nightly maintenance against the corpus's CURRENT state — the
-    * [[GramIndex.updateIndex]] contract on the IVF artifact, shared
-    * bookkeeping in [[IndexMeta]]: an unchanged corpus is a no-op, an
-    * append-only delta runs [[appendToIndex]] (assignment against the
-    * STORED centroids — never retrains, the FAISS add/train split; the
-    * `stats` baseline stays at train time by design, so
+  /** The IVF family for the [[IndexMeta]] device: a build trains
+    * centroids (`k`, `iters`) and runs [[saveIndex]]; an append runs
+    * [[appendToIndex]] (assignment against the STORED centroids —
+    * never retrains, the FAISS add/train split); a delete is an
+    * anti-join rewrite of the cell store, cid partitioning kept for
+    * the pruning contract. The centroid model and the `stats`
+    * baseline stay at train time on both patch paths by design, so
     * [[indexStaleness]] keeps measuring drift against the model's own
-    * training distribution), and a mutated corpus falls back to a full
-    * retrain+[[saveIndex]]. `k`/`iters` apply only on rebuild. */
+    * training distribution. */
+  def family(k: Int = 8, iters: Int = 2): IndexMeta.Family =
+    IndexMeta.Family("vec_id", IndexMeta.EmbeddingHash, Nil,
+      build = (corpus, dir) =>
+        saveIndex(corpus, trainCentroids(corpus, k, iters), dir),
+      append = (delta, dir) => appendToIndex(delta, delta.sparkSession, dir),
+      delete = (removed, dir) => IndexMeta.rewriteExcluding(
+        removed.sparkSession, s"$dir/cells", removed, "vec_id",
+        partitionCols = Seq("cid")))
+
+  /** Nightly maintenance against the corpus's CURRENT state:
+    * [[IndexMeta.updateWithDelete]] of [[family]]. `k`/`iters` apply
+    * only on rebuild. */
   def updateIndex(corpus: DataFrame, dir: String, k: Int = 8,
-      iters: Int = 2): String = {
-    val spark = corpus.sparkSession
-    // delete class (VERDICT r15 item 5): cells are keyed per vec_id,
-    // so a deletion is an anti-join rewrite of the cell store (cid
-    // partitioning preserved for the pruning contract) and a mutated
-    // vector is its old row's delete + re-assignment of the new one;
-    // the centroid model and the TRAIN-TIME stats baseline stay — by
-    // design, indexStaleness keeps measuring against the training
-    // distribution
-    IndexMeta.updateWithDelete(corpus, dir)(
-      delta => appendToIndex(delta, spark, dir))(
-      Some(removed => IndexMeta.rewriteExcluding(spark, s"$dir/cells",
-        removed, "vec_id", partitionCols = Seq("cid"))))(
-      () => saveIndex(corpus, trainCentroids(corpus, k, iters), dir))
-  }
+      iters: Int = 2): String =
+    IndexMeta.updateWithDelete(corpus, dir, family(k, iters))
 
   def loadCentroids(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(s"$dir/centroids")

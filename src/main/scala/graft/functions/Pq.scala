@@ -278,23 +278,25 @@ object Pq extends QueryModule {
         col("__d").as("q_err"))
       .write.mode("append").parquet(s"$dir/codes")
 
-  /** Nightly maintenance — the [[Ivf.updateIndex]] contract on the PQ
-    * artifact: noop on an unchanged corpus, [[appendToIndex]] (encode
-    * against the STORED codebooks, never retrains) for an append-only
-    * delta, full retrain+[[saveIndex]] for anything mutated.
+  /** The PQ family for the [[IndexMeta]] device, as [[Ivf.family]]:
+    * a build trains codebooks (`m`, `k`, `iters`) and runs
+    * [[saveIndex]]; an append runs [[appendToIndex]] (encode against
+    * the STORED codebooks, never retrains); a delete is an anti-join
+    * rewrite of the codes table. Codebooks and the train-time stats
+    * baseline stay on both patch paths. */
+  def family(m: Int = 4, k: Int = 16, iters: Int = 2): IndexMeta.Family =
+    IndexMeta.Family("vec_id", IndexMeta.EmbeddingHash, Nil,
+      build = (corpus, dir) =>
+        saveIndex(corpus, trainCodebooks(corpus, m, k, iters), dir),
+      append = (delta, dir) => appendToIndex(delta, delta.sparkSession, dir),
+      delete = (removed, dir) => IndexMeta.rewriteExcluding(
+        removed.sparkSession, s"$dir/codes", removed, "vec_id"))
+
+  /** Nightly maintenance: [[IndexMeta.updateWithDelete]] of [[family]].
     * `m`/`k`/`iters` apply only on rebuild. */
   def updateIndex(corpus: DataFrame, dir: String, m: Int = 4,
-      k: Int = 16, iters: Int = 2): String = {
-    val spark = corpus.sparkSession
-    // delete class: codes rows are keyed per vec_id — anti-join
-    // rewrite of the codes table; codebooks and the train-time stats
-    // baseline stay (the IVF rationale)
-    IndexMeta.updateWithDelete(corpus, dir)(
-      delta => appendToIndex(delta, spark, dir))(
-      Some(removed => IndexMeta.rewriteExcluding(spark, s"$dir/codes",
-        removed, "vec_id")))(
-      () => saveIndex(corpus, trainCodebooks(corpus, m, k, iters), dir))
-  }
+      k: Int = 16, iters: Int = 2): String =
+    IndexMeta.updateWithDelete(corpus, dir, family(m, k, iters))
 
   /** [[IndexMeta.staleness]] of a persisted PQ index's `codes`: the
     * signal that the codebooks no longer quantize the corpus well. */

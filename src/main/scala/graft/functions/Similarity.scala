@@ -1504,23 +1504,29 @@ object Similarity extends QueryModule {
     * signature store is ~16 GB while the vectors are ~260 GB — the
     * prefilter never touches the big table. Spec asserts the persisted
     * path reproduces [[simHammingAnn]] bit-for-bit and that the sig
-    * scan's ReadSchema carries exactly the two small columns. */
-  def saveSignatureIndex(corpus: DataFrame, idxDir: String): Unit =
+    * scan's ReadSchema carries exactly the two small columns. `mode`
+    * "append" adds `corpus`'s rows to an existing store. */
+  def saveSignatureIndex(corpus: DataFrame, idxDir: String,
+      mode: String = "overwrite"): Unit =
     corpus.select(col("vec_id"), signWord("embedding", 0).as("sig"))
-      .write.mode("overwrite").parquet(s"$idxDir/hamming_sigs")
+      .write.mode(mode).parquet(s"$idxDir/hamming_sigs")
 
-  /** Nightly maintenance — the [[Ivf.updateIndex]] contract on the
-    * signature store: noop / sign-and-append the delta / full rewrite.
-    * Signatures are model-free (the sign projection has no trained
-    * state), so the patched store is value-identical to a fresh
-    * [[saveSignatureIndex]] — not just model-equivalent. */
+  /** The Hamming family for the [[IndexMeta]] device: build, append
+    * and delete are a write, an append and an anti-join rewrite of the
+    * signature store. Signatures are model-free (the sign projection
+    * has no trained state), so a patched store is value-identical to a
+    * fresh [[saveSignatureIndex]] — not just model-equivalent. */
+  val signatureFamily: IndexMeta.Family =
+    IndexMeta.Family("vec_id", IndexMeta.EmbeddingHash, Nil,
+      build = saveSignatureIndex(_, _),
+      append = saveSignatureIndex(_, _, "append"),
+      delete = (removed, dir) => IndexMeta.rewriteExcluding(
+        removed.sparkSession, s"$dir/hamming_sigs", removed, "vec_id"))
+
+  /** Nightly maintenance: [[IndexMeta.updateWithDelete]] of
+    * [[signatureFamily]]. */
   def updateSignatureIndex(corpus: DataFrame, idxDir: String): String =
-    IndexMeta.updateWithDelete(corpus, idxDir)(delta =>
-      delta.select(col("vec_id"), signWord("embedding", 0).as("sig"))
-        .write.mode("append").parquet(s"$idxDir/hamming_sigs"))(
-      Some(removed => IndexMeta.rewriteExcluding(corpus.sparkSession,
-        s"$idxDir/hamming_sigs", removed, "vec_id")))(
-      () => saveSignatureIndex(corpus, idxDir))
+    IndexMeta.updateWithDelete(corpus, idxDir, signatureFamily)
 
   def topKHammingPersisted(queries: DataFrame, corpus: DataFrame,
       spark: SparkSession, idxDir: String, k: Int = HammingK): DataFrame = {

@@ -46,7 +46,7 @@ class AlterEvolutionSpec extends SparkSpec {
       val framed = CdcStream.kafkaFrame(
         TxPipeline.groupByTransaction(input.toDS()),
         producerRepo, "changelog_${conn}_generic")
-      val chk = java.nio.file.Files.createTempDirectory("alterchk").toString
+      val chk = tempDir("alterchk").toString
       val q = framed.writeStream.format("memory").queryName("alter_pipe")
         .option("checkpointLocation", chk)
         .trigger(Trigger.ProcessingTime("1 second")).start()
@@ -210,7 +210,7 @@ class AlterEvolutionSpec extends SparkSpec {
 
     // a RUNNING pipe carrying framed specific records to a memory sink
     val input = MemoryStream[(Long, Long, Int)](spark)
-    val chk = java.nio.file.Files.createTempDirectory("widechk").toString
+    val chk = tempDir("widechk").toString
     // frames are built with the schema id the PRODUCER held when it
     // wrote the row (carried per-row here, as on a real binlog: the
     // ALTER point is a position in the stream)

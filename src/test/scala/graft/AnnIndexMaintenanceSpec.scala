@@ -19,7 +19,7 @@ class AnnIndexMaintenanceSpec extends SparkSpec {
   private def base = emb.filter(col("vec_id") % 10 =!= 9)
 
   private def tmp(p: String): String =
-    java.nio.file.Files.createTempDirectory(p).toString
+    tempDir(p).toString
 
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 class CdcLakeSpec extends SparkSpec {
 
   test("topic-per-table lake layout prunes partitions at planning time") {
-    val dir = java.nio.file.Files.createTempDirectory("lake").toString
+    val dir = tempDir("lake").toString
     val feed = ChangeFeed.fromEvents(spark, sf)
       .select("op", "database", "tbl", "pk", "ts_us", "event_id")
     CdcLake.write(feed, dir)
@@ -31,7 +31,7 @@ class CdcLakeSpec extends SparkSpec {
   test("log compaction keeps only the latest surviving image per key") {
     val sparkS = spark
     import sparkS.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("compact").toString
+    val dir = tempDir("compact").toString
     val log = Seq(
       // (op, db, tbl, pk, ord)
       ("insert", "d", "t", "k1", 1L),

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 class ChangeLogSourceSpec extends SparkSpec {
 
   private def writeLog(lines: Seq[String]): String = {
-    val f = Files.createTempFile("changelog", ".tsv")
+    val f = tempFile("changelog", ".tsv")
     Files.write(f, lines.mkString("\n").concat("\n")
       .getBytes(StandardCharsets.UTF_8))
     f.toString
@@ -22,7 +22,7 @@ class ChangeLogSourceSpec extends SparkSpec {
     val log = writeLog((1 to 25).map(i =>
       ChangeLogSource.renderLine(1, i, "mutation", "insert", s"pk$i",
         i * 1000L, s"v$i")))
-    val dir = Files.createTempDirectory("cls").toString
+    val dir = tempDir("cls").toString
     val q = spark.readStream.format(fmt)
       .option("path", log).option("maxLinesPerTrigger", "10")
       .load()
@@ -46,7 +46,7 @@ class ChangeLogSourceSpec extends SparkSpec {
     val log = writeLog((1 to 25).map(i =>
       ChangeLogSource.renderLine(1, i, "mutation", "insert", s"pk$i",
         i * 1000L, s"v$i")))
-    val dir = Files.createTempDirectory("sparse").toString
+    val dir = tempDir("sparse").toString
     val q = spark.readStream.format(fmt)
       .option("path", log).option("maxLinesPerTrigger", "7")
       .option("indexGranularity", "4")
@@ -63,7 +63,7 @@ class ChangeLogSourceSpec extends SparkSpec {
   }
 
   test("rotation: a directory of segments reads as one ordered log") {
-    val dir = Files.createTempDirectory("segs")
+    val dir = tempDir("segs")
     def seg(name: String, lines: Seq[String]): Unit =
       Files.write(dir.resolve(name), lines.mkString("", "\n", "\n")
         .getBytes(StandardCharsets.UTF_8))
@@ -73,7 +73,7 @@ class ChangeLogSourceSpec extends SparkSpec {
     seg("log.000002", (11 to 15).map(i =>
       ChangeLogSource.renderLine(1, i, "mutation", "insert", s"pk$i",
         i * 1000L, s"v$i")))
-    val out = Files.createTempDirectory("segout").toString
+    val out = tempDir("segout").toString
     def drain(): Unit = {
       val q = spark.readStream.format(fmt)
         .option("path", dir.toString).load()
@@ -104,7 +104,7 @@ class ChangeLogSourceSpec extends SparkSpec {
 
   test("rotation: a multi-segment backlog plans one partition per segment") {
     import graft.sources.{ChangeLogMicroBatchStream, ChangeLogOffset}
-    val dir = Files.createTempDirectory("segplan")
+    val dir = tempDir("segplan")
     (1 to 3).foreach { s =>
       Files.write(dir.resolve(f"log.$s%06d"),
         (1 to 4).map(i => ChangeLogSource.renderLine(1, s * 10 + i,
@@ -128,7 +128,7 @@ class ChangeLogSourceSpec extends SparkSpec {
       // a literal "\N" VALUE must escape to \\N and come back as data
       ChangeLogSource.renderLine(1, 3, "mutation", "insert", "\\N", 7L,
         "x")))
-    val dir = java.nio.file.Files.createTempDirectory("nulls").toString
+    val dir = tempDir("nulls").toString
     val q = spark.readStream.format(fmt).option("path", log).load()
       .writeStream.format("memory").queryName("nulls_out")
       .option("checkpointLocation", s"$dir/chk")
@@ -149,7 +149,7 @@ class ChangeLogSourceSpec extends SparkSpec {
         "pk\twith\ttabs", 5L, "line1\nline2"),
       ChangeLogSource.renderLine(1, 2, "mutation", "insert",
         "back\\slash", 6L, "v\r\n")))
-    val dir = java.nio.file.Files.createTempDirectory("esc").toString
+    val dir = tempDir("esc").toString
     val q = spark.readStream.format(fmt).option("path", log).load()
       .writeStream.format("memory").queryName("esc_out")
       .option("checkpointLocation", s"$dir/chk")
@@ -168,7 +168,7 @@ class ChangeLogSourceSpec extends SparkSpec {
       ChangeLogSource.renderLine(2, i, "mutation", "update", s"pk$i",
         i * 10L, ""))
     val log = writeLog(lines)
-    val dir = Files.createTempDirectory("cls2").toString
+    val dir = tempDir("cls2").toString
     def run(): Unit = {
       val q = spark.readStream.format(fmt).option("path", log).load()
         .writeStream.format("parquet")

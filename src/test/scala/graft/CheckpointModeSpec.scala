@@ -14,8 +14,7 @@ import graft.util.Checkpoints
 class CheckpointModeSpec extends SparkSpec {
 
   private def withReliable[T](body: => T): T = {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-ckpt-spec").toString
+    val dir = tempDir("graft-ckpt-spec").toString
     spark.conf.set(Checkpoints.ReliableConf, "true")
     spark.conf.set(Checkpoints.DirConf, dir)
     spark.sparkContext.setCheckpointDir(dir)

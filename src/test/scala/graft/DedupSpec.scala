@@ -358,8 +358,7 @@ class DedupSpec extends SparkSpec {
   test("persisted gram index serves the jaccard join without the text column") {
     import graft.functions.GramIndex
     val docs = Tables.documents(spark, sf)
-    val dir = java.nio.file.Files
-      .createTempDirectory("gram_index").toString
+    val dir = tempDir("gram_index").toString
     GramIndex.saveIndex(docs, n = 4, dir)
     val fromDisk =
       Dedup.prefixJaccardPairsFromSets(GramIndex.loadNgramSets(spark, 4, dir))

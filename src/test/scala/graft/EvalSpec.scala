@@ -36,14 +36,14 @@ class EvalSpec extends SparkSpec {
   }
 
   test("filter.scalaCondition gates events through a running pipe") {
-    val log = Files.createTempFile("pipeeval", ".tsv")
+    val log = tempFile("pipeeval", ".tsv")
     Files.write(log, Seq(
       ChangeLogSource.renderLine(1, 1, "mutation", "insert", "keep-a", 5, "x"),
       ChangeLogSource.renderLine(2, 2, "mutation", "insert", "drop-conn", 6, "y"),
       ChangeLogSource.renderLine(1, 3, "mutation", "delete", "drop-del", 7, ""),
       ChangeLogSource.renderLine(1, 4, "mutation", "insert", "keep-b", 8, "z"))
       .mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
-    val out = Files.createTempDirectory("pipeevalout").toString
+    val out = tempDir("pipeevalout").toString
     // a condition SQL could not express this way: pattern-matching
     // Scala over (conn, kind, op, pk) — the reference's
     // include-event-condition contract
@@ -65,13 +65,13 @@ class EvalSpec extends SparkSpec {
   }
 
   test("SQL and Scala conditions compose (SQL first, Scala second)") {
-    val log = Files.createTempFile("pipeboth", ".tsv")
+    val log = tempFile("pipeboth", ".tsv")
     Files.write(log, Seq(
       ChangeLogSource.renderLine(1, 1, "mutation", "insert", "a", 5, "x"),
       ChangeLogSource.renderLine(2, 2, "mutation", "insert", "b", 6, "y"),
       ChangeLogSource.renderLine(3, 3, "mutation", "insert", "c", 7, "z"))
       .mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
-    val out = Files.createTempDirectory("pipebothout").toString
+    val out = tempDir("pipebothout").toString
     val q = PipeAssembly.start(spark, Map(
       "source.path" -> log.toString,
       "filter.condition" -> "conn <> 2",

@@ -29,7 +29,7 @@ class FlagshipSpec extends SparkSpec {
       ChangeLogSource.renderLine(1, seq, "mutation", op, pk, ts, v)
     def ctl(seq: Long, kind: String, ts: Long = 0) =
       ChangeLogSource.renderLine(1, seq, kind, null, null, ts, null)
-    val log = Files.createTempFile("flagship", ".tsv")
+    val log = tempFile("flagship", ".tsv")
     Files.write(log, Seq(
       ctl(1, "begin"),
       m(2, "update", "u1", "150.0", 10),
@@ -45,7 +45,7 @@ class FlagshipSpec extends SparkSpec {
     ).mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
 
     // 3. run the pipe: source → tx-group → checkpointed sink
-    val out = Files.createTempDirectory("flagship").toString
+    val out = tempDir("flagship").toString
     val q = PipeAssembly.start(spark, Map(
       "source.path" -> log.toString,
       "sink.path" -> s"$out/changes",

@@ -22,8 +22,7 @@ class GramIndexSpec extends SparkSpec {
     "in-session build, and never rescans text") {
     val docs = Tables.documents(spark, sf)
     val inSession = Dedup.ddPrefixJaccard(spark, sf).collect().toSeq
-    val dir = java.nio.file.Files
-      .createTempDirectory("gram_auto").toString
+    val dir = tempDir("gram_auto").toString
     GramIndex.saveIndex(docs, n = 4, dir)
     withIndexDir(dir) {
       val df = Dedup.ddPrefixJaccard(spark, sf)
@@ -40,8 +39,7 @@ class GramIndexSpec extends SparkSpec {
   test("fingerprint drift: a corpus edit invalidates the artifact and " +
     "the query silently rebuilds (no stale index served)") {
     val docs = Tables.documents(spark, sf)
-    val dir = java.nio.file.Files
-      .createTempDirectory("gram_stale").toString
+    val dir = tempDir("gram_stale").toString
     GramIndex.saveIndex(docs, n = 4, dir)
     // the 'current' corpus drops one doc -> membership fingerprint flips
     val edited = docs.filter(col("doc_id") =!= docs
@@ -86,8 +84,7 @@ class GramIndexSpec extends SparkSpec {
     "build, and the updated fingerprint validates") {
     val docs = Tables.documents(spark, sf)
     val base = docs.filter(col("doc_id") % 10 =!= 0)
-    val dir = java.nio.file.Files
-      .createTempDirectory("gram_incr").toString
+    val dir = tempDir("gram_incr").toString
     GramIndex.saveIndex(base, n = 4, dir)
     val baseFiles = parquetFiles(dir)
     // same corpus again: nothing to do
@@ -102,8 +99,7 @@ class GramIndexSpec extends SparkSpec {
     assert(baseShapeFiles.subsetOf(afterFiles),
       "append rewrote pre-existing shape files")
     // the patched artifact is value-identical to a fresh full build
-    val freshDir = java.nio.file.Files
-      .createTempDirectory("gram_incr_fresh").toString
+    val freshDir = tempDir("gram_incr_fresh").toString
     GramIndex.saveIndex(docs, n = 4, freshDir)
     val patched = artifactRows(dir)
     val fresh = artifactRows(freshDir)
@@ -117,8 +113,7 @@ class GramIndexSpec extends SparkSpec {
   test("crash-window fail-safe: a sentinel fingerprint (crash between " +
     "shape writes) never validates and repairs via full rebuild") {
     val docs = Tables.documents(spark, sf)
-    val dir = java.nio.file.Files
-      .createTempDirectory("gram_crash").toString
+    val dir = tempDir("gram_crash").toString
     GramIndex.saveIndex(docs, n = 4, dir)
     // simulate a crash mid-update: updateIndex/saveIndex write this
     // sentinel BEFORE the first shape write and the real fingerprint
@@ -135,8 +130,7 @@ class GramIndexSpec extends SparkSpec {
     // (the pre-fix failure mode: re-running the delta append DUPLICATED
     // already-appended shape rows and then validated)
     assert(GramIndex.updateIndex(docs, 4, dir) === "rebuild")
-    val freshDir = java.nio.file.Files
-      .createTempDirectory("gram_crash_fresh").toString
+    val freshDir = tempDir("gram_crash_fresh").toString
     GramIndex.saveIndex(docs, n = 4, freshDir)
     val repaired = artifactRows(dir)
     val fresh = artifactRows(freshDir)
@@ -148,8 +142,7 @@ class GramIndexSpec extends SparkSpec {
     "from the manifest is never served") {
     val docs = Tables.documents(spark, sf)
     val base = docs.filter(col("doc_id") % 10 =!= 0)
-    val dir = java.nio.file.Files
-      .createTempDirectory("gram_shape").toString
+    val dir = tempDir("gram_shape").toString
     GramIndex.saveIndex(base, n = 4, dir)
     // append-shaped delta but with n=5: ngram_sets_5 was never built,
     // so an append would create a FRESH delta-only table that then
@@ -164,8 +157,7 @@ class GramIndexSpec extends SparkSpec {
     assert(GramIndex.loadIfFresh(docs, "ngram_sets_4", dir).isEmpty,
       "a shape outside the manifest must not be served")
     // value identity of the rebuilt table vs a fresh n=5 build
-    val freshDir = java.nio.file.Files
-      .createTempDirectory("gram_shape_fresh").toString
+    val freshDir = tempDir("gram_shape_fresh").toString
     GramIndex.saveIndex(docs, n = 5, freshDir)
     def rows(d: String) = spark.read.parquet(s"$d/ngram_sets_5")
       .collect().map(_.toString).sorted.toSeq
@@ -175,8 +167,7 @@ class GramIndexSpec extends SparkSpec {
   test("incremental maintenance: a MUTATED corpus (edited doc) runs " +
     "the delete+append patch and stays value-identical") {
     val docs = Tables.documents(spark, sf)
-    val dir = java.nio.file.Files
-      .createTempDirectory("gram_mut").toString
+    val dir = tempDir("gram_mut").toString
     GramIndex.saveIndex(docs, n = 4, dir)
     // in-place edit that changes one doc's length: its old index rows
     // are anti-joined away, its new rows re-enter through the delta
@@ -187,8 +178,7 @@ class GramIndexSpec extends SparkSpec {
         concat(col("text"), lit(" edited"))).otherwise(col("text")))
       .withColumn("n_chars", length(col("text")).cast("long"))
     assert(GramIndex.updateIndex(mutatedDocs, 4, dir) === "delete")
-    val freshDir = java.nio.file.Files
-      .createTempDirectory("gram_mut_fresh").toString
+    val freshDir = tempDir("gram_mut_fresh").toString
     GramIndex.saveIndex(mutatedDocs, n = 4, freshDir)
     val patched = artifactRows(dir)
     val fresh = artifactRows(freshDir)
@@ -204,14 +194,12 @@ class GramIndexSpec extends SparkSpec {
   test("delete cost class: dropped docs are anti-joined out of every " +
     "shape; mass deletion falls back to rebuild") {
     val docs = Tables.documents(spark, sf)
-    val dir = java.nio.file.Files
-      .createTempDirectory("gram_del").toString
+    val dir = tempDir("gram_del").toString
     GramIndex.saveIndex(docs, n = 4, dir)
     // right-to-be-forgotten pass: drop ~14% of docs
     val shrunk = docs.filter(col("doc_id") % 7 =!= 3)
     assert(GramIndex.updateIndex(shrunk, 4, dir) === "delete")
-    val freshDir = java.nio.file.Files
-      .createTempDirectory("gram_del_fresh").toString
+    val freshDir = tempDir("gram_del_fresh").toString
     GramIndex.saveIndex(shrunk, n = 4, freshDir)
     val patched = artifactRows(dir)
     val fresh = artifactRows(freshDir)

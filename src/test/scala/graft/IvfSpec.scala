@@ -145,8 +145,7 @@ class IvfSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     val emb = Tables.embeddings(spark, sf)
     val centroids = Ivf.trainCentroids(emb, k = 8, iters = 2)
-    val dir = java.nio.file.Files
-      .createTempDirectory("ivf_index").toString
+    val dir = tempDir("ivf_index").toString
     Ivf.saveIndex(emb, centroids, dir)
     // the store is partitioned by cell — one directory per cid
     val cellDirs = new java.io.File(s"$dir/cells")
@@ -200,8 +199,7 @@ class IvfSpec extends SparkSpec {
     val base = emb.filter(pmod(col("vec_id"), lit(10L)) =!= 9L)
     val batch = emb.filter(pmod(col("vec_id"), lit(10L)) === 9L)
     val centroids = Ivf.trainCentroids(base, k = 8, iters = 2)
-    val dir = java.nio.file.Files
-      .createTempDirectory("ivf_append").toString
+    val dir = tempDir("ivf_append").toString
     Ivf.saveIndex(base, centroids, dir)
     Ivf.appendToIndex(batch, spark, dir)
     // the grown persisted index must answer EXACTLY like an in-memory
@@ -223,8 +221,7 @@ class IvfSpec extends SparkSpec {
     assert(!flat.getAs[Boolean]("retrain_suggested"))
     // distribution shift: scale+shift the held-out vectors far outside
     // the trained cells — quantization error inflates, trigger trips
-    val dir2 = java.nio.file.Files
-      .createTempDirectory("ivf_append2").toString
+    val dir2 = tempDir("ivf_append2").toString
     Ivf.saveIndex(base, centroids, dir2)
     val shifted = batch.select(col("vec_id") + 1000000L as "vec_id",
       transform(col("embedding"), x => x * lit(5.0f) + lit(7.0f))
@@ -243,8 +240,7 @@ class IvfSpec extends SparkSpec {
     // mid-session silently serves the PREVIOUS corpus's centroids
     val sparkS = spark
     import sparkS.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("ivf_rewrite").toString + "/emb.parquet"
+    val dir = tempDir("ivf_rewrite").toString + "/emb.parquet"
     def write(shift: Double): Unit = (0L until 32L)
       .map(i => (i, Array.tabulate(64)(j =>
         (math.sin(i * 64 + j + shift) * 10).toFloat)))

@@ -41,7 +41,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("date-partitioned lake prunes partitions and pushes filters") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_lake").toString
+    val dir = tempDir("graft_lake").toString
     Layout.writeDatePartitioned(Tables.orders(spark, sf), dir)
     val back = spark.read.parquet(dir)
     val pruned = back.filter(col("o_year") === 1995 &&

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 class PipeAssemblySpec extends SparkSpec {
 
   test("T6: file position repo round-trips and elides unchanged writes") {
-    val dir = Files.createTempDirectory("posrepo").toString
+    val dir = tempDir("posrepo").toString
     val repo = new FilePositionRepository(dir)
     assert(repo.load("c1").isEmpty)
     repo.save("c1", BinlogPosition("binlog.000001", 120))
@@ -36,7 +36,7 @@ class PipeAssemblySpec extends SparkSpec {
     input.addData(TxPipeline.ChangeEvent(1, 1, "mutation", "insert", "p",
       1L, Map()))
     val policy = new CdcStream.ErrorPolicy(quitOnError = false)
-    val dir = Files.createTempDirectory("guard").toString
+    val dir = tempDir("guard").toString
     val q = CdcStream.toGuardedSink(
       TxPipeline.groupByTransaction(input.toDS()), policy, s"$dir/chk",
       Trigger.AvailableNow()) { (batch, id) =>
@@ -60,7 +60,7 @@ class PipeAssemblySpec extends SparkSpec {
 
   test("T6: table position repo — shared store, atomic, write-elided") {
     import graft.streaming.TablePositionRepository
-    val dir = Files.createTempDirectory("postable").toString
+    val dir = tempDir("postable").toString
     val repo = new TablePositionRepository(s"$dir/positions.tsv")
     assert(repo.load("c1").isEmpty)
     repo.save("c1", BinlogPosition("binlog.000001", 120))
@@ -120,19 +120,19 @@ class PipeAssemblySpec extends SparkSpec {
     assert(decoded.forall(_.getInt(1) == schemaId))
     assert(decoded.map(_.getLong(3)).toSeq === Seq(77L, 8L))
     // and the assembled writer is a kafka-format DataStreamWriter
-    val log = Files.createTempFile("kpipe", ".tsv")
+    val log = tempFile("kpipe", ".tsv")
     Files.write(log, ChangeLogSource.renderLine(1, 1, "mutation",
       "insert", "p", 1, "v").concat("\n")
       .getBytes(StandardCharsets.UTF_8))
     val w = PipeAssembly.kafkaWriter(spark, Map(
       "source.path" -> log.toString,
-      "sink.checkpoint" -> Files.createTempDirectory("kchk").toString),
+      "sink.checkpoint" -> tempDir("kchk").toString),
       registry)
     assert(w != null) // wiring builds without a broker; start() needs one
   }
 
   test("E2: config map assembles the full pipe end-to-end") {
-    val log = Files.createTempFile("pipe", ".tsv")
+    val log = tempFile("pipe", ".tsv")
     Files.write(log, Seq(
       ChangeLogSource.renderLine(1, 1, "begin", "", "", 0, ""),
       ChangeLogSource.renderLine(1, 2, "mutation", "insert", "a", 5, "x"),
@@ -140,7 +140,7 @@ class PipeAssemblySpec extends SparkSpec {
       ChangeLogSource.renderLine(2, 4, "mutation", "insert", "skipme", 9, "y"),
       ChangeLogSource.renderLine(3, 5, "mutation", "delete", "keep", 8, ""))
       .mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
-    val out = Files.createTempDirectory("pipeout").toString
+    val out = tempDir("pipeout").toString
     val q = PipeAssembly.start(spark, Map(
       "source.path" -> log.toString,
       "filter.condition" -> "conn <> 2", // F1 skip filter
@@ -174,13 +174,13 @@ class PipeAssemblySpec extends SparkSpec {
     }
     // the profiled pipe actually drains with the profile's 2-way state,
     // and the shared session keeps its own partition count
-    val log = Files.createTempFile("pipelat", ".tsv")
+    val log = tempFile("pipelat", ".tsv")
     Files.write(log, Seq(
       ChangeLogSource.renderLine(1, 1, "begin", "", "", 0, ""),
       ChangeLogSource.renderLine(1, 2, "mutation", "insert", "a", 5, "x"),
       ChangeLogSource.renderLine(1, 3, "commit", "", "", 77, ""))
       .mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
-    val out = Files.createTempDirectory("pipelatout").toString
+    val out = tempDir("pipelatout").toString
     withSessionParts {
       val q = PipeAssembly.start(spark, Map(
         "profile" -> "low-latency",
@@ -209,13 +209,13 @@ class PipeAssemblySpec extends SparkSpec {
   }
 
   test("multi-pipe runner: a pipe's state width stays in its own query") {
-    val log = Files.createTempFile("multipipewidth", ".tsv")
+    val log = tempFile("multipipewidth", ".tsv")
     Files.write(log, Seq(
       ChangeLogSource.renderLine(1, 1, "begin", "", "", 0, ""),
       ChangeLogSource.renderLine(1, 2, "mutation", "insert", "a", 5, "x"),
       ChangeLogSource.renderLine(1, 3, "commit", "", "", 77, ""))
       .mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
-    val out = Files.createTempDirectory("multipipewidth").toString
+    val out = tempDir("multipipewidth").toString
     withSessionParts {
       // pipe a sorts first, so b starts after a has set its width
       val qs = PipeAssembly.startAll(spark, Map(
@@ -242,7 +242,7 @@ class PipeAssemblySpec extends SparkSpec {
     "independent positions and restarts") {
     // reference PipeRunner.scala:17-56,62-93 — N pipes wired from ONE
     // config, running concurrently, each with its own position repo
-    val log = Files.createTempFile("multipipe", ".tsv")
+    val log = tempFile("multipipe", ".tsv")
     def append(lines: Seq[String]): Unit =
       Files.write(log, lines.mkString("", "\n", "\n")
         .getBytes(StandardCharsets.UTF_8),
@@ -252,7 +252,7 @@ class PipeAssemblySpec extends SparkSpec {
       ChangeLogSource.renderLine(2, 2, "mutation", "insert", "b", 6, "y"),
       ChangeLogSource.renderLine(1, 3, "mutation", "delete", "c", 7, ""))
       .mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
-    val out = Files.createTempDirectory("multipipe").toString
+    val out = tempDir("multipipe").toString
     // shared keys inherited, per-pipe keys win
     val flat = Map(
       "source.path" -> log.toString,
@@ -297,11 +297,11 @@ class PipeAssemblySpec extends SparkSpec {
 
   test("multi-pipe runner: one pipe's assembly failure doesn't stall " +
     "the others") {
-    val log = Files.createTempFile("multipipefail", ".tsv")
+    val log = tempFile("multipipefail", ".tsv")
     Files.write(log,
       (ChangeLogSource.renderLine(1, 1, "mutation", "insert", "a", 5, "x")
         + "\n").getBytes(StandardCharsets.UTF_8))
-    val out = Files.createTempDirectory("multipipefail").toString
+    val out = tempDir("multipipefail").toString
     val qs = PipeAssembly.startAll(spark, Map(
       "source.path" -> log.toString,
       "pipes.good.sink.path" -> s"$out/good/data",
@@ -318,14 +318,14 @@ class PipeAssemblySpec extends SparkSpec {
   }
 
   test("E2: materialize sink maintains the latest image per pk") {
-    val log = Files.createTempFile("pipemat", ".tsv")
+    val log = tempFile("pipemat", ".tsv")
     Files.write(log, Seq(
       ChangeLogSource.renderLine(1, 1, "mutation", "insert", "a", 10, "1.5"),
       ChangeLogSource.renderLine(1, 2, "mutation", "update", "a", 20, "2.5"),
       ChangeLogSource.renderLine(1, 3, "mutation", "insert", "b", 15, "7.0"),
       ChangeLogSource.renderLine(1, 4, "mutation", "delete", "b", 30, ""))
       .mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
-    val out = Files.createTempDirectory("pipemat").toString
+    val out = tempDir("pipemat").toString
     val q = PipeAssembly.start(spark, Map(
       "source.path" -> log.toString,
       "sink.format" -> "materialize",

@@ -29,14 +29,14 @@ class PipeMainSpec extends SparkSpec {
   }
 
   test("config file → two pipes drain to their own sinks, exit code 0") {
-    val log = Files.createTempFile("pipemain", ".tsv")
+    val log = tempFile("pipemain", ".tsv")
     Files.write(log, Seq(
       ChangeLogSource.renderLine(1, 1, "mutation", "insert", "a", 5, "x"),
       ChangeLogSource.renderLine(2, 2, "mutation", "insert", "b", 6, "y"),
       ChangeLogSource.renderLine(1, 3, "mutation", "insert", "c", 7, "z"))
       .mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
-    val out = Files.createTempDirectory("pipemainout").toString
-    val confFile = Files.createTempFile("pipemain", ".conf")
+    val out = tempDir("pipemainout").toString
+    val confFile = tempFile("pipemain", ".conf")
     Files.write(confFile, s"""# two pipes over one changelog
       |source.path = $log
       |pipes.p1.filter.condition = conn = 1
@@ -59,11 +59,11 @@ class PipeMainSpec extends SparkSpec {
   }
 
   test("a bad pipe yields exit code 1 but the sibling still drains") {
-    val log = Files.createTempFile("pipemainbad", ".tsv")
+    val log = tempFile("pipemainbad", ".tsv")
     Files.write(log,
       (ChangeLogSource.renderLine(1, 1, "mutation", "insert", "a", 5, "x")
         + "\n").getBytes(StandardCharsets.UTF_8))
-    val out = Files.createTempDirectory("pipemainbadout").toString
+    val out = tempDir("pipemainbadout").toString
     val code = PipeMain.run(spark, Map(
       "source.path" -> log.toString,
       "pipes.good.sink.path" -> s"$out/good/data",

@@ -80,7 +80,7 @@ class PqSpec extends SparkSpec {
     val encoded = Pq.encode(emb, books)
       .select("vec_id", "embedding", "codes")
     // write/read through parquet so the scan's ReadSchema is observable
-    val dir = java.nio.file.Files.createTempDirectory("graft_pq").toString
+    val dir = tempDir("graft_pq").toString
     encoded.write.mode("overwrite").parquet(dir)
     val back = spark.read.parquet(dir)
     val shortlistOnly = back.select(col("vec_id").as("c_id"), col("codes"))
@@ -146,8 +146,7 @@ class PqSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     val emb = Tables.embeddings(spark, sf)
     val books = Pq.trainCodebooks(emb, m = 4, k = 16, iters = 2)
-    val dir = java.nio.file.Files
-      .createTempDirectory("pq_index").toString
+    val dir = tempDir("pq_index").toString
     Pq.saveIndex(emb, books, dir)
     // codebook tensor survives storage bit-for-bit, in trained order
     val loaded = Pq.loadCodebooks(spark, dir)
@@ -175,8 +174,7 @@ class PqSpec extends SparkSpec {
     val base = emb.filter(pmod(col("vec_id"), lit(10L)) =!= 9L)
     val batch = emb.filter(pmod(col("vec_id"), lit(10L)) === 9L)
     val books = Pq.trainCodebooks(base, m = 4, k = 16, iters = 2)
-    val dir = java.nio.file.Files
-      .createTempDirectory("pq_append").toString
+    val dir = tempDir("pq_append").toString
     Pq.saveIndex(base, books, dir)
     Pq.appendToIndex(batch, spark, dir)
     val queries = emb.filter(col("vec_id") < 10)
@@ -195,8 +193,7 @@ class PqSpec extends SparkSpec {
     assert(ratio > 0.5 && ratio < 2.0, s"flat-append drift ratio $ratio")
     assert(!flat.getAs[Boolean]("retrain_suggested"))
     // a scaled+shifted batch inflates reconstruction error → trigger
-    val dir2 = java.nio.file.Files
-      .createTempDirectory("pq_append2").toString
+    val dir2 = tempDir("pq_append2").toString
     Pq.saveIndex(base, books, dir2)
     val shifted = batch.select(col("vec_id") + 1000000L as "vec_id",
       transform(col("embedding"), x => x * lit(5.0f) + lit(7.0f))

@@ -10,8 +10,7 @@ import org.apache.spark.sql.functions._
 class ReplayBenchSpec extends SparkSpec {
 
   test("generated backlog drains completely through the tx pipe") {
-    val work = java.nio.file.Files
-      .createTempDirectory("replay_bench").toString
+    val work = tempDir("replay_bench").toString
     val lines = ReplayBench.generateLog(spark, sf, s"$work/log")
     val d = ReplayBench.drain(spark, s"$work/log", s"$work/sink")
     val nEvents = Tables.events(spark, sf).count()
@@ -33,8 +32,7 @@ class ReplayBenchSpec extends SparkSpec {
   }
 
   test("latency probe yields ordered percentiles over many capped batches") {
-    val work = java.nio.file.Files
-      .createTempDirectory("replay_latency").toString
+    val work = tempDir("replay_latency").toString
     val lines = ReplayBench.generateLog(spark, sf, s"$work/log")
     val cap = 1024L
     val d = ReplayBench.drain(spark, s"$work/log", s"$work/lat", cap,
@@ -65,7 +63,7 @@ class ReplayBenchSpec extends SparkSpec {
   test("drain sees every batch past the progress ring and writes no conf") {
     // 8 transactions of 5 lines, drained 4 lines per batch: 10 batches,
     // 5x more than the session keeps in its progress ring
-    val work = java.nio.file.Files.createTempDirectory("replay_ring")
+    val work = tempDir("replay_ring")
     val log = work.resolve("log")
     java.nio.file.Files.createDirectories(log)
     val txs = (0 until 8).flatMap { t =>

@@ -321,8 +321,7 @@ class SimilaritySpec extends SparkSpec {
     val sparkS = spark
     import sparkS.implicits._
     for (n <- Seq(3, 2)) {
-      val dir = java.nio.file.Files
-        .createTempDirectory(s"mmr_short_$n").toString
+      val dir = tempDir(s"mmr_short_$n").toString
       (0 until n).map(i =>
           (i.toLong, Array.tabulate(8)(j => (i + j + 1).toFloat), "a"))
         .toDF("vec_id", "embedding", "label")
@@ -546,8 +545,7 @@ class SimilaritySpec extends SparkSpec {
   test("persisted hamming index reproduces the in-memory ANN exactly") {
     import org.apache.spark.sql.functions.col
     val emb = Tables.embeddings(spark, sf)
-    val idxDir = java.nio.file.Files
-      .createTempDirectory("hamming_idx").toString
+    val idxDir = tempDir("hamming_idx").toString
     try {
       Similarity.saveSignatureIndex(emb, idxDir)
       val sigs = spark.read.parquet(s"$idxDir/hamming_sigs")

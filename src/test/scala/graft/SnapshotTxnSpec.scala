@@ -19,8 +19,7 @@ class SnapshotTxnSpec extends SparkSpec {
   }
 
   test("position capture under concurrent mutations replays without loss") {
-    val work = java.nio.file.Files
-      .createTempDirectory("snap_txn").toString
+    val work = tempDir("snap_txn").toString
     val logDir = s"$work/log"
     val sinkDir = s"$work/snapshot"
     // batch 1: pks a,b,c with updates; c deleted at the end
@@ -85,8 +84,7 @@ class SnapshotTxnSpec extends SparkSpec {
     // the wire format round-trips NULL op (ChangeLogSource's \N
     // sentinel); a null-unsafe delete filter silently LOST such pks
     // from the snapshot — regression for the null-safe <=> fix
-    val work = java.nio.file.Files
-      .createTempDirectory("snap_txn_null").toString
+    val work = tempDir("snap_txn_null").toString
     import spark.implicits._
     Seq(
       (1L, Option("insert"), "a", 1.0),
@@ -104,8 +102,7 @@ class SnapshotTxnSpec extends SparkSpec {
   }
 
   test("empty table yields the replay-from-start sentinel") {
-    val work = java.nio.file.Files
-      .createTempDirectory("snap_txn_empty").toString
+    val work = tempDir("snap_txn_empty").toString
     import spark.implicits._
     // schema-only empty log
     Seq.empty[(Long, String, String, Double)]

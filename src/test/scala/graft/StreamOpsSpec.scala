@@ -137,7 +137,7 @@ class StreamOpsSpec extends SparkSpec {
     val sparkS = spark
     import sparkS.implicits._
     import StreamOps.ImageChange
-    val dir = java.nio.file.Files.createTempDirectory("slimg").toString
+    val dir = tempDir("slimg").toString
     val input = MemoryStream[ImageChange](spark)
     def start() = StreamOps.latestImageStream(input.toDS())
       .writeStream.format("parquet")

@@ -27,8 +27,7 @@ class TablesEventsSpec extends SparkSpec {
     def write(dir: String, vals: Seq[Long]): Unit =
       vals.toDF("ts").withColumn("event_id", lit(1L))
         .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val base = java.nio.file.Files
-      .createTempDirectory("events_layouts").toString
+    val base = tempDir("events_layouts").toString
     try {
       write(s"$base/nanos", us.map(_ * 1000))
       write(s"$base/micros", us)

@@ -146,7 +146,7 @@ class TxPipelineSpec extends SparkSpec {
   test("T5: checkpointed parquet sink resumes without loss or duplication") {
     val sparkS = spark
     import sparkS.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("txsink").toString
+    val dir = tempDir("txsink").toString
     val input = MemoryStream[ChangeEvent](spark)
     def start() = graft.streaming.CdcStream.toParquetSink(
       TxPipeline.groupByTransaction(input.toDS()),
@@ -173,7 +173,7 @@ class TxPipelineSpec extends SparkSpec {
     // first mutation) and emit everything exactly once.
     val sparkS = spark
     import sparkS.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("txchaos").toString
+    val dir = tempDir("txchaos").toString
     val input = MemoryStream[ChangeEvent](spark)
     @volatile var crashArmed = false
     def start() = TxPipeline.groupByTransaction(input.toDS())
@@ -238,7 +238,7 @@ class TxPipelineSpec extends SparkSpec {
     val sparkS = spark
     import sparkS.implicits._
     import graft.streaming.{BinlogPosition, CdcStream, TablePositionRepository}
-    val dir = java.nio.file.Files.createTempDirectory("handoff").toString
+    val dir = tempDir("handoff").toString
     val repo = new TablePositionRepository(s"$dir/positions.tsv")
     val snap = Seq((1L, 10L), (2L, 42L)).toDF("id", "seq")
     val boundary = CdcStream.snapshotHandoff(snap, s"$dir/t", "seq",
@@ -259,7 +259,7 @@ class TxPipelineSpec extends SparkSpec {
     val sparkS = spark
     import sparkS.implicits._
     val snap = Seq((1L, 10L), (2L, 20L)).toDF("id", "seq")
-    val dir = java.nio.file.Files.createTempDirectory("snap").toString
+    val dir = tempDir("snap").toString
     val boundary = graft.streaming.CdcStream.snapshotBoundary(
       snap, s"$dir/t", "seq")
     assert(boundary === 20L)
