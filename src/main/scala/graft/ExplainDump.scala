@@ -18,23 +18,17 @@ object ExplainDump {
     val dir = args(0)
     val outDir = args(1)
     val suffix = args(2)
-    val names = args(3).split(",").map(_.trim).filter(_.nonEmpty)
+    val specs = SparkEntry.select(
+      args(3).split(",").map(_.trim).filter(_.nonEmpty).toSeq)
     Files.createDirectories(Paths.get(outDir))
     val spark = GraftSession.get()
     GraftSession.tuneForData(spark, dir)
-    names.foreach { n =>
-      SparkEntry.queries.get(n) match {
-        case Some(fn) =>
-          val df = fn(spark, dir)
-          val txt = df.queryExecution.explainString(
-            org.apache.spark.sql.execution.ExplainMode.fromString(
-              "formatted"))
-          Files.write(Paths.get(s"$outDir/${n}_$suffix.txt"),
-            txt.getBytes(StandardCharsets.UTF_8))
-          System.err.println(s"[explain] wrote $outDir/${n}_$suffix.txt")
-        case None =>
-          System.err.println(s"[explain] unknown query: $n")
-      }
+    specs.foreach { s =>
+      val txt = s.build(spark, dir).queryExecution.explainString(
+        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+      val out = s"$outDir/${s.name}_$suffix.txt"
+      Files.write(Paths.get(out), txt.getBytes(StandardCharsets.UTF_8))
+      System.err.println(s"[explain] wrote $out")
     }
     spark.stop()
   }

@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The engine's one SparkSession factory: every entry point (Bench,
-  * Verify, Profile, the CLI mains, the test suite) builds its session
-  * here, so their settings cannot drift apart.
+  * Verify, the CLI mains, the test suite) builds its session here, so
+  * their settings cannot drift apart.
   *
   * Every setting is the one you'd want on a 1000-executor cluster too:
   * AQE on (runtime skew/coalesce re-planning), UTC session time,

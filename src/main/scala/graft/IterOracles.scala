@@ -1,6 +1,8 @@
 package graft
 
 import graft.util.Json
+import org.json4s.{JObject, JString}
+import org.json4s.JsonDSL._
 
 /** sf1-capable iterative oracle programs for the four queries whose
   * one-shot DuckDB oracle is a recursive CTE that blows the per-query
@@ -36,21 +38,15 @@ import graft.util.Json
 object IterOracles {
 
   private def ccSpec(pairsSql: String, c1: String, c2: String,
-      finalSql: String): String =
-    Json.obj(Seq(
-      "kind" -> Json.quote("cc"),
-      "views" -> Json.obj(Seq("pairs_mat" -> Json.quote(pairsSql))),
-      "col1" -> Json.quote(c1),
-      "col2" -> Json.quote(c2),
-      "final_sql" -> Json.quote(finalSql)))
+      finalSql: String): JObject =
+    Json.obj("kind" -> "cc", "views" -> Json.obj("pairs_mat" -> pairsSql),
+      "col1" -> c1, "col2" -> c2, "final_sql" -> finalSql)
 
   private def packSpec(kind: String, views: Seq[(String, String)],
-      capacity: Int, finalSql: String): String =
-    Json.obj(Seq(
-      "kind" -> Json.quote(kind),
-      "views" -> Json.obj(views.map { case (k, v) => k -> Json.quote(v) }),
-      "capacity" -> capacity.toString,
-      "final_sql" -> Json.quote(finalSql)))
+      capacity: Int, finalSql: String): JObject =
+    Json.obj("kind" -> kind,
+      "views" -> Json.obj(views.map { case (k, v) => k -> JString(v) }: _*),
+      "capacity" -> capacity, "final_sql" -> finalSql)
 
   /** Final grouping of dd_minhash_groups' recursive oracle, verbatim,
     * over the union-find `labels(node, label)` view. */
@@ -106,8 +102,8 @@ object IterOracles {
     "cleaned_mat" -> functions.DatasetBuild.tpCleanedStageSql(),
     "sized_mat" -> functions.DatasetBuild.tpSizedStageSql())
 
-  /** query name → iterative-program JSON object (already rendered). */
-  def specs: Seq[(String, String)] = {
+  /** query name → iterative-program object. */
+  def specs: Seq[(String, JObject)] = {
     val cap = functions.DatasetBuild.PackCapacity
     Seq(
       "dd_minhash_groups" -> ccSpec(
@@ -124,7 +120,5 @@ object IterOracles {
         cap, greedyFinal(cap)))
   }
 
-  def renderJson: String =
-    specs.map { case (k, v) => s"${Json.quote(k)}: $v" }
-      .mkString("{", ",", "}")
+  def json: JObject = Json.obj(specs: _*)
 }

@@ -2,6 +2,9 @@ package graft
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import graft.util.Json
+import org.json4s.JArray
+import org.json4s.JsonDSL._
 
 /** Latency/throughput frontier sweep (VERDICT r12 item 2): re-derive
   * the low-latency profile's defaults ON THE CURRENT STATE-STORE
@@ -38,23 +41,19 @@ object LatencyFrontier {
         System.err.println(f"[frontier] parts=$parts cap=$cap " +
           f"p50=$p50%.0f p95=$p95%.0f commit_p50=${d.commit(0.5)}%.0f " +
           f"batches=${d.batches.size} steal=${d.stealSec}%.1fs")
-        s"""{"state_partitions":$parts,"cap":$cap,""" +
-          s""""batches":${d.batches.size},""" +
-          s""""p50_ms":${"%.0f".format(p50)},"p95_ms":${
-            "%.0f".format(p95)},"max_ms":${"%.0f".format(max)},""" +
-          s""""commit_p50_ms":${"%.0f".format(d.commit(0.5))},""" +
-          s""""commit_p95_ms":${"%.0f".format(d.commit(0.95))},""" +
-          s""""steal_sec":${"%.2f".format(d.stealSec)}}"""
+        Json.obj("state_partitions" -> parts, "cap" -> cap,
+          "batches" -> d.batches.size, "p50_ms" -> Json.fixed(p50, 0),
+          "p95_ms" -> Json.fixed(p95, 0), "max_ms" -> Json.fixed(max, 0),
+          "commit_p50_ms" -> Json.fixed(d.commit(0.5), 0),
+          "commit_p95_ms" -> Json.fixed(d.commit(0.95), 0),
+          "steal_sec" -> Json.fixed(d.stealSec, 2))
       }
     } finally fs.delete(new Path(work), true)
-    val json =
-      s"""{"metric":"latency_frontier","sf":"$sfDir","provider":"rocksdb","cells":[${cells.mkString(",")}]}"""
+    val json = Json.obj("metric" -> "latency_frontier", "sf" -> sfDir,
+      "provider" -> "rocksdb", "cells" -> JArray(cells.toList))
     println()
-    println(json)
-    try {
-      val w = new java.io.PrintWriter("FRONTIER.json")
-      try w.println(json) finally w.close()
-    } catch { case _: Throwable => }
+    println(Json.render(json))
+    Json.write("FRONTIER.json", json)
     spark.stop()
   }
 }

@@ -2,6 +2,9 @@ package graft
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import graft.util.Json
+import org.json4s.{JArray, JBool, JNull, JValue}
+import org.json4s.JsonDSL._
 import streaming.ReplayBench.percentile
 
 /** Streaming soak harness (VERDICT r12 item 8): one CONTINUOUS
@@ -26,34 +29,42 @@ import streaming.ReplayBench.percentile
   *  - BOUNDED STATE DISK: `rocksdbSstFileSize` at the last batch
   *    within max(4× first-half median, 8 MB) — tx-grouping state is
   *    transient (buffers clear on commit), so SST size must plateau,
-  *    not track the processed volume.
+  *    not track the processed volume. Judged over the same
+  *    [[Soak.MinBatches]] floor: a shorter drain writes
+  *    `"sst_bounded_ok":null`.
   *
   * `sbt "runMain graft.Soak [copies] [cap]"` over
   * `SPARK_GRAFT_SF_DIR` (default sf0.1; copies=4, cap=4096 ⇒ ~310
   * non-empty batches, ~3-6 min). */
 object Soak {
 
-  /** Fewest batches the flat-p50 check judges: four per half, so a
-    * half's p50 is never one batch's time. */
+  /** Fewest batches either check judges: four per half, so a half's
+    * p50 (or SST median) is never one batch's value. */
   val MinBatches = 8
 
-  /** Trigger-latency digest of one drain: p50 per quarter and per half
-    * (None where no batch falls) and the flat-p50 verdict (second half
-    * within 1.3× of the first; None under [[MinBatches]] batches). */
+  /** Digest of one drain: trigger-latency p50 per quarter and per half
+    * (None where no batch falls), the SST figures and both verdicts
+    * (None under [[MinBatches]] batches). */
   case class Digest(quarters: Seq[Option[Double]],
       firstHalf: Option[Double], secondHalf: Option[Double],
-      flatOk: Option[Boolean])
+      flatOk: Option[Boolean], sstFirstHalfMedian: Double, sstMax: Long,
+      sstLast: Long, sstOk: Option[Boolean])
 
-  def digest(triggerMs: Seq[Long]): Digest = {
+  /** `triggerMs` and `sstBytes` hold one entry per batch. */
+  def digest(triggerMs: Seq[Long], sstBytes: Seq[Long]): Digest = {
     val n = triggerMs.length
     def p50(xs: Seq[Long]) =
       if (xs.isEmpty) None else Some(percentile(xs, 0.5))
     val (h1, h2) = triggerMs.splitAt(n / 2)
     val (h1P50, h2P50) = (p50(h1), p50(h2))
+    val sstH1Med = percentile(sstBytes.take(n / 2), 0.5)
+    val sstLast = sstBytes.lastOption.getOrElse(0L)
+    val judged = n >= MinBatches
     Digest(
       (0 until 4).map(i => p50(triggerMs.slice(i * n / 4, (i + 1) * n / 4))),
-      h1P50, h2P50,
-      if (n < MinBatches) None else Some(h2P50.get <= 1.3 * h1P50.get))
+      h1P50, h2P50, Option.when(judged)(h2P50.get <= 1.3 * h1P50.get),
+      sstH1Med, sstBytes.maxOption.getOrElse(0L), sstLast,
+      Option.when(judged)(sstLast <= math.max(4.0 * sstH1Med, 8e6)))
   }
 
   def main(args: Array[String]): Unit = {
@@ -74,38 +85,32 @@ object Soak {
       (lines, streaming.ReplayBench.drain(spark, s"$work/log",
         s"$work/sink", cap, statePartitions = Some(4)))
     } finally fs.delete(new Path(work), true)
-    val g = digest(d.batches.map(_.triggerMs))
-    val sst = d.batches.map(_.custom.getOrElse("rocksdbSstFileSize", 0L))
-    val n = sst.length
-    val sstH1Med = percentile(sst.take(n / 2), 0.5)
-    val sstLast = if (sst.isEmpty) 0L else sst.last
-    val sstOk = sstLast <= math.max(4.0 * sstH1Med, 8e6)
-    def ms(p: Option[Double]) = p.fold("null")("%.0f".format(_))
-    val json =
-      s"""{"metric":"soak","sf":"$sfDir","copies":$copies,"cap":$cap,""" +
-        s""""lines":$lines,"batches":$n,"sec":${"%.1f".format(d.sec)},""" +
-        s""""steal_sec":${"%.2f".format(d.stealSec)},""" +
-        s""""p50_ms_first_half":${ms(g.firstHalf)},""" +
-        s""""p50_ms_second_half":${ms(g.secondHalf)},""" +
-        s""""p50_ms_quarters":[${g.quarters.map(ms).mkString(",")}],""" +
-        s""""p95_ms":${"%.0f".format(d.trigger(0.95))},""" +
-        s""""commit_p50_ms":${"%.0f".format(d.commit(0.5))},""" +
-        s""""sst_bytes":{"first_half_median":${"%.0f".format(sstH1Med)},""" +
-        s""""max":${if (sst.isEmpty) 0L else sst.max},"last":$sstLast},""" +
-        s""""flat_p50_ok":${g.flatOk.getOrElse("null")},""" +
-        s""""sst_bounded_ok":$sstOk}"""
+    val g = digest(d.batches.map(_.triggerMs),
+      d.batches.map(_.custom.getOrElse("rocksdbSstFileSize", 0L)))
+    val n = d.batches.size
+    def ms(p: Option[Double]) = p.fold[JValue](JNull)(Json.fixed(_, 0))
+    def ok(v: Option[Boolean]) = v.fold[JValue](JNull)(JBool(_))
+    val json = Json.obj("metric" -> "soak", "sf" -> sfDir,
+      "copies" -> copies, "cap" -> cap, "lines" -> lines, "batches" -> n,
+      "sec" -> Json.fixed(d.sec, 1), "steal_sec" -> Json.fixed(d.stealSec, 2),
+      "p50_ms_first_half" -> ms(g.firstHalf),
+      "p50_ms_second_half" -> ms(g.secondHalf),
+      "p50_ms_quarters" -> JArray(g.quarters.map(ms).toList),
+      "p95_ms" -> Json.fixed(d.trigger(0.95), 0),
+      "commit_p50_ms" -> Json.fixed(d.commit(0.5), 0),
+      "sst_bytes" -> Json.obj(
+        "first_half_median" -> Json.fixed(g.sstFirstHalfMedian, 0),
+        "max" -> g.sstMax, "last" -> g.sstLast),
+      "flat_p50_ok" -> ok(g.flatOk), "sst_bounded_ok" -> ok(g.sstOk))
     println()
-    println(json)
-    try {
-      val w = new java.io.PrintWriter("SOAK.json")
-      try w.println(json) finally w.close()
-    } catch { case _: Throwable => }
+    println(Json.render(json))
+    Json.write("SOAK.json", json)
     spark.stop()
     if (g.flatOk.isEmpty) {
-      System.err.println(s"[soak] too few batches to judge flat p50: " +
+      System.err.println(s"[soak] too few batches to judge: " +
         s"$n < $MinBatches")
       sys.exit(1)
     }
-    if (!g.flatOk.get || !sstOk) sys.exit(1)
+    if (g.flatOk.contains(false) || g.sstOk.contains(false)) sys.exit(1)
   }
 }

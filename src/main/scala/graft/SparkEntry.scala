@@ -58,4 +58,13 @@ object SparkEntry {
 
   lazy val oracleSql: Map[String, String] =
     specs.map(s => s.name -> s.oracle).toMap
+
+  /** The specs `names` lists, in registry order. Fails naming every
+    * name no module declares: a typo must not leave a tool running
+    * fewer queries than it was asked for. */
+  def select(names: Seq[String]): Seq[QuerySpec] = {
+    val unknown = names.filterNot(queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    specs.filter(s => names.contains(s.name))
+  }
 }

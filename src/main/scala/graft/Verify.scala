@@ -1,5 +1,6 @@
 package graft
-import java.nio.file.{Files, Paths}
+import graft.util.Json
+import org.json4s.JString
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -7,36 +8,30 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     // optional extra args: run only these queries (fast targeted checks
     // while iterating; the driver always calls with exactly two args)
-    val only = args.drop(2).toSet
+    val only = args.drop(2).toSeq
+    val specs = if (only.isEmpty) SparkEntry.specs else SparkEntry.select(only)
     val spark = GraftSession.get()
     // AQE partition ceiling follows the data scale (see GraftSession):
     // the sf1 value-exact certification runs through here too
     GraftSession.tuneForData(spark, sfDir)
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        }
-        // drop this query's persisted intermediates — SQL cache AND
-        // localCheckpoint RDD blocks — so ~190 queries' blocks don't
-        // accumulate in the shared session (same hygiene as Bench)
-        graft.util.Caches.releaseAll(spark)
+    specs.foreach { s =>
+      try s.build(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${s.name}")
+      catch { case e: Throwable =>
+        System.err.println(s"[verify] ${s.name} failed: ${e.getMessage}")
       }
-    import graft.util.Json.quote
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.isEmpty || only(k) }
-      .map { case (k, v) => s"${quote(k)}: ${quote(v)}" }
-      .mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+      // drop this query's persisted intermediates — SQL cache AND
+      // localCheckpoint RDD blocks — so ~190 queries' blocks don't
+      // accumulate in the shared session (same hygiene as Bench)
+      graft.util.Caches.releaseAll(spark)
+    }
+    Json.write(s"$outDir/oracle_sql.json",
+      Json.obj(specs.map(s => s.name -> JString(s.oracle)): _*))
     // sf1-capable iterative programs for the recursive-CTE oracles —
     // consumed by scripts/check_oracle.py --iterative; the driver's
     // sf0.01 gate ignores this file and runs oracle_sql.json as-is.
-    Files.writeString(Paths.get(s"$outDir/oracle_iter.json"),
-      IterOracles.renderJson)
+    Json.write(s"$outDir/oracle_iter.json", IterOracles.json)
     spark.stop()
   }
 }

@@ -120,7 +120,7 @@ object Envelope extends QueryModule {
   def serialize(feed: DataFrame, registry: SchemaRegistry): DataFrame = {
     // one schema id per op subject, resolved driver-side (tiny map),
     // joined in as a literal CASE — no shuffle
-    val ids = Seq("insert", "update", "delete").map { op =>
+    val ids = GenericOps.map { op =>
       op -> registry.register(AvroSubjects.generic(op), genericSchemaV1)
     }.toMap
     val schemaIdCol = ids.foldLeft(lit(null).cast("int")) {

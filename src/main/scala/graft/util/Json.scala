@@ -1,23 +1,31 @@
 package graft.util
 
-/** Minimal JSON rendering for the harness artifacts (`oracle_sql.json`,
-  * `oracle_iter.json`) — escaping per RFC 8259: backslash, quote, and
-  * ALL control chars (<0x20). A tab or CR in builder-authored SQL
-  * would otherwise make the driver's json.load fail and silently zero
-  * the round's correctness. */
-object Json {
-  def quote(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
+import org.json4s._
+import org.json4s.jackson.JsonMethods
 
-  /** Ordered string→string object. */
-  def obj(fields: Seq[(String, String)]): String =
-    fields.map { case (k, v) => s"${quote(k)}: $v" }
-      .mkString("{", ",", "}")
+/** The one JSON writer (and reader) of the tool artifacts (Bench's
+  * line and files, SOAK.json, FRONTIER.json, oracle_sql/iter.json), on
+  * json4s: strings are escaped per RFC 8259 — a tab or CR in
+  * builder-authored SQL would otherwise make the driver's json.load
+  * fail and silently zero the round's correctness. */
+object Json {
+  /** An ordered object; a field whose value is JNothing is left out. */
+  def obj(fields: (String, JValue)*): JObject =
+    JObject(fields.filter(_._2 != JNothing).toList)
+
+  /** `v` rounded half-up to `digits` decimals, written without an
+    * exponent; `null` when `v` is NaN or infinite. */
+  def fixed(v: Double, digits: Int): JValue =
+    if (v.isNaN || v.isInfinite) JNull
+    else JDecimal(BigDecimal(v).setScale(digits,
+      BigDecimal.RoundingMode.HALF_UP))
+
+  def render(v: JValue): String = JsonMethods.compact(v)
+
+  def parse(s: String): JValue = JsonMethods.parse(s)
+
+  /** Writes `v` and a newline to `path`. */
+  def write(path: String, v: JValue): Unit =
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(path),
+      render(v) + "\n")
 }

@@ -73,3 +73,10 @@ object StateStoreBridge {
     org.apache.spark.sql.execution.streaming.state.StateStoreCoordinatorRef
       .forDriver(org.apache.spark.SparkEnv.get, spark.sessionState.conf)
 }
+
+/** Waits until every listener has seen every event posted so far
+  * (`private[spark]`; throws TimeoutException past Spark's default). */
+object ListenerBridge {
+  def drain(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+}

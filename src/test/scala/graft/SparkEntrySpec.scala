@@ -47,4 +47,16 @@ class SparkEntrySpec extends AnyFunSuite {
         s"${s.name}: $cls is not in $pkg")
     }
   }
+
+  test("select keeps registry order and fails naming every unknown " +
+    "query") {
+    val names = SparkEntry.specs.map(_.name)
+    val picked = Seq(names(2), names(0))
+    assert(SparkEntry.select(picked).map(_.name) === Seq(names(0), names(2)))
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.select(picked ++ Seq("q1_typo", "no_such_query")))
+    assert(e.getMessage.contains("q1_typo") &&
+      e.getMessage.contains("no_such_query"))
+    assert(!e.getMessage.contains(names(0)))
+  }
 }
