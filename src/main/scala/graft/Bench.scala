@@ -259,15 +259,12 @@ object Bench {
       spark.read.parquet(s"$sfDir/lineitem.parquet").count()
       spark.read.parquet(s"$sfDir/documents.parquet").count()
     } catch { case _: Throwable => }
-    // committed per-query reference (the repo's BENCH_LAST.json, read
-    // BEFORE this run overwrites it): any query whose best time lands
-    // past 3× its reference gets up to two extra runs — a steal spike
-    // self-heals, a genuine regression survives and is flagged
-    val reference =
-      try Some(java.nio.file.Files.readString(
-        java.nio.file.Paths.get("BENCH_LAST.json")))
-      catch { case _: java.io.IOException => None }
-    val refTimes = reference.map(queryTimes).getOrElse(Map.empty)
+    // per-query reference, read BEFORE this run overwrites it: any
+    // query whose best time lands past 3× its reference gets up to two
+    // extra runs — a steal spike self-heals, a genuine regression
+    // survives and is flagged
+    val (file, refTimes) =
+      reference(java.nio.file.Paths.get(""), cpus, sfDir)
     val runSteal0 = HostSteal.jiffies()
     Counters.drain() // clear anything the warm-up recorded
     val tracer = new Tracer(spark.sparkContext)
@@ -281,7 +278,6 @@ object Bench {
       else ("stream_replay" -> replay) :: concurrent(spark, sfDir, records, tracer)
     val report = Report(sfDir, cpus, records, legs,
       Seq("stream_replay" -> replaySteal), HostSteal.secondsSince(runSteal0))
-    val file = resultFile(reference, cpus, sfDir)
     val line = stdoutLine(report, only.isDefined, file)
     tracer.close()
     spark.stop()
@@ -303,6 +299,20 @@ object Bench {
         case e: java.io.IOException =>
           System.err.println(s"[bench] writing $file failed: ${e.getMessage}")
       }
+  }
+
+  /** The file a full-suite run in `dir` writes ([[resultFile]], judged
+    * on `dir`'s `BENCH_LAST.json`), and the per-query times of that
+    * file if it exists. Times taken at another core count or scale are
+    * no reference for this run, so such a run gets none: no self-heal
+    * reruns and no noise_suspect verdicts. */
+  def reference(dir: java.nio.file.Path, cpus: Int, sfDir: String)
+      : (String, Map[String, Double]) = {
+    def read(name: String) =
+      try Some(java.nio.file.Files.readString(dir.resolve(name)))
+      catch { case _: java.io.IOException => None }
+    val file = resultFile(read("BENCH_LAST.json"), cpus, sfDir)
+    (file, read(file).map(queryTimes).getOrElse(Map.empty))
   }
 
   /** The per-query times of a bench file's `queries` object. */

@@ -72,7 +72,7 @@ class SchemaRegistry extends SchemaRepo with Serializable {
 
   /** All (id, schema) versions of a subject in registration order —
     * the writer-schema table a mixed-version stream decoder dispatches
-    * on ([[graft.functions.AvroCodec.decodeVersioned]]). */
+    * on ([[graft.functions.Envelope.open]]). */
   def versionsOf(subject: String): Seq[(Int, String)] =
     subjects.get(subject).map(_.map(_.swap)).getOrElse(Vector.empty)
 }

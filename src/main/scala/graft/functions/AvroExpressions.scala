@@ -37,51 +37,19 @@ object AvroCodec {
   def encode(c: Column, schemaJson: String): Column =
     column(AvroEncodeExpr(expression(c), schemaJson))
 
-  /** Avro binary → struct (reader schema fixed at plan time; writer
-    * defaults to the reader — see [[decodeResolved]] for mixed-version
-    * streams). `lenient = true` maps per-row decode failures to NULL
-    * (consumer skip-undecodable contract); default stays strict. */
-  def decode(c: Column, schemaJson: String, as: StructType,
-      lenient: Boolean = false): Column =
-    column(AvroDecodeExpr(expression(c), schemaJson, as, lenient = lenient))
-
-  /** Avro binary written under `writerSchemaJson`, decoded INTO the
-    * `readerSchemaJson` shape via Avro schema resolution: fields the
-    * writer lacks take the reader's defaults, fields the reader
-    * dropped are skipped. This is how a consumer on schema vN reads a
-    * stream whose older records were framed under vK<N (reference
-    * `AvroVersionedRecordDeserializer.scala:38-47`: writer schema
-    * looked up by the envelope's embedded id, reader pinned to
-    * latest). `lenient = true` maps per-row decode failures (corrupt
-    * payloads, incompatible resolution) to NULL — the consumer's
-    * skip-undecodable contract; the default stays STRICT so tests and
-    * batch codecs fail loudly on real bugs. */
-  def decodeResolved(c: Column, writerSchemaJson: String,
-      readerSchemaJson: String, as: StructType,
-      lenient: Boolean = false): Column =
-    column(AvroDecodeExpr(expression(c), readerSchemaJson, as,
-      writerSchemaJson, lenient))
-
-  /** Mixed-version stream decode: dispatch on the envelope's embedded
-    * schema id over the registry's known versions of a subject — each
-    * id decodes with ITS writer schema, every row lands in the latest
-    * (reader) shape. The CASE chain is tiny (version count per
-    * subject, single digits in practice) and entirely plan-side: no
-    * per-row registry lookups, exactly like the reference's
-    * id→deserializer cache. Unknown ids yield NULL (the reference
-    * consumer skips undecodable messages). */
-  def decodeVersioned(payload: Column, schemaId: Column,
-      versions: Seq[(Int, String)], readerSchemaJson: String,
-      as: StructType, lenient: Boolean = false): Column = {
-    import org.apache.spark.sql.functions.{lit, when}
-    versions.foldLeft(lit(null).cast(as)) {
-      case (acc, (id, writerJson)) =>
-        when(schemaId === lit(id),
-          decodeResolved(payload, writerJson, readerSchemaJson, as,
-            lenient))
-          .otherwise(acc)
-    }
-  }
+  /** Avro binary written under `writerJson` (default: the reader) →
+    * struct, in the `readerJson` shape `as` (both schemas fixed at
+    * plan time). A writer other than the reader decodes through Avro
+    * schema resolution: fields the writer lacks take the reader's
+    * defaults, fields the reader dropped are skipped. `lenient = true`
+    * maps per-row decode failures (corrupt payloads, incompatible
+    * resolution) to NULL — the consumer's skip-undecodable contract;
+    * the default stays STRICT so tests and batch codecs fail loudly on
+    * real bugs. Frames are read through [[Envelope.open]]. */
+  def decode(c: Column, readerJson: String, as: StructType,
+      writerJson: String = null, lenient: Boolean = false): Column =
+    column(AvroDecodeExpr(expression(c), readerJson, as,
+      if (writerJson == readerJson) null else writerJson, lenient))
 
   private[functions] def sparkToAvro(v: Any, dt: DataType, fieldSchema: Schema): AnyRef =
     dt match {

@@ -13,7 +13,8 @@ import org.apache.spark.sql.types._
   * package.scala:5-24`): `MAGIC(1B) | MTYPE(1B) | SCHEMA_ID(2B BE) |
   * AVRO_PAYLOAD`. Framing/unframing is pure built-ins (concat / unhex /
   * substring / conv — all codegen'd); the Avro payload uses the custom
-  * expressions in [[AvroCodec]].
+  * expressions in [[AvroCodec]]. [[seal]] writes and [[open]] reads
+  * every frame; nothing else knows the layout.
   */
 object Envelope extends QueryModule {
 
@@ -83,6 +84,13 @@ object Envelope extends QueryModule {
       payload)
   }
 
+  /** The producer side of the wire: `record` encoded under
+    * `writerJson` and framed with its header. Every frame graft writes
+    * goes through here. */
+  def seal(mtype: Column, schemaId: Column, record: Column,
+      writerJson: String): Column =
+    frame(mtype, schemaId, AvroCodec.encode(record, writerJson))
+
   // ── P12: envelope slicing (consumer side) ───────────────────────────
   def sliceMagic(env: Column): Column =
     conv(hex(substring(env, 1, 1)), 16, 10).cast("int")
@@ -90,9 +98,9 @@ object Envelope extends QueryModule {
     conv(hex(substring(env, 2, 1)), 16, 10).cast("int")
   def sliceSchemaId(env: Column): Column =
     conv(hex(substring(env, 3, 2)), 16, 10).cast("int")
-  /** Payload slice, by column name (binary substring past the header). */
-  def slicePayload(envColName: String): Column =
-    expr(s"substring($envColName, 5, length($envColName) - 4)")
+  /** Payload slice: the binary substring past the 4-byte header. */
+  def slicePayload(env: Column): Column =
+    env.substr(lit(5), length(env) - 4)
 
   /** Consumer-side frame guard: an envelope is well-formed iff it is
     * long enough to hold the 4-byte header and leads with the MAGIC
@@ -101,6 +109,45 @@ object Envelope extends QueryModule {
     * yields silent garbage, not an error. */
   def wellFormed(env: Column): Column =
     length(env) >= 5 && sliceMagic(env) === lit(Magic)
+
+  /** The consumer side of the wire (reference `KafkaAvroDecoder` /
+    * `AvroVersionedRecordDeserializer.scala:38-47`): check the frame,
+    * read its schema id, look up the writer schema among `versions`
+    * and decode into the `readerJson` shape `as`. Every frame graft
+    * reads goes through here.
+    *
+    * The CASE chain is plan-side, one branch per DISTINCT writer
+    * schema (the three generic op subjects share one record schema and
+    * so one branch), exactly like the reference's id→deserializer
+    * cache: no per-row registry lookups. A writer equal to the reader
+    * decodes without resolution; any other writer resolves into the
+    * reader (writer-absent fields take the reader's defaults,
+    * reader-absent fields are skipped, int promotes to long). An id
+    * not in `versions` (so every id, for an empty list), and an
+    * ill-formed frame, give NULL. `lenient = true` also maps a payload
+    * that fails to decode to NULL (the consumer's skip-undecodable
+    * contract); strict decode rethrows. */
+  def open(env: Column, versions: Seq[(Int, String)], readerJson: String,
+      as: StructType, lenient: Boolean): Column = {
+    val none = lit(null).cast(as)
+    val sid = sliceSchemaId(env)
+    val byWriter = versions.groupBy(_._2).toSeq.sortBy(_._2.head._1)
+    // The frame check guards the decode INSIDE the case expression
+    // rather than as a standalone Filter: a Filter over the aliasing
+    // Project gets pushed through the alias by Catalyst and, when the
+    // envelope itself is computed upstream in the same plan (the
+    // benchmark round trip; any producer→consumer pipeline fused into
+    // one job), re-evaluates the whole encode chain per row just to
+    // test length+magic. CaseWhen is lazy, so strict decode never sees
+    // an ill-formed frame.
+    when(wellFormed(env), byWriter.foldLeft(none) {
+      case (acc, (writerJson, ids)) =>
+        when(sid.isInCollection(ids.map(_._1)),
+          AvroCodec.decode(slicePayload(env), readerJson, as, writerJson,
+            lenient))
+          .otherwise(acc)
+    }).otherwise(none)
+  }
 
   // ── F4: schema-compat validation ────────────────────────────────────
   /** A mutation is serializable iff every row column has a matching
@@ -128,8 +175,8 @@ object Envelope extends QueryModule {
     }
     genericRecord(feed)
       .withColumn("schema_id", schemaIdCol)
-      .withColumn("envelope", frame(col("mtype"), col("schema_id"),
-        AvroCodec.encode(col("record"), genericSchemaV1)))
+      .withColumn("envelope", seal(col("mtype"), col("schema_id"),
+        col("record"), genericSchemaV1))
       .withColumn("topic",
         concat_ws("_", col("database"), col("tbl"), lit("generic")))
   }
@@ -139,70 +186,24 @@ object Envelope extends QueryModule {
     * silently fall through the decode dispatch to NULL. */
   val GenericOps: Seq[String] = Seq("insert", "update", "delete")
 
-  /** Consumer-side decode of [[serialize]]'s output. Ill-formed frames
-    * (truncated, wrong magic) are dropped up front — the reference's
-    * consumer skips undecodable messages rather than dying on them.
+  /** Consumer-side decode of [[serialize]]'s output through [[open]].
+    * Ill-formed frames (truncated, wrong magic) are dropped — the
+    * reference's consumer skips undecodable messages rather than dying
+    * on them.
     *
     * The consumer is PINNED to this build's record shape
     * ([[genericStructV1]], reader = [[genericSchemaV1]] — the reader
     * schema and the output struct must agree, or resolved fields would
     * silently project to NULL); writer schemas dispatch on the
-    * envelope's embedded id across every registered generic version,
-    * grouped by distinct schema so identical registrations (the three
-    * op subjects share one record schema) decode through ONE branch.
-    * Records framed under an id the registry does not know, or whose
-    * bytes fail Avro resolution, decode to NULL and are treated as
-    * undecodable per the reference contract. */
+    * envelope's embedded id across every registered generic version.
+    * Records framed under an id the registry does not know (so every
+    * record, when it knows none), or whose bytes fail Avro resolution,
+    * decode to NULL and are dropped per the reference contract. */
   def deserialize(envelopes: DataFrame, registry: SchemaRegistry): DataFrame = {
     val versions = GenericOps
       .flatMap(op => registry.versionsOf(AvroSubjects.generic(op)))
-      .distinct
-    val base = envelopes
-      .withColumn("magic", sliceMagic(col("envelope")))
-      .withColumn("mtype_decoded", sliceMtype(col("envelope")))
-      .withColumn("schema_id_decoded", sliceSchemaId(col("envelope")))
-      .withColumn("payload",
-        expr("substring(envelope, 5, length(envelope) - 4)"))
-    // The frame check guards the decode INSIDE the case expression
-    // rather than as a standalone Filter: a Filter over the aliasing
-    // Project gets pushed through the alias by Catalyst and, when the
-    // envelope itself is computed upstream in the same plan (the
-    // benchmark round trip; any producer→consumer pipeline fused into
-    // one job), re-evaluates the whole encode chain per row just to
-    // test length+magic. CaseWhen is lazy, so strict decode never sees
-    // an ill-formed frame.
-    val ok = wellFormed(col("envelope"))
-    val distinctSchemas = versions.groupBy(_._2)
-    val decoded =
-      if (versions.isEmpty) // no registry state: assume current build
-        // lenient like the other branches: a well-formed frame with an
-        // undecodable payload drops, it doesn't kill the query
-        when(ok, AvroCodec.decode(col("payload"), genericSchemaV1,
-          genericStructV1, lenient = true))
-          .otherwise(lit(null).cast(genericStructV1))
-      else if (distinctSchemas.size == 1 &&
-          distinctSchemas.keysIterator.next() == genericSchemaV1)
-        // steady-state fast path: every registered version IS the
-        // current build's schema, so skip Avro schema resolution and
-        // decode with the plain reader; the known-id guard still drops
-        // frames under ids the registry has never issued
-        when(ok && col("schema_id_decoded")
-            .isInCollection(versions.map(_._1)),
-          AvroCodec.decode(col("payload"), genericSchemaV1,
-            genericStructV1, lenient = true))
-          .otherwise(lit(null).cast(genericStructV1))
-      else
-        when(ok,
-          distinctSchemas.toSeq.sortBy(_._2.head._1)
-            .foldLeft(lit(null).cast(genericStructV1)) {
-              case (acc, (writerJson, idPairs)) =>
-                when(col("schema_id_decoded")
-                    .isInCollection(idPairs.map(_._1)),
-                  AvroCodec.decodeResolved(col("payload"), writerJson,
-                    genericSchemaV1, genericStructV1, lenient = true))
-                  .otherwise(acc)
-            })
-          .otherwise(lit(null).cast(genericStructV1))
+    val decoded = open(col("envelope"), versions, genericSchemaV1,
+      genericStructV1, lenient = true)
     // skip-undecodable: ill-formed frames, unknown ids and failed
     // decodes drop rather than flowing null structs downstream. The
     // drop is a Generate over a one-element array, not a Filter:
@@ -210,7 +211,12 @@ object Envelope extends QueryModule {
     // through the alias by Catalyst and re-evaluates the whole
     // (CodegenFallback, so never CSE'd) decode chain a second time per
     // row — measured 2.2× on the p5 round trip.
-    base.withColumn("decoded", explode(array_compact(array(decoded))))
+    envelopes
+      .withColumn("magic", sliceMagic(col("envelope")))
+      .withColumn("mtype_decoded", sliceMtype(col("envelope")))
+      .withColumn("schema_id_decoded", sliceSchemaId(col("envelope")))
+      .withColumn("payload", slicePayload(col("envelope")))
+      .withColumn("decoded", explode(array_compact(array(decoded))))
   }
 
   // ── P5+P12 oracle query: full round trip ────────────────────────────

@@ -228,8 +228,4 @@ object GramIndex {
   def loadNgramSets(spark: org.apache.spark.sql.SparkSession, n: Int,
       dir: String): DataFrame =
     spark.read.parquet(s"$dir/ngram_sets_$n")
-
-  def loadMinhashSignatures(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame =
-    spark.read.parquet(s"$dir/minhash_signatures")
 }

@@ -30,15 +30,6 @@ import org.apache.spark.sql.functions._
   */
 object LangModel extends QueryModule {
 
-  /** Corpus bigram counts: one row per distinct (w1, w2) with count. */
-  def bigramCounts(docs: DataFrame): DataFrame =
-    bigrams(docs).groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
-
-  /** (doc_id, pos, w1, w2) for every adjacent token pair. */
-  private def bigrams(docs: DataFrame): DataFrame =
-    bigramsFromToks(docs
-      .select(col("doc_id"), TextAnalysis.wsTokens(col("text")).as("a")))
-
   /** Bigram expansion over an already-tokenized (doc_id, a) frame —
     * split out so [[scoredDocs]] can feed its consumers from ONE
     * materialized tokenize pass. */

@@ -3,7 +3,7 @@ package graft.functions
 import graft.{QueryModule, QuerySpec}
 import graft.avro.{AvroSubjects, SchemaRegistry}
 import graft.sources.ChangeFeed
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -61,32 +61,40 @@ object SpecificEnvelope extends QueryModule {
     StructField("old_value", DoubleType),
     StructField("new_value", DoubleType))
 
-  val updateStruct: StructType = StructType(updateFields)
+  /** The specific round trip the typed queries share: register the
+    * schema of `fields` under the `<db>_<table>_<op>` subject (a fresh
+    * registry per query, so its id is 1), seal each row's `fields`
+    * (read by name from `src`) under it, and open the frame again.
+    * Adds `schema_id_rt`, the id read back off the wire, and
+    * `decoded`. */
+  private def roundTrip(src: DataFrame, mtype: Column, db: String,
+      table: String, op: String, fields: Seq[StructField]): DataFrame = {
+    val registry = new SchemaRegistry
+    val subject = AvroSubjects.specific(db, table, op)
+    val schemaJson = schemaFor(db, table, op, fields)
+    val schemaId = registry.register(subject, schemaJson)
+    src
+      .withColumn("envelope", Envelope.seal(mtype, lit(schemaId),
+        struct(fields.map(f => col(f.name)): _*), schemaJson))
+      .withColumn("schema_id_rt", Envelope.sliceSchemaId(col("envelope")))
+      .withColumn("decoded", Envelope.open(col("envelope"),
+        registry.versionsOf(subject), schemaJson, StructType(fields),
+        lenient = false))
+  }
 
   /** Serialize the update stream with the specific schema; decode it
     * back; project scalars. Oracle = the un-serialized image query, so
     * every typed field must survive the specific wire format exactly. */
   def p4SpecificRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val registry = new SchemaRegistry
-    val schemaJson = schemaFor("testdb", "events", "update", updateFields)
-    val schemaId =
-      registry.register(AvroSubjects.specific("testdb", "events", "update"),
-        schemaJson)
     val w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
     val images = ChangeFeed.fromEvents(spark, dir)
       .withColumn("old_value", lag("value", 1).over(w))
       .filter(col("op") === "update" && col("old_value").isNotNull)
-    val record = images.withColumn("record", struct(
-      col("event_id"), col("user_id"),
-      col("event_type").cast("binary").as("event_type"),
-      col("old_value"), col("value").as("new_value")))
-    val enveloped = record.withColumn("envelope",
-      Envelope.frame(col("mtype"), lit(schemaId),
-        AvroCodec.encode(col("record"), schemaJson)))
-    enveloped
-      .withColumn("schema_id_rt", Envelope.sliceSchemaId(col("envelope")))
-      .withColumn("decoded", AvroCodec.decode(
-        Envelope.slicePayload("envelope"), schemaJson, updateStruct))
+      .select(col("mtype"), col("event_id"), col("user_id"),
+        col("event_type").cast("binary").as("event_type"),
+        col("old_value"), col("value").as("new_value"))
+    roundTrip(images, col("mtype"), "testdb", "events", "update",
+      updateFields)
       .select(
         col("decoded.event_id").as("event_id"),
         col("decoded.user_id").as("user_id"),
@@ -135,10 +143,6 @@ object SpecificEnvelope extends QueryModule {
     * exactly (closes VERDICT r5 "missing #1" — previously no such cell
     * ever flowed through the envelope). */
   def ctTypedEnvelope(spark: SparkSession, dir: String): DataFrame = {
-    val registry = new SchemaRegistry
-    val schemaJson = schemaFor("testdb", "lineitem", "insert", typedFields)
-    val schemaId = registry.register(
-      AvroSubjects.specific("testdb", "lineitem", "insert"), schemaJson)
     val src = spark.read.parquet(s"$dir/lineitem.parquet")
       .filter(col("l_orderkey") % 7 === 0)
       .select(
@@ -147,16 +151,8 @@ object SpecificEnvelope extends QueryModule {
         col("l_quantity").cast(DecimalType(12, 2)).as("l_quantity"),
         col("l_shipdate").cast("date").as("l_shipdate"),
         col("l_returnflag").cast("binary").as("l_returnflag"))
-    val enveloped = src
-      .withColumn("record", struct(typedFields.map(f => col(f.name)): _*))
-      .withColumn("envelope", Envelope.frame(
-        lit(graft.model.Cdc.InsertByte.toInt),
-        lit(schemaId), AvroCodec.encode(col("record"), schemaJson)))
-    enveloped
-      .withColumn("schema_id_rt", Envelope.sliceSchemaId(col("envelope")))
-      .withColumn("decoded", AvroCodec.decode(
-        Envelope.slicePayload("envelope"), schemaJson,
-        StructType(typedFields)))
+    roundTrip(src, lit(graft.model.Cdc.InsertByte.toInt), "testdb",
+      "lineitem", "insert", typedFields)
       .select(
         col("decoded.l_orderkey").as("l_orderkey"),
         col("decoded.l_linenumber").as("l_linenumber"),
@@ -213,10 +209,6 @@ object SpecificEnvelope extends QueryModule {
     * the TIMESTAMP semantics are already covered by the decode
     * round-trip itself). */
   def ctTypedEnvelope2(spark: SparkSession, dir: String): DataFrame = {
-    val registry = new SchemaRegistry
-    val schemaJson = schemaFor("testdb", "events", "insert", typed2Fields)
-    val schemaId = registry.register(
-      AvroSubjects.specific("testdb", "events", "insert"), schemaJson)
     val src = graft.Tables.events(spark, dir)
       .filter(col("event_id") % 5 === 0)
       .select(
@@ -228,16 +220,8 @@ object SpecificEnvelope extends QueryModule {
           when(col("value") >= 50, lit("hi")),
           when(col("user_id") % 2 === 0, lit("even")))
           .cast("binary").as("set_cell"))
-    val enveloped = src
-      .withColumn("record", struct(typed2Fields.map(f => col(f.name)): _*))
-      .withColumn("envelope", Envelope.frame(
-        lit(graft.model.Cdc.InsertByte.toInt),
-        lit(schemaId), AvroCodec.encode(col("record"), schemaJson)))
-    enveloped
-      .withColumn("schema_id_rt", Envelope.sliceSchemaId(col("envelope")))
-      .withColumn("decoded", AvroCodec.decode(
-        Envelope.slicePayload("envelope"), schemaJson,
-        StructType(typed2Fields)))
+    roundTrip(src, lit(graft.model.Cdc.InsertByte.toInt), "testdb",
+      "events", "insert", typed2Fields)
       .select(
         col("decoded.event_id").as("event_id"),
         unix_micros(col("decoded.ts_cell")).as("ts_us"),
@@ -280,7 +264,7 @@ object SpecificEnvelope extends QueryModule {
     * pre-ALTER history) is framed under the narrow v2 writer with
     * o_custkey as Avro `int`, the other half under the widened v3 with
     * `long`. The consumer is pinned to v3 and dispatches writers by
-    * the envelope's embedded id ([[AvroCodec.decodeVersioned]]): v2
+    * the envelope's embedded id ([[Envelope.open]]): v2
     * frames resolve through Avro schema PROMOTION (int reads as long —
     * the resolution rule that makes widening ALTERs restart-free),
     * v3 frames decode directly. Every cell must survive both paths
@@ -300,23 +284,21 @@ object SpecificEnvelope extends QueryModule {
         col("o_custkey"),
         col("o_orderstatus").cast("binary").as("o_status"))
     val preAlter = col("o_orderkey") % 2 === 0
-    val enveloped = src.withColumn("envelope",
-      when(preAlter, Envelope.frame(
-        lit(graft.model.Cdc.InsertByte.toInt), lit(id2),
-        AvroCodec.encode(struct(col("o_orderkey"),
-          col("o_custkey").cast("int").as("o_custkey"),
-          col("o_status")), v2)))
-      .otherwise(Envelope.frame(
-        lit(graft.model.Cdc.InsertByte.toInt), lit(id3),
-        AvroCodec.encode(struct(col("o_orderkey"),
-          col("o_custkey").cast("long").as("o_custkey"),
-          col("o_status")), v3))))
-    val versions = registry.versionsOf(subj)
-    enveloped
+    val insert = lit(graft.model.Cdc.InsertByte.toInt)
+    src
+      .withColumn("envelope",
+        when(preAlter, Envelope.seal(insert, lit(id2),
+          struct(col("o_orderkey"),
+            col("o_custkey").cast("int").as("o_custkey"), col("o_status")),
+          v2))
+        .otherwise(Envelope.seal(insert, lit(id3),
+          struct(col("o_orderkey"),
+            col("o_custkey").cast("long").as("o_custkey"), col("o_status")),
+          v3)))
       .withColumn("sid", Envelope.sliceSchemaId(col("envelope")))
-      .withColumn("decoded", AvroCodec.decodeVersioned(
-        Envelope.slicePayload("envelope"), col("sid"), versions, v3,
-        StructType(wide3Fields)))
+      .withColumn("decoded", Envelope.open(col("envelope"),
+        registry.versionsOf(subj), v3, StructType(wide3Fields),
+        lenient = false))
       .select(col("decoded.o_orderkey").as("o_orderkey"),
         col("decoded.o_custkey").as("o_custkey"),
         col("decoded.o_status").cast("string").as("o_status"),
@@ -334,17 +316,6 @@ object SpecificEnvelope extends QueryModule {
       |    AS writer_schema_id
       |FROM orders WHERE o_orderkey % 5 = 0
       |ORDER BY o_orderkey""".stripMargin
-
-  /** F4 on the specific path: the serializer refuses rows whose fields
-    * are missing from the registered schema; after an ALTER the caller
-    * refreshes to latest and retries (reference
-    * KafkaAvroSerializer.scala:47-55). */
-  def serializableFields(registry: SchemaRegistry, db: String,
-      table: String, op: String, rowFields: Seq[String]): Boolean =
-    registry.latest(AvroSubjects.specific(db, table, op)) match {
-      case Some((_, schema)) => Envelope.compatible(schema, rowFields)
-      case None => false
-    }
 
   val specs: Seq[QuerySpec] = Seq(
     QuerySpec("p4_specific_roundtrip", p4SpecificRoundtrip, p4Sql),

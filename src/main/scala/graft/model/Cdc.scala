@@ -1,6 +1,7 @@
 package graft.model
 
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.when
 
 /** The engine's CDC data model (SURVEY.md §1, §7.1).
   *
@@ -25,38 +26,22 @@ object Cdc {
   val UpdateByte: Byte = 0x2
   val DeleteByte: Byte = 0x3
 
-  def opToByte(op: String): Byte = op match {
-    case OpInsert => InsertByte
-    case OpUpdate => UpdateByte
-    case OpDelete => DeleteByte
-  }
+  /** The one op → wire-byte table. */
+  private val opBytes: Seq[(String, Byte)] =
+    Seq(OpInsert -> InsertByte, OpUpdate -> UpdateByte, OpDelete -> DeleteByte)
 
-  def byteToOp(b: Byte): String = b match {
-    case InsertByte => OpInsert
-    case UpdateByte => OpUpdate
-    case DeleteByte => OpDelete
-  }
+  def opToByte(op: String): Byte = opBytes.find(_._1 == op).get._2
 
-  /** Canonical envelope schema for the generic (schema-dynamic) path.
-    * Mirrors the reference's generic Avro record: headers + typed maps
-    * (reference mutations.avsc + KafkaGenericAvroSerializer.scala:70-116).
-    * Payload cells ride in per-type maps so ALTERs (column add/drop)
-    * never change the envelope schema — the property that lets a stream
-    * keep running across schema evolution (SURVEY §7.5).
-    */
-  val envelopeSchema: StructType = StructType(Seq(
-    StructField("op", StringType, nullable = false),
-    StructField("mtype", ByteType, nullable = false),
-    StructField("database", StringType, nullable = false),
-    StructField("tbl", StringType, nullable = false),
-    StructField("table_id", IntegerType, nullable = true),
-    StructField("txid", StringType, nullable = true),
-    StructField("ts_us", LongType, nullable = true),
-    StructField("pk", StringType, nullable = true),
-    StructField("bytes", MapType(StringType, BinaryType), nullable = true),
-    StructField("integers", MapType(StringType, IntegerType), nullable = true),
-    StructField("strings", MapType(StringType, StringType), nullable = true),
-    StructField("longs", MapType(StringType, LongType), nullable = true)))
+  def byteToOp(b: Byte): String = opBytes.find(_._2 == b).get._1
+
+  /** The envelope mtype of an `op` column: the op's wire byte, 0 for any
+    * other op (NULL included). */
+  def mtypeOf(op: Column): Column = {
+    val (o0, b0) = opBytes.head
+    opBytes.tail.foldLeft(when(op === o0, b0.toInt)) {
+      case (c, (o, b)) => c.when(op === o, b.toInt)
+    }.otherwise(0)
+  }
 }
 
 /** Typed view of a change record for Dataset[MutationRow] API edges and

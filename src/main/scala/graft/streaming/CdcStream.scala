@@ -1,7 +1,8 @@
 package graft.streaming
 
 import graft.avro.SchemaRepo
-import graft.functions.{AvroCodec, Envelope}
+import graft.functions.Envelope
+import graft.model.Cdc
 import graft.streaming.TxPipeline.TxMutation
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -83,19 +84,14 @@ object CdcStream {
       topicTemplate: String): DataFrame = {
     val schemaId =
       registry.register("generic_txmutation", txMutationSchemaJson)
-    val mtype = when(col("op") === "insert", 1)
-      .when(col("op") === "update", 2)
-      .when(col("op") === "delete", 3)
-      .otherwise(0)
     mutations.toDF()
       .select(
         topicColumn(topicTemplate).as("topic"),
         col("pk").cast("string").as("key"),
-        Envelope.frame(mtype, lit(schemaId),
-          AvroCodec.encode(
-            struct(col("conn"), col("seq"), col("txid"), col("op"),
-              col("pk"), col("commitTsUs"), col("payload")),
-            txMutationSchemaJson)).as("value"))
+        Envelope.seal(Cdc.mtypeOf(col("op")), lit(schemaId),
+          struct(col("conn"), col("seq"), col("txid"), col("op"),
+            col("pk"), col("commitTsUs"), col("payload")),
+          txMutationSchemaJson).as("value"))
   }
 
   /** Fully configured Kafka DataStreamWriter — the caller starts it.
@@ -153,10 +149,23 @@ object CdcStream {
   def snapshotBoundary(snapshot: DataFrame, sinkDir: String,
       positionCol: String): Long = {
     snapshot.write.mode("overwrite").parquet(sinkDir)
-    snapshot.agg(max(col(positionCol))).collect().head match {
+    maxPosition(snapshot, positionCol)
+  }
+
+  /** The largest position in `df`; Long.MinValue when it is empty. */
+  private def maxPosition(df: DataFrame, positionCol: String): Long =
+    df.agg(max(col(positionCol))).collect().head match {
       case r if r.isNullAt(0) => Long.MinValue
       case r => r.getLong(0)
     }
+
+  /** Make a captured boundary durable and return it. An empty snapshot's
+    * Long.MinValue sentinel persists as 0 (positions are non-negative on
+    * the wire): both mean "replay from the start". */
+  private def saveBoundary(repo: PositionRepository, consumerId: String,
+      logName: String, boundary: Long): Long = {
+    repo.save(consumerId, BinlogPosition(logName, math.max(boundary, 0L)))
+    boundary
   }
 
   /** Resume-after-snapshot filter for the live feed (startingOffsets
@@ -173,11 +182,8 @@ object CdcStream {
   def snapshotHandoff(snapshot: DataFrame, sinkDir: String,
       positionCol: String, repo: PositionRepository,
       consumerId: String, logName: String = "changelog"): Long = {
-    val boundary = snapshotBoundary(snapshot, sinkDir, positionCol)
-    // empty snapshot → Long.MinValue sentinel; persist 0 (positions are
-    // non-negative on the wire) — both mean "replay from the start"
-    repo.save(consumerId, BinlogPosition(logName, math.max(boundary, 0L)))
-    boundary
+    saveBoundary(repo, consumerId, logName,
+      snapshotBoundary(snapshot, sinkDir, positionCol))
   }
 
   // ── with-transaction snapshot variant ───────────────────────────────
@@ -229,15 +235,11 @@ object CdcStream {
       logName: String = "changelog",
       opCol: Option[String] = Some("op")): Long = {
     // step 1 — position capture (readLock + showMasterStatus analog)
-    val boundary = table().agg(max(col(positionCol))).collect().head match {
-      case r if r.isNullAt(0) => Long.MinValue
-      case r => r.getLong(0)
-    }
+    val boundary = maxPosition(table(), positionCol)
     // step 2 — repeatable-read selects: a FRESH read, possibly already
     // grown past the boundary; the ≤ boundary pin restores the view
     consistentViewAt(table(), positionCol, pkCols, boundary, opCol)
       .write.mode("overwrite").parquet(sinkDir)
-    repo.save(consumerId, BinlogPosition(logName, math.max(boundary, 0L)))
-    boundary
+    saveBoundary(repo, consumerId, logName, boundary)
   }
 }

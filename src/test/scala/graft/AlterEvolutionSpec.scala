@@ -87,8 +87,9 @@ class AlterEvolutionSpec extends SparkSpec {
           StructField("payload", MapType(StringType, StringType))))
         val decoded = spark.table("alter_pipe")
           .withColumn("sid", Envelope.sliceSchemaId(col("value")))
-          .withColumn("d", AvroCodec.decode(Envelope.slicePayload("value"),
-            CdcStream.txMutationSchemaJson, st))
+          .withColumn("d", Envelope.open(col("value"),
+            backing.versionsOf("generic_txmutation"),
+            CdcStream.txMutationSchemaJson, st, lenient = false))
           .select(col("sid"), col("d.pk").as("pk"),
             col("d.payload").as("payload"))
           .collect().map(r => r.getAs[String]("pk") -> r).toMap
@@ -143,24 +144,23 @@ class AlterEvolutionSpec extends SparkSpec {
     val v2st = StructType(Seq(StructField("id", StringType),
       StructField("name", StringType), StructField("email", StringType)))
 
-    val oldRec = Seq(("1", "alice")).toDF("id", "name")
-      .select(Envelope.frame(lit(1), lit(id1),
-        AvroCodec.encode(struct(col("id"), col("name")), v1))
-        .as("envelope"))
-    val newRec = Seq(("2", "bob", "bob@example.com"))
-      .toDF("id", "name", "email")
-      .select(Envelope.frame(lit(1), lit(id2),
-        AvroCodec.encode(struct(col("id"), col("name"), col("email")), v2))
-        .as("envelope"))
-    val stream = oldRec.unionByName(newRec)
-      .withColumn("sid", Envelope.sliceSchemaId(col("envelope")))
-      .withColumn("payload", Envelope.slicePayload("envelope"))
+    def rows(sid1: Int, sid2: Int) = {
+      val oldRec = Seq(("1", "alice")).toDF("id", "name")
+        .select(Envelope.seal(lit(1), lit(sid1),
+          struct(col("id"), col("name")), v1).as("envelope"))
+      val newRec = Seq(("2", "bob", "bob@example.com"))
+        .toDF("id", "name", "email")
+        .select(Envelope.seal(lit(1), lit(sid2),
+          struct(col("id"), col("name"), col("email")), v2).as("envelope"))
+      oldRec.unionByName(newRec)
+    }
+    val stream = rows(id1, id2)
 
     // consumer pinned to latest (v2): v1 rows surface email = NULL
     val versions = reg.versionsOf(subj)
-    val up = stream.select(col("sid"),
-      AvroCodec.decodeVersioned(col("payload"), col("sid"),
-        versions, v2, v2st).as("d"))
+    val up = stream.select(
+      Envelope.open(col("envelope"), versions, v2, v2st, lenient = false)
+        .as("d"))
       .select(col("d.id").as("id"), col("d.name").as("name"),
         col("d.email").as("email"))
       .orderBy("id").collect()
@@ -171,17 +171,17 @@ class AlterEvolutionSpec extends SparkSpec {
     // and the narrowing direction: a v1-pinned consumer skips the
     // writer's extra field instead of erroring
     val down = stream.select(
-      AvroCodec.decodeVersioned(col("payload"), col("sid"),
-        versions, v1, v1st).as("d"))
+      Envelope.open(col("envelope"), versions, v1, v1st, lenient = false)
+        .as("d"))
       .select(col("d.id").as("id"), col("d.name").as("name"))
       .orderBy("id").collect()
     assert(down.map(r => (r.getString(0), r.getString(1))).toSeq ===
       Seq(("1", "alice"), ("2", "bob")))
 
     // unknown id → NULL row (the skip-undecodable consumer contract)
-    val unknown = stream.select(
-      AvroCodec.decodeVersioned(col("payload"), lit(9999),
-        versions, v2, v2st).as("d")).collect()
+    val unknown = rows(9999, 9999).select(
+      Envelope.open(col("envelope"), versions, v2, v2st, lenient = false)
+        .as("d")).collect()
     assert(unknown.forall(_.isNullAt(0)))
   }
 
@@ -216,12 +216,11 @@ class AlterEvolutionSpec extends SparkSpec {
     // ALTER point is a position in the stream)
     def framed = input.toDF().toDF("k", "cust", "sid")
       .withColumn("envelope",
-        when(col("sid") === idV2, Envelope.frame(lit(1), col("sid"),
-          AvroCodec.encode(struct(col("k"),
-            col("cust").cast("int").as("cust")), v2)))
-        .otherwise(Envelope.frame(lit(1), col("sid"),
-          AvroCodec.encode(struct(col("k"),
-            col("cust").cast("long").as("cust")), custSchema("long")))))
+        when(col("sid") === idV2, Envelope.seal(lit(1), col("sid"),
+          struct(col("k"), col("cust").cast("int").as("cust")), v2))
+        .otherwise(Envelope.seal(lit(1), col("sid"),
+          struct(col("k"), col("cust").cast("long").as("cust")),
+          custSchema("long"))))
       .select("envelope")
     val q = framed.writeStream.format("memory").queryName("widen_pipe")
       .option("checkpointLocation", chk)
@@ -246,9 +245,8 @@ class AlterEvolutionSpec extends SparkSpec {
       val versions = reg.versionsOf(subj)
       val out = spark.table("widen_pipe")
         .withColumn("sid", Envelope.sliceSchemaId(col("envelope")))
-        .withColumn("d", AvroCodec.decodeVersioned(
-          Envelope.slicePayload("envelope"), col("sid"), versions,
-          v3, v3st))
+        .withColumn("d", Envelope.open(col("envelope"), versions, v3, v3st,
+          lenient = false))
         .select(col("sid"), col("d.k").as("k"), col("d.cust").as("cust"))
         .orderBy("k").collect()
       assert(out.map(_.getAs[Long]("k")).toSeq === Seq(10L, 11L))
@@ -266,9 +264,8 @@ class AlterEvolutionSpec extends SparkSpec {
       val narrowed = spark.table("widen_pipe")
         .withColumn("sid", Envelope.sliceSchemaId(col("envelope")))
         .filter(col("sid") === idV3)
-        .select(AvroCodec.decodeVersioned(
-          Envelope.slicePayload("envelope"), col("sid"),
-          Seq(idV3 -> v3), v2, v2st, lenient = true).as("d"))
+        .select(Envelope.open(col("envelope"), Seq(idV3 -> v3), v2, v2st,
+          lenient = true).as("d"))
         .collect()
       assert(narrowed.nonEmpty && narrowed.forall(_.isNullAt(0)),
         "long -> int narrowing must skip, never truncate")

@@ -84,6 +84,35 @@ class BenchSpec extends SparkSpec {
       report.queries.map(q => q.name -> q.best).toMap)
   }
 
+  test("reference: times come only from the file this run writes, so a " +
+    "reference of another core count or scale triggers no reruns") {
+    val dir = tempDir("benchref")
+    def put(file: String, cpus: Int) =
+      java.nio.file.Files.writeString(dir.resolve(file), Json.render(
+        Json.obj("cpus" -> JInt(cpus), "sf" -> JString("/data/sf0.1"),
+          "queries" -> Json.obj("slow" -> JDouble(0.1)))))
+    put("BENCH_LAST.json", 32)
+    val (file, none) = Bench.reference(dir, 4, "/data/sf0.1")
+    assert(file === "BENCH_LAST_c4_sf0.1.json")
+    assert(none.isEmpty, "a 32-core reference is no reference at 4 cores")
+    put(file, 4)
+    val (same, times) = Bench.reference(dir, 4, "/data/sf0.1")
+    assert(same === file && times === Map("slow" -> 0.1))
+    assert(Bench.reference(dir, 32, "/data/sf0.1") ===
+      (("BENCH_LAST.json", Map("slow" -> 0.1))))
+
+    val tracer = new Bench.Tracer(spark.sparkContext)
+    try {
+      def slow = { Thread.sleep(600); spark.range(1).toDF() }
+      val unjudged = Bench.measure(spark, tracer, "slow", slow,
+        none.get("slow"))
+      assert(unjudged.reruns === 0 && !unjudged.noiseSuspect)
+      val judged = Bench.measure(spark, tracer, "slow", slow,
+        times.get("slow"))
+      assert(judged.reruns === 2 && judged.noiseSuspect)
+    } finally tracer.close()
+  }
+
   test("trace: jobs run during construction count as build jobs, and " +
     "the phases make up the wall") {
     val tracer = new Bench.Tracer(spark.sparkContext)

@@ -135,7 +135,7 @@ class EnvelopeSpec extends SparkSpec {
       Envelope.sliceMagic(col("envelope")).as("m"),
       Envelope.sliceMtype(col("envelope")).as("t"),
       Envelope.sliceSchemaId(col("envelope")).as("s"),
-      Envelope.slicePayload("envelope").as("p")).collect().head
+      Envelope.slicePayload(col("envelope")).as("p")).collect().head
     assert(r.getInt(0) === 0 && r.getInt(1) === 3 && r.getInt(2) === 770)
     assert(r.getAs[Array[Byte]]("p").toSeq === Seq[Byte](1, 2, 3, 4))
   }
@@ -185,6 +185,66 @@ class EnvelopeSpec extends SparkSpec {
     val decoded = Envelope.deserialize(mixed, reg)
     assert(decoded.count() === 3, "only the decodable rows survive")
     assert(decoded.filter(col("decoded").isNull).count() === 0)
+  }
+
+  test("open: an empty version list decodes nothing; deserialize drops " +
+    "every row") {
+    val reg = new SchemaRegistry
+    val enveloped = Envelope.serialize(
+      ChangeFeed.fromEvents(spark, sf).limit(3), reg)
+    val opened = enveloped.select(Envelope.open(col("envelope"), Nil,
+      Envelope.genericSchemaV1, Envelope.genericStructV1,
+      lenient = false).as("d"))
+    assert(opened.count() === 3)
+    assert(opened.filter(col("d").isNotNull).count() === 0)
+    // a consumer whose registry knows no generic version skips every
+    // frame, as it skips any frame under an id it does not know
+    assert(Envelope.deserialize(enveloped, new SchemaRegistry).count() === 0)
+    assert(Envelope.deserialize(enveloped, reg).count() === 3)
+  }
+
+  test("open: a strict open gives NULL for truncated and wrong-magic " +
+    "frames instead of decoding their bytes") {
+    val reg = new SchemaRegistry
+    val good = Envelope.serialize(
+      ChangeFeed.fromEvents(spark, sf).limit(3), reg)
+      .select("envelope")
+    val versions = Envelope.GenericOps
+      .flatMap(op => reg.versionsOf(AvroSubjects.generic(op)))
+    val bad = good
+      .select(explode(array(
+        substring(col("envelope"), 1, 4), // header only
+        substring(col("envelope"), 1, 2), // header cut short
+        concat(lit(Array[Byte](9)), // wrong magic, intact rest
+          substring(col("envelope"), 2, 1 << 20)))).as("envelope"))
+    assert(bad.count() === 9)
+    val opened = good.unionByName(bad).select(
+      Envelope.open(col("envelope"), versions, Envelope.genericSchemaV1,
+        Envelope.genericStructV1, lenient = false).as("d"))
+      .collect()
+    assert(opened.count(!_.isNullAt(0)) === 3, "the sealed frames decode")
+    assert(opened.count(_.isNullAt(0)) === 9, "the ill-formed ones do not")
+  }
+
+  test("open: one decode branch per distinct writer schema") {
+    val reg = new SchemaRegistry
+    Envelope.GenericOps.foreach(op =>
+      reg.register(AvroSubjects.generic(op), Envelope.genericSchemaV1))
+    val v2 = Envelope.genericSchemaV1.replace(
+      "\"name\":\"pk\"", "\"name\":\"pk2\"")
+    reg.register(AvroSubjects.generic("insert"), v2)
+    val versions = Envelope.GenericOps
+      .flatMap(op => reg.versionsOf(AvroSubjects.generic(op)))
+    assert(versions.size === 4 && versions.map(_._2).distinct.size === 2)
+    val opened = Envelope.open(col("envelope"), versions,
+      Envelope.genericSchemaV1, Envelope.genericStructV1, lenient = true)
+    val plan = spark.range(1).select(lit(Array[Byte]()).as("envelope"))
+      .select(opened).queryExecution.analyzed
+    val decodes = plan.expressions.flatMap(_.collect {
+      case d: graft.functions.AvroDecodeExpr => d })
+    assert(decodes.size === 2)
+    assert(decodes.map(d => Option(d.writerSchemaJson)).toSet ===
+      Set(None, Some(v2)), "the reader's own schema decodes unresolved")
   }
 
   test("end-to-end envelope roundtrip matches the source feed") {

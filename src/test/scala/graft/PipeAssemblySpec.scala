@@ -82,14 +82,17 @@ class PipeAssemblySpec extends SparkSpec {
     val sparkS = spark
     import sparkS.implicits._
     import graft.avro.SchemaRegistry
-    import graft.functions.{AvroCodec, Envelope}
+    import graft.functions.Envelope
     import graft.streaming.{CdcStream, TxPipeline}
     import org.apache.spark.sql.types._
     val registry = new SchemaRegistry
     val ms = Seq(
       TxPipeline.TxMutation(1, 2, "tx-1-1", "insert", "a", 77,
         Map("value" -> "x")),
-      TxPipeline.TxMutation(3, 5, "tx-3-5", "delete", "keep", 8, Map()))
+      TxPipeline.TxMutation(2, 3, "tx-2-3", "update", "b", 9,
+        Map("value" -> "y")),
+      TxPipeline.TxMutation(3, 5, "tx-3-5", "delete", "keep", 8, Map()),
+      TxPipeline.TxMutation(4, 6, "tx-4-6", "", "c", 10, Map()))
       .toDS()
     val frame = CdcStream.kafkaFrame(ms, registry,
       "changelog_${conn}_generic")
@@ -97,10 +100,9 @@ class PipeAssemblySpec extends SparkSpec {
     assert(frame.schema.fieldNames.toSeq === Seq("topic", "key", "value"))
     assert(frame.schema("value").dataType === BinaryType)
     val rows = frame.orderBy("topic").collect()
-    assert(rows.map(_.getString(0)).toSeq ===
-      Seq("changelog_1_generic", "changelog_3_generic"),
-      "topic template substitutes column values")
-    assert(rows.map(_.getString(1)).toSeq === Seq("a", "keep"))
+    assert(rows.map(_.getString(0)).toSeq === (1 to 4).map(c =>
+      s"changelog_${c}_generic"), "topic template substitutes column values")
+    assert(rows.map(_.getString(1)).toSeq === Seq("a", "b", "keep", "c"))
     // value frame: MAGIC|MTYPE|SCHEMA_ID decode + Avro payload roundtrip
     val schemaId = registry
       .idOf("generic_txmutation", CdcStream.txMutationSchemaJson).get
@@ -112,13 +114,15 @@ class PipeAssemblySpec extends SparkSpec {
     val decoded = frame
       .withColumn("mtype", Envelope.sliceMtype(col("value")))
       .withColumn("sid", Envelope.sliceSchemaId(col("value")))
-      .withColumn("d", AvroCodec.decode(Envelope.slicePayload("value"),
-        CdcStream.txMutationSchemaJson, st))
+      .withColumn("d", Envelope.open(col("value"),
+        Seq(schemaId -> CdcStream.txMutationSchemaJson),
+        CdcStream.txMutationSchemaJson, st, lenient = false))
       .select("mtype", "sid", "d.pk", "d.commitTsUs", "d.op")
       .orderBy("pk").collect()
-    assert(decoded.map(_.getInt(0)).toSeq === Seq(1, 3), "insert=1 delete=3")
+    assert(decoded.map(_.getInt(0)).toSeq === Seq(1, 2, 0, 3),
+      "insert=1 update=2 delete=3, any other op 0")
     assert(decoded.forall(_.getInt(1) == schemaId))
-    assert(decoded.map(_.getLong(3)).toSeq === Seq(77L, 8L))
+    assert(decoded.map(_.getLong(3)).toSeq === Seq(77L, 9L, 10L, 8L))
     // and the assembled writer is a kafka-format DataStreamWriter
     val log = tempFile("kpipe", ".tsv")
     Files.write(log, ChangeLogSource.renderLine(1, 1, "mutation",
