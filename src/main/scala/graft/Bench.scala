@@ -343,20 +343,13 @@ object Bench {
       // micro-batch latency probe FIRST, BEFORE the 10× backlog drain
       // (VERDICT r14 item 2 tail): it measures per-batch trigger
       // latency on a 1× log under capped admission — the steady-state
-      // tailing shape — and running it AFTER the big drain let that
-      // leg's 32 still-loaded RocksDB stores (and their background
-      // maintenance snapshots) pollute the probe's batches (r14: p50
-      // 763 ms vs r13's 303 at IDENTICAL batch count/size, commit_p50
-      // flat — interference, not state cost). A tail-follow consumer
-      // sizes its state to per-trigger volume: every micro-batch pays
-      // load + commit per state partition, so the probe runs 4-way
-      // state (FRONTIER.json has the grid). Its own try: a probe
-      // failure must not discard the throughput numbers measured
-      // below. The regime field says what the distribution describes.
+      // tailing shape — on a quiet JVM. Its own try: a probe failure
+      // must not discard the throughput numbers measured below. The
+      // regime field says what the distribution describes.
       val probe = try {
         streaming.ReplayBench.generateLog(spark, sfDir, s"$work/log1x")
         Some(streaming.ReplayBench.drain(spark, s"$work/log1x",
-          s"$work/latency", cap = 4096, statePartitions = Some(4)))
+          s"$work/latency", cap = 4096))
       } catch {
         case e: Throwable =>
           System.err.println(s"[bench] latency probe failed: ${e.getMessage}")
@@ -364,15 +357,10 @@ object Bench {
       }
       // median of 3 drains over one generated log (VERDICT r12
       // item 1, superseding r9's best-of-2): the reported number is
-      // the MEDIAN attempt, and every attempt ships its own wall /
-      // steal / state-commit triple so a steal-inflated driver round
-      // is self-describing — a real state-store regression shows up
-      // in state_commit_ms across all attempts, a steal spike shows
-      // up in one attempt's steal_sec
-      // 10× backlog (VERDICT r13 item 3): a ~2 s drain measured
-      // RocksDB commit file-sync variance (16.7 s vs 0.3 s across
-      // otherwise-identical runs), not the pipe; at 10× the fixed
-      // per-commit costs amortize to a few percent
+      // the MEDIAN attempt, and every attempt ships its own wall and
+      // steal so a steal-inflated driver round is self-describing.
+      // 10× backlog (VERDICT r13 item 3): at 10× the fixed per-query
+      // costs amortize to a few percent
       val backlogCopies = 10
       val rSteal0 = HostSteal.jiffies()
       val lines = streaming.ReplayBench.generateLog(
@@ -386,25 +374,17 @@ object Bench {
       // events_per_sec = LOG LINES/s (incl. begin/commit markers —
       // the source-side drain rate); mutations_per_sec = sink rows/s,
       // the marker-fraction-independent number to regress on.
-      // rocksdb: commit/load-path totals of the MEDIAN attempt (ms;
-      // rocksdbSstFileSize = state-on-disk bytes summed over batches)
       (obj("events" -> lines, "backlog_copies" -> backlogCopies,
         "mutations_out" -> med.out, "sec" -> fixed(med.sec, 3),
         "events_per_sec" -> fixed(lines / med.sec, 0),
         "mutations_per_sec" -> fixed(med.out / med.sec, 0),
-        "state_commit_ms" -> med.commitMs,
         "attempts" -> JArray(attempts.map(a => obj("sec" -> fixed(a.sec, 3),
-          "steal_sec" -> fixed(a.stealSec, 2),
-          "state_commit_ms" -> a.commitMs)).toList),
-        "rocksdb" -> nonEmpty(obj(med.rocksdb.toSeq.sorted
-          .map { case (k, v) => k -> JLong(v) }: _*)),
+          "steal_sec" -> fixed(a.stealSec, 2))).toList),
         "batches" -> probe.fold[JValue](JNothing)(_.batches.size),
         "batch_latency_ms" -> probe.fold[JValue](JNothing)(l => obj(
           "regime" -> "capped_admission_1x_backlog",
           "p50" -> fixed(l.trigger(0.5), 0), "p95" -> fixed(l.trigger(0.95), 0),
-          "max" -> fixed(l.trigger(1), 0),
-          "commit_p50" -> fixed(l.commit(0.5), 0),
-          "commit_p95" -> fixed(l.commit(0.95), 0)))), rSteal)
+          "max" -> fixed(l.trigger(1), 0)))), rSteal)
     } catch {
       case e: Throwable =>
         System.err.println(s"[bench] stream_replay failed: ${e.getMessage}")
@@ -637,12 +617,12 @@ object Bench {
   val StdoutBudget = 4000
 
   /** The fields of a leg's full object that ride the stdout line, plus
-    * `attempts_n` when it has an `attempts` array: no attempts arrays,
-    * rocksdb map or latency histogram (VERDICT r16 item 2: in noisy
+    * `attempts_n` when it has an `attempts` array: no attempts arrays
+    * or latency histogram (VERDICT r16 item 2: in noisy
     * windows those grew unbounded and evicted every per-query entry). */
   private val StdoutLegKeys = Map(
     "stream_replay" -> Seq("events", "sec", "events_per_sec",
-      "mutations_per_sec", "state_commit_ms"),
+      "mutations_per_sec"),
     "concurrent" -> Seq("threads", "queries", "failed", "wall_sec",
       "speedup_vs_serial", "inflation_p95", "first_touch_p95", "steal_sec",
       "noise_suspect"))

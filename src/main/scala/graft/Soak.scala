@@ -9,62 +9,49 @@ import streaming.ReplayBench.percentile
 
 /** Streaming soak harness (VERDICT r12 item 8): one CONTINUOUS
   * capped-admission [[streaming.ReplayBench.drain]] of a multi-copy
-  * backlog through the full CDC pipe — ChangeLogSource →
-  * transformWithState tx grouping on the RocksDB provider →
-  * checkpointed parquet sink — long enough
-  * (≥ 100 micro-batches; minutes of wall clock) that state-store
-  * compaction and changelog-checkpoint behavior, which never shows in
-  * a 35-batch run, is exercised. One streaming query: state lives
-  * across every batch exactly as in a day-long tail-follow consumer;
-  * only the trigger cadence differs, which does not change state
-  * dynamics.
+  * backlog through the full CDC pipe — ChangeLogSource (tx grouping in
+  * the reader) → checkpointed parquet sink — long enough (≥ 100
+  * micro-batches; minutes of wall clock) that per-batch costs which
+  * grow with the processed volume (offset and commit logs, the
+  * driver's line index, the sink's file listing) show as a climb. One
+  * streaming query, exactly as in a day-long tail-follow consumer;
+  * only the trigger cadence differs.
   *
-  * Asserted/reported invariants, written to SOAK.json:
+  * Asserted/reported invariant, written to SOAK.json:
   *  - FLAT LATENCY: second-half p50 within 1.3× of first-half p50
-  *    (a leaking state store shows as a monotone climb), plus the
-  *    per-quarter p50 trend for the artifact. Judged only over at
-  *    least [[Soak.MinBatches]] batches: a shorter drain writes
-  *    `"flat_p50_ok":null` and exits 1 ("too few batches"), and a
-  *    quarter with no batches is `null`, never a measured 0 ms.
-  *  - BOUNDED STATE DISK: `rocksdbSstFileSize` at the last batch
-  *    within max(4× first-half median, 8 MB) — tx-grouping state is
-  *    transient (buffers clear on commit), so SST size must plateau,
-  *    not track the processed volume. Judged over the same
-  *    [[Soak.MinBatches]] floor: a shorter drain writes
-  *    `"sst_bounded_ok":null`.
+  *    (a per-batch cost tracking the volume shows as a monotone
+  *    climb), plus the per-quarter p50 trend for the artifact. Judged
+  *    only over at least [[Soak.MinBatches]] batches: a shorter drain
+  *    writes `"flat_p50_ok":null` and exits 1 ("too few batches"),
+  *    and a quarter with no batches is `null`, never a measured 0 ms.
   *
   * `sbt "runMain graft.Soak [copies] [cap]"` over
   * `SPARK_GRAFT_SF_DIR` (default sf0.1; copies=4, cap=4096 ⇒ ~310
-  * non-empty batches, ~3-6 min). */
+  * batches, ~3-6 min). */
 object Soak {
 
-  /** Fewest batches either check judges: four per half, so a half's
-    * p50 (or SST median) is never one batch's value. */
+  /** Fewest batches the check judges: four per half, so a half's p50
+    * is never one batch's value. */
   val MinBatches = 8
 
   /** Digest of one drain: trigger-latency p50 per quarter and per half
-    * (None where no batch falls), the SST figures and both verdicts
-    * (None under [[MinBatches]] batches). */
+    * (None where no batch falls) and the verdict (None under
+    * [[MinBatches]] batches). */
   case class Digest(quarters: Seq[Option[Double]],
       firstHalf: Option[Double], secondHalf: Option[Double],
-      flatOk: Option[Boolean], sstFirstHalfMedian: Double, sstMax: Long,
-      sstLast: Long, sstOk: Option[Boolean])
+      flatOk: Option[Boolean])
 
-  /** `triggerMs` and `sstBytes` hold one entry per batch. */
-  def digest(triggerMs: Seq[Long], sstBytes: Seq[Long]): Digest = {
+  /** `triggerMs` holds one entry per batch. */
+  def digest(triggerMs: Seq[Long]): Digest = {
     val n = triggerMs.length
     def p50(xs: Seq[Long]) =
       if (xs.isEmpty) None else Some(percentile(xs, 0.5))
     val (h1, h2) = triggerMs.splitAt(n / 2)
     val (h1P50, h2P50) = (p50(h1), p50(h2))
-    val sstH1Med = percentile(sstBytes.take(n / 2), 0.5)
-    val sstLast = sstBytes.lastOption.getOrElse(0L)
-    val judged = n >= MinBatches
     Digest(
       (0 until 4).map(i => p50(triggerMs.slice(i * n / 4, (i + 1) * n / 4))),
-      h1P50, h2P50, Option.when(judged)(h2P50.get <= 1.3 * h1P50.get),
-      sstH1Med, sstBytes.maxOption.getOrElse(0L), sstLast,
-      Option.when(judged)(sstLast <= math.max(4.0 * sstH1Med, 8e6)))
+      h1P50, h2P50,
+      Option.when(n >= MinBatches)(h2P50.get <= 1.3 * h1P50.get))
   }
 
   def main(args: Array[String]): Unit = {
@@ -79,14 +66,10 @@ object Soak {
     val (lines, d) = try {
       val lines = streaming.ReplayBench.generateLog(
         spark, sfDir, s"$work/log", copies = copies)
-      // steady-tailing state width (the low-latency profile's
-      // derivation: every micro-batch pays load+commit per state
-      // partition)
       (lines, streaming.ReplayBench.drain(spark, s"$work/log",
-        s"$work/sink", cap, statePartitions = Some(4)))
+        s"$work/sink", cap))
     } finally fs.delete(new Path(work), true)
-    val g = digest(d.batches.map(_.triggerMs),
-      d.batches.map(_.custom.getOrElse("rocksdbSstFileSize", 0L)))
+    val g = digest(d.batches.map(_.triggerMs))
     val n = d.batches.size
     def ms(p: Option[Double]) = p.fold[JValue](JNull)(Json.fixed(_, 0))
     def ok(v: Option[Boolean]) = v.fold[JValue](JNull)(JBool(_))
@@ -97,11 +80,7 @@ object Soak {
       "p50_ms_second_half" -> ms(g.secondHalf),
       "p50_ms_quarters" -> JArray(g.quarters.map(ms).toList),
       "p95_ms" -> Json.fixed(d.trigger(0.95), 0),
-      "commit_p50_ms" -> Json.fixed(d.commit(0.5), 0),
-      "sst_bytes" -> Json.obj(
-        "first_half_median" -> Json.fixed(g.sstFirstHalfMedian, 0),
-        "max" -> g.sstMax, "last" -> g.sstLast),
-      "flat_p50_ok" -> ok(g.flatOk), "sst_bounded_ok" -> ok(g.sstOk))
+      "flat_p50_ok" -> ok(g.flatOk))
     println()
     println(Json.render(json))
     Json.write("SOAK.json", json)
@@ -111,6 +90,6 @@ object Soak {
         s"$n < $MinBatches")
       sys.exit(1)
     }
-    if (g.flatOk.contains(false) || g.sstOk.contains(false)) sys.exit(1)
+    if (g.flatOk.contains(false)) sys.exit(1)
   }
 }

@@ -139,7 +139,7 @@ object TxOps extends QueryModule {
     * one row per transaction carrying the full mutation list in a
     * deterministic order. The list rides as a canonical string
     * (sorted "seq:op" entries) so the oracle compares it exactly;
-    * the streaming equivalent is `TxPipeline.groupByTransactionBatched`. */
+    * the streaming equivalent is `TxPipeline.batched`. */
   def t12TxBatch(spark: SparkSession, dir: String): DataFrame =
     withTx(ChangeFeed.fromEvents(spark, dir))
       .withColumn("entry", concat_ws(":",

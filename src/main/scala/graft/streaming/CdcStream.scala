@@ -8,22 +8,19 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
-import java.util.concurrent.atomic.AtomicLong
-
-/** Streaming pipe assembly: source → tx-group → sink, with the
+/** Streaming pipe sinks: committed mutations → sink, with the
   * reference's positioning and flush semantics mapped onto Structured
   * Streaming (SURVEY.md §2.4 T5–T9, §3.1).
   *
   *  - T5/T6 position repo → `checkpointLocation` (offsets+commits on any
   *    Hadoop FS); the reference's "don't save position mid-tx" rule is
-  *    subsumed by state-store checkpointing of open buffers.
+  *    the committed-only source re-reading an open transaction from its
+  *    BEGIN.
   *  - T8 periodic flush (`flush-interval-seconds = 10`, reference
   *    Pipe.scala:56-59) → `Trigger.ProcessingTime("10 seconds")`.
   *  - T9 snapshot→stream handoff (reference MySQLSnapshotter.scala:
   *    245-247) → batch-write the snapshot, record the boundary position,
   *    stream only changes past it into the same sink.
-  *  - E1 error layers (reference binaryLogConsumerTraits.scala:89-137)
-  *    → foreachBatch try/catch with a continue/abort policy + counters.
   */
 object CdcStream {
 
@@ -109,43 +106,10 @@ object CdcStream {
       .outputMode("append")
       .trigger(trigger)
 
-  /** Error-policy counters (quit-on-* analog, reference
-    * reference.conf:31-53): continue past bad batches unless
-    * `quitOnError`, counting failures for observability. */
-  final class ErrorPolicy(val quitOnError: Boolean = false) extends Serializable {
-    val failed = new AtomicLong(0)
-    val succeeded = new AtomicLong(0)
-  }
-
-  /** foreachBatch sink with the 3-layer error handling collapsed to its
-    * Spark shape: per-batch try/catch → count & continue, or rethrow to
-    * fail the query (reference's quit-on-event-handler-failure). */
-  def toGuardedSink(mutations: Dataset[TxMutation], policy: ErrorPolicy,
-      checkpointDir: String, trigger: Trigger = DefaultTrigger)(
-      write: (Dataset[TxMutation], Long) => Unit): StreamingQuery =
-    mutations.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(trigger)
-      .foreachBatch { (batch: Dataset[TxMutation], id: Long) =>
-        try { write(batch, id); policy.succeeded.incrementAndGet(); () }
-        catch {
-          case e: Throwable =>
-            policy.failed.incrementAndGet()
-            if (policy.quitOnError) throw e
-            // continue-past-error must still EXECUTE the batch: with a
-            // stateful upstream, skipping it would leave the state
-            // store uncommitted and fail commit validation — this is
-            // the dead-letter drain
-            try { batch.count(); () } catch { case _: Throwable => }
-        }
-      }
-      .start()
-
   /** T9 snapshot→stream handoff: bulk-write the snapshot, capture the
     * boundary position (max change-stream position at snapshot time ≙
-    * `SHOW MASTER STATUS`), and return the predicate the live stream
-    * must apply so replay starts exactly after the snapshot. */
+    * `SHOW MASTER STATUS`), and return it: the live stream resumes
+    * with positions strictly past it (`seq > boundary`). */
   def snapshotBoundary(snapshot: DataFrame, sinkDir: String,
       positionCol: String): Long = {
     snapshot.write.mode("overwrite").parquet(sinkDir)
@@ -167,12 +131,6 @@ object CdcStream {
     repo.save(consumerId, BinlogPosition(logName, math.max(boundary, 0L)))
     boundary
   }
-
-  /** Resume-after-snapshot filter for the live feed (startingOffsets
-    * analog): only positions strictly past the boundary flow. */
-  def resumeAfter(changes: Dataset[TxMutation], boundary: Long)
-      : Dataset[TxMutation] =
-    changes.filter(_.seq > boundary)
 
   /** Full T9 handoff with the boundary made durable: snapshot → sink,
     * boundary position → the [[PositionRepository]] (reference

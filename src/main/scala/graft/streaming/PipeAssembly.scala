@@ -1,13 +1,13 @@
 package graft.streaming
 
 import graft.sources.ChangeLogSourceProvider
-import graft.streaming.TxPipeline.ChangeEvent
+import graft.streaming.TxPipeline.TxMutation
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Config-driven pipe assembly (SURVEY.md §2.6 E2, §3.1): the
-  * reference's `PipeRunner` wires consumer → filter → tx-grouping →
+  * reference's `PipeRunner` wires consumer → tx-grouping → filter →
   * producer from Typesafe config via reflection
   * (`PipeRunner.scala:17-56,62-187`). The Spark shape is a declarative
   * builder over a plain key→value map — no reflection (a documented
@@ -17,7 +17,14 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * Recognized keys:
   *   source.path               change-log file (ChangeLogSource TSV)
   *   source.maxLinesPerTrigger admission cap per micro-batch
-  *   filter.condition          SQL predicate on the event columns (F1)
+  *   filter.condition          SQL predicate on each COMMITTED
+  *                             mutation (F1): the TxMutation columns
+  *                             plus the event names `kind` (always
+  *                             'mutation'), `ts_us` (the commit
+  *                             timestamp) and `value` (the payload
+  *                             value). Grouping runs first: the
+  *                             predicate never sees a BEGIN or COMMIT,
+  *                             so it cannot split a transaction
   *   filter.scalaCondition     Scala source for a `(conn: Long,
   *                             kind: String, op: String, pk: String)
   *                             => Boolean` — the reference's compiled
@@ -27,8 +34,13 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *                             once per JVM via [[graft.util.Eval]]
   *                             and applied AFTER the SQL filter (SQL
   *                             stays the pushdown-visible path; this
-  *                             hook covers conditions SQL can't say)
-  *   tx.timeoutMs              abandoned-transaction discard timeout
+  *                             hook covers conditions SQL can't say);
+  *                             `kind` is always "mutation"
+  *   tx.maxOpenLines           abandoned-transaction bound in log
+  *                             lines: a transaction whose COMMIT is
+  *                             more than this many lines after its
+  *                             BEGIN is discarded (default unbounded,
+  *                             the reference's wait-forever)
   *   sink.format               parquet | console | kafka | materialize
   *                             (materialize = latest-image upsert
   *                             journal via StreamOps.latestImagesOf)
@@ -45,7 +57,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *                             (explicit keys still win)
   *   session.shufflePartitions shuffle/state partition count of this
   *                             pipe's query only (the shared session
-  *                             keeps its own value)
+  *                             keeps its own value); only the
+  *                             `materialize` sink has state or a
+  *                             shuffle to size
   *   sink.kafkaAsyncProgress   `true` → asyncProgressTrackingEnabled on
   *                             the kafka writer (non-exactly-once)
   */
@@ -54,7 +68,7 @@ object PipeAssembly {
   val Defaults: Map[String, String] = Map(
     "source.maxLinesPerTrigger" -> Long.MaxValue.toString,
     "filter.condition" -> "true",
-    "tx.timeoutMs" -> "0",
+    "tx.maxOpenLines" -> Long.MaxValue.toString,
     "sink.format" -> "parquet",
     "sink.triggerSeconds" -> "10",
     "sink.topicTemplate" -> "changelog_${conn}_generic",
@@ -62,22 +76,18 @@ object PipeAssembly {
 
   /** `profile = low-latency`: the measured latency frontier packaged
     * as config, for tail-follow consumers where trigger-to-commit
-    * beats throughput. Re-derived on the RocksDB + changelog-
-    * checkpointing state store (FRONTIER.json; the pre-migration
-    * HDFS-provider frontier in SURVEY §16 motivated 4 partitions ×
-    * 4096): per-batch state-commit cost is now ~30 ms PER state
-    * partition (changelog deltas, not full snapshots), so the p50
-    * floor keeps falling below 4-way state — the 12-cell grid
-    * measured 2 partitions × 2048-line cap at p50 273 ms / p95 324
-    * vs 306/375 for the old 4×4096 cell. 2 keeps a parallel state
-    * path (1 partition measured ~the same p50 but serializes
-    * recovery and all keyed work); 2048 halves per-trigger admission
-    * latency for a tailing consumer. Zero trigger interval (next
-    * batch fires immediately), async progress tracking on the KAFKA
-    * sink only (takes offset/commit WAL writes off the critical
-    * path; Spark forbids it for the durable parquet path and
-    * stateful-only sinks, which keep synchronous exactly-once
-    * offsets). Explicit config keys win over profile values. */
+    * beats throughput. The 2048-line cap halves per-trigger admission
+    * latency against the 4096 cell of the frontier grid
+    * (FRONTIER.json, measured when tx grouping still ran on a
+    * RocksDB state store: 2 partitions × 2048 lines at p50 273 ms /
+    * p95 324 vs 306/375 for 4 × 4096). The 2-way state width now
+    * sizes only the `materialize` sink's latest-image state; the tx
+    * pipe itself has none. Zero trigger interval (next batch fires
+    * immediately), async progress tracking on the KAFKA sink only
+    * (takes offset/commit WAL writes off the critical path; Spark
+    * forbids it for the durable parquet path, which keeps synchronous
+    * exactly-once offsets). Explicit config keys win over profile
+    * values. */
   val LowLatencyProfile: Map[String, String] = Map(
     "source.maxLinesPerTrigger" -> "2048",
     "sink.triggerSeconds" -> "0",
@@ -87,6 +97,8 @@ object PipeAssembly {
   /** Defaults ++ named profile ++ explicit config (rightmost wins). */
   def effectiveConfig(config: Map[String, String])
       : Map[String, String] = {
+    require(!config.contains("tx.timeoutMs"), "tx.timeoutMs is gone: " +
+      "abandoned transactions are bounded in log lines by tx.maxOpenLines")
     val prof = config.get("profile") match {
       case Some("low-latency") => LowLatencyProfile
       case Some(other) =>
@@ -97,23 +109,43 @@ object PipeAssembly {
     Defaults ++ prof ++ config
   }
 
+  /** The source's committed, tx-stamped mutations for a config:
+    * [[graft.sources.ChangeLogSource]] groups transactions in its
+    * reader, so no state store or shuffle stands between the log and
+    * a sink. */
   def events(spark: SparkSession, config: Map[String, String])
-      : Dataset[ChangeEvent] = {
+      : Dataset[TxMutation] = {
     val conf = effectiveConfig(config)
-    import TxPipeline.eventEnc
-    val base = spark.readStream
+    import TxPipeline.mutationEnc
+    spark.readStream
       .format(classOf[ChangeLogSourceProvider].getName)
       .option("path", conf("source.path"))
       .option("maxLinesPerTrigger", conf("source.maxLinesPerTrigger"))
+      .option("maxOpenLines", conf("tx.maxOpenLines"))
       .load()
+      .as[TxMutation]
+  }
+
+  /** The event-column names a `filter.condition` may still use. */
+  private val EventColumns = Map(
+    "kind" -> lit("mutation"), "ts_us" -> col("commitTsUs"),
+    "value" -> col("payload").getItem("value"))
+
+  /** The committed mutation stream for a config, after its filters
+    * (shared by every sink format). A NULL op or pk reaches the sinks
+    * as an empty string. */
+  def mutations(spark: SparkSession, config: Map[String, String])
+      : Dataset[TxMutation] = {
+    val conf = effectiveConfig(config)
+    import TxPipeline.mutationEnc
+    val base = events(spark, config).toDF()
+      .withColumns(EventColumns)
       .filter(expr(conf("filter.condition")))
-      .select(col("conn"), col("seq"), col("kind"),
+      .select(col("conn"), col("seq"), col("txid"),
         coalesce(col("op"), lit("")).as("op"),
         coalesce(col("pk"), lit("")).as("pk"),
-        coalesce(col("ts_us"), lit(0L)).as("tsUs"),
-        when(col("value").isNotNull, map(lit("value"), col("value")))
-          .otherwise(map().cast("map<string,string>")).as("payload"))
-      .as[ChangeEvent]
+        col("commitTsUs"), col("payload"))
+      .as[TxMutation]
     conf.get("filter.scalaCondition") match {
       case None => base
       case Some(src) =>
@@ -131,19 +163,10 @@ object PipeAssembly {
         // Eval.compiled's cache — a ToolBox closure itself would not
         // survive serialization (class bytes live in the driver's
         // in-memory loader)
-        base.filter(e =>
+        base.filter(m =>
           graft.util.Eval.compiled[(Long, String, String, String)
-            => Boolean](src)(e.conn, e.kind, e.op, e.pk))
+            => Boolean](src)(m.conn, "mutation", m.op, m.pk))
     }
-  }
-
-  /** The tx-grouped mutation stream for a config (shared by every sink
-    * format). */
-  def mutations(spark: SparkSession, config: Map[String, String])
-      : org.apache.spark.sql.Dataset[TxPipeline.TxMutation] = {
-    val conf = effectiveConfig(config)
-    TxPipeline.groupByTransaction(
-      events(spark, config), conf("tx.timeoutMs").toLong)
   }
 
   private def trigger(conf: Map[String, String],
@@ -174,17 +197,18 @@ object PipeAssembly {
     else w
   }
 
-  /** Assemble and start the full pipe: source → skip-filter → tx-group
-    * → checkpointed sink, format-routed per `sink.format` (E2: the
-    * reference's producer plugin slot). */
+  /** Assemble and start the full pipe: committed-only source →
+    * skip-filter → checkpointed sink, format-routed per `sink.format`
+    * (E2: the reference's producer plugin slot). */
   def start(spark: SparkSession, config: Map[String, String],
       availableNow: Boolean = false,
       registry: graft.avro.SchemaRepo = new graft.avro.SchemaRegistry)
       : StreamingQuery = {
     val conf = effectiveConfig(config)
-    // state sizing must land BEFORE the query starts: the stateful
-    // operator's partition count pins at the first batch and lives in
-    // the checkpoint from then on. A streaming query runs on a clone
+    // state sizing (the materialize sink's latest-image state) must
+    // land BEFORE the query starts: the stateful operator's partition
+    // count pins at the first batch and lives in the checkpoint from
+    // then on. A streaming query runs on a clone
     // of the session taken when it is constructed
     // (`StreamExecution.sparkSessionForStream`), so the value is set
     // only around construction and the shared session gets its
@@ -270,9 +294,9 @@ object PipeAssembly {
     *
     * `session.shufflePartitions` sets the state width of its own
     * pipe's query only (stateful partitioning pins at first batch per
-    * checkpoint), so two pipes can run different state widths in one
-    * session and a pipe without the key runs with the session
-    * default. */
+    * checkpoint), so two `materialize` pipes can run different state
+    * widths in one session and a pipe without the key runs with the
+    * session default. */
   def startAll(spark: SparkSession,
       flat: Map[String, String],
       availableNow: Boolean = false,

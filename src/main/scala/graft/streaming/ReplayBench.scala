@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.Tables
-import graft.sources.ChangeLogSource
+import graft.sources.{ChangeLogOffset, ChangeLogSource}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
@@ -12,14 +12,14 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
 /** The one CDC drain every measurement tool runs (`Bench`'s
   * `stream_replay` leg, [[graft.Soak]], [[graft.LatencyFrontier]]):
   * the REAL pipe — [[ChangeLogSource]] DSv2 scan (rotated segments,
-  * sparse index) → [[TxPipeline]] tx grouping (BEGIN/COMMIT buffering,
-  * commit-ts rewrite, state store) → checkpointed parquet sink — over
+  * sparse index, [[TxPipeline]] tx grouping in the reader: BEGIN/COMMIT
+  * buffering, commit-ts rewrite) → checkpointed parquet sink — over
   * a multi-segment log generated from the events table, with
   * `Trigger.AvailableNow` (the catch-up-then-stop shape of a consumer
   * draining a binlog backlog). [[drain]] returns wall seconds, sink
-  * rows, host steal and one [[Batch]] per non-empty micro-batch; each
-  * tool digests those batches (events/s, trigger-latency and
-  * state-commit percentiles, state growth) with [[percentile]].
+  * rows, host steal and one [[Batch]] per micro-batch that read log
+  * lines; each tool digests those batches (events/s, trigger-latency
+  * percentiles) with [[percentile]].
   *
   * The log generator wraps each run of `txSize` consecutive events per
   * connection in BEGIN/COMMIT markers, so the replay exercises the
@@ -102,41 +102,20 @@ object ReplayBench {
     spark.read.text(logDir).count()
   }
 
-  /** The RocksDB provider's commit-path + load timing metrics (ms).
-    * `rocksdbSstFileSize` rides along as the state-on-disk size the
-    * soak bounds. */
-  val RocksdbKeys: Seq[String] = Seq(
-    "rocksdbCommitFlushLatency", "rocksdbCommitCompactLatency",
-    "rocksdbCommitCheckpointLatency", "rocksdbCommitFileSyncLatencyMs",
-    "rocksdbChangeLogWriterCommitLatencyMs", "rocksdbLoadLatencyMs",
-    "rocksdbWriterStallLatencyMs", "rocksdbSstFileSize")
-
-  /** One non-empty micro-batch: its `triggerExecution` duration
-    * (trigger begin through sink commit, incl. offset WAL + state
-    * store commit — the micro-batch analog of the reference's
-    * insert→consumer latency, `mypipe` LatencySpec.scala:169-172), and
-    * its state-store commit time and [[RocksdbKeys]] metrics, each
-    * summed over the batch's state operators. */
-  case class Batch(triggerMs: Long, commitMs: Long,
-      custom: Map[String, Long])
+  /** One micro-batch that read log lines: its `triggerExecution`
+    * duration (trigger begin through sink commit, incl. offset WAL —
+    * the micro-batch analog of the reference's insert→consumer
+    * latency, `mypipe` LatencySpec.scala:169-172). */
+  case class Batch(triggerMs: Long)
 
   /** One drain: wall seconds, sink rows, the window's hypervisor-steal
-    * seconds (a steal spike and a state-store regression look alike
-    * unless the drain carries both), and its non-empty batches in
-    * order. */
+    * seconds (a steal spike and a pipe regression look alike unless
+    * the drain carries both), and its batches in order. */
   case class Drain(sec: Double, out: Long, stealSec: Double,
       batches: Seq[Batch]) {
-    def commitMs: Long = batches.map(_.commitMs).sum
     /** Nearest-rank percentile of the per-batch trigger latency. */
     def trigger(p: Double): Double =
       percentile(batches.map(_.triggerMs), p)
-    /** Nearest-rank percentile of the per-batch state commit. */
-    def commit(p: Double): Double =
-      percentile(batches.map(_.commitMs), p)
-    /** [[RocksdbKeys]] totals over the drain (non-zero keys only). */
-    def rocksdb: Map[String, Long] = RocksdbKeys
-      .map(k => k -> batches.map(_.custom.getOrElse(k, 0L)).sum)
-      .filter(_._2 != 0L).toMap
   }
 
   /** Nearest-rank percentile (`p` in (0, 1]); 0 for no samples. */
@@ -153,14 +132,20 @@ object ReplayBench {
     * `awaitTermination` returns. */
   private val ListenerWaitMs = 60000L
 
+  /** The log line of a source offset's JSON (0 before the first
+    * batch). */
+  private def lineOf(offsetJson: String): Long =
+    if (offsetJson == null || offsetJson == "null") 0L
+    else ChangeLogOffset.parse(offsetJson).line
+
   /** Drain the log at `logDir` through the full pipe into
     * `outDir/data` (checkpoint `outDir/ckpt`; a reused checkpoint
     * would see the log committed and no-op). `cap` admits at most that
     * many lines per micro-batch (the steady-state tailing shape: many
-    * small batches instead of one backlog batch); `statePartitions`
-    * sets the state width for this query only (every micro-batch pays
-    * load + commit per state partition, so a small-trigger drain wants
-    * few). Both go in as pipe keys, so the session conf is untouched.
+    * small batches instead of one backlog batch); it goes in as a pipe
+    * key, so the session conf is untouched. A batch counts when its
+    * source offset advanced: one that read only BEGINs or open
+    * mutations emits no row but still did the work.
     *
     * Each batch's progress comes from a listener filtered on the
     * query's run id. Spark posts the terminated event after all of a
@@ -168,8 +153,7 @@ object ReplayBench {
     * that event arrives every batch has been seen: no progress ring
     * to size or overflow. */
   def drain(spark: SparkSession, logDir: String, outDir: String,
-      cap: Long = Long.MaxValue, statePartitions: Option[Int] = None)
-      : Drain = {
+      cap: Long = Long.MaxValue): Drain = {
     val progress = new java.util.concurrent.ConcurrentLinkedQueue[
       org.apache.spark.sql.streaming.StreamingQueryProgress]()
     val ended = scala.collection.mutable.Set.empty[java.util.UUID]
@@ -192,9 +176,7 @@ object ReplayBench {
         "source.path" -> logDir,
         "source.maxLinesPerTrigger" -> cap.toString,
         "sink.path" -> dataDir,
-        "sink.checkpoint" -> s"$outDir/ckpt") ++
-        statePartitions.map(p => "session.shufflePartitions" -> p.toString),
-        availableNow = true)
+        "sink.checkpoint" -> s"$outDir/ckpt"), availableNow = true)
       q.awaitTermination()
       val sec = (System.nanoTime() - t0) / 1e9
       val stealSec = graft.util.HostSteal.secondsSince(steal0)
@@ -207,16 +189,10 @@ object ReplayBench {
       }
       import scala.jdk.CollectionConverters._
       val batches = progress.asScala.toSeq
-        .filter(p => p.runId == q.runId && p.numInputRows > 0)
-        .map { p =>
-          val ops = p.stateOperators.toSeq
-          Batch(p.durationMs.getOrDefault("triggerExecution", 0L).toLong,
-            ops.map(_.commitTimeMs).sum,
-            RocksdbKeys.map(k => k -> ops.map { so =>
-              val v = so.customMetrics.get(k)
-              if (v == null) 0L else v.longValue()
-            }.sum).toMap)
-        }
+        .filter(p => p.runId == q.runId && p.sources.exists(s =>
+          lineOf(s.endOffset) > lineOf(s.startOffset)))
+        .map(p => Batch(
+          p.durationMs.getOrDefault("triggerExecution", 0L).toLong))
       Drain(sec, spark.read.parquet(dataDir).count(), stealSec, batches)
     } finally spark.streams.removeListener(listener)
   }

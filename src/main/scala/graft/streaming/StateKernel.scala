@@ -1,11 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoder, Encoders}
+import org.apache.spark.sql.{Dataset, Encoder}
 import org.apache.spark.sql.streaming._
 
 /** `transformWithState` adapter shared by every keyed stateful
-  * operator in the engine ([[TxPipeline]], [[StreamOps]]): a per-key
-  * single-`ValueState` fold with optional idle timeout.
+  * operator in the engine ([[StreamOps]]): a per-key single-
+  * `ValueState` fold.
   *
   * Spark 4's arbitrary-state API replaces `flatMapGroupsWithState`
   * (SURVEY §7.2's named forward path): typed state handles with
@@ -15,19 +15,9 @@ import org.apache.spark.sql.streaming._
   * full HDFS snapshots of an in-memory map). [[graft.GraftSession]]
   * sets the provider session-wide.
   *
-  * Semantics preserved from the old operator, pinned by the streaming
-  * specs + the mid-batch-crash chaos spec:
-  *  - the fold sees `(key, batch rows, Option[prior state])` and
-  *    returns `(Option[next state], output)` — `None` clears state
-  *    (the old `GroupState.remove()`);
-  *  - idle timeout: the old `ProcessingTimeTimeout` +
-  *    `setTimeoutDuration` reset the clock on every batch that
-  *    delivered rows to the key. Timers here are one-shot and
-  *    explicit, so the kernel keeps the pending expiry in a second
-  *    `ValueState` and re-arms on every input batch: delete the old
-  *    timer, register `now + timeoutMs` — the same
-  *    reset-on-activity contract. On expiry `onTimeout` observes the
-  *    state (for discard accounting) and the key's state clears.
+  * The fold sees `(key, batch rows, Option[prior state])` and returns
+  * `(Option[next state], output)` — `None` clears state (the old
+  * `GroupState.remove()`).
   *
   * Batch queries run the identical processor (one fold per key over
   * the whole group) — the t17 leaderboard oracle depends on that. */
@@ -37,22 +27,13 @@ object StateKernel {
   type Fold[K, I, S, O] =
     (K, Iterator[I], Option[S]) => (Option[S], Iterator[O])
 
-  class FoldProcessor[K, I, S, O](
-      senc: Encoder[S],
-      timeoutMs: Long,
-      onInput: Fold[K, I, S, O],
-      onTimeout: (K, S) => Unit)
-      extends StatefulProcessor[K, I, O] {
+  class FoldProcessor[K, I, S, O](senc: Encoder[S],
+      onInput: Fold[K, I, S, O]) extends StatefulProcessor[K, I, O] {
 
     @transient private var state: ValueState[S] = _
-    @transient private var pendingTimer: ValueState[Long] = _
 
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
       state = getHandle.getValueState[S]("s", senc, TTLConfig.NONE)
-      if (timeoutMs > 0L)
-        pendingTimer = getHandle.getValueState[Long]("t",
-          Encoders.scalaLong, TTLConfig.NONE)
-    }
 
     override def handleInputRows(key: K, rows: Iterator[I],
         tv: TimerValues): Iterator[O] = {
@@ -62,39 +43,14 @@ object StateKernel {
         case Some(s) => state.update(s)
         case None => state.clear()
       }
-      if (timeoutMs > 0L) {
-        if (pendingTimer.exists()) {
-          getHandle.deleteTimer(pendingTimer.get())
-          pendingTimer.clear()
-        }
-        if (next.isDefined) {
-          val at = tv.getCurrentProcessingTimeInMs() + timeoutMs
-          getHandle.registerTimer(at)
-          pendingTimer.update(at)
-        }
-      }
       out
-    }
-
-    override def handleExpiredTimer(key: K, tv: TimerValues,
-        info: ExpiredTimerInfo): Iterator[O] = {
-      if (state.exists()) onTimeout(key, state.get())
-      state.clear()
-      if (pendingTimer != null) pendingTimer.clear()
-      Iterator.empty
     }
   }
 
-  /** Wire a keyed fold into a Dataset. `timeoutMs > 0` arms the
-    * idle-discard timer (ProcessingTime mode); otherwise the query
-    * runs in TimeMode.None. */
+  /** Wire a keyed fold into a Dataset. */
   def fold[K: Encoder, I, S, O: Encoder](
-      ds: Dataset[I], key: I => K, senc: Encoder[S],
-      timeoutMs: Long = 0L,
-      onTimeout: (K, S) => Unit = (_: K, _: S) => ())(
+      ds: Dataset[I], key: I => K, senc: Encoder[S])(
       onInput: Fold[K, I, S, O]): Dataset[O] = {
-    val mode = if (timeoutMs > 0L) TimeMode.ProcessingTime()
-      else TimeMode.None()
     // batch mode loads its ephemeral state store through the driver's
     // StateStoreCoordinator endpoint, which only streaming startup
     // registers — ensure it exists (idempotent create-or-lookup)
@@ -102,8 +58,7 @@ object StateKernel {
       org.apache.spark.sql.graft.StateStoreBridge
         .ensureCoordinator(ds.sparkSession)
     ds.groupByKey(key)
-      .transformWithState(
-        new FoldProcessor[K, I, S, O](senc, timeoutMs, onInput, onTimeout),
-        mode, OutputMode.Append)
+      .transformWithState(new FoldProcessor[K, I, S, O](senc, onInput),
+        TimeMode.None(), OutputMode.Append)
   }
 }

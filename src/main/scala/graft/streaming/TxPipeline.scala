@@ -1,42 +1,40 @@
 package graft.streaming
 
-import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.util.LongAccumulator
 
-/** Structured-Streaming transaction grouping — the semantic heart of the
-  * reference (SURVEY.md §2.4 T1–T5): between BEGIN and COMMIT the
-  * consumer buffers mutations per connection and assigns a txid; COMMIT
-  * flushes the buffer with every mutation's timestamp rewritten to the
-  * commit timestamp; ROLLBACK discards it (reference `mypipe-api/src/
-  * main/scala/mypipe/api/consumer/AbstractBinaryLogConsumer.scala:15-21,
+/** Transaction grouping — the semantic heart of the reference
+  * (SURVEY.md §2.4 T1–T5): between BEGIN and COMMIT the consumer
+  * buffers mutations per connection and assigns a txid; COMMIT flushes
+  * the buffer with every mutation's timestamp rewritten to the commit
+  * timestamp; ROLLBACK discards it (reference `mypipe-api/src/main/
+  * scala/mypipe/api/consumer/AbstractBinaryLogConsumer.scala:15-21,
   * 74-82,124-177`).
   *
-  * Spark-first shape: `Dataset[ChangeEvent].groupByKey(connection)
-  * .transformWithState` (Spark 4's arbitrary-state API, via
-  * [[StateKernel]]) — the buffer lives in Spark's state store,
-  * so a transaction spanning micro-batches survives (checkpointed,
-  * SURVEY §7.5 "hard parts"), and the reference's "don't advance the
-  * binlog position mid-tx" rule falls out of checkpointed state +
-  * replayable sources: a crash replays the open tx's events.
+  * Spark shape: a committed-only source (the Debezium shape SURVEY's
+  * T1 row names). [[graft.sources.ChangeLogSource]]'s reader folds
+  * every connection through [[step]] and emits a transaction only once
+  * its COMMIT line is inside the batch. Each reader starts at the
+  * driver's low-water line — the earliest BEGIN among transactions open
+  * at its slice start — so a transaction spanning micro-batches or
+  * segments is re-read from its BEGIN rather than kept in a state store.
+  * This is the reference's "don't advance the binlog position mid-tx"
+  * rule, expressed as a re-read: replay from the immutable log is
+  * deterministic, so exactly-once needs no state and no shuffle.
   *
   * Differences from the reference, by design:
   *  - txid is deterministic (`tx-<conn>-<begin event id>`) rather than
   *    UUIDv1, for replay-stable output (SURVEY §7.5);
-  *  - abandoned transactions: the reference waits forever; we take a
-  *    ProcessingTimeTimeout and discard stale open buffers (counted in
-  *    [[TxStats]]) — at 100 TB an unbounded state store is a leak.
-  *
-  * Scale: state is partitioned by connection id; throughput scales with
-  * connection cardinality and state size is bounded by open-tx size ×
-  * open connections, independent of history length.
+  *  - abandoned transactions: the reference waits forever, and so does
+  *    the default. `maxOpenLines` bounds a transaction in log lines: one
+  *    whose COMMIT is more than that many lines after its BEGIN is
+  *    discarded, whatever the batch boundaries or processing speed.
   */
 object TxPipeline {
 
   /** Raw change-stream event: `kind` ∈ begin|commit|rollback|mutation
     * (the reference's BeginEvent/CommitEvent/RollbackEvent/Mutation ADT,
     * event/package.scala:7-41,47-139). `seq` is the total per-connection
-    * order (binlog position analog). */
+    * order (binlog position analog). The input of the pure [[advance]]. */
   case class ChangeEvent(
       conn: Long, seq: Long, kind: String, op: String,
       pk: String, tsUs: Long, payload: Map[String, String])
@@ -55,141 +53,122 @@ object TxPipeline {
       conn: Long, txid: String, commitTsUs: Long,
       mutations: Seq[TxMutation])
 
-  /** Discard observability (Spark accumulators, safe to increment from
-    * state-function closures): `rollbacks` counts explicit ROLLBACKs,
-    * `resetDiscards` counts buffers dropped by a BEGIN arriving while a
-    * transaction was open, `abandonedDiscards` counts open buffers
-    * discarded by the state timeout. */
-  class TxStats(sc: SparkContext) extends Serializable {
-    val rollbacks: LongAccumulator =
-      sc.longAccumulator("graft.tx.rollbacks")
-    val resetDiscards: LongAccumulator =
-      sc.longAccumulator("graft.tx.resetDiscards")
-    val abandonedDiscards: LongAccumulator =
-      sc.longAccumulator("graft.tx.abandonedDiscards")
+  implicit val mutationEnc: Encoder[TxMutation] = Encoders.product[TxMutation]
+  implicit val batchEnc: Encoder[TxBatch] = Encoders.product[TxBatch]
+
+  /** Event kinds as [[step]] reads them; anything else is [[Unknown]]. */
+  val Begin = 0
+  val Mutation = 1
+  val Commit = 2
+  val Rollback = 3
+  val Unknown = 4
+
+  def kindOf(kind: String): Int = kind match {
+    case "begin" => Begin
+    case "mutation" => Mutation
+    case "commit" => Commit
+    case "rollback" => Rollback
+    case _ => Unknown
   }
 
-  /** Open-transaction buffer persisted in the state store. */
-  case class TxState(
-      open: Boolean, beginSeq: Long, buffer: List[ChangeEvent])
+  /** One connection's place in the transaction grammar: whether a
+    * transaction is open, its BEGIN's seq (the txid) and log line (the
+    * `maxOpenLines` bound), and its buffered mutations, newest first. */
+  final case class OpenTx[+M](open: Boolean, beginSeq: Long,
+      beginLine: Long, buffer: List[M])
 
-  val emptyState: TxState = TxState(open = false, beginSeq = -1L, Nil)
+  val closed: OpenTx[Nothing] = OpenTx(open = false, -1L, -1L, Nil)
 
-  implicit val eventEnc: Encoder[ChangeEvent] = Encoders.product[ChangeEvent]
-  implicit val mutationEnc: Encoder[TxMutation] = Encoders.product[TxMutation]
-  implicit val stateEnc: Encoder[TxState] = Encoders.product[TxState]
-  implicit val longEnc: Encoder[Long] = Encoders.scalaLong
+  /** A connection inside a transaction that began too far back to
+    * commit: its mutations are never emitted, as part of a transaction
+    * or outside one. */
+  val abandoned: OpenTx[Nothing] = OpenTx(open = true, -1L, Long.MinValue, Nil)
+
+  val emptyState: OpenTx[ChangeEvent] = closed
 
   def txid(conn: Long, beginSeq: Long): String = s"tx-$conn-$beginSeq"
 
-  /** Core state transition: fold this micro-batch's events (in `seq`
-    * order) into the open-tx buffer, emitting committed mutations.
-    * Pure function → unit-testable without a stream; `stats` counters
-    * are optional observability. */
-  def advance(conn: Long, events: Seq[ChangeEvent], state: TxState,
-      stats: Option[TxStats] = None): (TxState, Seq[TxMutation]) = {
+  /** Whether the transaction that began at `beginLine` can no longer
+    * commit at `line`: its COMMIT would be more than `maxOpenLines`
+    * lines after its BEGIN. */
+  def expired(beginLine: Long, line: Long, maxOpenLines: Long): Boolean =
+    beginLine < line - maxOpenLines
+
+  /** The one transition: connection `conn` in state `st` reads the event
+    * at log position `line`. Committed mutations go to `emit` with their
+    * txid and commit timestamp — a transaction's mutations on its COMMIT
+    * (T2: all take the commit's timestamp), a non-tx mutation at once
+    * with its own position as txid. `m` is the mutation's payload for
+    * `kind == Mutation` (unused otherwise).
+    *
+    * A BEGIN while a transaction is open drops the buffer: an open tx
+    * can't commit once its connection starts a new one (a binlog never
+    * interleaves transactions per connection); there is no implicit
+    * commit, mirroring the reference. ROLLBACK discards (T1); an empty
+    * COMMIT emits nothing (T4); unknown kinds are skipped (reference
+    * UnknownEvent). */
+  def step[M](st: OpenTx[M], conn: Long, kind: Int, seq: Long, line: Long,
+      tsUs: Long, m: M, maxOpenLines: Long)(
+      emit: (M, String, Long) => Unit): OpenTx[M] = kind match {
+    case Begin => OpenTx(open = true, seq, line, Nil)
+    case Mutation =>
+      if (!st.open) { emit(m, txid(conn, seq), tsUs); st }
+      else if (expired(st.beginLine, line, maxOpenLines))
+        if (st.buffer.isEmpty) st else st.copy(buffer = Nil)
+      else st.copy(buffer = m :: st.buffer)
+    case Commit =>
+      if (st.open && !expired(st.beginLine, line, maxOpenLines)) {
+        val id = txid(conn, st.beginSeq)
+        st.buffer.reverse.foreach(emit(_, id, tsUs))
+      }
+      closed
+    case Rollback => closed
+    case _ => st
+  }
+
+  /** [[step]] over one connection's events in `seq` order, with `seq`
+    * as the log position. Pure, so the grammar is unit-testable without
+    * a stream. */
+  def advance(conn: Long, events: Seq[ChangeEvent], state: OpenTx[ChangeEvent],
+      maxOpenLines: Long = Long.MaxValue)
+      : (OpenTx[ChangeEvent], Seq[TxMutation]) = {
     val out = Seq.newBuilder[TxMutation]
-    var st = state
-    events.sortBy(_.seq).foreach { e =>
-      e.kind match {
-        case "begin" =>
-          // a BEGIN while a tx is open DROPS the buffered mutations —
-          // an open tx can't commit once its connection starts a new
-          // one (binlog never interleaves txs per conn). No implicit
-          // commit, mirroring the reference; the drop is counted in
-          // TxStats.resetDiscards.
-          if (st.open && st.buffer.nonEmpty)
-            stats.foreach(_.resetDiscards.add(st.buffer.length))
-          st = TxState(open = true, beginSeq = e.seq, Nil)
-        case "mutation" =>
-          if (st.open) st = st.copy(buffer = e :: st.buffer)
-          else
-            // non-tx mutation passes straight through, txid = own seq
-            out += TxMutation(conn, e.seq, txid(conn, e.seq), e.op, e.pk,
-              e.tsUs, e.payload)
-        case "commit" =>
-          if (st.open) {
-            val id = txid(conn, st.beginSeq)
-            // commit-timestamp rewrite (T2): all buffered mutations take
-            // the commit event's timestamp
-            st.buffer.reverse.foreach { m =>
-              out += TxMutation(conn, m.seq, id, m.op, m.pk, e.tsUs,
-                m.payload)
-            }
-          } // empty commit (T4): nothing buffered → no rows, no error
-          st = emptyState
-        case "rollback" =>
-          if (st.open && st.buffer.nonEmpty)
-            stats.foreach(_.rollbacks.add(st.buffer.length))
-          st = emptyState // discard buffer (T1 rollback)
-        case _ => // unknown event kinds are skipped (reference UnknownEvent)
+    val next = events.sortBy(_.seq).foldLeft(state) { (st, e) =>
+      step(st, conn, kindOf(e.kind), e.seq, e.seq, e.tsUs, e, maxOpenLines) {
+        (m, id, ts) => out += TxMutation(conn, m.seq, id, m.op, m.pk, ts,
+          m.payload)
       }
     }
-    (st, out.result())
+    (next, out.result())
   }
 
-  /** Batched state transition: same fold as [[advance]], but committed
-    * transactions surface as one [[TxBatch]] each, in commit order.
-    * Non-tx mutations flush as singleton batches (their own txid).
-    * Mutations within a tx share one commitTsUs, so grouping the flat
-    * output by consecutive txid runs is lossless. */
-  def advanceBatched(conn: Long, events: Seq[ChangeEvent], state: TxState,
-      stats: Option[TxStats] = None): (TxState, Seq[TxBatch]) = {
-    val (st, flat) = advance(conn, events, state, stats)
-    val batches = Seq.newBuilder[TxBatch]
-    var run = List.empty[TxMutation] // reversed current-txid run
-    def flush(): Unit = run match {
-      case Nil =>
-      case last :: _ =>
-        val ms = run.reverse
-        batches += TxBatch(conn, last.txid, last.commitTsUs, ms)
-        run = Nil
+  /** Consecutive same-txid runs as one [[TxBatch]] each. Mutations
+    * within a tx share one commitTsUs, so the grouping is lossless. */
+  private def runs(ms: Iterator[TxMutation]): Iterator[TxBatch] = {
+    val it = ms.buffered
+    new Iterator[TxBatch] {
+      def hasNext: Boolean = it.hasNext
+      def next(): TxBatch = {
+        val first = it.next()
+        val run = Seq.newBuilder[TxMutation] += first
+        while (it.hasNext && it.head.txid == first.txid) run += it.next()
+        TxBatch(first.conn, first.txid, first.commitTsUs, run.result())
+      }
     }
-    flat.foreach { m =>
-      if (run.nonEmpty && run.head.txid != m.txid) flush()
-      run = m :: run
-    }
-    flush()
-    (st, batches.result())
   }
 
-  /** Wire the state transition into a streaming Dataset. Timeout: open
-    * transactions idle past `abandonedTxTimeoutMs` are discarded
-    * (counted in TxStats.abandonedDiscards). */
-  def groupByTransaction(
-      events: Dataset[ChangeEvent],
-      abandonedTxTimeoutMs: Long = 0L,
-      stats: Option[TxStats] = None): Dataset[TxMutation] =
-    stateful[TxMutation](events, abandonedTxTimeoutMs, stats,
-      (conn, it, st, s) => advance(conn, it, st, s))
+  /** [[advance]] in `group-mutations-by-tx` mode: committed
+    * transactions surface as one [[TxBatch]] each, in commit order;
+    * non-tx mutations as singleton batches (their own txid). */
+  def advanceBatched(conn: Long, events: Seq[ChangeEvent],
+      state: OpenTx[ChangeEvent]): (OpenTx[ChangeEvent], Seq[TxBatch]) = {
+    val (st, flat) = advance(conn, events, state)
+    (st, runs(flat.iterator).toSeq)
+  }
 
-  /** [[groupByTransaction]] in `group-mutations-by-tx` mode: one output
-    * record per committed transaction. */
-  def groupByTransactionBatched(
-      events: Dataset[ChangeEvent],
-      abandonedTxTimeoutMs: Long = 0L,
-      stats: Option[TxStats] = None): Dataset[TxBatch] =
-    stateful[TxBatch](events, abandonedTxTimeoutMs, stats,
-      (conn, it, st, s) => advanceBatched(conn, it, st, s))
-
-  implicit val batchEnc: Encoder[TxBatch] = Encoders.product[TxBatch]
-
-  private def stateful[O: Encoder](
-      events: Dataset[ChangeEvent],
-      abandonedTxTimeoutMs: Long,
-      stats: Option[TxStats],
-      step: (Long, Seq[ChangeEvent], TxState, Option[TxStats])
-        => (TxState, Seq[O])): Dataset[O] =
-    StateKernel.fold[Long, ChangeEvent, TxState, O](
-      events, _.conn, stateEnc,
-      timeoutMs = abandonedTxTimeoutMs,
-      // abandoned open tx → discard buffer, counted
-      onTimeout = (_, s) =>
-        if (s.open) stats.foreach(_.abandonedDiscards.add(s.buffer.length))
-    ) { (conn, it, prior) =>
-      val (next, out) = step(conn, it.toSeq,
-        prior.getOrElse(emptyState), stats)
-      // closed state clears the store entry (and disarms the timer)
-      (if (next.open) Some(next) else None, out.iterator)
-    }
+  /** The committed stream in `group-mutations-by-tx` mode. Stateless:
+    * the source emits each transaction's mutations together, in one
+    * partition, so a per-partition run split is the whole grouping. */
+  def batched(mutations: Dataset[TxMutation]): Dataset[TxBatch] =
+    mutations.mapPartitions(runs)
 }

@@ -3,7 +3,8 @@ package graft
 import graft.avro.{AvroSubjects, CachingSchemaRepoClient, HttpSchemaRepo,
   SchemaRegistry, SchemaRepoHttp}
 import graft.functions.{AvroCodec, Envelope}
-import graft.streaming.{CdcStream, TxPipeline}
+import graft.sources.ChangeLogSource
+import graft.streaming.{CdcStream, PipeAssembly, TxPipeline}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -37,15 +38,27 @@ class AlterEvolutionSpec extends SparkSpec {
       val v1 = specificSchema(Seq("id", "name"))
       val specificIdV1 = producerRepo.register(subj, v1)
 
-      // the running pipe: events → tx grouping → framed Avro values
-      // (the kafka VALUE projection) → memory sink, processing-time
-      // trigger — this is PipeAssembly's kafka route minus the broker
+      // the running pipe: change log → committed mutations → framed
+      // Avro values (the kafka VALUE projection) → memory sink,
+      // processing-time trigger — this is PipeAssembly's kafka route
+      // minus the broker. Each log row carries its column image as a
+      // JSON object in `value`, unpacked into the generic payload map.
       val sparkS = spark
       import sparkS.implicits._
-      val input = MemoryStream[TxPipeline.ChangeEvent](spark)
-      val framed = CdcStream.kafkaFrame(
-        TxPipeline.groupByTransaction(input.toDS()),
-        producerRepo, "changelog_${conn}_generic")
+      val log = tempFile("alterlog", ".tsv")
+      def logRow(seq: Long, pk: String, ts: Long,
+          image: Map[String, String]): Unit =
+        java.nio.file.Files.write(log, (ChangeLogSource.renderLine(1, seq,
+          "mutation", "insert", pk, ts, image.map { case (k, v) =>
+            s""""$k":"$v"""" }.mkString("{", ",", "}")) + "\n")
+          .getBytes("UTF-8"), java.nio.file.StandardOpenOption.APPEND)
+      val committed = PipeAssembly.events(spark,
+          Map("source.path" -> log.toString))
+        .withColumn("payload", from_json(col("payload").getItem("value"),
+          MapType(StringType, StringType)))
+        .as[TxPipeline.TxMutation]
+      val framed = CdcStream.kafkaFrame(committed, producerRepo,
+        "changelog_${conn}_generic")
       val chk = tempDir("alterchk").toString
       val q = framed.writeStream.format("memory").queryName("alter_pipe")
         .option("checkpointLocation", chk)
@@ -56,8 +69,7 @@ class AlterEvolutionSpec extends SparkSpec {
         assert(consumer.schemaById(specificIdV1) === Some(v1))
 
         // phase 1: schema-v1 mutations
-        input.addData(TxPipeline.ChangeEvent(1, 1, "mutation", "insert",
-          "u1", 100L, Map("id" -> "7", "name" -> "alice")))
+        logRow(1, "u1", 100L, Map("id" -> "7", "name" -> "alice"))
         q.processAllAvailable()
         val genericVersionsBefore = backing.versionCount("generic_txmutation")
         assert(genericVersionsBefore === 1)
@@ -68,9 +80,8 @@ class AlterEvolutionSpec extends SparkSpec {
         val v2 = specificSchema(Seq("id", "name", "email"))
         val specificIdV2 = producerRepo.register(subj, v2)
         assert(specificIdV2 !== specificIdV1)
-        input.addData(TxPipeline.ChangeEvent(1, 2, "mutation", "insert",
-          "u2", 200L, Map("id" -> "8", "name" -> "bob",
-            "email" -> "bob@example.com")))
+        logRow(2, "u2", 200L, Map("id" -> "8", "name" -> "bob",
+          "email" -> "bob@example.com"))
         q.processAllAvailable()
         assert(q.isActive && q.exception.isEmpty,
           "the pipe must absorb the ALTER without restarting")

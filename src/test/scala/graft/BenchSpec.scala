@@ -56,7 +56,7 @@ class BenchSpec extends SparkSpec {
       .foreach(k => assert(at("queries") < at(k), s"queries after $k"))
     // the legs ride as key projections of their full objects
     assert(keys(parsed \ "stream_replay") === Set("events", "sec",
-      "events_per_sec", "mutations_per_sec", "state_commit_ms", "attempts_n"))
+      "events_per_sec", "mutations_per_sec", "attempts_n"))
     assert(keys(parsed \ "concurrent") === Set("threads", "queries",
       "failed", "wall_sec", "speedup_vs_serial", "inflation_p95",
       "first_touch_p95", "steal_sec", "attempts_n", "noise_suspect"))

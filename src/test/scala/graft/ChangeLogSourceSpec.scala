@@ -130,6 +130,7 @@ class ChangeLogSourceSpec extends SparkSpec {
         "x")))
     val dir = tempDir("nulls").toString
     val q = spark.readStream.format(fmt).option("path", log).load()
+      .withColumn("value", col("payload").getItem("value"))
       .writeStream.format("memory").queryName("nulls_out")
       .option("checkpointLocation", s"$dir/chk")
       .trigger(Trigger.AvailableNow()).start()
@@ -151,6 +152,7 @@ class ChangeLogSourceSpec extends SparkSpec {
         "back\\slash", 6L, "v\r\n")))
     val dir = tempDir("esc").toString
     val q = spark.readStream.format(fmt).option("path", log).load()
+      .withColumn("value", col("payload").getItem("value"))
       .writeStream.format("memory").queryName("esc_out")
       .option("checkpointLocation", s"$dir/chk")
       .trigger(Trigger.AvailableNow()).start()
@@ -161,6 +163,24 @@ class ChangeLogSourceSpec extends SparkSpec {
     assert(rows(0).getAs[String]("value") === "line1\nline2")
     assert(rows(1).getAs[String]("pk") === "back\\slash")
     assert(rows(1).getAs[String]("value") === "v\r\n")
+  }
+
+  test("CRLF-terminated lines read like LF-terminated ones") {
+    val log = writeLog(Seq(
+      ChangeLogSource.renderLine(1, 1, "begin", null, null, 0L, null) + "\r",
+      ChangeLogSource.renderLine(1, 2, "mutation", "insert", "a", 5L, "x") + "\r",
+      ChangeLogSource.renderLine(1, 3, "commit", null, null, 9L, null) + "\r"))
+    val dir = tempDir("crlf").toString
+    val q = spark.readStream.format(fmt).option("path", log).load()
+      .withColumn("value", col("payload").getItem("value"))
+      .writeStream.format("memory").queryName("crlf_out")
+      .option("checkpointLocation", s"$dir/chk")
+      .trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination(60000); q.stop()
+    val rows = spark.table("crlf_out").collect()
+    assert(rows.length === 1)
+    assert(rows(0).getAs[String]("value") === "x")
+    assert(rows(0).getAs[Long]("commitTsUs") === 9L)
   }
 
   test("S1+T5: restart resumes from the checkpointed position, no dupes") {
@@ -200,20 +220,89 @@ class ChangeLogSourceSpec extends SparkSpec {
       ChangeLogSource.renderLine(1, 4, "begin", "", "", 0L, ""),
       ChangeLogSource.renderLine(1, 5, "mutation", "insert", "pk2", 6L, "b"),
       ChangeLogSource.renderLine(1, 6, "rollback", "", "", 0L, "")))
-    val events = spark.readStream.format(fmt).option("path", log).load()
-      .select(col("conn"), col("seq"), col("kind"),
-        coalesce(col("op"), lit("")).as("op"),
-        coalesce(col("pk"), lit("")).as("pk"),
-        coalesce(col("ts_us"), lit(0L)).as("tsUs"))
-      .withColumn("payload",
-        map(lit("v"), lit("x")))
-      .as[TxPipeline.ChangeEvent]
-    val q = TxPipeline.groupByTransaction(events)
+    val q = spark.readStream.format(fmt).option("path", log).load()
+      .as[TxPipeline.TxMutation]
       .writeStream.format("memory").queryName("cls_tx")
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination(60000); q.stop()
     val out = spark.table("cls_tx").as[TxPipeline.TxMutation].collect()
     assert(out.length === 1, "committed tx only; rolled-back dropped")
     assert(out.head.pk === "pk1" && out.head.commitTsUs === 99L)
+  }
+
+  test("a transaction open across segments and capped batches is " +
+    "re-read from its BEGIN, wherever the batch starts") {
+    val dir = tempDir("lowwater")
+    def seg(name: String, lines: Seq[String]): Unit =
+      Files.write(dir.resolve(name), lines.mkString("", "\n", "\n")
+        .getBytes(StandardCharsets.UTF_8))
+    // conn 1's tx opens in segment 1 and commits in segment 2, around
+    // conn 2's short transactions and non-tx mutations
+    seg("log.1", Seq(
+      ChangeLogSource.renderLine(1, 1, "begin", null, null, 0L, null),
+      ChangeLogSource.renderLine(1, 2, "mutation", "insert", "a", 1L, "1"),
+      ChangeLogSource.renderLine(2, 3, "begin", null, null, 0L, null),
+      ChangeLogSource.renderLine(2, 4, "mutation", "insert", "b", 2L, "2"),
+      ChangeLogSource.renderLine(2, 5, "commit", null, null, 50L, null)))
+    seg("log.2", Seq(
+      ChangeLogSource.renderLine(3, 6, "mutation", "delete", "c", 3L, null),
+      ChangeLogSource.renderLine(1, 7, "mutation", "update", "a", 4L, "3"),
+      ChangeLogSource.renderLine(2, 8, "mutation", "insert", "d", 5L, "4"),
+      ChangeLogSource.renderLine(1, 9, "commit", null, null, 90L, null)))
+    Seq(("1", "4096"), ("2", "1"), ("3", "2"), ("100", "4096")).foreach {
+      case (cap, g) =>
+        val out = tempDir("lowwaterout").toString
+        val q = spark.readStream.format(fmt).option("path", dir.toString)
+          .option("maxLinesPerTrigger", cap).option("indexGranularity", g)
+          .load()
+          .writeStream.format("parquet").option("path", s"$out/data")
+          .option("checkpointLocation", s"$out/chk")
+          .trigger(Trigger.AvailableNow()).start()
+        q.awaitTermination(60000); q.stop()
+        val rows = spark.read.parquet(s"$out/data")
+          .select("seq", "txid", "commitTsUs").collect()
+          .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).sortBy(_._1)
+        assert(rows.toSeq === Seq((2L, "tx-1-1", 90L), (4L, "tx-2-3", 50L),
+          (6L, "tx-3-6", 3L), (7L, "tx-1-1", 90L), (8L, "tx-2-8", 5L)),
+          s"cap $cap, granularity $g")
+    }
+  }
+
+  test("source metrics: lag, re-read lines and discards of the latest " +
+    "batch, under pinned keys") {
+    val log = writeLog(Seq(
+      ChangeLogSource.renderLine(1, 1, "begin", null, null, 0L, null),
+      ChangeLogSource.renderLine(1, 2, "mutation", "insert", "a", 1L, "1"),
+      ChangeLogSource.renderLine(2, 3, "begin", null, null, 0L, null),
+      ChangeLogSource.renderLine(2, 4, "mutation", "insert", "b", 2L, "2"),
+      ChangeLogSource.renderLine(2, 5, "rollback", null, null, 0L, null),
+      ChangeLogSource.renderLine(1, 6, "commit", null, null, 9L, null)))
+    val dir = tempDir("clsmetrics").toString
+    val q = spark.readStream.format(fmt).option("path", log)
+      .option("maxLinesPerTrigger", "3").load()
+      .writeStream.format("noop")
+      .option("checkpointLocation", s"$dir/chk")
+      .trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination(60000); q.stop()
+    import scala.jdk.CollectionConverters._
+    val ms = q.recentProgress
+      .filter(p => p.sources(0).endOffset != p.sources(0).startOffset)
+      .map(_.sources(0).metrics.asScala.toMap)
+    assert(ms.length === 2)
+    assert(ms.forall(_.keySet === ChangeLogSource.MetricKeys.toSet))
+    assert(ChangeLogSource.MetricKeys === Seq("linesBehind", "bytesBehind",
+      "linesReRead", "rollbackDiscards", "resetDiscards", "abandonedDiscards"))
+    val lineBytes = Files.readAllLines(Paths.get(log)).asScala
+      .map(_.getBytes(StandardCharsets.UTF_8).length + 1L)
+    // batch 1 = lines [0, 3): three lines behind the end
+    assert(ms(0)("linesBehind") === "3")
+    assert(ms(0)("bytesBehind") === lineBytes.drop(3).sum.toString)
+    assert(ms(0)("linesReRead") === "0")
+    // batch 2 = lines [3, 6): re-read from conn 1's BEGIN at line 0,
+    // one rolled-back mutation, caught up with the log end
+    assert(ms(1)("linesBehind") === "0" && ms(1)("bytesBehind") === "0")
+    assert(ms(1)("linesReRead") === "3")
+    assert(ms(1)("rollbackDiscards") === "1")
+    assert(ms(1)("resetDiscards") === "0" && ms(1)("abandonedDiscards") === "0")
   }
 }

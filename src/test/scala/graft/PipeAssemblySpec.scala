@@ -26,38 +26,6 @@ class PipeAssemblySpec extends SparkSpec {
     assert(repo.load("c2").isEmpty)
   }
 
-  test("E1: guarded sink counts failures and continues unless quit-on-error") {
-    val sparkS = spark
-    import sparkS.implicits._
-    import graft.streaming.{CdcStream, TxPipeline}
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.Trigger
-    val input = MemoryStream[TxPipeline.ChangeEvent](spark)
-    input.addData(TxPipeline.ChangeEvent(1, 1, "mutation", "insert", "p",
-      1L, Map()))
-    val policy = new CdcStream.ErrorPolicy(quitOnError = false)
-    val dir = tempDir("guard").toString
-    val q = CdcStream.toGuardedSink(
-      TxPipeline.groupByTransaction(input.toDS()), policy, s"$dir/chk",
-      Trigger.AvailableNow()) { (batch, id) =>
-      if (id == 0) throw new RuntimeException("boom")
-      batch.count(); ()
-    }
-    q.awaitTermination(60000); q.stop()
-    assert(policy.failed.get() === 1, "failure counted, query survived")
-    // second run: batch ids advance past 0 → succeeds
-    input.addData(TxPipeline.ChangeEvent(1, 2, "mutation", "delete", "p2",
-      2L, Map()))
-    val q2 = CdcStream.toGuardedSink(
-      TxPipeline.groupByTransaction(input.toDS()), policy, s"$dir/chk",
-      Trigger.AvailableNow()) { (batch, id) =>
-      if (id == 0) throw new RuntimeException("boom")
-      batch.count(); ()
-    }
-    q2.awaitTermination(60000); q2.stop()
-    assert(policy.succeeded.get() >= 1)
-  }
-
   test("T6: table position repo — shared store, atomic, write-elided") {
     import graft.streaming.TablePositionRepository
     val dir = tempDir("postable").toString
@@ -176,8 +144,9 @@ class PipeAssemblySpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       PipeAssembly.effectiveConfig(Map("profile" -> "turbo"))
     }
-    // the profiled pipe actually drains with the profile's 2-way state,
-    // and the shared session keeps its own partition count
+    // the profiled pipe actually drains with the profile's 2-way state
+    // (the materialize sink's latest-image state; the tx pipe has
+    // none), and the shared session keeps its own partition count
     val log = tempFile("pipelat", ".tsv")
     Files.write(log, Seq(
       ChangeLogSource.renderLine(1, 1, "begin", "", "", 0, ""),
@@ -189,6 +158,7 @@ class PipeAssemblySpec extends SparkSpec {
       val q = PipeAssembly.start(spark, Map(
         "profile" -> "low-latency",
         "source.path" -> log.toString,
+        "sink.format" -> "materialize",
         "sink.path" -> s"$out/data",
         "sink.checkpoint" -> s"$out/chk"), availableNow = true)
       assert(spark.conf.get("spark.sql.shuffle.partitions") === "8",
@@ -224,6 +194,7 @@ class PipeAssemblySpec extends SparkSpec {
       // pipe a sorts first, so b starts after a has set its width
       val qs = PipeAssembly.startAll(spark, Map(
         "source.path" -> log.toString,
+        "sink.format" -> "materialize",
         "pipes.a.session.shufflePartitions" -> "2",
         "pipes.a.sink.path" -> s"$out/a/data",
         "pipes.a.sink.checkpoint" -> s"$out/a/chk",
@@ -319,6 +290,76 @@ class PipeAssemblySpec extends SparkSpec {
     good.awaitTermination(60000); good.stop()
     assert(spark.read.parquet(s"$out/good/data").count() === 1,
       "surviving pipe drains despite the sibling's failure")
+  }
+
+  test("the tx pipe has no stateful operator on the parquet and kafka " +
+    "sinks") {
+    val log = tempFile("pipestateless", ".tsv")
+    Files.write(log, Seq(
+      ChangeLogSource.renderLine(1, 1, "begin", "", "", 0, ""),
+      ChangeLogSource.renderLine(1, 2, "mutation", "insert", "a", 5, "x"),
+      ChangeLogSource.renderLine(1, 3, "commit", "", "", 77, ""))
+      .mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
+    val out = tempDir("pipestateless").toString
+    val parquet = PipeAssembly.start(spark, Map(
+      "source.path" -> log.toString,
+      "sink.path" -> s"$out/p/data",
+      "sink.checkpoint" -> s"$out/p/chk"), availableNow = true)
+    // the kafka writer with only its format rerouted, as a broker-less
+    // drain runs it
+    val kafka = PipeAssembly.kafkaWriter(spark, Map(
+      "source.path" -> log.toString,
+      "sink.checkpoint" -> s"$out/k/chk"),
+      new graft.avro.SchemaRegistry, availableNow = true)
+      .format("parquet").option("path", s"$out/k/data").start()
+    Seq(parquet, kafka).foreach { q =>
+      q.awaitTermination(60000); q.stop()
+      assert(q.lastProgress.numInputRows === 1)
+      assert(q.lastProgress.stateOperators.isEmpty)
+    }
+  }
+
+  test("filter.condition applies to committed mutations: a predicate " +
+    "that drops BEGIN/COMMIT no longer unstamps a transaction") {
+    val log = tempFile("pipefilter", ".tsv")
+    Files.write(log, Seq(
+      ChangeLogSource.renderLine(1, 1, "begin", null, null, 0, null),
+      ChangeLogSource.renderLine(1, 2, "mutation", "insert", "a", 5, "x"),
+      ChangeLogSource.renderLine(1, 3, "mutation", "update", "b", 6, "y"),
+      ChangeLogSource.renderLine(1, 4, "commit", null, null, 77, null),
+      ChangeLogSource.renderLine(2, 5, "mutation", "insert", "c", 8, "z"))
+      .mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
+    def run(filter: (String, String)*): Seq[(String, String, Long)] = {
+      val out = tempDir("pipefilterout").toString
+      val q = PipeAssembly.start(spark, Map(
+        "source.path" -> log.toString,
+        "sink.path" -> s"$out/data",
+        "sink.checkpoint" -> s"$out/chk") ++ filter, availableNow = true)
+      q.awaitTermination(60000); q.stop()
+      spark.read.parquet(s"$out/data").select("pk", "txid", "commitTsUs")
+        .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+        .sortBy(_._1).toSeq
+    }
+    // before, the predicate dropped BEGIN and COMMIT (op NULL), so "a"
+    // left as a non-tx row (txid tx-1-2, its own ts 5)
+    assert(run("filter.condition" -> "op = 'insert'") ===
+      Seq(("a", "tx-1-1", 77L), ("c", "tx-2-5", 8L)))
+    // the event columns still resolve: kind is always 'mutation',
+    // ts_us is the commit timestamp, value the payload value
+    assert(run("filter.condition" -> ("kind = 'mutation' AND ts_us = 77 " +
+      "AND value = 'y'")) === Seq(("b", "tx-1-1", 77L)))
+    assert(run("filter.scalaCondition" ->
+      ("(conn: Long, kind: String, op: String, pk: String) => " +
+        "kind == \"mutation\" && op == \"insert\"")) ===
+      Seq(("a", "tx-1-1", 77L), ("c", "tx-2-5", 8L)))
+  }
+
+  test("tx.timeoutMs is rejected: the bound is tx.maxOpenLines") {
+    assert(PipeAssembly.effectiveConfig(Map.empty)("tx.maxOpenLines") ===
+      Long.MaxValue.toString, "unbounded by default")
+    intercept[IllegalArgumentException] {
+      PipeAssembly.effectiveConfig(Map("tx.timeoutMs" -> "1000"))
+    }
   }
 
   test("E2: materialize sink maintains the latest image per pk") {

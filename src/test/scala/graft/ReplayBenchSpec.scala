@@ -35,26 +35,14 @@ class ReplayBenchSpec extends SparkSpec {
     val work = tempDir("replay_latency").toString
     val lines = ReplayBench.generateLog(spark, sf, s"$work/log")
     val cap = 1024L
-    val d = ReplayBench.drain(spark, s"$work/log", s"$work/lat", cap,
-      statePartitions = Some(4))
+    val d = ReplayBench.drain(spark, s"$work/log", s"$work/lat", cap)
     val (p50, p95, max) = (d.trigger(0.5), d.trigger(0.95), d.trigger(1))
-    val (commitP50, commitP95) = (d.commit(0.5), d.commit(0.95))
     // capped admission must split the drain into many batches: at
     // least ceil(lines/cap) (rotated-segment boundaries can add more)
     assert(d.batches.size >= (lines + cap - 1) / cap,
       s"${d.batches.size} batches for $lines lines at cap $cap")
     assert(p50 > 0 && p50 <= p95 && p95 <= max,
       s"percentiles out of order: p50=$p50 p95=$p95 max=$max")
-    // the RocksDB path must surface a real per-batch commit cost.
-    // StateOperatorProgress.commitTimeMs is SUMMED across the state
-    // partitions, which commit in parallel — so a batch's commit sum is
-    // bounded by (partitions × its wall trigger), not by the wall
-    // itself (the tighter bound tripped under full-suite host
-    // contention: 4 × ~2.3 s parallel commits summed to 9.2 s against
-    // a 5.2 s trigger wall).
-    assert(commitP50 >= 0 && commitP50 <= commitP95)
-    assert(commitP95 <= 4 * max,
-      s"commit p95 $commitP95 exceeds partitions x max trigger ${4 * max}")
     // every mutation still lands exactly once under capped triggers
     assert(d.out === Tables.events(spark, sf).count())
     assert(spark.read.parquet(s"$work/lat/data").count() === d.out)
@@ -81,7 +69,7 @@ class ReplayBenchSpec extends SparkSpec {
     try {
       val before = spark.conf.getAll
       val d = ReplayBench.drain(spark, log.toString,
-        work.resolve("out").toString, cap = 4, statePartitions = Some(2))
+        work.resolve("out").toString, cap = 4)
       assert(d.batches.size === 10)
       assert(d.out === 24)
       val after = spark.conf.getAll

