@@ -19,16 +19,18 @@ import org.json4s.JsonDSL._
   * then the stream-replay and concurrent-serving legs. Each run's wall
   * splits into build (construction, where iterative kernels run their
   * loops, plus the count wrapper's analysis), optimize, plan and act;
-  * a [[Tracer]] credits the run's own jobs, stages, tasks and task
-  * seconds to it. One stderr line per run, one JSON line on stdout and,
+  * a [[Tracer]] credits the run's own jobs, stages, tasks, task
+  * seconds and shuffle bytes to it. One stderr line per run, one JSON line on stdout and,
   * for full-suite runs, the full object (with `queries_trace`) in
   * [[resultFile]]. */
 object Bench {
 
   /** Scheduler work of a run's own jobs (`buildJobs`: those started
-    * while the query was being built). */
+    * while the query was being built), with the shuffle bytes its
+    * tasks read and wrote. */
   final case class Work(jobs: Int, buildJobs: Int, stages: Int,
-      tasks: Int, taskSec: Double)
+      tasks: Int, taskSec: Double, shuffleReadBytes: Long,
+      shuffleWriteBytes: Long)
 
   /** One timed run: wall, its four phases, host steal, analyzed/
     * optimized/physical plan sizes, rows, spill and (once
@@ -36,7 +38,7 @@ object Bench {
   final case class Run(tag: Long, wall: Double, build: Double,
       optimize: Double, plan: Double, act: Double, steal: Double,
       nodes: Seq[Long], rows: Long, spill: Long,
-      work: Work = Work(0, 0, 0, 0, 0.0))
+      work: Work = Work(0, 0, 0, 0, 0.0, 0, 0))
 
   /** One query's measurements: `best` is -1 when cold or warm failed,
     * never a (misleadingly fast) partial time; `trace` is the run `best`
@@ -63,16 +65,16 @@ object Bench {
   /** Local property that tags a timed run's jobs: `<tag> <phase>`. */
   private val RunKey = "graft.bench.run"
 
-  /** Credits jobs, completed stages, tasks and task time to the timed
-    * run whose thread started them ([[RunKey]]); other threads' jobs
+  /** Credits jobs, completed stages, tasks, task time and shuffle
+    * bytes to the timed run whose thread started them ([[RunKey]]); other threads' jobs
     * carry no tag. Events arrive asynchronously: [[settle]] drains the
     * bus, off the clock, before it reads the counts. */
   final class Tracer(sc: SparkContext) extends SparkListener {
     private final class Counts {
       val jobs, buildJobs, stages, tasks = new AtomicInteger
-      val taskMs = new AtomicLong
+      val taskMs, shuffleRead, shuffleWrite = new AtomicLong
       def work = Work(jobs.get, buildJobs.get, stages.get, tasks.get,
-        taskMs.get / 1000.0)
+        taskMs.get / 1000.0, shuffleRead.get, shuffleWrite.get)
     }
     private val byTag = new ConcurrentHashMap[Long, Counts]
     private val byStage = new ConcurrentHashMap[Int, Counts]
@@ -96,6 +98,10 @@ object Bench {
       Option(byStage.get(e.stageId)).foreach { c =>
         c.tasks.incrementAndGet()
         if (e.taskInfo != null) c.taskMs.addAndGet(e.taskInfo.duration)
+        Option(e.taskMetrics).foreach { m =>
+          c.shuffleRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
+          c.shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+        }
       }
 
     /** Builds, optimizes, plans and counts `build`'s frame on this
@@ -231,7 +237,9 @@ object Bench {
     f"[bench] $name run=$n total=${r.wall}%.3f build=${r.build}%.3f " +
       f"optimize=${r.optimize}%.3f plan=${r.plan}%.3f act=${r.act}%.3f " +
       s"jobs=${w.jobs} buildJobs=${w.buildJobs} stages=${w.stages} " +
-      f"tasks=${w.tasks} taskSec=${w.taskSec}%.3f steal=${r.steal}%.2f " +
+      f"tasks=${w.tasks} taskSec=${w.taskSec}%.3f " +
+      s"shuffleRead=${w.shuffleReadBytes} shuffleWrite=${w.shuffleWriteBytes} " +
+      f"steal=${r.steal}%.2f " +
       s"nodes=${r.nodes.mkString("/")} rows=${r.rows}"
   }
 
@@ -569,6 +577,8 @@ object Bench {
     "act" -> fixed(r.act, 3), "jobs" -> r.work.jobs,
     "build_jobs" -> r.work.buildJobs, "stages" -> r.work.stages,
     "tasks" -> r.work.tasks, "task_sec" -> fixed(r.work.taskSec, 3),
+    "shuffle_read_bytes" -> r.work.shuffleReadBytes,
+    "shuffle_write_bytes" -> r.work.shuffleWriteBytes,
     "steal_sec" -> fixed(r.steal, 2),
     "nodes" -> obj("analyzed" -> r.nodes(0), "optimized" -> r.nodes(1),
       "physical" -> r.nodes(2)))

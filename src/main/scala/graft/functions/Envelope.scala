@@ -11,10 +11,11 @@ import org.apache.spark.sql.types._
   *
   * Frame layout (reference `mypipe-kafka/src/main/scala/mypipe/kafka/
   * package.scala:5-24`): `MAGIC(1B) | MTYPE(1B) | SCHEMA_ID(2B BE) |
-  * AVRO_PAYLOAD`. Framing/unframing is pure built-ins (concat / unhex /
-  * substring / conv — all codegen'd); the Avro payload uses the custom
-  * expressions in [[AvroCodec]]. [[seal]] writes and [[open]] reads
-  * every frame; nothing else knows the layout.
+  * AVRO_PAYLOAD`. [[seal]] writes the header and the Avro payload in
+  * one compiled pass (`EnvelopeExpr`, whose [[AvroBuffer]] holds the
+  * only header writer); consumer-side slicing is built-ins (substring
+  * / conv). [[seal]] writes and [[open]] reads every frame; nothing
+  * else knows the layout.
   */
 object Envelope extends QueryModule {
 
@@ -66,30 +67,20 @@ object Envelope extends QueryModule {
         (_, v) => v.isNotNull).as("longs")))
 
   // ── P5: binary envelope framing ─────────────────────────────────────
-  /** MAGIC | MTYPE | SCHEMA_ID(2B BE) | payload, all codegen built-ins.
-    * Widths are enforced: lpad would silently TRUNCATE hex() output for
-    * mtype ≥ 256 / schemaId ≥ 65536, corrupting the wire id, so
+  /** MAGIC | MTYPE | SCHEMA_ID(2B BE) | payload, for a payload that is
+    * already bytes (raw or garbage frames in tests). The header goes
+    * through the same writer as [[seal]]'s. Widths are enforced: an
+    * mtype ≥ 256 or schema id ≥ 65536 would not fit its field, so
     * out-of-range headers fail the query instead. */
-  def frame(mtype: Column, schemaId: Column, payload: Column): Column = {
-    val mt = when(mtype < 0 || mtype > 0xff,
-      raise_error(concat(lit("envelope mtype out of byte range: "),
-        mtype.cast("string")))).otherwise(mtype)
-    val sid = when(schemaId < 0 || schemaId > 0xffff,
-      raise_error(concat(lit("envelope schema id out of 2-byte range: "),
-        schemaId.cast("string")))).otherwise(schemaId)
-    concat(
-      lit(Array[Byte](Magic.toByte)),
-      unhex(lpad(hex(mt), 2, "0")),
-      unhex(lpad(hex(sid), 4, "0")),
-      payload)
-  }
+  def frame(mtype: Column, schemaId: Column, payload: Column): Column =
+    AvroCodec.envelope(mtype, schemaId, payload, null)
 
   /** The producer side of the wire: `record` encoded under
-    * `writerJson` and framed with its header. Every frame graft writes
-    * goes through here. */
+    * `writerJson` and framed with its header, in one pass into one
+    * per-task buffer. Every frame graft writes goes through here. */
   def seal(mtype: Column, schemaId: Column, record: Column,
       writerJson: String): Column =
-    frame(mtype, schemaId, AvroCodec.encode(record, writerJson))
+    AvroCodec.envelope(mtype, schemaId, record, writerJson)
 
   // ── P12: envelope slicing (consumer side) ───────────────────────────
   def sliceMagic(env: Column): Column =
@@ -227,8 +218,10 @@ object Envelope extends QueryModule {
   def p5EnvelopeRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     val registry = new SchemaRegistry
     // widen (r16): the Avro encode→decode chain is CPU-per-row and the
-    // events scan plans single-task at bench scale — 1.6 s of codec
-    // work on one of 32 cores without it
+    // events scan plans single-task at bench scale — about 0.8 s of
+    // one task at sf0.1 with the compiled encoder. On 4 cores the one
+    // task was faster (1.07 s warm against 1.36 s widened); the widen
+    // stays for many-core hosts, where that was not re-measured
     val enveloped = serialize(
       graft.util.Par.widen(ChangeFeed.fromEvents(spark, dir)), registry)
     deserialize(enveloped, registry).select(

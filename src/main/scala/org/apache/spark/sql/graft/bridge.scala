@@ -80,3 +80,18 @@ object ListenerBridge {
   def drain(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
 }
+
+/** The exception `raise_error(msg)` throws (`private[sql]` factory), so
+  * a custom expression that guards its input fails a query exactly as
+  * a `raise_error` guard in the plan would. */
+object ErrorBridge {
+  def raise(msg: String): RuntimeException = {
+    import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
+    import org.apache.spark.unsafe.types.UTF8String.fromString
+    org.apache.spark.sql.errors.QueryExecutionErrors.raiseError(
+      fromString("USER_RAISED_EXCEPTION"),
+      new ArrayBasedMapData(
+        new GenericArrayData(Array[Any](fromString("errorMessage"))),
+        new GenericArrayData(Array[Any](fromString(msg)))))
+  }
+}

@@ -21,7 +21,7 @@ class BenchSpec extends SparkSpec {
   private val run = Bench.Run(tag = 1, wall = 0.5, build = 0.2,
     optimize = 0.05, plan = 0.05, act = 0.2, steal = 0.0,
     nodes = Seq(10, 8, 12), rows = 3, spill = 0,
-    work = Bench.Work(2, 1, 3, 9, 1.5))
+    work = Bench.Work(2, 1, 3, 9, 1.5, 4096, 2048))
 
   /** One record per query of the committed reference, at its time. */
   private def report: Bench.Report = {
@@ -79,6 +79,7 @@ class BenchSpec extends SparkSpec {
     assert(keys(full \ "stream_replay") === keys(committed \ "stream_replay"))
     val trace = full \ "queries_trace" \ "q1_pricing_summary"
     assert(trace \ "build_jobs" === JInt(1))
+    assert(trace \ "shuffle_read_bytes" === JInt(4096))
     assert(keys(trace \ "nodes") === Set("analyzed", "optimized", "physical"))
     assert(Bench.queryTimes(Json.render(full)) ===
       report.queries.map(q => q.name -> q.best).toMap)
@@ -132,6 +133,17 @@ class BenchSpec extends SparkSpec {
         assert(math.abs(r.build + r.optimize + r.plan + r.act - r.wall) < 1e-6)
       assert(tracer.timed(spark.range(1).toDF().selectExpr("no_such_col"))
         .isLeft)
+    } finally tracer.close()
+  }
+
+  test("trace: a run with a shuffle is credited its shuffle bytes") {
+    val tracer = new Bench.Tracer(spark.sparkContext)
+    try {
+      val shuffled = tracer.timed(spark.range(0, 1000, 1, 4).toDF()
+        .repartition(8))
+      val Seq(r) = tracer.settle(Seq(shuffled.toOption.get))
+      assert(r.rows === 1000)
+      assert(r.work.shuffleWriteBytes > 0 && r.work.shuffleReadBytes > 0)
     } finally tracer.close()
   }
 

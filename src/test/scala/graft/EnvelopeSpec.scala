@@ -126,6 +126,61 @@ class EnvelopeSpec extends SparkSpec {
       "schema id 258 = 0x0102 big-endian")
   }
 
+  /** A generic record built from `id`, so the seal runs per row (in
+    * whole-stage codegen over a range, interpreted over a local relation)
+    * rather than being folded into a constant. */
+  private def idRecord = struct(col("id").cast("string").as("database"),
+    lit("t").as("tbl"), col("id").cast("int").as("table_id"),
+    lit(null).cast("string").as("pk"),
+    map(lit("k"), col("id").cast("int")).as("integers"),
+    map(lit("s"), lit("x")).as("strings"),
+    map(lit("l"), col("id")).as("longs"))
+
+  private def idFrames = {
+    val sparkS = spark
+    import sparkS.implicits._
+    Seq("codegen" -> spark.range(0, 1, 1, 1).toDF(),
+      "interpreted" -> Seq(0L).toDF("id"))
+  }
+
+  test("seal: an mtype or schema id outside its header width fails the " +
+    "query with the guard's message") {
+    val cases = Seq(
+      (-1, 1, "envelope mtype out of byte range: -1"),
+      (256, 1, "envelope mtype out of byte range: 256"),
+      (1, -1, "envelope schema id out of 2-byte range: -1"),
+      (1, 65536, "envelope schema id out of 2-byte range: 65536"))
+    for ((mode, df) <- idFrames; (mt, sid, msg) <- cases) {
+      val e = intercept[Exception](df.select(Envelope.seal(
+        col("id").cast("int") + mt, col("id").cast("int") + sid, idRecord,
+        Envelope.genericSchemaV1)).collect())
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(_.getMessage.contains(msg)), s"$mode: $msg in $e")
+    }
+    // the widest values still fit
+    for ((mode, df) <- idFrames) {
+      val env = df.select(Envelope.seal(col("id").cast("int") + 255,
+        col("id").cast("int") + 65535, idRecord, Envelope.genericSchemaV1))
+        .collect().head.getAs[Array[Byte]](0)
+      assert(env.take(4).toSeq === Seq[Byte](0, -1, -1, -1), mode)
+    }
+  }
+
+  test("seal: a NULL record, mtype or schema id gives a NULL frame") {
+    val none = lit(null).cast(Envelope.genericStructV1)
+    for ((mode, df) <- idFrames) {
+      val r = df.select(
+        Envelope.seal(lit(1), lit(1),
+          when(col("id") >= 0, none).otherwise(idRecord),
+          Envelope.genericSchemaV1),
+        Envelope.seal(lit(null).cast("int"), lit(1), idRecord,
+          Envelope.genericSchemaV1),
+        Envelope.seal(lit(1), lit(null).cast("int"), idRecord,
+          Envelope.genericSchemaV1)).collect().head
+      assert((0 until 3).forall(r.isNullAt), mode)
+    }
+  }
+
   test("P12: slicing recovers header fields and payload") {
     val sparkS = spark
     import sparkS.implicits._
